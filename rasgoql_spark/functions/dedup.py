@@ -57,12 +57,6 @@ def _r_dedup_exact(source, text, id_col, keep="min") -> str:
     )
 
 
-# Compute |A∪B| arithmetically from the staged |A∩B| instead of building
-# the union ARRAY per candidate pair. Module-level so the equality test /
-# A/B tooling can force the legacy form on the same fixture (round 14).
-_UNION_VIA_SIZES = True
-
-
 def _jaccard_terms(frame: DataFrame, a: str = "__sh_a", b: str = "__sh_b"):
     """Stage ``|A∩B|`` as a real column (``__ji``) and derive
     ``|A∪B| = |A| + |B| − |A∩B|`` arithmetically — exact because every
@@ -72,11 +66,8 @@ def _jaccard_terms(frame: DataFrame, a: str = "__sh_a", b: str = "__sh_b"):
     fewer bytes); the staged column keeps the intersect evaluated once
     (it is referenced by both terms — the repo's HOF/CSE staging rule).
     Returns ``(frame, inter, un)`` with both terms cast to double, so the
-    JACCARD division is bit-identical to the legacy array_union form."""
-    if not _UNION_VIA_SIZES:
-        inter = F.size(F.array_intersect(a, b)).cast("double")
-        un = F.size(F.array_union(a, b)).cast("double")
-        return frame, inter, un
+    JACCARD division is bit-identical to the renderers'
+    ``size(array_union(...))`` form."""
     frame = frame.withColumn("__ji", F.size(F.array_intersect(a, b)))
     inter = F.col("__ji").cast("double")
     un = (F.size(a) + F.size(b) - F.col("__ji")).cast("double")
@@ -589,85 +580,29 @@ def near_dup_clusters(
     takes the per-node min — converges in ≤ graph-diameter rounds (near-dup
     components are shallow; ``max_iterations`` bounds adversarial chains).
     Candidate pairs come from the banded LSH path (``method`` = 'minhash' or
-    'simhash'), so the whole pipeline stays far from all-pairs. Output:
-    ``(id_col, CLUSTER_ID)`` for every input row (singletons own themselves).
+    'simhash'), so the whole pipeline stays far from all-pairs; the labels
+    come from ``graph.min_label_components``, the loop behind
+    ``connected_components``. Output: ``(id_col, CLUSTER_ID)`` for every
+    input row (singletons own themselves).
     """
+    from .graph import check_max_iterations, min_label_components
+
+    check_max_iterations(max_iterations)
     i = resolve_col(df, id_col)
     # 'edges' mode: rep-level pairs + star edges — same connected components
     # as the full pair set at O(n + rep_pairs) rows, where 'pairs' is
     # quadratic inside exact-duplicate groups (a 100k-copy page would emit
     # ~5·10^9 intra-group pairs that all carry the same label information).
-    if method == "minhash":
-        pairs = dedup_minhash(
-            df, text, id_col, threshold=threshold, mode="edges", **kwargs
-        ).select("ID_A", "ID_B")
-    elif method == "simhash":
-        pairs = dedup_simhash(df, text, id_col, mode="edges", **kwargs).select(
-            "ID_A", "ID_B"
-        )
-    else:
+    # The pair frame itself is not kept, so its signature caches free before
+    # the loop runs; the loop reads only its own edge cache.
+    if method not in ("minhash", "simhash"):
         raise ParameterException("method must be 'minhash' or 'simhash'")
-    half = pairs.select(F.col("ID_A").alias("__src"), F.col("ID_B").alias("__dst"))
-    edges = scoped_persist(half.union(
-        half.select(F.col("__dst").alias("__src"), F.col("__src").alias("__dst"))
-    ))
-    labels = (
-        df.select(F.col(i).alias("__id")).distinct().withColumn("__lab", F.col("__id"))
-    )
-    lab_type = labels.schema["__lab"].dataType
-    # graph.connected_components' round-14 loop, mirrored: the convergence
-    # check rides the min-aggregation — labels holds one row per id, so
-    # max(__old) over the union recovers each node's previous label and the
-    # per-round changed-join (one extra join + exchange + job) disappears;
-    # labels are unchanged (min(__lab) aggregates exactly the same union
-    # rows). And the plan is truncated EVERY round with a lazy
-    # localCheckpoint that the changed-count materializes (still exactly
-    # one action per round): each round references the previous frame
-    # twice (union + msgs), so checkpointing every K rounds made the
-    # driver re-traverse 2^K shared-subtree paths at every plan build, and
-    # a mid-loop release_now additionally recached dependents and
-    # recomputed the lineage. The per-round label trajectory is
-    # bit-identical to the unrolled form the .sql() renderer emits.
-    # Two plain levels per action (round 14, as in connected_components):
-    # the first level composes lazily; the second carries the fused check
-    # and one count materializes both. Values at every level remain the
-    # plain one-level recurrence, so the capped trajectory stays
-    # bit-identical to the renderer's unrolled SQL; min-propagation is
-    # monotone, so an unchanged LAST level means a fixpoint and the early
-    # exit is sound.
-    labels = labels.localCheckpoint(eager=True)
-
-    def _level(lab_frame, with_old: bool):
-        msgs = edges.join(
-            lab_frame.withColumnRenamed("__id", "__src"), on="__src"
-        ).select(F.col("__dst").alias("__id"), "__lab")
-        if not with_old:
-            return (
-                lab_frame.unionByName(msgs)
-                .groupBy("__id").agg(F.min("__lab").alias("__lab"))
-            )
-        return (
-            lab_frame.select("__id", "__lab", F.col("__lab").alias("__old"))
-            .unionByName(msgs.withColumn("__old", F.lit(None).cast(lab_type)))
-            .groupBy("__id")
-            .agg(F.min("__lab").alias("__lab"), F.max("__old").alias("__old"))
-        )
-
-    done = 0
-    while done < max_iterations:
-        if max_iterations - done >= 2:
-            mid = _level(labels, with_old=False)
-            done += 2
-        else:
-            mid = labels
-            done += 1
-        new_labels = _level(mid, with_old=True).localCheckpoint(eager=False)
-        changed = new_labels.filter(
-            ~F.col("__lab").eqNullSafe(F.col("__old"))
-        ).count()
-        labels = new_labels.select("__id", "__lab")
-        if changed == 0:
-            break
+    pairs = (
+        dedup_minhash(df, text, id_col, threshold=threshold, mode="edges", **kwargs)
+        if method == "minhash"
+        else dedup_simhash(df, text, id_col, mode="edges", **kwargs)
+    ).select(F.col("ID_A").alias("__src"), F.col("ID_B").alias("__dst"))
+    labels, edges = min_label_components(pairs, max_iterations)
     # CLUSTER_ID stays in the id column's native type: a bigint cast on a
     # string doc-id column would NULL every label and make dedup_by_cluster's
     # (id == CLUSTER_ID) filter drop all rows.
@@ -2058,8 +1993,6 @@ def load_minhash_index(spark, path: str, persist: bool = True) -> MinHashIndex:
         n_docs=None if nd is None or int(nd) < 0 else int(nd),
     )
 
-NDC_RENDER_MAX_ITER = 24
-
 
 @renderer("near_dup_clusters")
 def _r_near_dup_clusters(
@@ -2067,10 +2000,9 @@ def _r_near_dup_clusters(
     max_iterations=20, **kwargs
 ) -> str:
     """Candidate-pair SQL (the banded minhash / pigeonhole simhash
-    renderers) + unrolled min-label propagation
-    (``graph.unrolled_min_label_sql`` — self-loop edges keep each unrolled
-    level a SINGLE reference to its predecessor; see that helper for the
-    measured exponential-inlining hazard).
+    renderers) fed to the ``connected_components`` renderer, left-joined
+    back to the input ids with ``COALESCE(component, id)`` — the executed
+    path's shape over the same shared loop.
 
     Result-equal to the executed path even though execution propagates
     over mode='edges' (rep pairs + star edges) and the render over plain
@@ -2082,16 +2014,8 @@ def _r_near_dup_clusters(
     exact-duplicate groups), so the default 20 holds for any real corpus;
     adversarial near-dup chains longer than ``max_iterations`` hops are
     already out of contract for the executed operator."""
-    from ..errors import TransformRenderingException
+    from .graph import _r_connected_components
 
-    if max_iterations < 1:
-        raise ParameterException("max_iterations must be >= 1")
-    if max_iterations > NDC_RENDER_MAX_ITER:
-        raise TransformRenderingException(
-            "near_dup_clusters renders unrolled propagation rounds; "
-            f"max_iterations > {NDC_RENDER_MAX_ITER} produces an "
-            "impractically deep plan"
-        )
     if method == "minhash":
         pairs = _r_dedup_minhash(
             source, text, id_col, threshold=threshold, mode="pairs", **kwargs
@@ -2100,21 +2024,12 @@ def _r_near_dup_clusters(
         pairs = _r_dedup_simhash(source, text, id_col, mode="pairs", **kwargs)
     else:
         raise ParameterException("method must be 'minhash' or 'simhash'")
-    from .graph import unrolled_min_label_sql
-
-    parts = [
-        f"__nc_p AS ({pairs})",
-        f"__nc_n AS (SELECT DISTINCT {id_col} AS node FROM {source})",
-        "__nc_e AS (SELECT ID_A AS src, ID_B AS dst FROM __nc_p "
-        "UNION ALL SELECT ID_B, ID_A FROM __nc_p "
-        "UNION ALL SELECT node, node FROM __nc_n)",
-        "__nc_l0 AS (SELECT node, node AS lab FROM __nc_n)",
-    ] + unrolled_min_label_sql("__nc", max_iterations)
+    components = _r_connected_components(
+        f"({pairs}) __nc_p", "ID_A", "ID_B", max_iterations
+    )
     return (
-        "SELECT * FROM (WITH " + ", ".join(parts)
-        + f" SELECT s.{id_col}, COALESCE(l.lab, s.{id_col}) AS CLUSTER_ID "
-        f"FROM {source} s LEFT JOIN __nc_l{int(max_iterations)} l "
-        f"ON s.{id_col} = l.node) __nc_out"
+        f"SELECT s.{id_col}, COALESCE(c.COMPONENT, s.{id_col}) AS CLUSTER_ID "
+        f"FROM {source} s LEFT JOIN ({components}) c ON s.{id_col} = c.NODE"
     )
 
 

@@ -17,8 +17,9 @@ oracle does exactly that.
 each iteration is one edges-by-src join + one sum-by-dst shuffle — partial
 aggregation combines map-side, AQE handles skewed hub nodes. The dangling
 mass is a one-row aggregate broadcast back (never a collect of node data).
-``localCheckpoint`` every few rounds bounds lineage exactly like
-dedup.near_dup_clusters does for label propagation.
+``localCheckpoint`` every few rounds bounds lineage (the min-label loop
+behind connected_components and dedup.near_dup_clusters checkpoints once
+per two-level batch).
 """
 
 from __future__ import annotations
@@ -254,30 +255,24 @@ def pagerank_oracle_sql(
     )
 
 
-@spark_transform("connected_components", category="graph", streaming_ok=False)
-def connected_components(
-    df: DataFrame,
-    src: str,
-    dst: str,
-    max_iterations: int = 20,
-) -> DataFrame:
-    """Connected components of the undirected graph induced by the edge
-    list: ``(NODE, COMPONENT)`` where COMPONENT is the minimum node id
-    reachable from NODE. The general-graph form of the min-label
-    propagation inside ``dedup.near_dup_clusters`` — exposed directly so
-    pipelines can cluster arbitrary relation graphs (URL redirect chains,
-    citation/link groups, entity-resolution match pairs) without routing
-    through the text-dedup API.
-
-    Scale: each round is one slim (node, label) join + min-aggregation;
-    converges in <= component-diameter rounds with an early-exit count;
-    per-round ``localCheckpoint`` bounds lineage and driver planning.
-    Same guarantees and cost model as the dedup path.
-    """
+def check_max_iterations(max_iterations: int) -> None:
+    """The min-label loop's cap contract, shared by its executed callers
+    (:func:`connected_components`, ``dedup.near_dup_clusters``) and the
+    renderer."""
     if max_iterations < 1:
         raise ParameterException("max_iterations must be >= 1")
-    s, d = resolve_col(df, src), resolve_col(df, dst)
-    half = df.select(F.col(s).alias("__src"), F.col(d).alias("__dst")).dropDuplicates()
+
+
+def min_label_components(half: DataFrame, max_iterations: int):
+    """Min-label propagation over the undirected graph of ``half``'s
+    ``(__src, __dst)`` edges: the one connected-components loop behind
+    :func:`connected_components` and ``dedup.near_dup_clusters``.
+
+    Returns ``(labels, edges)``: ``labels`` is ``(__id, __lab)`` for every
+    edge endpoint, ``__lab`` the minimum id reachable within
+    ``max_iterations`` propagation levels; ``edges`` is the symmetrized
+    edge cache the labels read, which the caller ties to its own output
+    with ``release_with``."""
     edges = scoped_persist(half.union(
         half.select(F.col("__dst").alias("__src"), F.col("__src").alias("__dst"))
     ))
@@ -298,12 +293,12 @@ def connected_components(
     #    before, so labels are unchanged. The old form joined new labels
     #    back to old labels: one extra join + exchange per round, in its
     #    own job.
-    # 2. Plan truncation EVERY round (lazy localCheckpoint; the
-    #    changed-count materializes it, so each round still pays exactly
-    #    one action). Each round references the previous frame twice
+    # 2. Plan truncation EVERY batch (lazy localCheckpoint; the
+    #    changed-count materializes it, so each batch still pays exactly
+    #    one action). Each level references the previous frame twice
     #    (union + msgs), so between the round-13 every-5-rounds
     #    checkpoints the driver re-traversed 2^k shared-subtree paths at
-    #    every plan build. Per-round truncation makes planning cost
+    #    every plan build. Per-batch truncation makes planning cost
     #    constant; the checkpointed frames are the slim (id, label) pairs
     #    the loop must materialize anyway.
     #
@@ -360,44 +355,60 @@ def connected_components(
         labels = new_labels.select("__id", "__lab")
         if changed == 0:
             break
+    return labels, edges
+
+
+@spark_transform("connected_components", category="graph", streaming_ok=False)
+def connected_components(
+    df: DataFrame,
+    src: str,
+    dst: str,
+    max_iterations: int = 20,
+) -> DataFrame:
+    """Connected components of the undirected graph induced by the edge
+    list: ``(NODE, COMPONENT)`` where COMPONENT is the minimum node id
+    reachable from NODE. ``dedup.near_dup_clusters`` runs the same loop
+    (:func:`min_label_components`) over its near-dup pair graph; this form
+    clusters arbitrary relation graphs (URL redirect chains, citation/link
+    groups, entity-resolution match pairs) without routing through the
+    text-dedup API.
+
+    Scale: each level is one slim (node, label) join + min-aggregation;
+    converges in <= component-diameter levels with an early-exit count;
+    two levels run per action, and a ``localCheckpoint`` per two-level
+    batch bounds lineage and driver planning.
+    """
+    check_max_iterations(max_iterations)
+    s, d = resolve_col(df, src), resolve_col(df, dst)
+    half = df.select(F.col(s).alias("__src"), F.col(d).alias("__dst")).dropDuplicates()
+    labels, edges = min_label_components(half, max_iterations)
     out = labels.select(F.col("__id").alias("NODE"), F.col("__lab").alias("COMPONENT"))
     return release_with(out, edges)
 
 CC_RENDER_MAX_ITER = 24
 
 
-def unrolled_min_label_sql(prefix: str, iterations: int) -> list[str]:
-    """Per-level CTEs for unrolled min-label propagation: level ``i+1`` takes
-    the per-node MIN label over ``{prefix}_e`` (which callers build as
-    symmetrized edges PLUS self-loops) joined to level ``i``. The self-loops
-    make each level a SINGLE reference to its predecessor — the
-    labels-union-messages form would reference it twice and explode
-    exponentially under CTE inlining (measured: a 20-level double-reference
-    chain kills the driver; single-reference runs in seconds). Shared by the
-    connected_components and near_dup_clusters renderers so that invariant
-    lives in one place."""
-    return [
-        f"{prefix}_l{i + 1} AS (SELECT e.dst AS node, MIN(l.lab) AS lab "
-        f"FROM {prefix}_e e JOIN {prefix}_l{i} l ON e.src = l.node "
-        "GROUP BY e.dst)"
-        for i in range(int(iterations))
-    ]
-
-
 @renderer("connected_components")
 def _r_connected_components(source, src, dst, max_iterations=20) -> str:
-    """Unrolled min-label propagation in Spark SQL
-    (:func:`unrolled_min_label_sql`). The executed loop early-exits on
-    convergence; extra unrolled rounds are no-ops on an already-converged
-    labeling (min over a fixed point is the fixed point), so replaying all
-    ``max_iterations`` rounds is result-equal. The final SELECT left-joins
-    the node list: a NULL endpoint never matches its own self-loop join, so
-    without it the rendered output would drop the (NULL, NULL) row the
-    executed groupBy keeps."""
+    """Unrolled min-label propagation in Spark SQL, also the propagation
+    core of the ``near_dup_clusters`` renderer. Level ``i+1`` takes the
+    per-node MIN label over ``__cc_e`` (symmetrized edges PLUS self-loops)
+    joined to level ``i``. The self-loops make each level a SINGLE
+    reference to its predecessor — the labels-union-messages form would
+    reference it twice and explode exponentially under CTE inlining
+    (measured: a 20-level double-reference chain kills the driver;
+    single-reference runs in seconds).
+
+    The executed loop early-exits on convergence; extra unrolled rounds are
+    no-ops on an already-converged labeling (min over a fixed point is the
+    fixed point), so replaying all ``max_iterations`` rounds is
+    result-equal. The final SELECT left-joins the node list: a NULL
+    endpoint never matches its own self-loop join, so without it the
+    rendered output would drop the (NULL, NULL) row the executed groupBy
+    keeps."""
     from ..errors import TransformRenderingException
 
-    if max_iterations < 1:
-        raise ParameterException("max_iterations must be >= 1")
+    check_max_iterations(max_iterations)
     if max_iterations > CC_RENDER_MAX_ITER:
         raise TransformRenderingException(
             "connected_components renders unrolled propagation rounds; "
@@ -412,7 +423,11 @@ def _r_connected_components(source, src, dst, max_iterations=20) -> str:
         "UNION ALL SELECT dst, src FROM __cc_h "
         "UNION ALL SELECT node, node FROM __cc_n)",
         "__cc_l0 AS (SELECT node, node AS lab FROM __cc_n)",
-    ] + unrolled_min_label_sql("__cc", max_iterations)
+    ] + [
+        f"__cc_l{i + 1} AS (SELECT e.dst AS node, MIN(l.lab) AS lab "
+        f"FROM __cc_e e JOIN __cc_l{i} l ON e.src = l.node GROUP BY e.dst)"
+        for i in range(int(max_iterations))
+    ]
     return (
         "SELECT * FROM (WITH " + ", ".join(parts)
         + " SELECT n.node AS NODE, l.lab AS COMPONENT FROM __cc_n n "
@@ -600,7 +615,7 @@ def label_propagation(
 def _r_label_propagation(source, src, dst, iterations=2) -> str:
     """Unrolled engine-portable replay: each level references its
     predecessor ONCE (counts -> window top-1), so plan depth is linear —
-    the same single-reference invariant as unrolled_min_label_sql. Capped
+    the same single-reference invariant as _r_connected_components. Capped
     at ``LP_RENDER_MAX_ITER`` levels."""
     from ..errors import TransformRenderingException
 

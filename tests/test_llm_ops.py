@@ -1021,12 +1021,15 @@ def test_language_id_model_pivot_matches_label_fanout(spark, monkeypatch):
 
 
 def test_union_via_sizes_matches_array_union_exactly(spark):
-    """Round 14: |A∪B| derived arithmetically from the staged |A∩B|
-    (_jaccard_terms) must produce EXACTLY the legacy array_union
-    verification — same pairs, bit-identical JACCARD — across the four
-    call sites' shapes: near dups, exact dups (intra 1.0), an empty doc,
-    and a no-overlap collision candidate."""
+    """|A∪B| derived arithmetically from the staged |A∩B| (_jaccard_terms)
+    must verify EXACTLY like ``size(array_union(...))`` — same pairs,
+    bit-identical JACCARD — across the four call sites' shapes: near dups,
+    exact dups (intra 1.0), an empty doc, and a no-overlap collision
+    candidate. Three sites are pinned against their own renderers (which
+    keep the array_union form); dedup_against has no minhash renderer and
+    is pinned against an exact Python set-Jaccard."""
     from rasgoql_spark.functions import dedup as _d
+    from rasgoql_spark.functions._hash import shingles_expr, tokens_expr
 
     base = "the quick brown fox jumps over the lazy dog and runs far away home"
     rows = [
@@ -1035,34 +1038,111 @@ def test_union_via_sizes_matches_array_union_exactly(spark):
         (6, "short text"), (7, base + " tonight again"),
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
+    df.createOrReplaceTempView("__union_fixture")
 
-    def run_all():
-        pairs = sorted(
-            tuple(r) for r in rql.get_transform("dedup_minhash").apply(
-                df, text="text", id_col="doc_id", threshold=0.2).collect()
-        )
-        ngram = sorted(
-            tuple(r) for r in rql.get_transform("dedup_ngram_jaccard").apply(
-                df, text="text", id_col="doc_id", threshold=0.2).collect()
-        )
-        sim = sorted(
-            tuple(r) for r in rql.get_transform("minhash_similarity").apply(
-                df, text="text", id_col="doc_id").collect()
-        )
-        against = sorted(
-            tuple(r) for r in rql.get_transform("dedup_against").apply(
-                df.filter("doc_id >= 4"), text="text", id_col="doc_id",
-                reference=df.filter("doc_id < 4"), method="minhash",
-                threshold=0.2, mode="pairs").collect()
-        )
-        return pairs, ngram, sim, against
+    def rows_of(frame):
+        return sorted(tuple(r) for r in frame.collect())
 
-    assert _d._UNION_VIA_SIZES is True
-    new = run_all()
-    _d._UNION_VIA_SIZES = False
-    try:
-        old = run_all()
-    finally:
-        _d._UNION_VIA_SIZES = True
-    assert new == old
-    assert len(new[0]) > 0  # the planted near-dup pair actually verified
+    sites = [
+        ("dedup_minhash", _d._r_dedup_minhash, {"threshold": 0.2}),
+        ("dedup_ngram_jaccard", _d._r_dedup_ngram_jaccard, {"threshold": 0.2}),
+        ("minhash_similarity", _d._r_minhash_similarity, {}),
+    ]
+    for name, render, kw in sites:
+        executed = rql.get_transform(name).apply(
+            df, text="text", id_col="doc_id", **kw)
+        rendered = spark.sql(render("__union_fixture", "text", "doc_id", **kw))
+        assert rendered.columns == executed.columns, name
+        got = rows_of(executed)
+        assert got == rows_of(rendered), name
+        assert len(got) > 0, name  # the planted near-dup pairs verified
+
+    shingles = {
+        r["doc_id"]: set(r["sh"]) for r in df.select(
+            "doc_id", shingles_expr(tokens_expr(F.col("text")), 3).alias("sh")
+        ).collect()
+    }
+
+    def jaccard(a, b):
+        union = len(shingles[a] | shingles[b])
+        return len(shingles[a] & shingles[b]) / union if union else 0.0
+
+    against = rows_of(rql.get_transform("dedup_against").apply(
+        df.filter("doc_id >= 4"), text="text", id_col="doc_id",
+        reference=df.filter("doc_id < 4"), method="minhash",
+        threshold=0.2, mode="pairs"))
+    assert {(i, r) for i, r, _ in against} == {(7, 1), (7, 2), (7, 3)}
+    for i, r, j in against:
+        assert j == jaccard(i, r), (i, r)
+
+
+def _path_docs(spark, null_id: bool = False):
+    """Docs 1..5 form a near-dup PATH at threshold 0.8: each is a 60-token
+    window shifted 4 tokens from its predecessor, so adjacent docs have
+    J=0.87 and docs two apart J=0.76 — doc 1 reaches doc 5 only through
+    4 hops. Doc 6 is a singleton; ``null_id`` adds a NULL-id doc."""
+    words = [f"w{i}" for i in range(80)]
+    rows = [(k + 1, " ".join(words[4 * k: 4 * k + 60])) for k in range(5)]
+    rows.append((6, "unrelated words entirely here nothing shared at all"))
+    if null_id:
+        rows.append((None, "another lone document about something else"))
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def test_near_dup_clusters_rejects_max_iterations_below_one(spark):
+    """A cap below one level is an error on BOTH paths (the executed path
+    used to return every document as its own cluster)."""
+    from rasgoql_spark.errors import ParameterException
+    from rasgoql_spark.functions.dedup import (_r_near_dup_clusters,
+                                               near_dup_clusters)
+
+    df = _path_docs(spark)
+    for bad in (0, -1):
+        with pytest.raises(ParameterException):
+            near_dup_clusters(df, "text", "doc_id", max_iterations=bad)
+        with pytest.raises(ParameterException):
+            _r_near_dup_clusters("docs", "text", "doc_id", max_iterations=bad)
+
+
+def test_near_dup_clusters_capped_trajectory_matches_connected_components(spark):
+    """Capped below the path's diameter, near_dup_clusters must stop at
+    exactly connected_components' labeling of the same mode='edges' pairs,
+    joined back with COALESCE(component, id)."""
+    from rasgoql_spark.functions.dedup import dedup_minhash, near_dup_clusters
+    from rasgoql_spark.functions.graph import connected_components
+
+    df = _path_docs(spark)
+    direct = rql.get_transform("dedup_minhash").apply(
+        df, text="text", id_col="doc_id", threshold=0.8)
+    assert {(r["ID_A"], r["ID_B"]) for r in direct.collect()} == {
+        (1, 2), (2, 3), (3, 4), (4, 5)}
+    edges = dedup_minhash(df, "text", "doc_id", threshold=0.8, mode="edges")
+    for cap in (1, 2, 3):
+        got = {r["doc_id"]: r["CLUSTER_ID"] for r in near_dup_clusters(
+            df, "text", "doc_id", threshold=0.8, max_iterations=cap).collect()}
+        comp = connected_components(edges, "ID_A", "ID_B", max_iterations=cap)
+        want = {r["doc_id"]: r["CLUSTER_ID"] for r in df.join(
+            comp, df.doc_id == comp.NODE, "left").select(
+            "doc_id", F.coalesce("COMPONENT", "doc_id").alias("CLUSTER_ID")
+        ).collect()}
+        assert got == want
+        assert got == {**{j: max(1, j - cap) for j in range(1, 6)}, 6: 6}
+
+
+def test_near_dup_clusters_renderer_matches_executed(spark):
+    """On a converged fixture the rendered SQL equals the executed frame,
+    and a NULL doc_id gets a NULL CLUSTER_ID on both paths."""
+    from rasgoql_spark.functions.dedup import (_r_near_dup_clusters,
+                                               near_dup_clusters)
+
+    df = _path_docs(spark, null_id=True)
+    df.createOrReplaceTempView("__ndc_path_docs")
+    executed = near_dup_clusters(df, "text", "doc_id", threshold=0.8)
+    rendered = spark.sql(_r_near_dup_clusters(
+        "__ndc_path_docs", "text", "doc_id", threshold=0.8))
+    assert rendered.columns == executed.columns
+    assert executed.count() == rendered.count() == 7
+    assert executed.exceptAll(rendered).count() == 0
+    assert rendered.exceptAll(executed).count() == 0
+    got = {r["doc_id"]: r["CLUSTER_ID"] for r in rendered.collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 6: 6, None: None}

@@ -1,8 +1,8 @@
 """Dump .explain('formatted') for named bench entries into plans/r14/.
 
 Usage:
-  python tools/dump_r13_plans.py before llm_pipeline_e2e llm_language_id_model
-  python tools/dump_r13_plans.py after  llm_pipeline_e2e
+  python tools/dump_r14_plans.py before llm_pipeline_e2e llm_language_id_model
+  python tools/dump_r14_plans.py after  llm_pipeline_e2e
 
 Writes plans/r14/<entry>_<tag>.txt. Runs at sf0.1 (the bench scale) so the
 plans match what the bench times; prebuilt entries get their index built
@@ -29,7 +29,7 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     spark = rql.default_spark(
-        app_name="dump_r13_plans", master=f"local[{cpus}]",
+        app_name="dump_r14_plans", master=f"local[{cpus}]",
         shuffle_partitions=cpus,
     )
     spark.sparkContext.setLogLevel("ERROR")
