@@ -41,7 +41,7 @@ from ..operators._util import resolve_col, spread
 from ..registry import renderer, spark_transform
 from ._cache import release_with, scoped_persist
 from ._litfast import centroid_array_lit
-from .similarity import _attach_centroids
+from .similarity import _attach_centroids, _dot
 
 CENT_ROUND = 9  # decimals kept on centroid components (both engines)
 # skip semantic_dedup's exact-dup collapse when the largest identical-vector
@@ -87,13 +87,10 @@ def _assign_expr(cents, round_to: int, u_col: str = "__u") -> Column:
     centroid list (embedded as literals) or a Column already holding the
     array<struct<c, v>> (the >256-centroid one-row broadcast from
     ``_attach_centroids`` — identical rounded values, identical result)."""
-    dot = lambda a, b: F.aggregate(  # noqa: E731 — sequential fold, both engines
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
     sims = F.transform(
         cents if isinstance(cents, Column) else _cent_literals(cents),
         lambda ce: F.struct(
-            F.round(dot(F.col(u_col), ce["v"]), round_to).alias("s"),
+            F.round(_dot(F.col(u_col), ce["v"]), round_to).alias("s"),
             (-ce["c"]).alias("nc"),
         ),
     )

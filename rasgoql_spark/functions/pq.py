@@ -33,6 +33,7 @@ from ..registry import renderer as _renderer, spark_transform
 from ._cache import release_with, scoped_persist
 from ._litfast import centroid_array_lit, double_array_lit, double_matrix_lit
 from .cluster import CENT_ROUND, _assign_expr, _fit_kmeans, _unit_rounded
+from .similarity import _attach_centroids, _check_dim, _dot
 
 
 def _sq_dist(a: Column, b) -> Column:
@@ -129,8 +130,6 @@ def _fused_fit(cached: DataFrame, staged: DataFrame, cents: list, books: list,
     for j in range(max(coarse_iterations, pq_iterations)):
         branches = []
         if j < coarse_iterations:
-            from .similarity import _attach_centroids
-
             abase, carr, _ad = _attach_centroids(cached, cents)
             assigned = abase.withColumn("__cid", _assign_expr(carr, round_to))
             branches.append(
@@ -273,15 +272,7 @@ def _rotate_expr(u_col: str, mat: list) -> Column:
     return F.transform(
         F.sequence(F.lit(1), F.lit(len(mat))),
         lambda i: F.round(
-            F.aggregate(
-                F.zip_with(
-                    F.element_at(rl, i.cast("int")), F.col(u_col),
-                    lambda r, x: r * x,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            CENT_ROUND,
+            _dot(F.element_at(rl, i.cast("int")), F.col(u_col)), CENT_ROUND
         ),
     )
 
@@ -613,8 +604,6 @@ def ivfpq_index(
         raise ParameterException("num_centroids must be >= 1")
     if coarse_iterations < 0:
         raise ParameterException("coarse_iterations must be >= 0")
-    from .similarity import _attach_centroids
-
     v, i = resolve_col(df, vec_col), resolve_col(df, id_col)
     rotation = None
     if rotate:
@@ -812,20 +801,11 @@ def update_ivfpq_index(
     per-batch cost is independent of corpus size; centroids and codebooks
     drift from the grown corpus's optimum — rebuild on the major-refresh
     cadence. Returns a NEW index; ids must stay unique across increments."""
-    from .similarity import _attach_centroids
-
     v, i = resolve_col(new_vecs, vec_col), resolve_col(new_vecs, id_col)
-    # dimension guard: F.slice / zip_with silently truncate a
-    # mismatched-dim batch into wrong codes (inline builds are protected
-    # by _staged_corpus's divisibility check; the fold-in path must check
-    # against the index's recorded geometry itself)
-    first = new_vecs.select(F.size(F.col(v)).alias("d")).first()
-    if first is not None and int(first["d"]) != index.m * index.d_sub:
-        raise ParameterException(
-            f"batch vectors have dim {int(first['d'])} but the index was "
-            f"built over dim {index.m * index.d_sub} (m={index.m} x "
-            f"d_sub={index.d_sub})"
-        )
+    # F.slice / zip_with would silently truncate a mismatched-dim batch
+    # into wrong codes (inline builds are protected by _staged_corpus's
+    # divisibility check; the fold-in path checks the index's geometry)
+    _check_dim(new_vecs, v, index.m * index.d_sub, "batch")
     base = _unit_rounded(
         spread(new_vecs).select(F.col(i).alias("__id"), F.col(v).alias("__vec")),
         "__vec",
@@ -878,22 +858,17 @@ def _probe_lists_rounded(qdf: DataFrame, cents: list, nprobe: int,
                          carry: tuple = ()) -> DataFrame:
     """Explode each query row to its ``nprobe`` highest ROUNDED-cosine
     inverted lists (ties -> lowest cid) — the replayable twin of
-    ``similarity._probe_lists`` for DataFrame-shaped query sides, matching
-    ``similarity_search_ivfpq``'s driver-side probe selection exactly
-    (sim desc at ``round_to`` dp, cid asc). Shuffle-free sort+slice over
-    the per-row sims array; >256-centroid corpora take the one-row
-    broadcast via ``_attach_centroids``. ``carry`` names extra columns
+    ``similarity._probe_lists`` for DataFrame-shaped query sides, and the
+    probe step of :func:`_adc_scores` (sim desc at ``round_to`` dp, cid
+    asc). Shuffle-free sort+slice over the per-row sims array;
+    >256-centroid corpora take the one-row broadcast via
+    ``_attach_centroids``. ``carry`` names extra columns
     preserved through the explosion (e.g. the pre-computed ADC LUT)."""
-    from .similarity import _attach_centroids
-
-    dotf = lambda a, b: F.aggregate(  # noqa: E731 — sequential fold, both engines
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
     qbase, qcarr, _qd = _attach_centroids(qdf, cents)
     sims = F.transform(
         qcarr,
         lambda ce: F.struct(
-            F.round(dotf(F.col(u_col), ce["v"]), round_to).alias("s"),
+            F.round(_dot(F.col(u_col), ce["v"]), round_to).alias("s"),
             (-ce["c"]).alias("nc"),
         ),
     )
@@ -925,9 +900,6 @@ def _adc_query_luts(qdf: DataFrame, idx: IVFPQIndex,
     Subvector slices are staged as columns before the transform lambda
     references them (the HOF staging rule — the lambda body evaluates
     once per codebook entry)."""
-    dotf = lambda a, b: F.aggregate(  # noqa: E731 — sequential fold, both engines
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
     staged = qdf.withColumns({
         f"__qs{s}": F.slice(F.col(q_u_col), s * idx.d_sub + 1, idx.d_sub)
         for s in range(idx.m)
@@ -938,34 +910,13 @@ def _adc_query_luts(qdf: DataFrame, idx: IVFPQIndex,
     def _lut_for(s: int):
         return F.transform(
             double_matrix_lit([list(vec) for _, vec in idx.books[s]]),
-            lambda bv: dotf(F.col(f"__qs{s}"), bv),
+            lambda bv: _dot(F.col(f"__qs{s}"), bv),
         )
 
     luts = [_lut_for(s) for s in range(idx.m)]
     return staged.withColumn("__lut", F.array(*luts)).drop(
         *[f"__qs{s}" for s in range(idx.m)]
     )
-
-
-def _adc_probe_frame(probes: DataFrame, idx: IVFPQIndex,
-                     q_u_col: str = "__qu") -> DataFrame:
-    """Finish a probe frame whose query side was prepared by
-    :func:`_adc_query_luts` and exploded by :func:`_probe_lists_rounded`
-    with ``carry=("__lut",)``: attach the residual coarse term (which DOES
-    depend on the probed list, so it must be computed per probe row), then
-    DROP the query vector so the candidate join ships LUTs, not vectors."""
-    out = probes
-    if idx.residual:
-        # coarse term depends only on (query, probed list) — per probe row,
-        # never per candidate
-        dotf = lambda a, b: F.aggregate(  # noqa: E731 — sequential fold
-            F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        out = _cent_vec_of_cid(out, idx.centroids).withColumn(
-            "__qc", dotf(F.col(q_u_col), F.col("__cv"))
-        ).drop("__cv")
-    return out.drop(q_u_col)
 
 
 def _cid_barrier(col: str) -> Column:
@@ -988,12 +939,11 @@ def _cid_barrier(col: str) -> Column:
 
 
 def _adc_pair_score(idx: IVFPQIndex) -> Column:
-    """ADC score over a (probe ⨯ candidate) join whose probe side was
-    prepared by :func:`_adc_probe_frame`: m array lookups into ``__lut``
-    by the candidate's PQ codes, plus the precomputed ``__qc`` coarse
-    term leading the left-associated sum for residual indexes (FP
-    addition is order-sensitive at the round boundary, so the term order
-    matches the search path and the SQL replay exactly)."""
+    """ADC score over the (probe ⨯ candidate) join of :func:`_adc_scores`:
+    m array lookups into ``__lut`` by the candidate's PQ codes, plus the
+    precomputed ``__qc`` coarse term leading the left-associated sum for
+    residual indexes (FP addition is order-sensitive at the round
+    boundary, so the term order matches the SQL replay exactly)."""
     terms = [
         F.element_at(
             F.element_at("__lut", s + 1),
@@ -1008,6 +958,112 @@ def _adc_pair_score(idx: IVFPQIndex) -> Column:
     for t in terms:
         total = total + t
     return F.round(total, idx.round_to)
+
+
+def _ivfpq_queries(df: DataFrame, v: str, i: str, idx: IVFPQIndex,
+                   what: str) -> DataFrame:
+    """The ``(__qid, __qu)`` query frame of a batch-shaped IVF-PQ caller
+    (``embedding_join_ivfpq``, ``dedup_against_embedding(method='ivfpq')``):
+    dimension guard against the index, then unit-rounding and — for a
+    rotated index — the build-time rotation, so queries probe and build
+    LUTs in the space the codes live in (rotation preserves the dot, so
+    scores still approximate the ORIGINAL cosine). ``spread()`` runs first:
+    the batch is often a narrow single-partition scan, and everything up
+    to the candidate join — normalization, the m·cb·d_sub LUT fold, probe
+    ranking — would otherwise run in ONE task (round 13: 0.9 s serial per
+    call at the bench sizing)."""
+    _check_dim(df, v, idx.m * idx.d_sub, what)
+    q = _unit_rounded(
+        spread(df).select(F.col(i).alias("__qid"), F.col(v).alias("__qvec")),
+        "__qvec", "__qu",
+    ).select("__qid", "__qu")
+    if idx.rotation is not None:
+        q = q.withColumn("__qu", _rotate_expr("__qu", idx.rotation))
+    return q
+
+
+def _adc_scores(q: DataFrame, idx: IVFPQIndex, nprobe: int, mid: str,
+                hint: str | None = None) -> DataFrame:
+    """The IVF-PQ candidate path shared by search, join and dedup: a query
+    frame ``(__qid, __qu)`` in the index's space → ``(__qid, mid,
+    __score)`` for every candidate in the query's ``nprobe`` probed lists,
+    scored by ADC (self-matches included — callers filter).
+
+    Rows whose query vector is NULL drop before probing: they have no
+    neighbours. Each remaining query gets its ADC LUTs
+    (:func:`_adc_query_luts`), explodes to its rounded top-``nprobe``
+    lists, and — residual indexes only — takes the coarse term
+    dot(q, centroid[cid]) per (query, list) row, never per candidate.
+    The query vector then drops, so the candidate equi-join on the
+    inverted-list id ships LUTs, not vectors, and the corpus side reads
+    only ``(__id, __cid, __codes)``. The key passes through
+    :func:`_cid_barrier` on both sides.
+
+    ``hint`` is the caller's join hint for the probe frame (``"broadcast"``
+    when its query side is small by contract; None leaves the choice to
+    AQE). It lands here, after probing, because a hint on the raw query
+    frame would be absorbed by the >256-centroid crossJoin inside the
+    probe step and never reach the candidate join."""
+    probes = _probe_lists_rounded(
+        _adc_query_luts(q.filter(F.col("__qu").isNotNull()), idx, "__qu"),
+        idx.centroids, nprobe, "__qid", "__qu", idx.round_to,
+        carry=("__lut",),
+    )
+    if idx.residual:
+        probes = _cent_vec_of_cid(probes, idx.centroids).withColumn(
+            "__qc", _dot(F.col("__qu"), F.col("__cv"))
+        ).drop("__cv")
+    probes = probes.drop("__qu").withColumn("__cid", _cid_barrier("__cid"))
+    if hint is not None:
+        probes = probes.hint(hint)
+    return (
+        idx.frame.select(
+            F.col("__id").alias(mid),
+            _cid_barrier("__cid").alias("__cid"), "__codes",
+        )
+        .join(probes, on="__cid")
+        .select("__qid", mid, _adc_pair_score(idx).alias("__score"))
+    )
+
+
+def _adc_topk(scored: DataFrame, idx: IVFPQIndex, mid: str, k: int,
+              queries: DataFrame | None = None, rerank_factor: int = 1,
+              hint: str | None = None) -> DataFrame:
+    """Each query's top ``k`` of a ``(__qid, mid, __score)`` frame by
+    (score desc, id asc), with ``RANK`` appended. With ``queries`` (the
+    ``(__qid, __qu)`` query vectors) it is the IVFADC+R refine of Jégou et
+    al. 2011 §V: the ADC window keeps ``k · rerank_factor`` survivors, and
+    only they pay an exact rounded cosine against the index's stored
+    full-width unit vectors before the same window keeps ``k`` —
+    ``__score`` becomes that cosine. The survivor set is determined by the
+    rounded ADC ordering (score + id tie-break), so the refine stays
+    inside the exact-replay contract, and under rotation both sides live
+    in rotated space, where the dot equals the original cosine. The
+    refine touches queries × k · rerank_factor rows, never the corpus
+    scan; ``hint`` is the caller's join hint for the survivors and query
+    vectors (see :func:`_adc_scores`)."""
+    w = Window.partitionBy("__qid").orderBy(
+        F.col("__score").desc(), F.col(mid).asc()
+    )
+
+    def top(frame: DataFrame, keep: int) -> DataFrame:
+        ranked = frame.withColumn("RANK", F.row_number().over(w).cast("int"))
+        return ranked.filter(F.col("RANK") <= keep)
+
+    if queries is None:
+        return top(scored, k)
+    survivors = top(scored, k * rerank_factor).select("__qid", mid)
+    if hint is not None:
+        survivors, queries = survivors.hint(hint), queries.hint(hint)
+    refined = (
+        idx.frame.select(F.col("__id").alias(mid), F.col("__u").alias("__cu"))
+        .join(survivors, on=mid)
+        .join(queries, on="__qid")
+        .select("__qid", mid, F.round(
+            _dot(F.col("__qu"), F.col("__cu")), idx.round_to
+        ).alias("__score"))
+    )
+    return top(refined, k)
 
 
 @spark_transform("similarity_search_ivfpq", category="similarity", streaming_ok=False)
@@ -1087,7 +1143,8 @@ def similarity_search_ivfpq(
     raises ``ParameterException``. The ``.sql()`` renderer diverges on the
     none-present case — pure SQL has no side channel for the guard, so the
     rendered statement returns an empty result instead (same class of
-    documented render-only divergence as the other render guards)."""
+    documented render-only divergence as the other render guards). A
+    query id whose vector is NULL has no neighbours and returns no rows."""
     if not query_ids:
         raise ParameterException("query_ids must be non-empty")
     if k < 1:
@@ -1108,14 +1165,13 @@ def similarity_search_ivfpq(
             ),
             True,
         )
-    m, round_to = idx.m, idx.round_to
-    cents, books, d_sub = idx.centroids, idx.books, idx.d_sub
     # the query rows are a bounded collect (len(query_ids) rows —
     # pq_search's existing contract); it doubles as the none-present
-    # guard. Probe selection and ADC scoring then run IN-PLAN (F.round —
-    # Python's banker's round() is not usable for the replay contract)
-    # over a LOCAL frame re-entered from this collect, so no corpus
-    # self-join exists and one action executes the whole search.
+    # guard. The query frame re-enters as a LOCAL frame (the floats
+    # round-trip exactly; a NULL vector stays NULL and drops in the
+    # scorer), so no corpus self-join exists and one action executes the
+    # whole search: the shared ADC candidate path, its probe frame
+    # broadcast onto the codes-only corpus scan, then the top-k window.
     qrows = (
         idx.frame.filter(F.col("__id").isin([int(q) for q in query_ids]))
         .select("__id", "__u")
@@ -1123,87 +1179,166 @@ def similarity_search_ivfpq(
     )
     if not qrows:
         raise ParameterException("none of query_ids is present in the corpus")
-    dot = lambda a, b: F.aggregate(  # noqa: E731 — sequential fold, both engines
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    spark = df.sparkSession
-    # one LOCAL query frame (bounded: len(query_ids) rows re-entered from
-    # the collect — the floats round-trip exactly), prepared by the SAME
-    # in-plan machinery the join path uses: per-query ADC LUTs before the
-    # probe explosion, rounded top-nprobe list selection, then ONE
-    # broadcast equi-join against the codes-only corpus scan. Round 13:
-    # replaces the per-query literal-filter union (|queries| corpus scans
-    # + a plan that grows with queries x m x codebook_size literals) and
-    # the separate probe-selection Spark job + collect. Values are
-    # bit-identical: _adc_query_luts folds the same doubles the Python
-    # sum folded (verified bit-parity, see its docstring),
-    # _probe_lists_rounded ranks by the same rounded dot / cid tie-break
-    # the window did, and _adc_pair_score sums LUT terms in the same
-    # left-associated order (coarse term first under residual). The
-    # expression-valued join key takes _cid_barrier on both sides — the
-    # constraint-rewrite guard the join path established.
-    qdf = spark.createDataFrame(
-        [(int(r["__id"]), [float(x) for x in r["__u"]]) for r in qrows],
+    qdf = df.sparkSession.createDataFrame(
+        [(int(r["__id"]), r["__u"]) for r in qrows],
         "__qid bigint, __qu array<double>",
     )
-    probes = _adc_probe_frame(
-        _probe_lists_rounded(
-            _adc_query_luts(qdf, idx, "__qu"), cents, nprobe,
-            "__qid", "__qu", round_to, carry=("__lut",),
-        ),
-        idx, "__qu",
+    scored = _adc_scores(qdf, idx, nprobe, "MATCH_ID", hint="broadcast")
+    scored = scored.filter(F.col("__qid") != F.col("MATCH_ID"))
+    out = _adc_topk(scored, idx, "MATCH_ID", k,
+                    qdf if rerank else None, rerank_factor, hint="broadcast")
+    out = out.select(
+        F.col("__qid").alias("QUERY_ID"), "MATCH_ID",
+        F.col("__score").alias("COSINE" if rerank else "ADC_SCORE"), "RANK",
+    )
+    return release_with(out, idx.frame) if own else out
+
+
+def _r_ivfpq_ranked(caller, corpus, vec_col, id_col, query, k,
+                    num_centroids, nprobe, coarse_iterations, m,
+                    codebook_size, iterations, round_to, residual, rotate,
+                    rotation_seed, rotation_sweeps, rotation_dim, rerank,
+                    rerank_factor) -> tuple:
+    """The SQL replay of the IVF-PQ search path, shared by the search and
+    join renderers: the kmeans_cluster renderer's coarse-fit chains and
+    the pq_encode renderer's per-subspace Lloyd chains over ``corpus``,
+    then the ADC scan restricted to (assignment, probe) centroid matches
+    and the per-query top-k window — with the IVFADC+R refine when
+    ``rerank``. Returns ``(ctes, ranked)``: the WITH list, and a SELECT of
+    ``(__qid, __mid, __score, RANK)`` each public renderer wraps.
+
+    ``query(nv, rotated)`` renders the query relation ``(qid, __u)``:
+    ``nv`` is the normalized (and rotated) corpus relation, ``rotated``
+    maps a normalized relation into the index's space. Query rows with a
+    NULL vector drop, as in :func:`_adc_scores`. Query LUT slices always
+    come from the query vectors — for residual indexes the corpus codes
+    were fit on residuals, the queries were not (Jégou 2011 §V.A) — and
+    the residual ADC sum leads with the per-(query, list) coarse term,
+    left-associated like the DataFrame path (it matters at the round
+    boundary)."""
+    from ..errors import TransformRenderingException
+    from .cluster import _dot_sql, _kmeans_render_parts, _unit_norm_sql
+
+    if k < 1:
+        raise ParameterException("k must be >= 1")
+    if num_centroids < 1:
+        raise ParameterException("num_centroids must be >= 1")
+    if nprobe < 1:
+        raise ParameterException("nprobe must be >= 1")
+    if rerank and rerank_factor < 1:
+        raise ParameterException("rerank_factor must be >= 1")
+    ctes, mat, nv_override = [], None, None
+    if rotate:
+        if rotation_dim is None:
+            raise TransformRenderingException(
+                f"{caller}(rotate=True) renders only with an explicit "
+                "rotation_dim (the vector dimension is unknowable at render "
+                "time — the binary n_words contract)"
+            )
+        mat = rotation_matrix(int(rotation_seed), int(rotation_dim),
+                              int(rotation_sweeps))
+        # NAMED CTE: the rotated corpus is referenced by the seeds, every
+        # Lloyd pass and the probe — inlining the dim x dim literal at
+        # each site would explode the statement
+        ctes.append("__ivfpq_rnv AS "
+                    + _rotate_sql(mat, _unit_norm_sql(vec_col, id_col, corpus)))
+        nv_override = "__ivfpq_rnv"
+
+    def rotated(rel: str) -> str:
+        return rel if mat is None else _rotate_sql(mat, rel)
+
+    nv, kcents, kassign = _kmeans_render_parts(
+        corpus, vec_col, id_col, num_centroids, coarse_iterations, round_to,
+        caller, nv_override=nv_override,
+    )
+    # the centroids and the queries are named once: assignment, probe,
+    # residual construction, coarse term and LUT slices all read them
+    ctes.append(f"__ivfpq_cents AS (SELECT c, v FROM {kcents})")
+    ctes.append(f"__ivfpq_asg AS (SELECT __id, c FROM {kassign('__ivfpq_cents')})")
+    ctes.append(
+        f"__ivfpq_q AS (SELECT qid, __u FROM ({query(nv, rotated)}) __q "
+        f"WHERE __u IS NOT NULL)"
+    )
+    sim = f"round({_dot_sql('t.__u', 's.v')}, {int(round_to)})"
+    ctes.append(
+        f"__ivfpq_probe AS (SELECT qid, c FROM (SELECT t.qid, s.c, "
+        f"ROW_NUMBER() OVER (PARTITION BY t.qid ORDER BY {sim} DESC, "
+        f"s.c ASC) AS rn FROM __ivfpq_q t CROSS JOIN __ivfpq_cents s) "
+        f"WHERE rn <= {int(nprobe)})"
+    )
+    vec_source = nv if rotate else None
+    if residual:
+        ctes.append(
+            f"__ivfpq_rv AS (SELECT t.__id, zip_with(t.__u, c.v, "
+            f"(x, y) -> x - y) AS __u FROM {nv} t "
+            f"JOIN __ivfpq_asg a ON a.__id = t.__id "
+            f"JOIN __ivfpq_cents c ON c.c = a.c)"
+        )
+        vec_source = "__ivfpq_rv"
+        ctes.append(
+            f"__ivfpq_qc AS (SELECT t.qid, s.c AS cid, "
+            f"{_dot_sql('t.__u', 's.v')} AS cv FROM __ivfpq_q t "
+            f"CROSS JOIN __ivfpq_cents s)"
+        )
+    parts = _pq_render_parts(
+        corpus, vec_col, id_col, m, codebook_size, iterations, round_to,
+        caller, vec_source=vec_source,
+    )
+    d_sub_sql = f"(size(__u) DIV {int(m)})"
+    for j, (_sub, cb, a) in enumerate(parts):
+        ctes.append(f"__pq_cb{j} AS (SELECT c, v FROM {cb})")
+        ctes.append(f"__pq_f{j} AS (SELECT __id, c FROM {a})")
+        ctes.append(
+            f"__pq_q{j} AS (SELECT qid, slice(__u, {j} * {d_sub_sql} + 1, "
+            f"{d_sub_sql}) AS v FROM __ivfpq_q)"
+        )
+    score = " + ".join(
+        _dot_sql(f"__pq_q{j}.v", f"__pq_b{j}.v") for j in range(int(m))
+    )
+    q_joins = " ".join(
+        f"JOIN __pq_q{j} ON __pq_q{j}.qid = __ivfpq_probe.qid"
+        for j in range(int(m))
+    )
+    if residual:
+        score = f"__ivfpq_qc.cv + {score}"
+        q_joins += (
+            " JOIN __ivfpq_qc ON __ivfpq_qc.qid = __ivfpq_probe.qid "
+            "AND __ivfpq_qc.cid = __ivfpq_asg.c"
+        )
+    code_joins = " ".join(
+        f"JOIN __pq_f{j} ON __pq_f{j}.__id = cnd.{id_col} "
+        f"JOIN __pq_cb{j} __pq_b{j} ON __pq_b{j}.c = __pq_f{j}.c"
+        for j in range(int(m))
     )
     scored = (
-        idx.frame.select(
-            F.col("__id").alias("MATCH_ID"),
-            _cid_barrier("__cid").alias("__cid"), "__codes",
-        )
-        .join(
-            F.broadcast(probes.withColumn("__cid", _cid_barrier("__cid"))),
-            on="__cid",
-        )
-        .filter(F.col("__qid") != F.col("MATCH_ID"))
-        .select(
-            F.col("__qid").alias("QUERY_ID"), "MATCH_ID",
-            _adc_pair_score(idx).alias("ADC_SCORE"),
-        )
+        f"SELECT __ivfpq_probe.qid AS __qid, cnd.{id_col} AS __mid, "
+        f"round({score}, {int(round_to)}) AS __score "
+        f"FROM {corpus} cnd {code_joins} "
+        f"JOIN __ivfpq_asg ON __ivfpq_asg.__id = cnd.{id_col} "
+        f"JOIN __ivfpq_probe ON __ivfpq_probe.c = __ivfpq_asg.c {q_joins} "
+        f"WHERE cnd.{id_col} <> __ivfpq_probe.qid"
     )
-    w = Window.partitionBy("QUERY_ID").orderBy(
-        F.col("ADC_SCORE").desc(), F.col("MATCH_ID").asc()
-    )
-    kf = k * rerank_factor if rerank else k
-    out = (
-        scored.withColumn("RANK", F.row_number().over(w).cast("int"))
-        .filter(F.col("RANK") <= kf)
-    )
+
+    def top(rel: str, keep: int) -> str:
+        return (
+            f"SELECT __qid, __mid, __score, RANK FROM (SELECT *, "
+            f"CAST(ROW_NUMBER() OVER (PARTITION BY __qid ORDER BY __score "
+            f"DESC, __mid ASC) AS INT) AS RANK FROM ({rel})) "
+            f"WHERE RANK <= {keep}"
+        )
+
     if rerank:
-        # IVFADC+R refine: survivors only pay the full-vector read — the
-        # tiny (queries x k x factor) id frame broadcasts onto the stored
-        # unit vectors, so the corpus-wide work stays the m-int ADC scan
-        cu = idx.frame.select(
-            F.col("__id").alias("MATCH_ID"), F.col("__u").alias("__cu")
+        # IVFADC+R refine replay: the ADC-ranked survivor set (rounded
+        # score + id tie-break — integer-determined given the replayed
+        # fit) joins back to the staged unit vectors for the exact cosine
+        scored = (
+            f"SELECT c.__qid, c.__mid, round("
+            f"{_dot_sql('qn.__u', 'tn.__u')}, {int(round_to)}) AS __score "
+            f"FROM ({top(scored, int(k) * int(rerank_factor))}) c "
+            f"JOIN __ivfpq_q qn ON qn.qid = c.__qid "
+            f"JOIN {nv} tn ON tn.__id = c.__mid"
         )
-        qexact = qdf.select(
-            F.col("__qid").alias("QUERY_ID"), F.col("__qu")
-        )
-        rw = Window.partitionBy("QUERY_ID").orderBy(
-            F.col("COSINE").desc(), F.col("MATCH_ID").asc()
-        )
-        out = (
-            cu.join(
-                F.broadcast(out.select("QUERY_ID", "MATCH_ID")),
-                on="MATCH_ID",
-            )
-            .join(F.broadcast(qexact), on="QUERY_ID")
-            .withColumn(
-                "COSINE",
-                F.round(dot(F.col("__qu"), F.col("__cu")), round_to),
-            )
-            .withColumn("RANK", F.row_number().over(rw).cast("int"))
-            .filter(F.col("RANK") <= k)
-            .select("QUERY_ID", "MATCH_ID", "COSINE", "RANK")
-        )
-    return release_with(out, idx.frame) if own else out
+    return ctes, top(scored, int(k))
 
 
 @_renderer("similarity_search_ivfpq")
@@ -1217,14 +1352,9 @@ def _r_similarity_search_ivfpq(source, vec_col, id_col, query_ids, k=10,
     """Full SQL replay of the IVF-PQ pipeline — the first renderable ANN
     operator (the similarity_search_ivf family is excluded by its unrounded
     contract; this operator rounds by contract precisely to be replayable).
-    Composes the kmeans_cluster renderer's coarse-fit chains with the
-    pq_search renderer's per-subspace Lloyd/LUT chains, then restricts the
-    ADC scan to (assignment, probe) centroid matches. ``residual=True``
-    feeds the PQ chains vector-minus-assigned-centroid subvectors
-    (``_pq_render_parts(vec_source=...)``) and prefixes the ADC sum with
-    the per-(query, list) coarse term — same term order as the DataFrame
-    path (coarse first, left-associated), which matters at the 6-dp round
-    boundary."""
+    The shared :func:`_r_ivfpq_ranked` core over ``source``, with the
+    queries read from the normalized (rotated) corpus itself — the same
+    doubles the executed path collects from the index frame."""
     from ..errors import TransformRenderingException
 
     if index is not None:
@@ -1234,150 +1364,21 @@ def _r_similarity_search_ivfpq(source, vec_col, id_col, query_ids, k=10,
         )
     if not query_ids:
         raise ParameterException("query_ids must be non-empty")
-    if k < 1:
-        raise ParameterException("k must be >= 1")
-    if num_centroids < 1:
-        raise ParameterException("num_centroids must be >= 1")
-    if nprobe < 1:
-        raise ParameterException("nprobe must be >= 1")
-    if rerank and rerank_factor < 1:
-        raise ParameterException("rerank_factor must be >= 1")
-    from .cluster import _dot_sql, _kmeans_render_parts, _unit_norm_sql
-
-    ctes = []
-    nv_override = None
-    if rotate:
-        if rotation_dim is None:
-            raise TransformRenderingException(
-                "similarity_search_ivfpq(rotate=True) renders only with an "
-                "explicit rotation_dim (the vector dimension is unknowable "
-                "at render time — the binary n_words contract)"
-            )
-        mat = rotation_matrix(int(rotation_seed), int(rotation_dim),
-                              int(rotation_sweeps))
-        # NAMED CTE: the rotated corpus is referenced by the seeds, every
-        # Lloyd pass, the probe, and the query slices — inlining the
-        # 64x64 literal at each site would explode the statement
-        ctes.append(
-            "__ivfpq_rnv AS "
-            + _rotate_sql(mat, _unit_norm_sql(vec_col, id_col, source))
-        )
-        nv_override = "__ivfpq_rnv"
-    nv, kcents, kassign = _kmeans_render_parts(
-        source, vec_col, id_col, num_centroids, coarse_iterations, round_to,
-        "similarity_search_ivfpq", nv_override=nv_override,
-    )
     qlist = ", ".join(str(int(q)) for q in query_ids)
-    sim = f"round({_dot_sql('t.__u', 's.v')}, {int(round_to)})"
-    if residual:
-        # name the centroid relation once — it is referenced by the
-        # assignment, the probe, the residual construction, and the
-        # coarse-term LUT (4 consumers; inlining would 4x the Lloyd chain)
-        ctes.append(f"__ivf_cents AS (SELECT c, v FROM {kcents})")
-        kcents = "__ivf_cents"
-    ctes.append(f"__ivf_asg AS (SELECT __id, c FROM {kassign(kcents)})")
-    ctes.append(
-        f"__ivf_probe AS (SELECT __id AS qid, c FROM (SELECT t.__id, s.c, "
-        f"ROW_NUMBER() OVER (PARTITION BY t.__id ORDER BY {sim} DESC, "
-        f"s.c ASC) AS rn FROM {nv} t CROSS JOIN {kcents} s "
-        f"WHERE t.__id IN ({qlist})) WHERE rn <= {int(nprobe)})"
+    ctes, ranked = _r_ivfpq_ranked(
+        "similarity_search_ivfpq", source, vec_col, id_col,
+        lambda nv, rotated: (
+            f"SELECT __id AS qid, __u FROM {nv} __q WHERE __id IN ({qlist})"
+        ),
+        k, num_centroids, nprobe, coarse_iterations, m, codebook_size,
+        iterations, round_to, residual, rotate, rotation_seed,
+        rotation_sweeps, rotation_dim, rerank, rerank_factor,
     )
-    vec_source = None
-    if residual:
-        ctes.append(
-            f"__ivf_rv AS (SELECT t.__id, zip_with(t.__u, c.v, "
-            f"(x, y) -> x - y) AS __u FROM {nv} t "
-            f"JOIN __ivf_asg a ON a.__id = t.__id "
-            f"JOIN {kcents} c ON c.c = a.c)"
-        )
-        vec_source = "__ivf_rv"
-        ctes.append(
-            f"__ivf_qc AS (SELECT t.__id AS qid, s.c AS cid, "
-            f"{_dot_sql('t.__u', 's.v')} AS cv FROM {nv} t "
-            f"CROSS JOIN {kcents} s WHERE t.__id IN ({qlist}))"
-        )
-    if vec_source is None and rotate:
-        vec_source = nv  # the rotated corpus CTE (plain path)
-    parts = _pq_render_parts(
-        source, vec_col, id_col, m, codebook_size, iterations, round_to,
-        "similarity_search_ivfpq", vec_source=vec_source,
-    )
-    d_sub_sql = f"(size(__u) DIV {int(m)})"
-    for j, (sub, cb, a) in enumerate(parts):
-        ctes.append(f"__pq_cb{j} AS (SELECT c, v FROM {cb})")
-        ctes.append(f"__pq_f{j} AS (SELECT __id, c FROM {a})")
-        if residual:
-            # query LUT slices come from the RAW normalized vectors, not
-            # the residual relation the corpus codes were fit on
-            qsub = (
-                f"(SELECT __id, slice(__u, {j} * {d_sub_sql} + 1, "
-                f"{d_sub_sql}) AS v FROM {nv} __pq_qnv)"
-            )
-        else:
-            qsub = sub
-        ctes.append(
-            f"__pq_q{j} AS (SELECT __id AS qid, v FROM {qsub} "
-            f"WHERE __id IN ({qlist}))"
-        )
-    dot = (
-        "aggregate(zip_with(__pq_q{j}.v, __pq_b{j}.v, (x, y) -> x * y), "
-        "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-    )
-    score = " + ".join(dot.replace("{j}", str(j)) for j in range(int(m)))
-    if residual:
-        score = f"__ivf_qc.cv + {score}"
-    code_joins = " ".join(
-        f"JOIN __pq_f{j} ON __pq_f{j}.__id = s.{id_col} "
-        f"JOIN __pq_cb{j} __pq_b{j} ON __pq_b{j}.c = __pq_f{j}.c"
-        for j in range(int(m))
-    )
-    q_joins = " ".join(
-        f"JOIN __pq_q{j} ON __pq_q{j}.qid = __ivf_probe.qid"
-        for j in range(int(m))
-    )
-    if residual:
-        q_joins += (
-            " JOIN __ivf_qc ON __ivf_qc.qid = __ivf_probe.qid "
-            "AND __ivf_qc.cid = __ivf_asg.c"
-        )
-    scored = (
-        f"SELECT CAST(__ivf_probe.qid AS BIGINT) AS QUERY_ID, "
-        f"s.{id_col} AS MATCH_ID, "
-        f"round({score}, {int(round_to)}) AS ADC_SCORE "
-        f"FROM {source} s {code_joins} "
-        f"JOIN __ivf_asg ON __ivf_asg.__id = s.{id_col} "
-        f"JOIN __ivf_probe ON __ivf_probe.c = __ivf_asg.c {q_joins} "
-        f"WHERE s.{id_col} <> __ivf_probe.qid"
-    )
-    if not rerank:
-        return (
-            "SELECT * FROM (WITH " + ", ".join(ctes)
-            + f" SELECT QUERY_ID, MATCH_ID, ADC_SCORE, RANK FROM ("
-            f"SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY QUERY_ID "
-            f"ORDER BY ADC_SCORE DESC, MATCH_ID ASC) AS INT) AS RANK "
-            f"FROM ({scored})) WHERE RANK <= {int(k)}) __ivfpq_out"
-        )
-    # IVFADC+R refine replay: the ADC-ranked survivor set (rounded score +
-    # id tie-break — integer-determined given the replayed fit) joins back
-    # to the staged unit vectors for the exact rounded cosine
-    kf = int(k) * int(rerank_factor)
-    cand = (
-        f"SELECT QUERY_ID, MATCH_ID FROM ("
-        f"SELECT *, ROW_NUMBER() OVER (PARTITION BY QUERY_ID "
-        f"ORDER BY ADC_SCORE DESC, MATCH_ID ASC) AS __adcrk "
-        f"FROM ({scored})) WHERE __adcrk <= {kf}"
-    )
-    exact = f"round({_dot_sql('qn.__u', 'tn.__u')}, {int(round_to)})"
+    score = "COSINE" if rerank else "ADC_SCORE"
     return (
         "SELECT * FROM (WITH " + ", ".join(ctes)
-        + f" SELECT QUERY_ID, MATCH_ID, COSINE, RANK FROM ("
-        f"SELECT c.QUERY_ID, c.MATCH_ID, {exact} AS COSINE, "
-        f"CAST(ROW_NUMBER() OVER (PARTITION BY c.QUERY_ID "
-        f"ORDER BY {exact} DESC, c.MATCH_ID ASC) AS INT) AS RANK "
-        f"FROM ({cand}) c "
-        f"JOIN {nv} qn ON qn.__id = c.QUERY_ID "
-        f"JOIN {nv} tn ON tn.__id = c.MATCH_ID"
-        f") WHERE RANK <= {int(k)}) __ivfpq_out"
+        + f" SELECT CAST(__qid AS BIGINT) AS QUERY_ID, __mid AS MATCH_ID, "
+        f"__score AS {score}, RANK FROM ({ranked})) __ivfpq_out"
     )
 
 
@@ -1426,11 +1427,11 @@ def embedding_join_ivfpq(
     candidate scan reads ZERO vector bytes on the big side (a 64-d
     float64 corpus reads 64× fewer bytes than embedding_join_ivf's probed
     scan). Each left row probes its ``nprobe`` highest rounded-cosine
-    inverted lists; the probe frame carries per-(query, list) ADC lookup
-    tables (``_adc_probe_frame`` — m·codebook_size doubles per row,
-    SMALLER than the query vector whenever m·codebook_size < dim) instead
-    of query vectors, so after the equi-join on the centroid id the
-    per-candidate work is m array lookups. The candidate join carries NO
+    inverted lists; the probe frame carries per-query ADC lookup tables
+    (the shared :func:`_adc_scores` path — m·codebook_size doubles per
+    row, SMALLER than the query vector whenever m·codebook_size < dim)
+    instead of query vectors, so after the equi-join on the centroid id
+    the per-candidate work is m array lookups. The candidate join carries NO
     broadcast hint — the left side may be the full corpus (unlike the
     dedup form, whose batch side is small by contract), so the plan stays
     AQE-skew-eligible on hot inverted lists and AQE promotes small probe
@@ -1514,91 +1515,20 @@ def embedding_join_ivfpq(
             ),
             True,
         )
-    # dim guard (the dedup_against_embedding ivfpq contract): a mismatched
-    # left side would zip_with into NULL probe sims, silently joinless
-    first = df.select(F.size(F.col(v)).alias("d")).first()
-    if first is not None and int(first["d"]) != idx.m * idx.d_sub:
-        raise ParameterException(
-            f"left vectors have dim {int(first['d'])} but the index covers "
-            f"dim {idx.m * idx.d_sub} (m={idx.m} x d_sub={idx.d_sub})"
-        )
-    np_ = _resolve_nprobe(nprobe, len(idx.centroids))
     mid = f"{right_prefix}ID"
-    # spread() the query side BEFORE the per-row probe/LUT work (round 13;
-    # the embedding_join_ivf precedent): the left frame is often a narrow
-    # single-partition scan, and everything up to the candidate join's
-    # broadcast/exchange — normalization, the m·cb·d_sub LUT fold, probe
-    # ranking — would otherwise run in ONE task (measured 0.9 s serial per
-    # call at the bench sizing, the single-task stage in the profile)
-    q = _unit_rounded(
-        spread(df).select(F.col(i).alias("__qid"), F.col(v).alias("__qvec")),
-        "__qvec", "__qu",
-    ).select("__qid", "__qu")
-    if idx.rotation is not None:
-        # the corpus lives in rotated space; the left side must probe and
-        # build LUTs there too (rotation preserves the dot, so COSINE
-        # still approximates the ORIGINAL cosine)
-        q = q.withColumn("__qu", _rotate_expr("__qu", idx.rotation))
-    probes = _adc_probe_frame(
-        _probe_lists_rounded(
-            _adc_query_luts(q, idx, "__qu"), idx.centroids, np_,
-            "__qid", "__qu", idx.round_to, carry=("__lut",),
-        ),
-        idx, "__qu",
-    )
-    # the equi-join key is an argmax-over-HOF-lambdas expression on BOTH
-    # sides — _cid_barrier stops Catalyst's constraint inference from
-    # substituting either side's defining expression across the join (an
-    # invalid plan whenever the index cache is not substituted; see the
-    # helper's docstring). NO broadcast hint: the left side may be the
-    # full corpus (unlike the dedup form, whose batch side is small by
-    # contract), so the plan stays AQE-skew-eligible on hot inverted
-    # lists and AQE promotes small probe sides to broadcast on its own.
-    scored = (
-        idx.frame.select(
-            F.col("__id").alias(mid),
-            _cid_barrier("__cid").alias("__cid"), "__codes",
-        )
-        .join(probes.withColumn("__cid", _cid_barrier("__cid")), on="__cid")
-        .filter(F.col("__qid") != F.col(mid))
-        .withColumn("COSINE", _adc_pair_score(idx))
-    )
-    w = Window.partitionBy("__qid").orderBy(
-        F.col("COSINE").desc(), F.col(mid).asc()
-    )
-    kf = k * rerank_factor if rerank else k
-    matches = (
-        scored.withColumn("RANK", F.row_number().over(w).cast("int"))
-        .filter(F.col("RANK") <= kf)
-    )
-    if rerank:
-        # IVFADC+R refine in join shape: survivors (|left| x k x factor
-        # rows) read the stored full-width vectors; the right corpus never
-        # re-scans. No broadcast hint — the survivor frame scales with the
-        # left side, so AQE decides (the candidate-join posture above).
-        cu = idx.frame.select(
-            F.col("__id").alias(mid), F.col("__u").alias("__cu")
-        )
-        rw = Window.partitionBy("__qid").orderBy(
-            F.col("COSINE").desc(), F.col(mid).asc()
-        )
-        dot = lambda a, b: F.aggregate(  # noqa: E731 — sequential fold
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0.0), lambda acc, x: acc + x,
-        )
-        matches = (
-            matches.select("__qid", mid)
-            .join(cu, on=mid)
-            .join(q, on="__qid")
-            .withColumn(
-                "COSINE",
-                F.round(dot(F.col("__qu"), F.col("__cu")), idx.round_to),
-            )
-            .withColumn("RANK", F.row_number().over(rw).cast("int"))
-            .filter(F.col("RANK") <= k)
-        )
+    q = _ivfpq_queries(df, v, i, idx, "left")
+    # NO broadcast hint: the left side may be the full corpus (unlike the
+    # dedup form, whose batch side is small by contract), so the candidate
+    # and refine joins stay AQE-skew-eligible on hot inverted lists and
+    # AQE promotes small sides to broadcast on its own
+    scored = _adc_scores(
+        q, idx, _resolve_nprobe(nprobe, len(idx.centroids)), mid
+    ).filter(F.col("__qid") != F.col(mid))
+    matches = _adc_topk(scored, idx, mid, k, q if rerank else None,
+                        rerank_factor)
     out = df.join(
-        matches.select(F.col("__qid").alias(i), mid, "COSINE", "RANK"),
+        matches.select(F.col("__qid").alias(i), mid,
+                       F.col("__score").alias("COSINE"), "RANK"),
         on=i, how="inner",
     )
     return release_with(out, idx.frame) if own else out
@@ -1613,16 +1543,14 @@ def _r_embedding_join_ivfpq(source, vec_col, id_col, other=None,
                             rotation_sweeps=4, rotation_dim=None,
                             rerank=False, rerank_factor=4,
                             right_prefix="MATCH_", index=None) -> str:
-    """Full SQL replay of the PQ-coded ANN join: the
-    ``_r_similarity_search_ivfpq`` composition with the fit chains running
-    over the RIGHT table and a table-shaped query side — every left row
-    normalizes (shared ``_unit_norm_sql`` contract), probes its top-nprobe
-    rounded-cosine lists, and scores probed candidates by per-subspace
-    query-slice × codebook folds; left scalar columns join back at the
-    end. Query LUT slices always come from the raw normalized left
-    vectors (for residual indexes the corpus codes were fit on residuals,
-    the queries were not — Jégou 2011 §V.A)."""
+    """Full SQL replay of the PQ-coded ANN join: the shared
+    :func:`_r_ivfpq_ranked` core with the fit chains running over the
+    RIGHT table and a table-shaped query side — every left row normalizes
+    (shared ``_unit_norm_sql`` contract), rotates with the corpus when
+    ``rotate``, probes and scores exactly as the search does; left scalar
+    columns join back at the end."""
     from ..errors import TransformRenderingException
+    from .cluster import _unit_norm_sql
 
     if index is not None:
         raise TransformRenderingException(
@@ -1644,151 +1572,22 @@ def _r_embedding_join_ivfpq(source, vec_col, id_col, other=None,
             "embedding_join_ivfpq scores by the rounded replay contract; "
             "round_to must be an int"
         )
-    if k < 1:
-        raise ParameterException("k must be >= 1")
-    if num_centroids < 1:
-        raise ParameterException("num_centroids must be >= 1")
-    if nprobe < 1:
-        raise ParameterException("nprobe must be >= 1")
-    from .cluster import _dot_sql, _kmeans_render_parts, _unit_norm_sql
-
-    ov, oi = other_vec or vec_col, other_id or id_col
-    ctes = []
-    nv_override = None
-    mat = None
-    if rotate:
-        if rotation_dim is None:
-            raise TransformRenderingException(
-                "embedding_join_ivfpq(rotate=True) renders only with an "
-                "explicit rotation_dim (the vector dimension is unknowable "
-                "at render time — the binary n_words contract)"
-            )
-        mat = rotation_matrix(int(rotation_seed), int(rotation_dim),
-                              int(rotation_sweeps))
-        ctes.append(
-            "__ivfj_rnv AS "
-            + _rotate_sql(mat, _unit_norm_sql(ov, oi, other))
-        )
-        nv_override = "__ivfj_rnv"
-    nv, kcents, kassign = _kmeans_render_parts(
-        other, ov, oi, num_centroids, coarse_iterations, round_to,
-        "embedding_join_ivfpq", nv_override=nv_override,
+    ctes, ranked = _r_ivfpq_ranked(
+        "embedding_join_ivfpq", other, other_vec or vec_col,
+        other_id or id_col,
+        lambda nv, rotated: (
+            "SELECT __id AS qid, __u FROM "
+            f"{rotated(_unit_norm_sql(vec_col, id_col, source))} __q"
+        ),
+        k, num_centroids, nprobe, coarse_iterations, m, codebook_size,
+        iterations, round_to, residual, rotate, rotation_seed,
+        rotation_sweeps, rotation_dim, rerank, rerank_factor,
     )
-    sim = f"round({_dot_sql('t.__u', 's.v')}, {int(round_to)})"
-    mid = f"{right_prefix}ID"
-    # name the centroid relation once — assignment, probe, residual
-    # construction and coarse-term LUT all reference it (inlining would
-    # multiply the unrolled Lloyd chain)
-    ctes.append(f"__ivfj_cents AS (SELECT c, v FROM {kcents})")
-    kc_rel = "__ivfj_cents"
-    ctes.append(f"__ivfj_asg AS (SELECT __id, c FROM {kassign(kc_rel)})")
-    qnv = _unit_norm_sql(vec_col, id_col, source)
-    if rotate:
-        # the left side probes in rotated space too
-        qnv = _rotate_sql(mat, qnv)
-    ctes.append(
-        f"__ivfj_q AS (SELECT __id AS qid, __u FROM {qnv} __ivfj_qnv)"
-    )
-    ctes.append(
-        f"__ivfj_probe AS (SELECT __id AS qid, c FROM (SELECT t.__id, s.c, "
-        f"ROW_NUMBER() OVER (PARTITION BY t.__id ORDER BY {sim} DESC, "
-        f"s.c ASC) AS rn FROM (SELECT qid AS __id, __u FROM __ivfj_q) t "
-        f"CROSS JOIN {kc_rel} s) WHERE rn <= {int(nprobe)})"
-    )
-    vec_source = None
-    if residual:
-        ctes.append(
-            f"__ivfj_rv AS (SELECT t.__id, zip_with(t.__u, c.v, "
-            f"(x, y) -> x - y) AS __u FROM {nv} t "
-            f"JOIN __ivfj_asg a ON a.__id = t.__id "
-            f"JOIN {kc_rel} c ON c.c = a.c)"
-        )
-        vec_source = "__ivfj_rv"
-        ctes.append(
-            f"__ivfj_qc AS (SELECT t.qid, s.c AS cid, "
-            f"{_dot_sql('t.__u', 's.v')} AS cv FROM __ivfj_q t "
-            f"CROSS JOIN {kc_rel} s)"
-        )
-    if vec_source is None and rotate:
-        vec_source = nv  # the rotated right-side CTE (plain path)
-    parts = _pq_render_parts(
-        other, ov, oi, m, codebook_size, iterations, round_to,
-        "embedding_join_ivfpq", vec_source=vec_source,
-    )
-    d_sub_sql = f"(size(__u) DIV {int(m)})"
-    for j, (_sub, cb, a) in enumerate(parts):
-        ctes.append(f"__pqj_cb{j} AS (SELECT c, v FROM {cb})")
-        ctes.append(f"__pqj_f{j} AS (SELECT __id, c FROM {a})")
-        # query slices ALWAYS from the raw normalized left vectors
-        ctes.append(
-            f"__pqj_q{j} AS (SELECT qid, slice(__u, {j} * {d_sub_sql} + 1, "
-            f"{d_sub_sql}) AS v FROM __ivfj_q)"
-        )
-    dot = (
-        "aggregate(zip_with(__pqj_q{j}.v, __pqj_b{j}.v, (x, y) -> x * y), "
-        "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-    )
-    score = " + ".join(dot.replace("{j}", str(j)) for j in range(int(m)))
-    if residual:
-        score = f"__ivfj_qc.cv + {score}"
-    code_joins = " ".join(
-        f"JOIN __pqj_f{j} ON __pqj_f{j}.__id = cnd.{oi} "
-        f"JOIN __pqj_cb{j} __pqj_b{j} ON __pqj_b{j}.c = __pqj_f{j}.c"
-        for j in range(int(m))
-    )
-    q_joins = " ".join(
-        f"JOIN __pqj_q{j} ON __pqj_q{j}.qid = __ivfj_probe.qid"
-        for j in range(int(m))
-    )
-    if residual:
-        q_joins += (
-            " JOIN __ivfj_qc ON __ivfj_qc.qid = __ivfj_probe.qid "
-            "AND __ivfj_qc.cid = __ivfj_asg.c"
-        )
-    scored = (
-        f"SELECT __ivfj_probe.qid AS __qid, cnd.{oi} AS {mid}, "
-        f"round({score}, {int(round_to)}) AS COSINE "
-        f"FROM {other} cnd {code_joins} "
-        f"JOIN __ivfj_asg ON __ivfj_asg.__id = cnd.{oi} "
-        f"JOIN __ivfj_probe ON __ivfj_probe.c = __ivfj_asg.c {q_joins} "
-        f"WHERE cnd.{oi} <> __ivfj_probe.qid"
-    )
-    if rerank:
-        if rerank_factor < 1:
-            raise ParameterException("rerank_factor must be >= 1")
-        # IVFADC+R refine in join shape: the ADC-ranked survivor set joins
-        # back to the staged right-side unit vectors (rotated when
-        # rotate=True — same space as the probing left side) for the exact
-        # rounded cosine
-        kf = int(k) * int(rerank_factor)
-        cand = (
-            f"SELECT __qid, {mid} FROM ("
-            f"SELECT *, ROW_NUMBER() OVER (PARTITION BY __qid "
-            f"ORDER BY COSINE DESC, {mid} ASC) AS __adcrk "
-            f"FROM ({scored})) WHERE __adcrk <= {kf}"
-        )
-        exact = f"round({_dot_sql('qn.__u', 'tn.__u')}, {int(round_to)})"
-        ranked = (
-            f"SELECT __qid, {mid}, COSINE, RANK FROM ("
-            f"SELECT c.__qid, c.{mid}, {exact} AS COSINE, "
-            f"CAST(ROW_NUMBER() OVER (PARTITION BY c.__qid "
-            f"ORDER BY {exact} DESC, c.{mid} ASC) AS INT) AS RANK "
-            f"FROM ({cand}) c "
-            f"JOIN __ivfj_q qn ON qn.qid = c.__qid "
-            f"JOIN {nv} tn ON tn.__id = c.{mid}"
-            f") WHERE RANK <= {int(k)}"
-        )
-    else:
-        ranked = (
-            f"SELECT __qid, {mid}, COSINE, RANK FROM ("
-            f"SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY __qid "
-            f"ORDER BY COSINE DESC, {mid} ASC) AS INT) AS RANK "
-            f"FROM ({scored})) WHERE RANK <= {int(k)}"
-        )
     return (
         "SELECT * FROM (WITH " + ", ".join(ctes)
-        + f" SELECT s.*, m.{mid}, m.COSINE, m.RANK FROM {source} s "
-        f"JOIN ({ranked}) m ON m.__qid = s.{id_col}) __ivfpqj_out"
+        + f" SELECT s.*, m.__mid AS {right_prefix}ID, m.__score AS COSINE, "
+        f"m.RANK FROM {source} s JOIN ({ranked}) m ON m.__qid = s.{id_col}"
+        f") __ivfpqj_out"
     )
 
 

@@ -111,7 +111,26 @@ def _with_normalized(df: DataFrame, vec_col: str, out_col: str = "__nvec") -> Da
 
 
 def _dot(a, b):
+    """Sequential-fold dot product — the same evaluation order in both
+    engines, so every replayed score folds bit-identically."""
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
+
+
+def _check_dim(df: DataFrame, vec_col: str, dim: int, what: str) -> None:
+    """Raise unless ``df``'s first non-NULL ``vec_col`` vector has ``dim``
+    components — the index-side dimension guard (uniform-dim assumption,
+    one ``first()`` job). A mismatched batch would otherwise zip_with into
+    NULL sims and NULL probe/centroid ids: silently joinless or
+    unsearchable rows, not an error. NULL vectors are skipped, since
+    ``size(NULL)`` is NULL under ANSI."""
+    first = df.filter(F.col(vec_col).isNotNull()).select(
+        F.size(F.col(vec_col)).alias("d")
+    ).first()
+    if first is not None and int(first["d"]) != dim:
+        raise ParameterException(
+            f"{what} vectors have dim {int(first['d'])} but the index covers "
+            f"dim {dim}"
+        )
 
 
 def _centroid_array(cents: list) -> "F.Column":
@@ -416,15 +435,8 @@ def update_ivf_index(
     the old one remains usable — ``release()`` whichever you keep.
     """
     v, i = resolve_col(new_vecs, vec_col), resolve_col(new_vecs, id_col)
-    # dimension guard (mirrors update_ivfpq_index): a mismatched batch
-    # would zip_with against the centroids into NULL sims and land every
-    # row on a NULL centroid id — silently unsearchable, not an error
-    first = new_vecs.select(F.size(F.col(v)).alias("d")).first()
-    if first is not None and index.centroids and int(first["d"]) != len(index.centroids[0][1]):
-        raise ParameterException(
-            f"batch vectors have dim {int(first['d'])} but the index was "
-            f"built over dim {len(index.centroids[0][1])}"
-        )
+    if index.centroids:
+        _check_dim(new_vecs, v, len(index.centroids[0][1]), "batch")
     nbase = _with_normalized(
         spread(new_vecs).select(F.col(i).alias("__id"), F.col(v).alias("__vec")),
         "__vec",
@@ -907,11 +919,7 @@ def dedup_against_embedding(
         flagged = matches.select(F.col("__qid").alias(i)).dropDuplicates()
         return df.join(flagged, on=i, how="left_anti").select(*df.columns)
     elif method == "ivfpq":
-        from .pq import (
-            IVFPQIndex, _adc_pair_score, _adc_probe_frame, _adc_query_luts,
-            _probe_lists_rounded, ivfpq_index,
-        )
-        from .cluster import _unit_rounded
+        from .pq import IVFPQIndex, _adc_scores, _ivfpq_queries, ivfpq_index
 
         if round_scores is None:
             raise ParameterException(
@@ -948,54 +956,16 @@ def dedup_against_embedding(
                 residual=residual,
             )
             cached = pidx.frame
-        first = df.select(F.size(F.col(v)).alias("d")).first()
-        if first is not None and int(first["d"]) != pidx.m * pidx.d_sub:
-            raise ParameterException(
-                f"batch vectors have dim {int(first['d'])} but the index "
-                f"covers dim {pidx.m * pidx.d_sub} (m={pidx.m} x "
-                f"d_sub={pidx.d_sub})"
-            )
-        nprobe = _resolve_nprobe(nprobe, len(pidx.centroids))
-        # spread() before the per-row LUT/probe work — the batch side may
-        # be a single-partition scan (round 13; embedding_join_ivfpq note)
-        q = _unit_rounded(
-            spread(df).select(F.col(i).alias("__qid"), F.col(v).alias("__qvec")),
-            "__qvec", "__qu",
-        ).select("__qid", "__qu")
-        if pidx.rotation is not None:
-            # rotated index: the batch must probe in rotated space too
-            from .pq import _rotate_expr
-
-            q = q.withColumn("__qu", _rotate_expr("__qu", pidx.rotation))
-        probes = _adc_probe_frame(
-            _probe_lists_rounded(
-                _adc_query_luts(q, pidx, "__qu"), pidx.centroids, nprobe,
-                "__qid", "__qu", pidx.round_to, carry=("__lut",),
-            ),
-            pidx, "__qu",
+        q = _ivfpq_queries(df, v, i, pidx, "batch")
+        # the batch is the small side by the operator's contract: its probe
+        # frame broadcasts, so the reference/PQ frame never shuffles
+        scored = _adc_scores(
+            q, pidx, _resolve_nprobe(nprobe, len(pidx.centroids)), "__rid",
+            hint="broadcast",
         )
-        from .pq import _cid_barrier
-
-        scored = (
-            pidx.frame.select(
-                F.col("__id").alias("__rid"),
-                # _cid_barrier: the key is an argmax-over-lambdas
-                # expression on both sides — without the barrier,
-                # constraint inference substitutes it across the join and
-                # builds an invalid plan when the index cache is evicted
-                # (see the helper's docstring in pq.py)
-                _cid_barrier("__cid").alias("__cid"), "__codes",
-            )
-            # batch is the small side by the operator's contract — the
-            # reference/PQ frame never shuffles, and after the LUT
-            # preparation its scan reads only (id, cid, m small ints)
-            .join(
-                F.broadcast(probes.withColumn("__cid", _cid_barrier("__cid"))),
-                on="__cid",
-            )
-            .withColumn("__cos", _adc_pair_score(pidx))
-        )
-        matches = scored.filter(F.col("__cos") >= threshold)
+        matches = scored.select(
+            "__qid", "__rid", F.col("__score").alias("__cos")
+        ).filter(F.col("__cos") >= threshold)
     else:
         if index is not None:
             if not isinstance(index, IVFIndex):

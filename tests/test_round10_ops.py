@@ -242,17 +242,19 @@ def test_rotated_renderers_and_dim_guard(emb, spark):
             **kw)
         assert sorted(map(tuple, spark.sql(sql).collect())) == sorted(
             map(tuple, df.collect()))
-    jdf = embedding_join_ivfpq(
-        emb.filter("vec_id >= 250"), "embedding", "vec_id",
-        other=emb.filter("vec_id < 250"), k=2, rotate=True,
-        rotation_seed=7, **kw)
-    jsql = _r_embedding_join_ivfpq(
-        "(SELECT * FROM __r10_rot WHERE vec_id >= 250)", "embedding",
-        "vec_id", other="(SELECT * FROM __r10_rot WHERE vec_id < 250)",
-        k=2, rotate=True, rotation_seed=7, rotation_dim=64, **kw)
     cols = ["vec_id", "label", "MATCH_ID", "COSINE", "RANK"]
-    assert sorted(map(tuple, spark.sql(jsql).select(*cols).collect())) == \
-        sorted(map(tuple, jdf.select(*cols).collect()))
+    for res in (False, True):
+        jdf = embedding_join_ivfpq(
+            emb.filter("vec_id >= 250"), "embedding", "vec_id",
+            other=emb.filter("vec_id < 250"), k=2, rotate=True,
+            rotation_seed=7, residual=res, **kw)
+        jsql = _r_embedding_join_ivfpq(
+            "(SELECT * FROM __r10_rot WHERE vec_id >= 250)", "embedding",
+            "vec_id", other="(SELECT * FROM __r10_rot WHERE vec_id < 250)",
+            k=2, rotate=True, rotation_seed=7, rotation_dim=64,
+            residual=res, **kw)
+        assert sorted(map(tuple, spark.sql(jsql).select(*cols).collect())) \
+            == sorted(map(tuple, jdf.select(*cols).collect()))
     with pytest.raises(TransformRenderingException, match="rotation_dim"):
         _r_similarity_search_ivfpq(
             "__r10_rot", "embedding", "vec_id", [0], rotate=True)
@@ -404,7 +406,7 @@ def test_embedding_join_binary_renderer_parity(emb, spark):
         _r_embedding_join_binary("t", "embedding", "vec_id", n_words=2)
 
 
-@pytest.mark.parametrize("op", ["join", "dedup"])
+@pytest.mark.parametrize("op", ["search", "join", "dedup"])
 def test_ivfpq_expression_key_join_survives_cache_eviction(emb, op):
     """Regression (round 10): the candidate equi-join's key is an
     argmax-over-HOF-lambdas expression on both sides. Without
@@ -419,7 +421,14 @@ def test_ivfpq_expression_key_join_survives_cache_eviction(emb, op):
     correctness-safety invariant)."""
     left = emb.filter("vec_id >= 450")
     right = emb.filter("vec_id < 450")
-    if op == "join":
+    if op == "search":
+        from rasgoql_spark.functions.pq import similarity_search_ivfpq
+
+        out = similarity_search_ivfpq(
+            emb, "embedding", "vec_id", [450, 451, 452], k=5,
+            num_centroids=8, nprobe=3, m=8, codebook_size=16, iterations=0,
+        ).select("QUERY_ID", "MATCH_ID", "ADC_SCORE", "RANK")
+    elif op == "join":
         out = embedding_join_ivfpq(
             left, "embedding", "vec_id", other=right, k=2, num_centroids=8,
             nprobe=3, m=8, codebook_size=16, iterations=0,
@@ -432,6 +441,74 @@ def test_ivfpq_expression_key_join_survives_cache_eviction(emb, op):
         ).select("ID", "REF_ID", "COSINE")
     gc.collect()  # fires the release_with finalizer -> cache evicted
     assert len(out.toPandas()) > 0
+
+
+def test_ivfpq_null_query_vectors_have_no_neighbours(emb, spark):
+    """A query row whose vector is NULL has no neighbours: search, join
+    and dedup drop it before probing (the search used to raise TypeError,
+    the join gave it k matches with a NULL COSINE), and the dim guards
+    read the first non-NULL vector — size(NULL) is NULL under ANSI, so a
+    NULL first row used to raise TypeError. The rendered join, whose query
+    relation filters NULL vectors the same way, equals the executed one."""
+    from rasgoql_spark.functions.pq import (
+        _r_embedding_join_ivfpq,
+        similarity_search_ivfpq,
+        update_ivfpq_index,
+    )
+
+    def null_at(df, ids):
+        return df.withColumn("embedding", F.when(
+            F.col("vec_id").isin(ids), F.lit(None)
+        ).otherwise(F.col("embedding")))
+
+    kw = dict(num_centroids=8, nprobe=3, m=8, codebook_size=16, iterations=0)
+    corpus = null_at(emb, [77])
+    both = similarity_search_ivfpq(
+        corpus, "embedding", "vec_id", [0, 77], k=5, **kw)
+    alone = similarity_search_ivfpq(
+        corpus, "embedding", "vec_id", [0], k=5, **kw)
+    assert sorted(map(tuple, both.collect())) == sorted(
+        map(tuple, alone.collect()))
+
+    left, right = emb.filter("vec_id >= 250"), emb.filter("vec_id < 250")
+    nulls = null_at(left, [260, 300])
+    jdf = embedding_join_ivfpq(
+        nulls, "embedding", "vec_id", other=right, k=2, **kw)
+    cols = ["vec_id", "label", "MATCH_ID", "COSINE", "RANK"]
+    got = sorted(map(tuple, jdf.select(*cols).collect()))
+    assert got and not {r[0] for r in got} & {260, 300}
+    nulls.createOrReplaceTempView("__r10_null_left")
+    right.createOrReplaceTempView("__r10_null_right")
+    jsql = _r_embedding_join_ivfpq(
+        "__r10_null_left", "embedding", "vec_id", other="__r10_null_right",
+        k=2, **kw)
+    assert sorted(map(tuple, spark.sql(jsql).select(*cols).collect())) == got
+
+    idx = ivfpq_index(right, "embedding", "vec_id", num_centroids=8, m=8,
+                      codebook_size=16, iterations=0)
+    rest = left.filter("vec_id > 250")
+    first_null = null_at(left.filter("vec_id = 250"), [250]).unionByName(rest)
+    try:
+        for run in (
+            lambda d: embedding_join_ivfpq(
+                d, "embedding", "vec_id", k=2, nprobe=3, index=idx
+            ).select(*cols),
+            lambda d: dedup_against_embedding(
+                d, "embedding", "vec_id", index=idx, method="ivfpq",
+                threshold=0.3, nprobe=3, mode="pairs"),
+        ):
+            assert sorted(map(tuple, run(first_null).collect())) == sorted(
+                map(tuple, run(rest).collect()))
+        from rasgoql_spark.functions.similarity import update_ivf_index
+
+        ivf = ivf_index(right, "embedding", "vec_id", num_centroids=4)
+        for base, update in ((idx, update_ivfpq_index), (ivf, update_ivf_index)):
+            upd = update(base, first_null, "embedding", "vec_id")
+            assert upd.n_docs == base.n_docs + first_null.count()
+            upd.release()
+        ivf.release()
+    finally:
+        idx.release()
 
 def test_search_ivfpq_rerank_factor1_membership_and_guards(emb):
     """rerank=True with rerank_factor=1: the survivor set IS the plain ADC
@@ -541,24 +618,26 @@ def test_ivfpq_rerank_renderer_parity(emb, spark):
 
     emb.createOrReplaceTempView("__r10_rr")
     kw = dict(num_centroids=8, nprobe=3, m=8, codebook_size=16, iterations=0)
-    for rot in (False, True):
+    for rot, res in ((False, False), (True, False), (False, True)):
         df = similarity_search_ivfpq(
             emb, "embedding", "vec_id", [0, 1, 2], k=5, rerank=True,
-            rerank_factor=4, rotate=rot, rotation_seed=7, **kw)
+            rerank_factor=4, rotate=rot, rotation_seed=7, residual=res,
+            **kw)
         sql = _r_similarity_search_ivfpq(
             "__r10_rr", "embedding", "vec_id", [0, 1, 2], k=5, rerank=True,
             rerank_factor=4, rotate=rot, rotation_seed=7,
-            rotation_dim=64 if rot else None, **kw)
+            rotation_dim=64 if rot else None, residual=res, **kw)
         assert sorted(map(tuple, spark.sql(sql).collect())) == sorted(
             map(tuple, df.collect()))
-    jdf = embedding_join_ivfpq(
-        emb.filter("vec_id >= 250"), "embedding", "vec_id",
-        other=emb.filter("vec_id < 250"), k=2, rerank=True, rerank_factor=3,
-        **kw)
     cols = ["vec_id", "label", "MATCH_ID", "COSINE", "RANK"]
-    jsql = _r_embedding_join_ivfpq(
-        "(SELECT * FROM __r10_rr WHERE vec_id >= 250)", "embedding",
-        "vec_id", other="(SELECT * FROM __r10_rr WHERE vec_id < 250)",
-        k=2, rerank=True, rerank_factor=3, **kw)
-    assert sorted(map(tuple, spark.sql(jsql).select(*cols).collect())) == \
-        sorted(map(tuple, jdf.select(*cols).collect()))
+    for res in (False, True):
+        jdf = embedding_join_ivfpq(
+            emb.filter("vec_id >= 250"), "embedding", "vec_id",
+            other=emb.filter("vec_id < 250"), k=2, rerank=True,
+            rerank_factor=3, residual=res, **kw)
+        jsql = _r_embedding_join_ivfpq(
+            "(SELECT * FROM __r10_rr WHERE vec_id >= 250)", "embedding",
+            "vec_id", other="(SELECT * FROM __r10_rr WHERE vec_id < 250)",
+            k=2, rerank=True, rerank_factor=3, residual=res, **kw)
+        assert sorted(map(tuple, spark.sql(jsql).select(*cols).collect())) \
+            == sorted(map(tuple, jdf.select(*cols).collect()))

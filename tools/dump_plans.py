@@ -164,17 +164,18 @@ ANNOTATED = [
     ("similarity_search_ivfpq (round 8)", "similarity_search_ivfpq",
      "IVF-PQ ANN (inline fit shown — the gate query's form): coarse "
      "assignment and PQ encoding are literal projections persisted once as "
-     "the encoded index; each query's candidates are pushed IN-filters "
-     "(__cid IN probed, id != qid) over that cache — no broadcast, no "
-     "join; the ONLY Exchange is the final per-query top-k window, and "
-     "WindowGroupLimit prunes to k rows per query BEFORE the shuffle, so "
-     "shuffle volume is queries x k at any corpus size "
-     "(test_ivfpq_prebuilt_search_single_exchange pins this on the "
-     "prebuilt path)."),
+     "the encoded index; the queries' probe frame — per-query ADC lookup "
+     "tables, not vectors (the shared _adc_scores path) — broadcasts onto "
+     "the codes-only scan of that cache; the ONLY Exchange is the final "
+     "per-query top-k window, and WindowGroupLimit prunes to k rows per "
+     "query BEFORE the shuffle, so shuffle volume is queries x k at any "
+     "corpus size (test_ivfpq_prebuilt_search_single_exchange pins this "
+     "on the prebuilt path)."),
     ("dedup_against_ivfpq (round 9)", "dedup_against_ivfpq",
      "Incremental semantic dedup over PQ codes: the batch's probe frame — "
      "carrying precomputed per-(query, list) ADC lookup tables, NOT "
-     "vectors (_adc_probe_frame) — broadcasts onto the encoded reference, "
+     "vectors (the shared _adc_scores path) — broadcasts onto the "
+     "encoded reference, "
      "whose scan reads (id, cid, m small ints) only; scoring is m array "
      "lookups per candidate, and pairs mode has NO hashpartitioning "
      "exchange at all (test_dedup_ivfpq_reference_never_shuffles pins "
