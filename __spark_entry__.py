@@ -2151,7 +2151,7 @@ def q_dedup_against_substring(spark, sf):
         min_tokens=20, max_doc_freq=50, mode="pairs")
     # release the index's scoped_persist frames with the result (r12 advice:
     # an internally built index must not leak persisted frames per call)
-    return release_with(out, *idx._caches)
+    return release_with(out, *idx._owned)
 
 
 def q_stream_dedup_substring_batch(spark, sf):

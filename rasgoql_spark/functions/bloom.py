@@ -36,6 +36,15 @@ from pyspark.sql import functions as F
 from ..errors import ParameterException
 from ..operators._util import resolve_col
 from ..registry import spark_transform
+from ._index import (
+    PersistedIndex,
+    check_fresh,
+    loaded,
+    materialize,
+    read_frames,
+    read_params,
+    save_artifact,
+)
 
 
 def _norm_fp(c: Column) -> Column:
@@ -127,17 +136,8 @@ def dedup_against_bloom(
                 "BloomIndex was built with different bits_log2/num_hashes "
                 "than this call"
             )
-        if reference is not None and index.n_docs is not None:
-            # integrity check tying the index to the corpus it claims to
-            # cover (same contract as dedup_against + MinHashIndex); omit
-            # reference on the index path to skip the count
-            rc = reference.count()
-            if rc != index.n_docs:
-                raise ParameterException(
-                    f"BloomIndex was built over {index.n_docs} reference "
-                    f"documents but the passed reference has {rc} — fold "
-                    "the new docs in with update_bloom_index or rebuild"
-                )
+        # omit reference on the index path to skip the count
+        check_fresh(index, reference)
         bits, ref_fps = index.bits, index.fps
     else:
         ref_fps = None
@@ -177,7 +177,7 @@ def dedup_against_bloom(
     return df.join(confirmed, on=i, how="left_anti")
 
 
-class BloomIndex:
+class BloomIndex(PersistedIndex):
     """Reusable incremental-dedup index: the Bloom bit table AND the
     distinct reference fingerprints, both persisted. The per-batch cost
     split of ``dedup_against_bloom`` is: (a) bit-table membership — bounded
@@ -186,24 +186,19 @@ class BloomIndex:
     work, measured dominant at 100:1 reference:batch ratios). Build both
     structures once; per-batch work is then the broadcast bit join plus a
     probe of the cached fingerprint table by bloom positives only.
-    ``release()`` unpersists both."""
+    Release, staleness and artifacts: see :mod:`._index`; ``carry`` holds
+    the frames inherited from the index ``update_bloom_index`` folded
+    into, so releasing the update frees the whole increment chain."""
+
+    _PARAMS = "bits_log2 int, num_hashes int, n_docs long"
 
     def __init__(self, bits: DataFrame, fps: DataFrame, bits_log2: int,
                  num_hashes: int, n_docs: int | None = None, carry=()):
+        super().__init__(n_docs, owned=(bits, fps, *carry))
         self.bits = bits
         self.fps = fps
         self.bits_log2 = bits_log2
         self.num_hashes = num_hashes
-        # corpus fingerprint: reference row count at build time (counted
-        # off the SAME cached scan the fps derive from, so it cannot drift
-        # from the indexed rows); None on pre-fingerprint artifacts
-        self.n_docs = n_docs
-        # frames inherited from a source index by update_bloom_index:
-        # releasing the updated index frees the whole increment chain
-        self._carry = tuple(carry)
-
-    def release(self) -> None:
-        release_now(self.bits, self.fps, *self._carry)
 
 
 def bloom_index(
@@ -220,16 +215,17 @@ def bloom_index(
     m = 1 << bits_log2
     # one cached fingerprint scan feeds BOTH the row count and the distinct
     # fps, so n_docs is consistent-by-construction with the indexed rows
-    rows = scoped_persist(reference.select(_norm_fp(F.col(rt)).alias("__fp")))
-    n_docs = rows.count()
+    rows, n_docs = materialize(
+        reference.select(_norm_fp(F.col(rt)).alias("__fp"))
+    )
     fps = scoped_persist(rows.dropDuplicates())
-    bits = scoped_persist(
+    # materializes fps too (bits derives from it)
+    bits, _ = materialize(
         fps.select(
             F.explode(_bit_positions(F.col("__fp"), num_hashes, m)).alias("BIT")
         )
         .dropDuplicates(["BIT"])
     )
-    bits.count()  # materializes fps too (bits derives from it)
     release_now(rows)
     return BloomIndex(bits, fps, bits_log2, num_hashes, n_docs=n_docs)
 
@@ -247,13 +243,12 @@ def update_bloom_index(
     old one remains usable."""
     rt = resolve_col(new_docs, text)
     m = 1 << index.bits_log2
-    rows = scoped_persist(new_docs.select(_norm_fp(F.col(rt)).alias("__fp")))
-    n_new = rows.count()
+    rows, n_new = materialize(
+        new_docs.select(_norm_fp(F.col(rt)).alias("__fp"))
+    )
     new_fps = rows.dropDuplicates()
-    fps = scoped_persist(index.fps.unionByName(new_fps).dropDuplicates())
-    fps.count()  # materialize the union NOW: a later first-compute would
-    # re-read (possibly rewritten) sources in the refresh loop
-    bits = (
+    fps, _ = materialize(index.fps.unionByName(new_fps).dropDuplicates())
+    bits, _ = materialize(
         index.bits.unionByName(
             new_fps.select(
                 F.explode(
@@ -263,13 +258,11 @@ def update_bloom_index(
         )
         .dropDuplicates(["BIT"])
     )
-    bits = scoped_persist(bits)
-    bits.count()
     release_now(rows)
     n_docs = None if index.n_docs is None else index.n_docs + n_new
     return BloomIndex(
         bits, fps, index.bits_log2, index.num_hashes, n_docs=n_docs,
-        carry=(index.bits, index.fps) + index._carry,
+        carry=index._owned,
     )
 
 
@@ -277,28 +270,13 @@ def save_bloom_index(index: BloomIndex, path: str) -> str:
     """Persist a :class:`BloomIndex` as parquet (``{path}/bits``,
     ``{path}/fps``) plus a one-row params table — the cross-JOB form of the
     index: build on the corpus-refresh cadence, load per crawl batch."""
-    index.bits.write.mode("overwrite").parquet(f"{path}/bits")
-    index.fps.write.mode("overwrite").parquet(f"{path}/fps")
-    spark = index.bits.sparkSession
-    spark.createDataFrame(
-        [(index.bits_log2, index.num_hashes,
-          -1 if index.n_docs is None else int(index.n_docs))],
-        "bits_log2 int, num_hashes int, n_docs long",
-    ).write.mode("overwrite").parquet(f"{path}/params")
-    return path
+    return save_artifact(index, path, {"bits": index.bits, "fps": index.fps})
 
 
 def load_bloom_index(spark, path: str, persist: bool = True) -> BloomIndex:
     """Load a :func:`save_bloom_index` artifact. ``persist`` pins both
     frames for multi-batch reuse (call ``release()`` when done)."""
-    row = spark.read.parquet(f"{path}/params").first()
-    bits = spark.read.parquet(f"{path}/bits")
-    fps = spark.read.parquet(f"{path}/fps")
-    if persist:
-        bits = scoped_persist(bits)
-        fps = scoped_persist(fps)
-    nd = row["n_docs"] if "n_docs" in row.asDict() else None
-    return BloomIndex(
-        bits, fps, int(row["bits_log2"]), int(row["num_hashes"]),
-        n_docs=None if nd is None or int(nd) < 0 else int(nd),
-    )
+    prm = read_params(spark, path, BloomIndex)
+    bits, fps = read_frames(spark, path, ("bits", "fps"), persist)
+    return loaded(BloomIndex(bits, fps, int(prm["bits_log2"]),
+                             int(prm["num_hashes"]), n_docs=prm["n_docs"]), path)

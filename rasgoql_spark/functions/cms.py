@@ -43,6 +43,14 @@ from ..errors import ParameterException
 from ..operators._util import as_list, resolve_col, resolve_cols
 from ..registry import renderer, spark_transform
 from ._hash import md5_int
+from ._index import (
+    PersistedIndex,
+    loaded,
+    materialize,
+    read_frames,
+    read_params,
+    save_artifact,
+)
 
 DEPTH_MIN, DEPTH_MAX = 1, 16
 WIDTH_MIN, WIDTH_MAX = 8, 1 << 20
@@ -231,41 +239,36 @@ def cms_estimate(df: DataFrame, values) -> DataFrame:
     )
 
 
-class CMSIndex:
+class CMSIndex(PersistedIndex):
     """Persisted per-group frequency index: one CMS row per group, the
     mergeable cross-job form of :func:`cms_sketch`. Build on the corpus-
     refresh cadence, :func:`update_cms_index` per ingest batch — update
     cost is the NEW batch's sketch plus a |groups|-row elementwise sum;
     the raw history is never rescanned. Counter addition is exact, so an
     incrementally-maintained index is BIT-IDENTICAL to a full rebuild
-    (pinned in tests). ``release()`` unpersists the frame."""
+    (pinned in tests). Release and artifacts: see :mod:`._index`."""
+
+    _PARAMS = "depth int, width int, column string, group_by string"
+    _DEFAULTS: dict = {}
 
     def __init__(self, sketches: DataFrame, depth: int, width: int,
                  column: str, group_by):
+        super().__init__(owned=(sketches,))
         self.sketches = sketches
         self.depth = int(depth)
         self.width = int(width)
         self.column = column
         self.group_by = list(group_by or [])
 
-    def release(self) -> None:
-        from ._cache import release_now
-
-        release_now(self.sketches)
-
 
 def cms_index(df: DataFrame, column: str, group_by=None, depth: int = 4,
               width: int = 256) -> CMSIndex:
     """Build a :class:`CMSIndex` (one aggregate; frame persisted for
     multi-probe reuse)."""
-    from ._cache import scoped_persist
-
     _check_shape(depth, width)
-    sk = scoped_persist(
+    sk, _ = materialize(
         cms_sketch(df, column, group_by=group_by, depth=depth, width=width)
     )
-    sk.count()  # materialize now: a later first-compute would re-read
-    # (possibly rewritten) sources in a refresh loop
     return CMSIndex(sk, depth, width, column, as_list(group_by))
 
 
@@ -274,40 +277,28 @@ def update_cms_index(index: CMSIndex, new_rows: DataFrame) -> CMSIndex:
     batch at the index's shape, add counters per group (exact — the state
     equals a full rebuild over the combined data). Returns a NEW index;
     the old one remains usable."""
-    from ._cache import scoped_persist
-
     batch = cms_sketch(new_rows, index.column, group_by=index.group_by,
                        depth=index.depth, width=index.width)
     merged = cms_merge(
         index.sketches.unionByName(batch), index.group_by
     ).drop("SHAPE_OK")  # shapes match by construction (same index params)
-    merged = scoped_persist(merged)
-    merged.count()
+    merged, _ = materialize(merged)
     return CMSIndex(merged, index.depth, index.width, index.column,
                     index.group_by)
 
 
 def save_cms_index(index: CMSIndex, path: str) -> str:
     """Persist as parquet (``{path}/sketches`` + one-row params)."""
-    index.sketches.write.mode("overwrite").parquet(f"{path}/sketches")
-    spark = index.sketches.sparkSession
-    spark.createDataFrame(
-        [(index.depth, index.width, index.column, ",".join(index.group_by))],
-        "depth int, width int, column string, group_by string",
-    ).write.mode("overwrite").parquet(f"{path}/params")
-    return path
+    return save_artifact(index, path, {"sketches": index.sketches},
+                         group_by=",".join(index.group_by))
 
 
 def load_cms_index(spark, path: str, persist: bool = True) -> CMSIndex:
     """Load a :func:`save_cms_index` artifact."""
-    from ._cache import scoped_persist
-
-    row = spark.read.parquet(f"{path}/params").first()
-    sk = spark.read.parquet(f"{path}/sketches")
-    if persist:
-        sk = scoped_persist(sk)
-    gb = [g for g in row["group_by"].split(",") if g]
-    return CMSIndex(sk, row["depth"], row["width"], row["column"], gb)
+    prm = read_params(spark, path, CMSIndex)
+    (sk,) = read_frames(spark, path, ("sketches",), persist)
+    gb = [g for g in prm["group_by"].split(",") if g]
+    return loaded(CMSIndex(sk, prm["depth"], prm["width"], prm["column"], gb), path)
 
 
 def _bucket_spark_sql(value_expr: str, d_expr: str, width) -> str:

@@ -29,6 +29,16 @@ from ._cache import (
     release_with,
     scoped_persist,
 )
+from ._index import (
+    PersistedIndex,
+    check_fresh,
+    check_target,
+    loaded,
+    materialize,
+    read_frames,
+    read_params,
+    save_artifact,
+)
 from ._hash import MERSENNE, affine_hash, hash_params, md5_int, shingles_expr, tokens_expr
 
 
@@ -1438,17 +1448,9 @@ def dedup_against(
                     "MinHashIndex was built with different "
                     "num_hashes/bands/shingle_size than this call"
                 )
-            if reference is not None and index.n_docs is not None:
-                # integrity check tying the index to the corpus it claims to
-                # cover: a stale index silently under-dedups. Omit reference
-                # entirely (it is unused on the index path) to skip the count.
-                rc = reference.count()
-                if rc != index.n_docs:
-                    raise ParameterException(
-                        f"MinHashIndex was built over {index.n_docs} reference "
-                        f"documents but the passed reference has {rc} — "
-                        "rebuild the index or drop the reference argument"
-                    )
+            # a stale index silently under-dedups. Omit reference entirely
+            # (it is unused on the index path) to skip the count.
+            check_fresh(index, reference)
             sig_b, rep_b, bb, caches_b = index.sig, index.reps, index.bands_long, ()
         else:
             sig_b, _, caches_b = _annotate_groups(
@@ -1826,7 +1828,7 @@ def source_overlap(
     return release_with(out, gf)
 
 
-class MinHashIndex:
+class MinHashIndex(PersistedIndex):
     """Reusable reference-side MinHash index for ``dedup_against``: the
     annotated signature table, its exact-dup representatives, and the
     banded rep table — everything the cross-corpus band join consumes.
@@ -1835,24 +1837,20 @@ class MinHashIndex:
     (mirrors ``similarity.IVFIndex``): signature+banding is the expensive
     phase and is identical for every batch; reusing it makes per-batch cost
     independent of reference size beyond the (slim, cached) band join.
-    ``release()`` unpersists the cached frames."""
+    Release, staleness and artifacts: see :mod:`._index`; ``caches`` are
+    the frames ``release()`` frees."""
+
+    _PARAMS = "num_hashes int, bands int, shingle_size int, n_docs long"
 
     def __init__(self, sig, reps, bands_long, num_hashes, bands, shingle_size,
                  caches, n_docs=None):
+        super().__init__(n_docs, owned=caches)
         self.sig = sig
         self.reps = reps
         self.bands_long = bands_long
         self.num_hashes = num_hashes
         self.bands = bands
         self.shingle_size = shingle_size
-        # corpus fingerprint: row count of the reference at build time; used
-        # by dedup_against to reject an index that no longer matches the
-        # reference it is presented with (None on pre-fingerprint artifacts)
-        self.n_docs = n_docs
-        self._caches = caches
-
-    def release(self) -> None:
-        release_now(*self._caches)
 
 
 def minhash_index(
@@ -1876,10 +1874,9 @@ def minhash_index(
         gkey, F.size("__sh") > 0, probe_key=F.hash("__mh"),
     )
     reps = sig.filter(F.col("__id") == F.col("__rep"))
-    bands_long = scoped_persist(_bands_long(reps, num_hashes, bands).select(
+    bands_long, _ = materialize(_bands_long(reps, num_hashes, bands).select(
         F.col("__id").alias("__id_b"), "__band"
     ))
-    bands_long.count()  # materialize once; every batch reuses the band table
     return MinHashIndex(
         sig, reps, bands_long, num_hashes, bands, shingle_size,
         tuple(caches) + (bands_long,),
@@ -1944,54 +1941,39 @@ def update_minhash_index(
     new_bands = _bands_long(new_reps, index.num_hashes, index.bands).select(
         F.col("__id").alias("__id_b"), "__band"
     )
-    sig = index.sig.unionByName(new_sig)
+    # both tables save_minhash_index writes are persisted and materialized
+    # here, so saving the update never re-reads the artifact its base was
+    # loaded from (the load -> update -> save-to-the-same-path refresh loop)
+    sig, n = materialize(index.sig.unionByName(new_sig))
     reps = index.reps.unionByName(new_reps)
-    bands_long = scoped_persist(index.bands_long.unionByName(new_bands))
-    bands_long.count()
-    n_docs = (
-        None if index.n_docs is None else index.n_docs + new_sig.count()
-    )
+    bands_long, _ = materialize(index.bands_long.unionByName(new_bands))
     return MinHashIndex(
         sig, reps, bands_long, index.num_hashes, index.bands,
         index.shingle_size,
-        tuple(index._caches) + tuple(new_caches) + (bands_long,),
-        n_docs=n_docs,
+        index._owned + tuple(new_caches) + (sig, bands_long),
+        n_docs=None if index.n_docs is None else n,
     )
 
 
 def save_minhash_index(index: MinHashIndex, path: str) -> str:
     """Persist a :class:`MinHashIndex` as parquet (``{path}/sig``,
     ``{path}/bands``) plus a one-row params table — rebuild the reference
-    side on the corpus-refresh cadence, load per crawl batch (the same
-    cross-job contract as ``bloom.save_bloom_index``)."""
-    index.sig.write.mode("overwrite").parquet(f"{path}/sig")
-    index.bands_long.write.mode("overwrite").parquet(f"{path}/bands")
-    spark = index.sig.sparkSession
-    spark.createDataFrame(
-        [(index.num_hashes, index.bands, index.shingle_size,
-          -1 if index.n_docs is None else int(index.n_docs))],
-        "num_hashes int, bands int, shingle_size int, n_docs long",
-    ).write.mode("overwrite").parquet(f"{path}/params")
-    return path
+    side on the corpus-refresh cadence, load per crawl batch."""
+    return save_artifact(
+        index, path, {"sig": index.sig, "bands": index.bands_long}
+    )
 
 
 def load_minhash_index(spark, path: str, persist: bool = True) -> MinHashIndex:
     """Load a :func:`save_minhash_index` artifact; ``persist`` pins the
     frames for multi-batch reuse (``release()`` when done)."""
-    row = spark.read.parquet(f"{path}/params").first()
-    sig = spark.read.parquet(f"{path}/sig")
-    bands_long = spark.read.parquet(f"{path}/bands")
-    if persist:
-        sig = scoped_persist(sig)
-        bands_long = scoped_persist(bands_long)
-    reps = sig.filter(F.col("__id") == F.col("__rep"))
-    nd = row["n_docs"] if "n_docs" in row.asDict() else None
-    return MinHashIndex(
-        sig, reps, bands_long,
-        int(row["num_hashes"]), int(row["bands"]), int(row["shingle_size"]),
-        (sig, bands_long) if persist else (),
-        n_docs=None if nd is None or int(nd) < 0 else int(nd),
-    )
+    prm = read_params(spark, path, MinHashIndex)
+    sig, bands_long = read_frames(spark, path, ("sig", "bands"), persist)
+    return loaded(MinHashIndex(
+        sig, sig.filter(F.col("__id") == F.col("__rep")), bands_long,
+        int(prm["num_hashes"]), int(prm["bands"]), int(prm["shingle_size"]),
+        (sig, bands_long) if persist else (), n_docs=prm["n_docs"],
+    ), path)
 
 
 @renderer("near_dup_clusters")
@@ -2537,7 +2519,7 @@ _MDF_DEFAULT = _MdfDefault(1000)
 _MPOS_DEFAULT = _MdfDefault(20)
 
 
-class SubstringIndex:
+class SubstringIndex(PersistedIndex):
     """Reusable reference-side index for :func:`dedup_against_substring`:
     positioned shingle postings keyed by CONTENT (one posting set per
     distinct token sequence — 10^8 identical copies index once), the
@@ -2545,21 +2527,25 @@ class SubstringIndex:
     content→member-id table pairs-mode expansion reads. Content keying
     makes :func:`update_substring_index` EXACTLY rebuild-equivalent (no
     fitted state, no representative relabeling — the binary-index
-    property, unlike the IVF/PQ updates)."""
+    property, unlike the IVF/PQ updates). Release, staleness and
+    artifacts: see :mod:`._index`; ``caches`` are the frames ``release()``
+    frees."""
+
+    _PARAMS = ("min_tokens int, max_doc_freq long, n_docs long, "
+               "max_positions long, bucket_by_fp long")
+    # artifacts without max_positions predate the cap: uncapped
+    _DEFAULTS = {"max_doc_freq": None, "n_docs": None, "max_positions": None,
+                 "bucket_by_fp": None}
 
     def __init__(self, inv, fpck, members, min_tokens, max_doc_freq,
                  caches, n_docs=None, max_positions=None):
+        super().__init__(n_docs, owned=caches)
         self.inv = inv              # (__ck, __pos, __fp) — df- and position-capped
         self.fpck = fpck            # (__fp, __ck) distinct — UNcapped
         self.members = members      # (__ck, __id) every reference doc
         self.min_tokens = min_tokens
         self.max_doc_freq = max_doc_freq
         self.max_positions = max_positions  # per-(content, fp) position cap
-        self.n_docs = n_docs        # staleness fingerprint (dedup_against contract)
-        self._caches = caches
-
-    def release(self) -> None:
-        release_now(*self._caches)
 
 
 def _substring_live_fps(fpck: DataFrame, max_doc_freq) -> DataFrame | None:
@@ -2598,8 +2584,7 @@ def substring_index(
     base = spread(reference).select(
         F.col(ri).alias("__id"), toks.alias("__t")
     ).withColumn("__ck", F.md5(F.concat_ws("\x1f", "__t")))
-    members = scoped_persist(base.select("__ck", "__id"))
-    n_docs = members.count()
+    members, n_docs = materialize(base.select("__ck", "__id"))
     contents = base.select("__ck", "__t").dropDuplicates(["__ck"])
     k = int(min_tokens)
     fp_arr = F.transform(
@@ -2613,9 +2598,9 @@ def substring_index(
     )
     fpck = scoped_persist(sh.select("__fp", "__ck").distinct())
     live = _substring_live_fps(fpck, max_doc_freq)
-    inv = sh if live is None else sh.join(live, on="__fp", how="left_semi")
-    inv = scoped_persist(inv)
-    inv.count()  # materialize once; every batch reuses the postings
+    inv, _ = materialize(
+        sh if live is None else sh.join(live, on="__fp", how="left_semi")
+    )
     return SubstringIndex(inv, fpck, members, k, max_doc_freq,
                           (members, fpck, inv), n_docs=n_docs,
                           max_positions=max_positions)
@@ -2633,17 +2618,20 @@ def update_substring_index(
     contents add their postings; the df cap re-evaluates over the merged
     (fp, content) table, so fingerprints that crossed the cap drop their
     postings exactly as a rebuild would. Update cost is O(new batch) plus
-    one filter pass over the old postings (newly-dead fps only)."""
+    one filter pass over the old postings (newly-dead fps only) and one
+    count of the merged (content, id) member table."""
     nt, ni = resolve_col(new_docs, text), resolve_col(new_docs, id_col)
     k = index.min_tokens
     toks = tokens_expr(F.col(nt))
     base = spread(new_docs).select(
         F.col(ni).alias("__id"), toks.alias("__t")
     ).withColumn("__ck", F.md5(F.concat_ws("\x1f", "__t")))
-    members = scoped_persist(
+    # materialized here: saving the update must not re-read the member
+    # table of the artifact its base was loaded from (the load -> update
+    # -> save-to-the-same-path refresh loop)
+    members, n = materialize(
         index.members.unionByName(base.select("__ck", "__id"))
     )
-    n_new = base.count()
     fresh = (
         base.select("__ck", "__t").dropDuplicates(["__ck"])
         .join(index.members.select("__ck").distinct(), on="__ck",
@@ -2664,14 +2652,14 @@ def update_substring_index(
     )
     live = _substring_live_fps(fpck, index.max_doc_freq)
     merged = index.inv.unionByName(sh_new)
-    inv = merged if live is None else merged.join(live, on="__fp",
-                                                  how="left_semi")
-    inv = scoped_persist(inv)
-    inv.count()  # eager: later batches must not re-pay this union+cap
+    inv, _ = materialize(
+        merged if live is None
+        else merged.join(live, on="__fp", how="left_semi")
+    )
     return SubstringIndex(
         inv, fpck, members, k, index.max_doc_freq,
         (members, fpck, inv),
-        n_docs=None if index.n_docs is None else index.n_docs + n_new,
+        n_docs=None if index.n_docs is None else n,
         max_positions=index.max_positions,
     )
 
@@ -2689,8 +2677,7 @@ def _substring_bucket_table(path: str) -> str:
 def save_substring_index(index: SubstringIndex, path: str,
                          bucket_by_fp: int | None = None) -> str:
     """Persist as parquet (``{path}/inv``, ``{path}/fpck``,
-    ``{path}/members``) plus a one-row params table — the
-    save_minhash_index cross-job contract.
+    ``{path}/members``) plus a one-row params table.
 
     ``bucket_by_fp`` (round 13): write the postings as a Spark BUCKETED
     external table clustered by ``__fp`` into that many buckets. A
@@ -2700,12 +2687,13 @@ def save_substring_index(index: SubstringIndex, path: str,
     (test_plans.test_substring_index_bucketed_join_no_index_exchange).
     Pick buckets ~ corpus postings / target partition size; the batch
     side is exchanged into the same bucket count per screen."""
-    spark = index.inv.sparkSession
+    check_target(index, path)
+    frames = {"fpck": index.fpck, "members": index.members}
     if bucket_by_fp is not None:
         if bucket_by_fp < 1:
             raise ParameterException("bucket_by_fp must be >= 1 (or None)")
         tbl = _substring_bucket_table(path)
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+        index.inv.sparkSession.sql(f"DROP TABLE IF EXISTS {tbl}")
         (
             index.inv.write.mode("overwrite").format("parquet")
             .bucketBy(int(bucket_by_fp), "__fp").sortBy("__fp")
@@ -2713,19 +2701,8 @@ def save_substring_index(index: SubstringIndex, path: str,
             .saveAsTable(tbl)
         )
     else:
-        index.inv.write.mode("overwrite").parquet(f"{path}/inv")
-    index.fpck.write.mode("overwrite").parquet(f"{path}/fpck")
-    index.members.write.mode("overwrite").parquet(f"{path}/members")
-    spark.createDataFrame(
-        [(index.min_tokens,
-          -1 if index.max_doc_freq is None else int(index.max_doc_freq),
-          -1 if index.n_docs is None else int(index.n_docs),
-          -1 if index.max_positions is None else int(index.max_positions),
-          -1 if bucket_by_fp is None else int(bucket_by_fp))],
-        "min_tokens int, max_doc_freq long, n_docs long, "
-        "max_positions long, bucket_by_fp long",
-    ).write.mode("overwrite").parquet(f"{path}/params")
-    return path
+        frames = {"inv": index.inv, **frames}
+    return save_artifact(index, path, frames, bucket_by_fp=bucket_by_fp)
 
 
 def load_substring_index(spark, path: str, persist: bool = True) -> SubstringIndex:
@@ -2736,10 +2713,9 @@ def load_substring_index(spark, path: str, persist: bool = True) -> SubstringInd
     shuffle-free index side; bucketed postings are NOT persist-pinned —
     caching would hide the scan's bucket spec behind an InMemoryRelation
     and parquet re-reads are what the bucketing amortizes anyway."""
-    row = spark.read.parquet(f"{path}/params").first()
-    rd0 = row.asDict()
-    nb = int(rd0.get("bucket_by_fp", -1))
-    if nb > 0:
+    prm = read_params(spark, path, SubstringIndex)
+    nb = prm["bucket_by_fp"]
+    if nb is not None:
         tbl = _substring_bucket_table(path)
         if spark.catalog.tableExists(tbl):
             # the artifact may have been re-saved with a different bucket
@@ -2761,28 +2737,16 @@ def load_substring_index(spark, path: str, persist: bool = True) -> SubstringInd
                 f"INTO {nb} BUCKETS LOCATION '{path}/inv'"
             )
         inv = spark.table(tbl)
+        frames = read_frames(spark, path, ("fpck", "members"), persist)
+        fpck, members = frames
     else:
-        inv = spark.read.parquet(f"{path}/inv")
-    fpck = spark.read.parquet(f"{path}/fpck")
-    members = spark.read.parquet(f"{path}/members")
-    caches = ()
-    if persist:
-        fpck, members = scoped_persist(fpck), scoped_persist(members)
-        caches = (fpck, members)
-        if nb <= 0:
-            inv = scoped_persist(inv)
-            caches = (inv, fpck, members)
-    mdf = int(row["max_doc_freq"])
-    nd = int(row["n_docs"])
-    # pre-round-13 artifacts carry no max_positions column => uncapped
-    rd = row.asDict()
-    mp = int(rd.get("max_positions", -1))
-    return SubstringIndex(
-        inv, fpck, members, int(row["min_tokens"]),
-        None if mdf < 0 else mdf, caches,
-        n_docs=None if nd < 0 else nd,
-        max_positions=None if mp < 0 else mp,
-    )
+        frames = read_frames(spark, path, ("inv", "fpck", "members"), persist)
+        inv, fpck, members = frames
+    return loaded(SubstringIndex(
+        inv, fpck, members, int(prm["min_tokens"]), prm["max_doc_freq"],
+        tuple(frames) if persist else (), n_docs=prm["n_docs"],
+        max_positions=prm["max_positions"],
+    ), path)
 
 
 @spark_transform("dedup_against_substring", category="dedup", streaming_ok=False)
@@ -2818,7 +2782,7 @@ def dedup_against_substring(
     per-batch cost is the batch's shingling plus one fingerprint
     equi-join against the capped postings; if both are passed, the
     reference row count is checked against the index's ``n_docs``
-    fingerprint (the dedup_against staleness contract). The df cap counts
+    fingerprint. The df cap counts
     DISTINCT REFERENCE contents only — batch composition never changes
     which reference shingles are live (incremental decisions depend on
     accepted-corpus state alone). Batch docs are not exact-dup collapsed
@@ -2864,14 +2828,7 @@ def dedup_against_substring(
                     f"max_positions={index.max_positions}, call requested "
                     f"{req_mp} — pass the matching value or omit it"
                 )
-        if reference is not None and index.n_docs is not None:
-            rc = reference.count()
-            if rc != index.n_docs:
-                raise ParameterException(
-                    f"SubstringIndex was built over {index.n_docs} reference "
-                    f"docs but the passed reference has {rc} — rebuild or "
-                    "update_substring_index first"
-                )
+        check_fresh(index, reference)
         idx, built = index, None
     else:
         idx = built = substring_index(
@@ -2916,7 +2873,7 @@ def dedup_against_substring(
         hit = runs.select("__bid").distinct()
         out = df.join(hit, F.col(i) == F.col("__bid"), "left_anti")
     if built is not None:
-        return release_with(out, *built._caches)
+        return release_with(out, *built._owned)
     return out
 
 

@@ -31,6 +31,18 @@ from ..errors import ParameterException
 from ..operators._util import resolve_col, spread
 from ..registry import renderer as _renderer, spark_transform
 from ._cache import release_with, scoped_persist
+from ._index import (
+    PersistedIndex,
+    check_fresh,
+    check_type,
+    loaded,
+    materialize,
+    read_frames,
+    read_params,
+    read_vectors,
+    save_artifact,
+    vector_table,
+)
 from ._litfast import centroid_array_lit, double_array_lit, double_matrix_lit
 from .cluster import CENT_ROUND, _assign_expr, _fit_kmeans, _unit_rounded
 from .similarity import _attach_centroids, _check_dim, _dot
@@ -487,35 +499,40 @@ def pq_search(
     return release_with(out, cached)
 
 
-class IVFPQIndex:
+class IVFPQIndex(PersistedIndex):
     """Reusable IVF-PQ index: the persisted ``(__id, __u, __cid, __codes)``
     frame plus the coarse centroids and per-subspace PQ codebooks. Build
     ONCE with :func:`ivfpq_index` and pass to any number of
     ``similarity_search_ivfpq`` calls — the amortized production shape
     (index build is the expensive phase: two deterministic fits; per-query
-    search is a bounded probe + a codes-only candidate scan). Same
-    lifecycle contract as :class:`~.similarity.IVFIndex`: ``release()``
-    unpersists; ``n_docs`` is the row-count staleness fingerprint.
-    The fingerprint is CALLER-CHECKED on the search path:
+    search is a bounded probe + a codes-only candidate scan). Release,
+    staleness and artifacts: see :mod:`._index`. The ``n_docs``
+    fingerprint is CALLER-CHECKED on the search path:
     ``similarity_search_ivfpq(index=...)`` searches whatever frame the
     index holds without comparing ``n_docs`` to the passed ``df`` (the
     prebuilt path ignores ``df`` for candidates by design, so there is no
     authoritative frame to compare against — unlike ``embedding_join_ivf``,
-    whose ``other`` frame IS the claimed corpus and is count-checked).
-    Callers that track a side corpus should compare ``index.n_docs``
-    themselves before searching a possibly-stale artifact."""
+    whose ``other`` frame IS the claimed corpus and is count-checked)."""
+
+    # the rotation matrix regenerates from its spec; only the spec
+    # persists (rotated=False -> seed/sweeps ignored)
+    _PARAMS = ("m int, d_sub int, round_to int, n_docs long, residual boolean, "
+               "rotated boolean, rotation_seed int, rotation_sweeps int")
+    _DEFAULTS = {"n_docs": None, "residual": False, "rotated": False,
+                 "rotation_seed": 0, "rotation_sweeps": 4}
+    _UNIT = "vectors"
 
     def __init__(self, frame: DataFrame, centroids: list, books: list,
                  m: int, d_sub: int, round_to: int, n_docs: int | None = None,
                  residual: bool = False, rotation: list | None = None,
                  rotation_seed: int = 0, rotation_sweeps: int = 4):
+        super().__init__(n_docs, owned=(frame,))
         self.frame = frame
         self.centroids = centroids
         self.books = books
         self.m = m
         self.d_sub = d_sub
         self.round_to = round_to
-        self.n_docs = n_docs
         # residual=True: PQ codes encode (vector - assigned coarse centroid)
         # — the full IVFADC formulation; scoring must add the coarse term
         self.residual = residual
@@ -527,11 +544,6 @@ class IVFPQIndex:
         self.rotation = rotation
         self.rotation_seed = rotation_seed
         self.rotation_sweeps = rotation_sweeps
-
-    def release(self) -> None:
-        from ._cache import release_now
-
-        release_now(self.frame)
 
 
 def _cent_vec_of_cid(df: DataFrame, cents: list, cid_col: str = "__cid",
@@ -680,11 +692,10 @@ def ivfpq_index(
         codes = F.array(
             *[_code_expr(f"__s{s}", books[s], round_to) for s in range(m)]
         )
-        frame = scoped_persist(
+        frame, n = materialize(
             rstaged.withColumn("__codes", codes)
             .select("__id", F.col("__orig").alias("__u"), "__cid", "__codes")
         )
-        n = frame.count()
         release_now(rstaged)
     else:
         # independent fits: seed both from the shared collect, then run
@@ -708,12 +719,10 @@ def ivfpq_index(
         abase, carr, _adrop = _attach_centroids(staged, cents)
         assigned = abase.withColumn("__cid", _assign_expr(carr, round_to))
         codes = F.array(*[_code_expr(f"__s{s}", books[s], round_to) for s in range(m)])
-        frame = scoped_persist(
+        frame, n = materialize(
             assigned.withColumn("__codes", codes)
             .select("__id", "__u", "__cid", "__codes")
         )
-        # materialize once; the count doubles as the staleness fingerprint
-        n = frame.count()
     release_now(cached)
     return IVFPQIndex(
         frame, cents, books, m, d_sub, round_to, n_docs=n, residual=residual,
@@ -725,68 +734,35 @@ def ivfpq_index(
 def save_ivfpq_index(index: IVFPQIndex, path: str) -> str:
     """Persist an :class:`IVFPQIndex` as parquet (``{path}/frame``,
     ``{path}/centroids``, ``{path}/books``, ``{path}/params``) — the
-    cross-job artifact form (same contract as save_ivf_index)."""
-    index.frame.select("__id", "__u", "__cid", "__codes").write.mode(
-        "overwrite"
-    ).parquet(f"{path}/frame")
+    cross-job artifact form."""
     spark = index.frame.sparkSession
-    spark.createDataFrame(
-        [(int(c), [float(x) for x in v]) for c, v in index.centroids],
-        "c bigint, v array<double>",
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
-    spark.createDataFrame(
-        [
-            (int(s), int(c), [float(x) for x in v])
-            for s in range(index.m)
-            for c, v in index.books[s]
-        ],
-        "s int, c int, v array<double>",
-    ).write.mode("overwrite").parquet(f"{path}/books")
-    spark.createDataFrame(
-        [(
-            int(index.m), int(index.d_sub), int(index.round_to),
-            -1 if index.n_docs is None else int(index.n_docs),
-            bool(index.residual),
-            # the rotation matrix regenerates from its spec; only the
-            # spec persists (rotated=False -> seed/sweeps ignored)
-            index.rotation is not None,
-            int(index.rotation_seed), int(index.rotation_sweeps),
-        )],
-        "m int, d_sub int, round_to int, n_docs long, residual boolean, "
-        "rotated boolean, rotation_seed int, rotation_sweeps int",
-    ).write.mode("overwrite").parquet(f"{path}/params")
-    return path
+    return save_artifact(index, path, {
+        "frame": index.frame.select("__id", "__u", "__cid", "__codes"),
+        "centroids": vector_table(spark, index.centroids, "c bigint"),
+        "books": vector_table(spark, [
+            (s, c, v) for s, book in enumerate(index.books) for c, v in book
+        ], "s int, c int"),
+    }, rotated=index.rotation is not None)
 
 
 def load_ivfpq_index(spark, path: str, persist: bool = True) -> IVFPQIndex:
     """Load a :func:`save_ivfpq_index` artifact; centroid/codebook collects
     are bounded (k·dim + m·codebook_size·d_sub doubles), same as at build."""
-    frame = spark.read.parquet(f"{path}/frame")
-    if persist:
-        frame = scoped_persist(frame)
-    cents = [
-        (int(r["c"]), list(r["v"]))
-        for r in spark.read.parquet(f"{path}/centroids").orderBy("c").collect()
-    ]
-    prm = spark.read.parquet(f"{path}/params").first()
-    brows = spark.read.parquet(f"{path}/books").orderBy("s", "c").collect()
-    books = [[] for _ in range(int(prm["m"]))]
-    for r in brows:
-        books[int(r["s"])].append((int(r["c"]), list(r["v"])))
-    nd = int(prm["n_docs"])
-    rot, rseed, rsweeps = None, 0, 4
-    if "rotated" in prm.__fields__ and bool(prm["rotated"]):
-        rseed = int(prm["rotation_seed"])
-        rsweeps = int(prm["rotation_sweeps"])
-        rot = rotation_matrix(
-            rseed, int(prm["m"]) * int(prm["d_sub"]), rsweeps
-        )
-    return IVFPQIndex(
-        frame, cents, books, int(prm["m"]), int(prm["d_sub"]),
-        int(prm["round_to"]), n_docs=None if nd < 0 else nd,
-        residual=("residual" in prm.__fields__ and bool(prm["residual"])),
-        rotation=rot, rotation_seed=rseed, rotation_sweeps=rsweeps,
-    )
+    prm = read_params(spark, path, IVFPQIndex)
+    (frame,) = read_frames(spark, path, ("frame",), persist)
+    m, d_sub = int(prm["m"]), int(prm["d_sub"])
+    rseed, rsweeps = int(prm["rotation_seed"]), int(prm["rotation_sweeps"])
+    rot = rotation_matrix(rseed, m * d_sub, rsweeps) if prm["rotated"] else None
+    cents = read_vectors(spark, f"{path}/centroids", "c")
+    books = [[] for _ in range(m)]
+    for s, c, v in read_vectors(spark, f"{path}/books", "s", "c"):
+        books[s].append((c, v))
+    return loaded(IVFPQIndex(
+        frame, cents, books, m, d_sub, int(prm["round_to"]), n_docs=prm["n_docs"],
+        residual=bool(prm["residual"]), rotation=rot,
+        rotation_seed=rseed if rot is not None else 0,
+        rotation_sweeps=rsweeps if rot is not None else 4,
+    ), path)
 
 
 def update_ivfpq_index(
@@ -796,7 +772,7 @@ def update_ivfpq_index(
     id_col: str,
 ) -> IVFPQIndex:
     """Fold a batch into an existing :class:`IVFPQIndex` without re-fitting
-    (same contract as update_ivf_index): only the batch pays normalization
+    (as update_ivf_index does): only the batch pays normalization
     + assignment + encoding against the EXISTING centroids/codebooks, so
     per-batch cost is independent of corpus size; centroids and codebooks
     drift from the grown corpus's optimum — rebuild on the major-refresh
@@ -839,12 +815,9 @@ def update_ivfpq_index(
             "__id", F.col("__orig").alias("__u"), "__cid", "__codes"
         )
     cols = ["__id", "__u", "__cid", "__codes"]
-    merged = scoped_persist(
+    merged, n = materialize(
         index.frame.select(*cols).unionByName(assigned.select(*cols))
     )
-    # eager materialization (the update_minhash_index lesson): a later
-    # search must never re-read a possibly-rewritten source for batch rows
-    n = merged.count()
     return IVFPQIndex(
         merged, index.centroids, index.books, index.m, index.d_sub,
         index.round_to, n_docs=n, residual=index.residual,
@@ -1477,20 +1450,8 @@ def embedding_join_ivfpq(
     odf = other.df if hasattr(other, "df") else other
     v, i = resolve_col(df, vec_col), resolve_col(df, id_col)
     if index is not None:
-        if not isinstance(index, IVFPQIndex):
-            raise ParameterException(
-                "embedding_join_ivfpq takes an IVFPQIndex (build with "
-                "ivfpq_index / load_ivfpq_index); got "
-                f"{type(index).__name__}"
-            )
-        if odf is not None and index.n_docs is not None:
-            rc = odf.count()
-            if rc != index.n_docs:
-                raise ParameterException(
-                    f"IVFPQIndex was built over {index.n_docs} right-side "
-                    f"vectors but the passed frame has {rc} — fold the new "
-                    "vectors in with update_ivfpq_index or rebuild"
-                )
+        check_type(index, IVFPQIndex, "embedding_join_ivfpq")
+        check_fresh(index, odf, "right-side")
         idx, own = index, False
     else:
         if odf is None:

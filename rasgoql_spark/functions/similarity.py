@@ -18,6 +18,18 @@ from ..errors import ParameterException
 from ..operators._util import resolve_col, spread
 from ..registry import renderer, spark_transform
 from ._cache import release_now, release_with, scoped_persist
+from ._index import (
+    PersistedIndex,
+    check_fresh,
+    check_type,
+    loaded,
+    materialize,
+    read_frames,
+    read_params,
+    read_vectors,
+    save_artifact,
+    vector_table,
+)
 from ._litfast import centroid_array_lit
 from .dedup import _cosine_sql, _hyperplane_sign, _sql_id_literal, cosine_expr
 
@@ -116,21 +128,24 @@ def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
 
 
-def _check_dim(df: DataFrame, vec_col: str, dim: int, what: str) -> None:
+def _check_dim(df: DataFrame, vec_col: str, dim: int | None,
+               what: str) -> int | None:
     """Raise unless ``df``'s first non-NULL ``vec_col`` vector has ``dim``
-    components — the index-side dimension guard (uniform-dim assumption,
-    one ``first()`` job). A mismatched batch would otherwise zip_with into
-    NULL sims and NULL probe/centroid ids: silently joinless or
-    unsearchable rows, not an error. NULL vectors are skipped, since
-    ``size(NULL)`` is NULL under ANSI."""
+    components (``dim=None`` only reads it) — the index-side dimension
+    guard (uniform-dim assumption, one ``first()`` job). Returns the dim
+    read, None when every vector is NULL. A mismatched batch would
+    otherwise zip_with into NULL sims and NULL probe/centroid ids:
+    silently joinless or unsearchable rows, not an error. NULL vectors are
+    skipped, since ``size(NULL)`` is NULL under ANSI."""
     first = df.filter(F.col(vec_col).isNotNull()).select(
         F.size(F.col(vec_col)).alias("d")
     ).first()
-    if first is not None and int(first["d"]) != dim:
+    got = None if first is None else int(first["d"])
+    if got is not None and dim is not None and got != dim:
         raise ParameterException(
-            f"{what} vectors have dim {int(first['d'])} but the index covers "
-            f"dim {dim}"
+            f"{what} vectors have dim {got} but the index covers dim {dim}"
         )
+    return got
 
 
 def _centroid_array(cents: list) -> "F.Column":
@@ -338,26 +353,20 @@ def _ivf_assign(df, vec_col, id_col, num_centroids, iterations):
     return final, cents, cached
 
 
-class IVFIndex:
+class IVFIndex(PersistedIndex):
     """Reusable IVF index: the persisted (id, normalized-vector, centroid)
     frame plus the centroid list. Build ONCE with ``ivf_index`` and pass to
     any number of ``similarity_search_ivf`` calls — the production shape:
     index build is the expensive phase (seed collect + Lloyd pass);
     per-query search is a broadcast probe join over the cached frame.
-    ``release()`` unpersists the frame. ``n_docs`` is the corpus-size
-    fingerprint (rows indexed at build/update time — the same staleness
-    contract as MinHashIndex/BloomIndex). The fingerprint is a ROW COUNT
-    only: a same-size corpus with different content passes undetected
-    (documented trade — a content hash would cost a full scan per check),
-    and checking it triggers one count() on the passed frame."""
+    Release, staleness and artifacts: see :mod:`._index`."""
+
+    _UNIT = "vectors"
 
     def __init__(self, frame: DataFrame, centroids: list, n_docs: int | None = None):
+        super().__init__(n_docs, owned=(frame,))
         self.frame = frame
         self.centroids = centroids
-        self.n_docs = n_docs
-
-    def release(self) -> None:
-        release_now(self.frame)
 
 
 def ivf_index(
@@ -371,11 +380,7 @@ def ivf_index(
     stays persisted until ``release()`` — deliberate: amortizing the build
     across searches is the point."""
     final, cents, cached = _ivf_assign(df, vec_col, id_col, num_centroids, iterations)
-    final = scoped_persist(final)
-    # materialize once; searches reuse the assignment. The count doubles as
-    # the corpus fingerprint, taken off the cached frame so it cannot drift
-    # from the rows actually indexed.
-    n = final.count()
+    final, n = materialize(final)
     release_now(cached)
     return IVFIndex(final, cents, n_docs=n)
 
@@ -384,35 +389,22 @@ def save_ivf_index(index: IVFIndex, path: str) -> str:
     """Persist an :class:`IVFIndex` as parquet (``{path}/frame`` = the
     assigned normalized corpus, ``{path}/centroids``, ``{path}/params``) —
     the cross-job form of the index: build on the corpus-refresh cadence,
-    load per query batch (same artifact contract as save_minhash_index /
-    save_bloom_index)."""
-    index.frame.select("__id", "__nvec", "CENTROID_ID").write.mode(
-        "overwrite"
-    ).parquet(f"{path}/frame")
+    load per query batch."""
     spark = index.frame.sparkSession
-    spark.createDataFrame(
-        [(int(c), [float(x) for x in v]) for c, v in index.centroids],
-        "c bigint, v array<double>",
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
-    spark.createDataFrame(
-        [(-1 if index.n_docs is None else int(index.n_docs),)], "n_docs long"
-    ).write.mode("overwrite").parquet(f"{path}/params")
-    return path
+    return save_artifact(index, path, {
+        "frame": index.frame.select("__id", "__nvec", "CENTROID_ID"),
+        "centroids": vector_table(spark, index.centroids, "c bigint"),
+    })
 
 
 def load_ivf_index(spark, path: str, persist: bool = True) -> IVFIndex:
     """Load a :func:`save_ivf_index` artifact. ``persist`` pins the frame
     for multi-search reuse (call ``release()`` when done). The centroid
     list is a bounded driver collect (k·dim doubles), same as at build."""
-    frame = spark.read.parquet(f"{path}/frame")
-    if persist:
-        frame = scoped_persist(frame)
-    cents = [
-        (int(r["c"]), list(r["v"]))
-        for r in spark.read.parquet(f"{path}/centroids").orderBy("c").collect()
-    ]
-    nd = int(spark.read.parquet(f"{path}/params").first()["n_docs"])
-    return IVFIndex(frame, cents, n_docs=None if nd < 0 else nd)
+    prm = read_params(spark, path, IVFIndex)
+    (frame,) = read_frames(spark, path, ("frame",), persist)
+    cents = read_vectors(spark, f"{path}/centroids", "c")
+    return loaded(IVFIndex(frame, cents, n_docs=prm["n_docs"]), path)
 
 
 def update_ivf_index(
@@ -423,7 +415,7 @@ def update_ivf_index(
 ) -> IVFIndex:
     """Fold a batch of new vectors into an existing :class:`IVFIndex`
     without re-fitting — the corpus-refresh step of the incremental ANN
-    loop (same lifecycle as update_minhash_index / update_bloom_index).
+    loop.
 
     Only the new batch pays normalization + assignment, and it assigns
     against the index's EXISTING centroids (no Lloyd pass), so per-batch
@@ -444,11 +436,9 @@ def update_ivf_index(
     abase, carr, adrop = _attach_centroids(nbase, index.centroids)
     assigned = abase.withColumn("CENTROID_ID", _argmax_cid(carr)).drop(*adrop)
     cols = ["__id", "__nvec", "CENTROID_ID"]
-    merged = scoped_persist(index.frame.select(*cols).unionByName(assigned.select(*cols)))
-    # eager materialization, NOT lazy-first-compute: a later search must
-    # never re-read a possibly-rewritten source for the batch rows (the
-    # update_minhash_index lesson); the count doubles as the fingerprint
-    n = merged.count()
+    merged, n = materialize(
+        index.frame.select(*cols).unionByName(assigned.select(*cols))
+    )
     return IVFIndex(merged, index.centroids, n_docs=n)
 
 
@@ -528,17 +518,7 @@ def embedding_join_ivf(
             num_centroids, nprobe, right_prefix, round_scores,
         )
     if index is not None:
-        if odf is not None and index.n_docs is not None:
-            # staleness fingerprint — same contract as every other index
-            # path: a prebuilt index that no longer matches the right-side
-            # frame it claims to cover would silently miss new vectors
-            rc = odf.count()
-            if rc != index.n_docs:
-                raise ParameterException(
-                    f"IVFIndex was built over {index.n_docs} right-side "
-                    f"vectors but the passed frame has {rc} — fold the new "
-                    "vectors in with update_ivf_index or rebuild"
-                )
+        check_fresh(index, odf, "right-side")
         idx, cents, cached = index.frame, index.centroids, None
     else:
         if odf is None:
@@ -755,8 +735,7 @@ def dedup_against_embedding(
     ``(ID, REF_ID, COSINE)`` for matches.
 
     If both ``reference`` and ``index`` are passed, the reference row
-    count is checked against the index's ``n_docs`` fingerprint (same
-    staleness contract as dedup_against + MinHashIndex).
+    count is checked against the index's ``n_docs`` fingerprint.
 
     method='binary' (extreme-scale regime): both sides pack per-component
     signs into 32-bit words (``binary_quantize``) and a batch row is
@@ -776,7 +755,7 @@ def dedup_against_embedding(
     ``.sql()`` chains can both execute AND render (the renderer cannot
     see the data's dim) — it is validated against the derived value at
     execution, the ``binary_quantize`` contract. Dim guards sample the
-    first row only (uniform-dim assumption — see
+    first non-NULL vector only (uniform-dim assumption — see
     :func:`similarity_search_binary`); ``binary_index`` aggregate-checks
     uniformity at its one-time build.
 
@@ -835,45 +814,21 @@ def dedup_against_embedding(
     elif method == "binary":
         if max_hamming < 0:
             raise ParameterException("max_hamming must be >= 0")
-        bdim = df.select(F.size(F.col(v)).alias("d")).first()
+        bdim = _check_dim(df, v, None, "batch")
         if n_words is not None and bdim is not None:
             # explicit n_words exists so .sql() chains can render (the
             # renderer cannot derive dim); validate it against the data,
             # same contract as binary_quantize
-            derived = max(1, (int(bdim["d"]) + 31) // 32)
+            derived = max(1, (bdim + 31) // 32)
             if int(n_words) != derived:
                 raise ParameterException(
-                    f"n_words={int(n_words)} but the {int(bdim['d'])}-dim "
+                    f"n_words={int(n_words)} but the {bdim}-dim "
                     f"vectors pack to {derived} words"
                 )
         if index is not None:
-            if not isinstance(index, BinaryIndex):
-                raise ParameterException(
-                    "method='binary' takes a BinaryIndex (build with "
-                    "binary_index / load_binary_index); got "
-                    f"{type(index).__name__}"
-                )
-            if reference is not None and index.n_docs is not None:
-                rc = reference.count()
-                if rc != index.n_docs:
-                    raise ParameterException(
-                        f"BinaryIndex was built over {index.n_docs} "
-                        f"reference vectors but the passed reference has "
-                        f"{rc} — fold the new vectors in with "
-                        "update_binary_index or rebuild"
-                    )
-            n_words = index.n_words
-            if bdim is not None and index.dim is not None and int(bdim["d"]) != index.dim:
-                raise ParameterException(
-                    f"batch vectors have dim {int(bdim['d'])} but the "
-                    f"index was built over dim {index.dim}"
-                )
-            if bdim is not None and max(1, (int(bdim["d"]) + 31) // 32) != n_words:
-                raise ParameterException(
-                    f"batch vectors pack to "
-                    f"{max(1, (int(bdim['d']) + 31) // 32)} words but the "
-                    f"index was built with {n_words}"
-                )
+            check_type(index, BinaryIndex, "method='binary'")
+            check_fresh(index, reference)
+            n_words = _check_packing(index, bdim, None, "batch")
             rp = index.frame
         else:
             if reference is None:
@@ -884,9 +839,9 @@ def dedup_against_embedding(
             rv = resolve_col(reference, ref_vec or vec_col)
             ri = resolve_col(reference, ref_id or id_col)
             rdim = reference.select(F.size(F.col(rv)).alias("d")).first()
-            if bdim is not None and rdim is not None and int(bdim["d"]) != int(rdim["d"]):
+            if bdim is not None and rdim is not None and bdim != int(rdim["d"]):
                 raise ParameterException(
-                    f"batch dim {int(bdim['d'])} != reference dim {int(rdim['d'])}"
+                    f"batch dim {bdim} != reference dim {int(rdim['d'])}"
                 )
             n_words = max(1, ((int(rdim["d"]) if rdim is not None else 0) + 31) // 32)
             rp = spread(reference).select(
@@ -927,20 +882,8 @@ def dedup_against_embedding(
                 "round_scores must be an int"
             )
         if index is not None:
-            if not isinstance(index, IVFPQIndex):
-                raise ParameterException(
-                    "method='ivfpq' takes an IVFPQIndex (build with "
-                    "ivfpq_index / load_ivfpq_index); got "
-                    f"{type(index).__name__}"
-                )
-            if reference is not None and index.n_docs is not None:
-                rc = reference.count()
-                if rc != index.n_docs:
-                    raise ParameterException(
-                        f"IVFPQIndex was built over {index.n_docs} reference "
-                        f"vectors but the passed reference has {rc} — fold "
-                        "the new vectors in with update_ivfpq_index or rebuild"
-                    )
+            check_type(index, IVFPQIndex, "method='ivfpq'")
+            check_fresh(index, reference)
             pidx, cached = index, None
         else:
             rv = resolve_col(reference, ref_vec or vec_col)
@@ -968,19 +911,8 @@ def dedup_against_embedding(
         ).filter(F.col("__cos") >= threshold)
     else:
         if index is not None:
-            if not isinstance(index, IVFIndex):
-                raise ParameterException(
-                    "method='ivf' takes an IVFIndex (build with ivf_index "
-                    f"/ load_ivf_index); got {type(index).__name__}"
-                )
-            if reference is not None and index.n_docs is not None:
-                rc = reference.count()
-                if rc != index.n_docs:
-                    raise ParameterException(
-                        f"IVFIndex was built over {index.n_docs} reference "
-                        f"vectors but the passed reference has {rc} — fold "
-                        "the new vectors in with update_ivf_index or rebuild"
-                    )
+            check_type(index, IVFIndex, "method='ivf'")
+            check_fresh(index, reference)
             idx, cents, cached = index.frame, index.centroids, None
         else:
             rv = resolve_col(reference, ref_vec or vec_col)
@@ -1545,31 +1477,53 @@ def _r_binary_quantize(source, vec_col, id_col=None, n_words=None) -> str:
     )
 
 
-class BinaryIndex:
+class BinaryIndex(PersistedIndex):
     """Reusable 1-bit signature index: the persisted ``(__rid, __sig)``
     frame (``n_words`` 32-bit words per row — 8 bytes at 64 dims) plus
     the packing geometry. Build once with :func:`binary_index` and pass
     to any number of ``dedup_against_embedding(method='binary')`` calls —
     without it each batch re-scans and re-packs the full-width reference
     vectors (512 B/row at 64-dim float64); with it the per-batch
-    reference read is the 8-byte signatures only. Same lifecycle contract
-    as MinHashIndex/BloomIndex/IVFIndex/IVFPQIndex: ``release()``
-    unpersists, ``n_docs`` is the row-count staleness fingerprint,
-    save/load/update complete the crawl-ingest loop. ``dim`` records the
-    EXACT build-time vector dimension — word count alone is too coarse a
-    geometry guard (a 48-dim batch also packs to 2 words but its top 16
-    sign bits are zero-padding, silently inflating every Hamming
-    distance)."""
+    reference read is the 8-byte signatures only. Release, staleness and
+    artifacts: see :mod:`._index`. ``dim`` records the EXACT build-time
+    vector dimension — word count alone is too coarse a geometry guard (a
+    48-dim batch also packs to 2 words but its top 16 sign bits are
+    zero-padding, silently inflating every Hamming distance)."""
+
+    _PARAMS = "n_words int, n_docs long, dim int"
+    _DEFAULTS = {"n_docs": None, "dim": None}
+    _UNIT = "vectors"
 
     def __init__(self, frame: DataFrame, n_words: int,
                  n_docs: int | None = None, dim: int | None = None):
+        super().__init__(n_docs, owned=(frame,))
         self.frame = frame
         self.n_words = n_words
-        self.n_docs = n_docs
         self.dim = dim
 
-    def release(self) -> None:
-        release_now(self.frame)
+
+def _check_packing(index: BinaryIndex, dim: int | None, n_words,
+                   what: str) -> int:
+    """Raise unless ``dim``-dim ``what`` vectors (None: no vector read) and
+    an explicit ``n_words`` fit ``index``'s sign packing; returns its word
+    count. The exact dim guards indexes that recorded it, the word count
+    the artifacts saved before ``dim`` was."""
+    if dim is not None and index.dim is not None and dim != index.dim:
+        raise ParameterException(
+            f"{what} vectors have dim {dim} but the index was built over "
+            f"dim {index.dim}"
+        )
+    if n_words is not None and int(n_words) != index.n_words:
+        raise ParameterException(
+            f"n_words={int(n_words)} but the index was built with "
+            f"{index.n_words}"
+        )
+    if dim is not None and max(1, (dim + 31) // 32) != index.n_words:
+        raise ParameterException(
+            f"{what} vectors pack to {max(1, (dim + 31) // 32)} words but "
+            f"the index was built with {index.n_words}"
+        )
+    return int(index.n_words)
 
 
 def binary_index(reference: DataFrame, vec_col: str, id_col: str) -> BinaryIndex:
@@ -1593,41 +1547,30 @@ def binary_index(reference: DataFrame, vec_col: str, id_col: str) -> BinaryIndex
         )
     dim = int(ext["lo"])
     n_words = max(1, (dim + 31) // 32)
-    frame = scoped_persist(spread(reference).select(
+    frame, n = materialize(spread(reference).select(
         F.col(ri).alias("__rid"),
         _sign_words_expr(f"`{rv}`", n_words).alias("__sig"),
     ))
-    n = frame.count()
     return BinaryIndex(frame, n_words, n_docs=n, dim=dim)
 
 
 def save_binary_index(index: BinaryIndex, path: str) -> str:
     """Persist a :class:`BinaryIndex` as parquet (``{path}/frame``,
     ``{path}/params``) — the cross-job artifact form."""
-    index.frame.select("__rid", "__sig").write.mode("overwrite").parquet(
-        f"{path}/frame"
+    return save_artifact(
+        index, path, {"frame": index.frame.select("__rid", "__sig")}
     )
-    index.frame.sparkSession.createDataFrame(
-        [(
-            int(index.n_words),
-            -1 if index.n_docs is None else int(index.n_docs),
-            -1 if index.dim is None else int(index.dim),
-        )],
-        "n_words int, n_docs long, dim int",
-    ).write.mode("overwrite").parquet(f"{path}/params")
-    return path
 
 
 def load_binary_index(spark, path: str, persist: bool = True) -> BinaryIndex:
-    frame = spark.read.parquet(f"{path}/frame")
-    if persist:
-        frame = scoped_persist(frame)
-    prm = spark.read.parquet(f"{path}/params").first()
-    nd = int(prm["n_docs"])
-    dm = int(prm["dim"]) if "dim" in prm.__fields__ else -1
-    return BinaryIndex(frame, int(prm["n_words"]),
-                       n_docs=None if nd < 0 else nd,
-                       dim=None if dm < 0 else dm)
+    """Load a :func:`save_binary_index` artifact. ``persist`` pins the
+    signature frame for multi-batch reuse (call ``release()`` when done);
+    artifacts saved before ``dim`` was recorded load with ``dim=None``,
+    which skips the exact-dim guard and keeps the word-count one."""
+    prm = read_params(spark, path, BinaryIndex)
+    (frame,) = read_frames(spark, path, ("frame",), persist)
+    return loaded(BinaryIndex(frame, int(prm["n_words"]), n_docs=prm["n_docs"],
+                              dim=prm["dim"]), path)
 
 
 def update_binary_index(index: BinaryIndex, new_vecs: DataFrame,
@@ -1638,27 +1581,14 @@ def update_binary_index(index: BinaryIndex, new_vecs: DataFrame,
     rebuild exactly; pytest-pinned). Ids must stay unique across
     increments; returns a NEW index, eagerly materialized."""
     v, i = resolve_col(new_vecs, vec_col), resolve_col(new_vecs, id_col)
-    first = new_vecs.select(F.size(F.col(v)).alias("d")).first()
-    if first is not None:
-        if index.dim is not None and int(first["d"]) != index.dim:
-            raise ParameterException(
-                f"batch vectors have dim {int(first['d'])} but the index "
-                f"was built over dim {index.dim}"
-            )
-        nw = max(1, (int(first["d"]) + 31) // 32)
-        if nw != index.n_words:
-            raise ParameterException(
-                f"batch vectors pack to {nw} words but the index was built "
-                f"with {index.n_words}"
-            )
+    _check_packing(index, _check_dim(new_vecs, v, None, "batch"), None, "batch")
     packed = spread(new_vecs).select(
         F.col(i).alias("__rid"),
         _sign_words_expr(f"`{v}`", index.n_words).alias("__sig"),
     )
-    merged = scoped_persist(
+    merged, n = materialize(
         index.frame.select("__rid", "__sig").unionByName(packed)
     )
-    n = merged.count()
     return BinaryIndex(merged, index.n_words, n_docs=n, dim=index.dim)
 
 
@@ -1707,9 +1637,9 @@ def similarity_search_binary(
     validated when passed explicitly; pass it explicitly on ``.sql()``
     chains — the renderer cannot see the data and refuses to guess.
 
-    UNIFORM-DIM ASSUMPTION: the dim guard samples the FIRST row only (a
-    full-corpus aggregate per call would defeat the cheap-scan point of
-    this operator). In a mixed-dimension corpus, vectors longer than
+    UNIFORM-DIM ASSUMPTION: the dim guard samples the FIRST non-NULL
+    vector only (a full-corpus aggregate per call would defeat the
+    cheap-scan point of this operator). In a mixed-dimension corpus, vectors longer than
     dim lose sign bits beyond n_words*32 and shorter ones zero-pad,
     silently skewing Hamming distances — enforce uniform dims upstream
     (``binary_index`` DOES aggregate-check this at its one-time build).
@@ -1730,28 +1660,13 @@ def similarity_search_binary(
     if rerank and rerank_factor < 1:
         raise ParameterException("rerank_factor must be >= 1")
     v, i = resolve_col(df, vec_col), resolve_col(df, id_col)
-    first = df.select(F.size(F.col(v)).alias("d")).first()
-    if first is None:
+    dim = _check_dim(df, v, None, "corpus")
+    if dim is None:
         raise ParameterException("input is empty")
-    derived = max(1, (int(first["d"]) + 31) // 32)
+    derived = max(1, (dim + 31) // 32)
     if index is not None:
-        if not isinstance(index, BinaryIndex):
-            raise ParameterException(
-                "similarity_search_binary takes a BinaryIndex (build with "
-                f"binary_index / load_binary_index); got "
-                f"{type(index).__name__}"
-            )
-        if index.dim is not None and int(first["d"]) != index.dim:
-            raise ParameterException(
-                f"corpus vectors have dim {int(first['d'])} but the index "
-                f"was built over dim {index.dim}"
-            )
-        if n_words is not None and int(n_words) != index.n_words:
-            raise ParameterException(
-                f"n_words={int(n_words)} but the index was built with "
-                f"{index.n_words}"
-            )
-        n_words = int(index.n_words)
+        check_type(index, BinaryIndex, "similarity_search_binary")
+        n_words = _check_packing(index, dim, n_words, "corpus")
         packed = index.frame.select(
             F.col("__rid").alias("MATCH_ID"), "__sig"
         )
@@ -1760,7 +1675,7 @@ def similarity_search_binary(
             n_words = derived
         elif int(n_words) != derived:
             raise ParameterException(
-                f"n_words={int(n_words)} but the {int(first['d'])}-dim "
+                f"n_words={int(n_words)} but the {dim}-dim "
                 f"vectors pack to {derived} words"
             )
         n_words = int(n_words)
@@ -1977,41 +1892,19 @@ def embedding_join_binary(
         raise ParameterException("rerank_factor must be >= 1")
     odf = other.df if hasattr(other, "df") else other
     v, i = resolve_col(df, vec_col), resolve_col(df, id_col)
-    first = df.select(F.size(F.col(v)).alias("d")).first()
-    if first is None:
+    dim = _check_dim(df, v, None, "left")
+    if dim is None:
         raise ParameterException("left side is empty")
-    derived = max(1, (int(first["d"]) + 31) // 32)
+    derived = max(1, (dim + 31) // 32)
     if index is not None:
-        if not isinstance(index, BinaryIndex):
-            raise ParameterException(
-                "embedding_join_binary takes a BinaryIndex (build with "
-                f"binary_index / load_binary_index); got "
-                f"{type(index).__name__}"
-            )
+        check_type(index, BinaryIndex, "embedding_join_binary")
         if rerank and odf is None:
             raise ParameterException(
                 "rerank=True needs the right-side vectors (other=...); a "
                 "BinaryIndex holds signatures only"
             )
-        if odf is not None and index.n_docs is not None:
-            rc = odf.count()
-            if rc != index.n_docs:
-                raise ParameterException(
-                    f"BinaryIndex was built over {index.n_docs} right-side "
-                    f"vectors but the passed frame has {rc} — fold the new "
-                    "vectors in with update_binary_index or rebuild"
-                )
-        if index.dim is not None and int(first["d"]) != index.dim:
-            raise ParameterException(
-                f"left vectors have dim {int(first['d'])} but the index "
-                f"was built over dim {index.dim}"
-            )
-        if n_words is not None and int(n_words) != index.n_words:
-            raise ParameterException(
-                f"n_words={int(n_words)} but the index was built with "
-                f"{index.n_words}"
-            )
-        nw = int(index.n_words)
+        check_fresh(index, odf, "right-side")
+        nw = _check_packing(index, dim, n_words, "left")
         rp = index.frame.select("__rid", "__sig")
     else:
         if odf is None:
@@ -2022,13 +1915,13 @@ def embedding_join_binary(
         ov = resolve_col(odf, other_vec or vec_col)
         oi = resolve_col(odf, other_id or id_col)
         rdim = odf.select(F.size(F.col(ov)).alias("d")).first()
-        if rdim is not None and int(first["d"]) != int(rdim["d"]):
+        if rdim is not None and dim != int(rdim["d"]):
             raise ParameterException(
-                f"left dim {int(first['d'])} != right dim {int(rdim['d'])}"
+                f"left dim {dim} != right dim {int(rdim['d'])}"
             )
         if n_words is not None and int(n_words) != derived:
             raise ParameterException(
-                f"n_words={int(n_words)} but the {int(first['d'])}-dim "
+                f"n_words={int(n_words)} but the {dim}-dim "
                 f"vectors pack to {derived} words"
             )
         nw = derived

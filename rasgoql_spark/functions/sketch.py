@@ -35,6 +35,14 @@ from ..errors import ParameterException
 from ..naming import cleanse_name
 from ..operators._util import as_list, resolve_col, resolve_cols
 from ..registry import spark_transform
+from ._index import (
+    PersistedIndex,
+    loaded,
+    materialize,
+    read_frames,
+    read_params,
+    save_artifact,
+)
 
 LG_K_MIN, LG_K_MAX = 4, 21  # DataSketches HLL bounds
 
@@ -144,16 +152,21 @@ def hll_overlap(
     )
 
 
-class HLLIndex:
+class HLLIndex(PersistedIndex):
     """Persisted per-group cardinality index: one HLL sketch row per group,
     the mergeable cross-job form of :func:`hll_sketch`. Build on the
     corpus-refresh cadence, :func:`update_hll_index` per ingest batch —
     update cost is the NEW batch's aggregate plus a |groups|-row union;
     the raw history is never rescanned. Sketch union is a register-max,
     so an incrementally-maintained index is BIT-IDENTICAL in estimate to a
-    full rebuild (pinned in tests). ``release()`` unpersists the frame."""
+    full rebuild (pinned in tests). Release and artifacts: see
+    :mod:`._index`."""
+
+    _PARAMS = "lg_k int, column string, group_by string"
+    _DEFAULTS: dict = {}
 
     def __init__(self, sketches: DataFrame, lg_k: int, column: str, group_by):
+        super().__init__(owned=(sketches,))
         self.sketches = sketches
         self.lg_k = int(lg_k)
         self.column = column
@@ -163,21 +176,12 @@ class HLLIndex:
     def sketch_col(self) -> str:
         return f"{cleanse_name(self.column)}_SKETCH"
 
-    def release(self) -> None:
-        from ._cache import release_now
-
-        release_now(self.sketches)
-
 
 def hll_index(df: DataFrame, column: str, group_by=None, lg_k: int = 12) -> HLLIndex:
     """Build a :class:`HLLIndex` (one aggregate; frame persisted for
     multi-probe reuse)."""
-    from ._cache import scoped_persist
-
     _check_lg_k(lg_k)
-    sk = scoped_persist(hll_sketch(df, [column], group_by=group_by, lg_k=lg_k))
-    sk.count()  # materialize now: a later first-compute would re-read
-    # (possibly rewritten) sources in a refresh loop
+    sk, _ = materialize(hll_sketch(df, [column], group_by=group_by, lg_k=lg_k))
     return HLLIndex(sk, lg_k, column, as_list(group_by))
 
 
@@ -186,8 +190,6 @@ def update_hll_index(index: HLLIndex, new_rows: DataFrame) -> HLLIndex:
     batch at the index's lg_k, union per group (register-max — exactly a
     full rebuild's state for the combined data). Returns a NEW index; the
     old one remains usable."""
-    from ._cache import scoped_persist
-
     batch = hll_sketch(new_rows, [index.column], group_by=index.group_by,
                        lg_k=index.lg_k)
     keys = index.group_by
@@ -196,29 +198,19 @@ def update_hll_index(index: HLLIndex, new_rows: DataFrame) -> HLLIndex:
         .groupBy(*keys)
         .agg(F.hll_union_agg(index.sketch_col).alias(index.sketch_col))
     )
-    merged = scoped_persist(merged)
-    merged.count()
+    merged, _ = materialize(merged)
     return HLLIndex(merged, index.lg_k, index.column, keys)
 
 
 def save_hll_index(index: HLLIndex, path: str) -> str:
     """Persist as parquet (``{path}/sketches`` + one-row params)."""
-    index.sketches.write.mode("overwrite").parquet(f"{path}/sketches")
-    spark = index.sketches.sparkSession
-    spark.createDataFrame(
-        [(index.lg_k, index.column, ",".join(index.group_by))],
-        "lg_k int, column string, group_by string",
-    ).write.mode("overwrite").parquet(f"{path}/params")
-    return path
+    return save_artifact(index, path, {"sketches": index.sketches},
+                         group_by=",".join(index.group_by))
 
 
 def load_hll_index(spark, path: str, persist: bool = True) -> HLLIndex:
     """Load a :func:`save_hll_index` artifact."""
-    from ._cache import scoped_persist
-
-    row = spark.read.parquet(f"{path}/params").first()
-    sk = spark.read.parquet(f"{path}/sketches")
-    if persist:
-        sk = scoped_persist(sk)
-    gb = [g for g in row["group_by"].split(",") if g]
-    return HLLIndex(sk, row["lg_k"], row["column"], gb)
+    prm = read_params(spark, path, HLLIndex)
+    (sk,) = read_frames(spark, path, ("sketches",), persist)
+    gb = [g for g in prm["group_by"].split(",") if g]
+    return loaded(HLLIndex(sk, prm["lg_k"], prm["column"], gb), path)

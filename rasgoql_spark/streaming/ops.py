@@ -483,6 +483,7 @@ def stream_dedup_against(
     drains all available input then stops, the testable/backfill form;
     production restarts resume from the checkpoint).
     """
+    from ..functions._index import check_fresh
     from ..functions.bloom import BloomIndex, dedup_against_bloom
     from ..functions.dedup import (
         MinHashIndex,
@@ -510,23 +511,25 @@ def stream_dedup_against(
         raise ParameterException("max_hamming must be >= 0")
     if min_tokens is not None and min_tokens < 2:
         raise ParameterException("min_tokens must be >= 2")
-    if index is not None and not isinstance(
-        index, (MinHashIndex, BloomIndex, IVFIndex, IVFPQIndex, BinaryIndex,
-                SubstringIndex)
-    ):
+    # the methods a prebuilt index of each type serves
+    serves = {SubstringIndex: ("substring",), BinaryIndex: ("binary",),
+              IVFPQIndex: ("ivfpq",), IVFIndex: ("embedding", "semantic"),
+              BloomIndex: ("bloom", "exact"), MinHashIndex: ("minhash",)}
+    if index is not None and type(index) not in serves:
         raise ParameterException(
             f"index must be a MinHashIndex, BloomIndex, IVFIndex, "
             f"IVFPQIndex, BinaryIndex or SubstringIndex, "
             f"got {type(index).__name__}"
         )
+    if index is not None and method not in (None, *serves[type(index)]):
+        raise ParameterException(
+            f"method={method!r} conflicts with the passed "
+            f"{type(index).__name__}"
+        )
     if isinstance(index, SubstringIndex):
         # round 12: exact verbatim-run screening against the accepted
         # corpus — per-batch cost is the batch's shingling + one
         # fingerprint equi-join against the capped content-keyed postings
-        if method not in (None, "substring"):
-            raise ParameterException(
-                f"method={method!r} conflicts with a SubstringIndex"
-            )
         if min_tokens is not None and index.min_tokens != int(min_tokens):
             # same contract as dedup_against_substring (which raises on an
             # index/param mismatch): surface an EXPLICIT conflict pre-start
@@ -537,14 +540,6 @@ def stream_dedup_against(
                 f"min_tokens={index.min_tokens}, call requested "
                 f"{min_tokens} — pass the matching value or rebuild"
             )
-        if reference is not None and index.n_docs is not None:
-            rc = reference.count()
-            if rc != index.n_docs:
-                raise ParameterException(
-                    f"SubstringIndex was built over {index.n_docs} reference "
-                    f"documents but the passed reference has {rc} — fold "
-                    "the new docs in with update_substring_index or rebuild"
-                )
         _sub_idx = index
 
         def clean(b: DataFrame) -> DataFrame:
@@ -557,19 +552,6 @@ def stream_dedup_against(
         # the 8-byte signatures (no re-pack of full-width vectors); fold
         # accepted docs with update_binary_index (drift-free: no fitted
         # state, update == rebuild exactly)
-        if method not in (None, "binary"):
-            raise ParameterException(
-                f"method={method!r} conflicts with a BinaryIndex"
-            )
-        if reference is not None and index.n_docs is not None:
-            rc = reference.count()
-            if rc != index.n_docs:
-                raise ParameterException(
-                    f"BinaryIndex was built over {index.n_docs} reference "
-                    f"vectors but the passed reference has {rc} — fold the "
-                    "new vectors in with update_binary_index or rebuild"
-                )
-
         def clean(b: DataFrame) -> DataFrame:
             return dedup_against_embedding(
                 b, vec_col=text, id_col=id_col, method="binary", index=index,
@@ -581,61 +563,18 @@ def stream_dedup_against(
         # crawl-ingest loop stays cheap as the accepted corpus grows into
         # the billion-vector regime; fold accepted docs back with
         # update_ivfpq_index on the corpus-refresh cadence
-        if method not in (None, "ivfpq"):
-            raise ParameterException(
-                f"method={method!r} conflicts with an IVFPQIndex"
-            )
-        if reference is not None and index.n_docs is not None:
-            rc = reference.count()
-            if rc != index.n_docs:
-                raise ParameterException(
-                    f"IVFPQIndex was built over {index.n_docs} reference "
-                    f"vectors but the passed reference has {rc} — fold the "
-                    "new vectors in with update_ivfpq_index or rebuild"
-                )
-
         def clean(b: DataFrame) -> DataFrame:
             return dedup_against_embedding(
                 b, vec_col=text, id_col=id_col, method="ivfpq", index=index,
                 threshold=threshold, nprobe=nprobe, mode="filter",
             )
     elif isinstance(index, IVFIndex):
-        if method not in (None, "embedding", "semantic"):
-            raise ParameterException(
-                f"method={method!r} conflicts with an IVFIndex"
-            )
-        # one-time staleness guard, same contract as the other index paths
-        if reference is not None and index.n_docs is not None:
-            rc = reference.count()
-            if rc != index.n_docs:
-                raise ParameterException(
-                    f"IVFIndex was built over {index.n_docs} reference "
-                    f"vectors but the passed reference has {rc} — fold the "
-                    "new vectors in with update_ivf_index or rebuild"
-                )
-
         def clean(b: DataFrame) -> DataFrame:
             return dedup_against_embedding(
                 b, vec_col=text, id_col=id_col, method="ivf", index=index,
                 threshold=threshold, nprobe=nprobe, mode="filter",
             )
     elif isinstance(index, BloomIndex):
-        if method not in (None, "bloom", "exact"):
-            raise ParameterException(
-                f"method={method!r} conflicts with a BloomIndex"
-            )
-        # staleness guard, ONCE before the stream starts (never per batch):
-        # the index is the authority on the index path, so a reference that
-        # doesn't match its build-time row count means a stale artifact
-        if reference is not None and index.n_docs is not None:
-            rc = reference.count()
-            if rc != index.n_docs:
-                raise ParameterException(
-                    f"BloomIndex was built over {index.n_docs} reference "
-                    f"documents but the passed reference has {rc} — fold "
-                    "the new docs in with update_bloom_index or rebuild"
-                )
-
         def clean(b: DataFrame) -> DataFrame:
             return dedup_against_bloom(
                 b, text, id_col,
@@ -643,22 +582,6 @@ def stream_dedup_against(
                 index=index,
             )
     elif isinstance(index, MinHashIndex):
-        if method not in (None, "minhash"):
-            raise ParameterException(
-                f"method={method!r} conflicts with a MinHashIndex"
-            )
-        # same one-time integrity check the batch path runs — lifted out of
-        # the per-batch closure so the reference is never re-counted (or
-        # forwarded at all) in the hot streaming loop
-        if reference is not None and index.n_docs is not None:
-            rc = reference.count()
-            if rc != index.n_docs:
-                raise ParameterException(
-                    f"MinHashIndex was built over {index.n_docs} reference "
-                    f"documents but the passed reference has {rc} — fold "
-                    "the new docs in with update_minhash_index or rebuild"
-                )
-
         def clean(b: DataFrame) -> DataFrame:
             return dedup_against(
                 b, text, id_col, method="minhash",
@@ -722,6 +645,11 @@ def stream_dedup_against(
             "stream_dedup_against needs a reference frame or a prebuilt "
             "MinHashIndex/BloomIndex/IVFIndex"
         )
+    if index is not None:
+        # staleness guard, ONCE before the stream starts (never per batch):
+        # the reference is never re-counted, or forwarded at all, in the
+        # hot streaming loop
+        check_fresh(index, reference)
 
     # foreachBatch hands the closure a CLONED session; catalog refreshes on
     # it don't invalidate the caller's cached file listings, so keep the
@@ -882,29 +810,20 @@ def stream_embedding_join(
         raise ParameterException("max_hamming must be >= 0")
     if nprobe < 1:
         raise ParameterException("nprobe must be >= 1")
-    if isinstance(index, BinaryIndex):
-        def clean(b: DataFrame) -> DataFrame:
-            return embedding_join_binary(
-                b, vec_col, id_col, k=k, max_hamming=max_hamming,
-                right_prefix=right_prefix, index=index,
-            )
-    elif isinstance(index, IVFPQIndex):
-        def clean(b: DataFrame) -> DataFrame:
-            return embedding_join_ivfpq(
-                b, vec_col, id_col, k=k, nprobe=nprobe,
-                right_prefix=right_prefix, index=index,
-            )
-    elif isinstance(index, IVFIndex):
-        def clean(b: DataFrame) -> DataFrame:
-            return embedding_join_ivf(
-                b, vec_col, id_col, k=k, nprobe=nprobe,
-                right_prefix=right_prefix, index=index,
-            )
-    else:
+    # the join each prebuilt index type serves, with its probe parameter
+    joins = {BinaryIndex: (embedding_join_binary, {"max_hamming": max_hamming}),
+             IVFPQIndex: (embedding_join_ivfpq, {"nprobe": nprobe}),
+             IVFIndex: (embedding_join_ivf, {"nprobe": nprobe})}
+    if type(index) not in joins:
         raise ParameterException(
             "index must be a BinaryIndex, IVFPQIndex or IVFIndex, got "
             f"{type(index).__name__}"
         )
+    join, probe = joins[type(index)]
+
+    def clean(b: DataFrame) -> DataFrame:
+        return join(b, vec_col, id_col, k=k, right_prefix=right_prefix,
+                    index=index, **probe)
     return (
         df.writeStream
         .foreachBatch(_exactly_once_sink(clean, sink_path, sink_table,

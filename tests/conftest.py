@@ -2,6 +2,7 @@ import os
 import sys
 
 import pytest
+from pyspark.sql.types import StructType
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -53,3 +54,33 @@ def pytest_collection_modifyitems(config, items):
         nid = item.nodeid
         if nid in exact or any(nid.startswith(p) for p in prefixes):
             item.add_marker(slow)
+
+
+class _IndexArtifacts:
+    """Helpers for the persisted-index artifact tests."""
+
+    @staticmethod
+    def rows(df):
+        """The frame's rows as a sorted list of tuples: an order-free
+        identity to compare a saved and a loaded frame by."""
+        return sorted(tuple(r) for r in df.collect())
+
+    @staticmethod
+    def params(spark, path):
+        return spark.read.parquet(f"{path}/params").first().asDict()
+
+    @staticmethod
+    def drop_params(spark, path, *cols):
+        """Rewrite ``{path}/params`` without ``cols``: the layout an
+        artifact saved before those columns existed has on disk."""
+        prm = spark.read.parquet(f"{path}/params")
+        row = prm.first().asDict()
+        schema = StructType([f for f in prm.schema if f.name not in cols])
+        spark.createDataFrame(
+            [tuple(row[f.name] for f in schema)], schema
+        ).write.mode("overwrite").parquet(f"{path}/params")
+
+
+@pytest.fixture(scope="session")
+def index_artifacts():
+    return _IndexArtifacts

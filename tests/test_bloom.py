@@ -105,7 +105,7 @@ def test_bloom_index_matches_inline_and_validates(spark):
         idx.release()
 
 
-def test_bloom_index_save_load_roundtrip(spark, tmp_path):
+def test_bloom_index_save_load_roundtrip(spark, tmp_path, index_artifacts):
     from rasgoql_spark.functions.bloom import (
         bloom_index, load_bloom_index, save_bloom_index)
 
@@ -113,11 +113,21 @@ def test_bloom_index_save_load_roundtrip(spark, tmp_path):
     ref = df.filter("doc_id % 4 = 0")
     idx = bloom_index(ref, "text", bits_log2=12, num_hashes=3)
     path = save_bloom_index(idx, str(tmp_path / "bloomidx"))
+    rows = index_artifacts.rows
+    want = [rows(idx.bits), rows(idx.fps)]
     idx.release()
 
     loaded = load_bloom_index(spark, path)
     try:
         assert (loaded.bits_log2, loaded.num_hashes) == (12, 3)
+        assert index_artifacts.params(spark, path) == {
+            "bits_log2": 12, "num_hashes": 3, "n_docs": ref.count()}
+        assert [rows(loaded.bits), rows(loaded.fps)] == want
+        # an artifact saved before the n_docs fingerprint loads without it
+        index_artifacts.drop_params(spark, path, "n_docs")
+        old = load_bloom_index(spark, path)
+        assert (old.bits_log2, old.num_hashes, old.n_docs) == (12, 3, None)
+        old.release()
         out = rql.get_transform("dedup_against_bloom").apply(
             df, text="text", id_col="doc_id", reference=ref,
             bits_log2=12, index=loaded)

@@ -80,7 +80,7 @@ def test_cms_validation(vals):
         cms_estimate(sk, [])
 
 
-def test_cms_index_lifecycle(spark, tmp_path_factory):
+def test_cms_index_lifecycle(spark, tmp_path_factory, index_artifacts):
     # build → update folds a batch exactly (bit-identical to full rebuild)
     # → save/load roundtrip
     from rasgoql_spark.functions.cms import (
@@ -105,6 +105,10 @@ def test_cms_index_lifecycle(spark, tmp_path_factory):
     save_cms_index(upd, path)
     loaded = load_cms_index(spark, path)
     assert (loaded.depth, loaded.width, loaded.column) == (3, 32, "v")
+    assert index_artifacts.params(spark, path) == {
+        "depth": 3, "width": 32, "column": "v", "group_by": "g"}
+    assert index_artifacts.rows(loaded.sketches) == index_artifacts.rows(
+        upd.sketches)
     c = {tuple(r) for r in cms_estimate(loaded.sketches, ["v0", "v4"]).collect()}
     assert c == a
     idx.release(); upd.release(); rebuilt.release(); loaded.release()

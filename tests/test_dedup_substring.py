@@ -274,7 +274,8 @@ def test_substring_index_cap_reevaluates_on_update(spark):
     folded.release(); idx.release()
 
 
-def test_substring_index_save_load_and_staleness(ref_bat, spark, tmp_path):
+def test_substring_index_save_load_and_staleness(ref_bat, spark, tmp_path,
+                                                index_artifacts):
     from rasgoql_spark.functions.dedup import (
         dedup_against_substring, load_substring_index, save_substring_index,
         substring_index)
@@ -284,6 +285,12 @@ def test_substring_index_save_load_and_staleness(ref_bat, spark, tmp_path):
     save_substring_index(idx, str(tmp_path / "sidx"))
     loaded = load_substring_index(spark, str(tmp_path / "sidx"))
     assert loaded.n_docs == 3 and loaded.min_tokens == 5
+    assert index_artifacts.params(spark, str(tmp_path / "sidx")) == {
+        "min_tokens": 5, "max_doc_freq": 1000, "n_docs": 3,
+        "max_positions": 20, "bucket_by_fp": -1}
+    rows = index_artifacts.rows
+    assert [rows(f) for f in (loaded.inv, loaded.fpck, loaded.members)] == [
+        rows(f) for f in (idx.inv, idx.fpck, idx.members)]
     a = sorted(map(tuple, dedup_against_substring(
         bat, "text", "doc_id", index=loaded, min_tokens=5,
         mode="pairs").collect()))
@@ -301,6 +308,15 @@ def test_substring_index_save_load_and_staleness(ref_bat, spark, tmp_path):
     with pytest.raises(PE, match="min_tokens"):
         dedup_against_substring(bat, "text", "doc_id", index=loaded,
                                 min_tokens=7)
+    # an artifact saved before the position cap and bucketing existed
+    # loads uncapped and unbucketed
+    index_artifacts.drop_params(spark, str(tmp_path / "sidx"),
+                                "max_positions", "bucket_by_fp")
+    old = load_substring_index(spark, str(tmp_path / "sidx"))
+    assert (old.min_tokens, old.max_doc_freq, old.n_docs,
+            old.max_positions) == (5, 1000, 3, None)
+    assert rows(old.inv) == rows(loaded.inv)
+    old.release()
     loaded.release(); idx.release()
 
 

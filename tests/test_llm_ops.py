@@ -798,7 +798,7 @@ def test_minhash_index_matches_inline_build(spark):
         idx.release()
 
 
-def test_minhash_index_save_load_roundtrip(spark, tmp_path):
+def test_minhash_index_save_load_roundtrip(spark, tmp_path, index_artifacts):
     from rasgoql_spark.functions.dedup import (
         dedup_against, load_minhash_index, minhash_index, save_minhash_index)
 
@@ -813,10 +813,21 @@ def test_minhash_index_save_load_roundtrip(spark, tmp_path):
 
     idx = minhash_index(ref, "text", "doc_id")
     path = save_minhash_index(idx, str(tmp_path / "mhidx"))
+    rows = index_artifacts.rows
+    want = [rows(idx.sig), rows(idx.bands_long)]
     idx.release()
 
     loaded = load_minhash_index(spark, path)
     try:
+        assert index_artifacts.params(spark, path) == {
+            "num_hashes": 16, "bands": 4, "shingle_size": 3, "n_docs": 3}
+        assert [rows(loaded.sig), rows(loaded.bands_long)] == want
+        # an artifact saved before the n_docs fingerprint loads without it
+        index_artifacts.drop_params(spark, path, "n_docs")
+        old = load_minhash_index(spark, path)
+        assert (old.num_hashes, old.bands, old.shingle_size, old.n_docs) == (
+            16, 4, 3, None)
+        old.release()
         with_loaded = dedup_against(
             batch, "text", "doc_id", ref, method="minhash",
             threshold=0.2, mode="pairs", index=loaded)

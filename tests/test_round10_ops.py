@@ -499,14 +499,21 @@ def test_ivfpq_null_query_vectors_have_no_neighbours(emb, spark):
         ):
             assert sorted(map(tuple, run(first_null).collect())) == sorted(
                 map(tuple, run(rest).collect()))
-        from rasgoql_spark.functions.similarity import update_ivf_index
+        from rasgoql_spark.functions.similarity import (
+            binary_index,
+            update_binary_index,
+            update_ivf_index,
+        )
 
         ivf = ivf_index(right, "embedding", "vec_id", num_centroids=4)
-        for base, update in ((idx, update_ivfpq_index), (ivf, update_ivf_index)):
+        bix = binary_index(right, "embedding", "vec_id")
+        for base, update in ((idx, update_ivfpq_index), (ivf, update_ivf_index),
+                             (bix, update_binary_index)):
             upd = update(base, first_null, "embedding", "vec_id")
             assert upd.n_docs == base.n_docs + first_null.count()
             upd.release()
         ivf.release()
+        bix.release()
     finally:
         idx.release()
 

@@ -131,7 +131,8 @@ def test_embedding_join_ivf_validation(session):
 
 # ------------------------------------------------- IVF index lifecycle
 
-def test_ivf_index_save_load_roundtrip(session, tmp_path_factory):
+def test_ivf_index_save_load_roundtrip(session, tmp_path_factory,
+                                      index_artifacts):
     from rasgoql_spark.functions.similarity import (
         ivf_index, load_ivf_index, save_ivf_index)
 
@@ -142,6 +143,10 @@ def test_ivf_index_save_load_roundtrip(session, tmp_path_factory):
         save_ivf_index(idx, path)
         loaded = load_ivf_index(session.spark, path)
         assert loaded.n_docs == idx.n_docs
+        assert index_artifacts.params(session.spark, path) == {
+            "n_docs": idx.n_docs}
+        assert index_artifacts.rows(loaded.frame) == index_artifacts.rows(
+            idx.frame.select("__id", "__nvec", "CENTROID_ID"))
         assert loaded.centroids == [
             (c, [float(x) for x in v]) for c, v in idx.centroids]
         a = rql.get_transform("similarity_search_ivf").apply(

@@ -138,7 +138,7 @@ def test_residual_improves_recall_with_trained_coarse(emb):
     assert r_res >= 0.5  # measured 0.54 vs 0.48 on this corpus
 
 
-def test_residual_save_load_roundtrip(emb, tmp_path):
+def test_residual_save_load_roundtrip(emb, tmp_path, index_artifacts):
     idx = ivfpq_index(
         emb, "embedding", "vec_id", num_centroids=8, coarse_iterations=1,
         m=8, codebook_size=16, iterations=0, residual=True,
@@ -147,6 +147,21 @@ def test_residual_save_load_roundtrip(emb, tmp_path):
     save_ivfpq_index(idx, path)
     loaded = load_ivfpq_index(emb.sparkSession, path)
     assert loaded.residual is True
+    assert index_artifacts.params(emb.sparkSession, path) == {
+        "m": 8, "d_sub": 8, "round_to": 6, "n_docs": idx.n_docs,
+        "residual": True, "rotated": False, "rotation_seed": 0,
+        "rotation_sweeps": 4}
+    assert index_artifacts.rows(loaded.frame) == index_artifacts.rows(idx.frame)
+    assert (loaded.centroids, loaded.books) == (idx.centroids, idx.books)
+    # an artifact saved before residual coding and rotation existed loads
+    # as the plain, unrotated index those artifacts hold
+    index_artifacts.drop_params(
+        emb.sparkSession, path, "residual", "rotated", "rotation_seed",
+        "rotation_sweeps")
+    old = load_ivfpq_index(emb.sparkSession, path)
+    assert (old.residual, old.rotation, old.rotation_seed,
+            old.rotation_sweeps, old.n_docs) == (False, None, 0, 4, idx.n_docs)
+    old.release()
     a = similarity_search_ivfpq(emb, "embedding", "vec_id", [7, 8], k=5, index=idx)
     b = similarity_search_ivfpq(emb, "embedding", "vec_id", [7, 8], k=5, index=loaded)
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
@@ -437,7 +452,7 @@ def test_dedup_against_binary(emb, spark):
             max_hamming=-1)
 
 
-def test_binary_index_lifecycle(emb, tmp_path):
+def test_binary_index_lifecycle(emb, tmp_path, index_artifacts):
     """BinaryIndex: prebuilt == inline, update == full rebuild EXACTLY
     (packing has no fitted state — the one drift-free index family),
     save/load round-trips, and the type/staleness/geometry guards fire."""
@@ -470,8 +485,20 @@ def test_binary_index_lifecycle(emb, tmp_path):
     save_binary_index(updated, path)
     loaded = load_binary_index(emb.sparkSession, path)
     assert loaded.n_words == updated.n_words and loaded.n_docs == 450
+    assert index_artifacts.params(emb.sparkSession, path) == {
+        "n_words": 2, "n_docs": 450, "dim": 64}
+    assert index_artifacts.rows(loaded.frame) == index_artifacts.rows(
+        updated.frame)
     c = dedup_against_embedding(batch, "embedding", "vec_id", index=loaded, **kw)
     assert sorted(map(tuple, b.collect())) == sorted(map(tuple, c.collect()))
+    # an artifact saved before dim was recorded loads with dim=None: the
+    # word-count guard still holds
+    index_artifacts.drop_params(emb.sparkSession, path, "dim")
+    old = load_binary_index(emb.sparkSession, path)
+    assert (old.n_words, old.n_docs, old.dim) == (2, 450, None)
+    c = dedup_against_embedding(batch, "embedding", "vec_id", index=old, **kw)
+    assert sorted(map(tuple, b.collect())) == sorted(map(tuple, c.collect()))
+    old.release()
     # guards
     with pytest.raises(ParameterException, match="BinaryIndex"):
         dedup_against_embedding(

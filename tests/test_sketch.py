@@ -126,7 +126,7 @@ def test_hll_index_update_equals_full_rebuild(spark, ids):
         idx.release()
 
 
-def test_hll_index_save_load_roundtrip(spark, ids, tmp_path):
+def test_hll_index_save_load_roundtrip(spark, ids, tmp_path, index_artifacts):
     from rasgoql_spark.functions.sketch import (
         hll_estimate,
         hll_index,
@@ -137,12 +137,16 @@ def test_hll_index_save_load_roundtrip(spark, ids, tmp_path):
     idx = hll_index(ids, "uid", group_by=["shard"], lg_k=10)
     try:
         save_hll_index(idx, str(tmp_path / "hidx"))
+        want = index_artifacts.rows(idx.sketches)
     finally:
         idx.release()
     loaded = load_hll_index(spark, str(tmp_path / "hidx"))
     try:
         assert loaded.lg_k == 10 and loaded.column == "uid"
         assert loaded.group_by == ["shard"]
+        assert index_artifacts.params(spark, str(tmp_path / "hidx")) == {
+            "lg_k": 10, "column": "uid", "group_by": "shard"}
+        assert index_artifacts.rows(loaded.sketches) == want
         est = hll_estimate(loaded.sketches, [loaded.sketch_col]).collect()
         assert len(est) == 4 and all(r["UID_SKETCH_ESTIMATE"] == 200 for r in est)
     finally:

@@ -621,12 +621,36 @@ def test_stream_dedup_against_table_sink_exactly_once(spark, tmp_path_factory):
 
 def test_stream_dedup_against_guards(spark, tmp_path_factory):
     """One-time staleness/type guards: a stale index or a wrong index type
-    is rejected BEFORE the stream starts, never per micro-batch."""
+    is rejected BEFORE the stream starts, never per micro-batch. The
+    staleness check is the one every index path shares
+    (``_index.check_fresh``): each batch site that takes both an index and
+    the frame it claims to cover, and stream_dedup_against for every index
+    type, rejects a frame one row short of ``n_docs`` and accepts the
+    matching one; the prebuilt searches, which take no such frame, do not
+    check."""
     import pytest as _pytest
 
     from rasgoql_spark.errors import ParameterException
-    from rasgoql_spark.functions.bloom import bloom_index
-    from rasgoql_spark.functions.dedup import minhash_index
+    from rasgoql_spark.functions.bloom import bloom_index, dedup_against_bloom
+    from rasgoql_spark.functions.dedup import (
+        dedup_against,
+        dedup_against_substring,
+        minhash_index,
+        substring_index,
+    )
+    from rasgoql_spark.functions.pq import (
+        embedding_join_ivfpq,
+        ivfpq_index,
+        similarity_search_ivfpq,
+    )
+    from rasgoql_spark.functions.similarity import (
+        binary_index,
+        dedup_against_embedding,
+        embedding_join_binary,
+        embedding_join_ivf,
+        ivf_index,
+        similarity_search_binary,
+    )
     from rasgoql_spark.streaming.ops import stream_dedup_against
 
     tmp = tmp_path_factory.mktemp("sdag")
@@ -636,18 +660,55 @@ def test_stream_dedup_against_guards(spark, tmp_path_factory):
     src = str(tmp / "in")
     ref.write.parquet(src)
     sdf = spark.readStream.schema("doc_id long, text string").parquet(src)
+    vref = spark.createDataFrame(
+        [(i, [float(i == j) + 0.1 for j in range(4)]) for i in range(4)],
+        "vec_id long, embedding array<double>")
+    vbatch = vref.filter("vec_id < 2")
+    E = ("embedding", "vec_id")
     mh = minhash_index(ref, "text", "doc_id")
     bl = bloom_index(ref, "text")
+    sub = substring_index(ref, "text", "doc_id", min_tokens=2)
+    ivf = ivf_index(vref, *E, num_centroids=2)
+    ivfpq = ivfpq_index(vref, *E, num_centroids=2, m=2, codebook_size=4,
+                        iterations=0)
+    binary = binary_index(vref, *E)
+    # (index, reference, call(frame)) for every batch staleness site
+    batch_sites = [
+        (mh, ref, lambda r: dedup_against(
+            ref, "text", "doc_id", r, method="minhash", index=mh)),
+        (bl, ref, lambda r: dedup_against_bloom(
+            ref, "text", "doc_id", r, index=bl)),
+        (sub, ref, lambda r: dedup_against_substring(
+            ref, "text", "doc_id", r, min_tokens=2, index=sub)),
+        (ivf, vref, lambda r: dedup_against_embedding(
+            vbatch, *E, r, method="ivf", index=ivf)),
+        (ivf, vref, lambda r: embedding_join_ivf(
+            vbatch, *E, other=r, index=ivf)),
+        (ivfpq, vref, lambda r: dedup_against_embedding(
+            vbatch, *E, r, method="ivfpq", index=ivfpq)),
+        (ivfpq, vref, lambda r: embedding_join_ivfpq(
+            vbatch, *E, other=r, nprobe=2, index=ivfpq)),
+        (binary, vref, lambda r: dedup_against_embedding(
+            vbatch, *E, r, method="binary", index=binary)),
+        (binary, vref, lambda r: embedding_join_binary(
+            vbatch, *E, other=r, index=binary)),
+    ]
     try:
         assert bl.n_docs == 2
-        stale = ref.limit(1)
         kw = dict(checkpoint=str(tmp / "c"), sink_path=str(tmp / "o"))
-        with _pytest.raises(ParameterException):
-            stream_dedup_against(sdf, "text", "doc_id", reference=stale,
-                                 index=mh, **kw)
-        with _pytest.raises(ParameterException):
-            stream_dedup_against(sdf, "text", "doc_id", reference=stale,
-                                 index=bl, **kw)
+        for idx, full, call in batch_sites:
+            assert idx.n_docs == full.count()
+            with _pytest.raises(ParameterException, match="fold the new"):
+                call(full.limit(idx.n_docs - 1))
+            call(full)
+        for idx, full in ((mh, ref), (bl, ref), (sub, ref), (ivf, vref),
+                          (ivfpq, vref), (binary, vref)):
+            with _pytest.raises(ParameterException, match="fold the new"):
+                stream_dedup_against(sdf, "text", "doc_id",
+                                     reference=full.limit(1), index=idx, **kw)
+        # the prebuilt searches search the index and take no reference
+        similarity_search_ivfpq(vbatch, *E, [0], k=1, nprobe=2, index=ivfpq)
+        similarity_search_binary(vbatch, *E, [0], k=1, index=binary)
         with _pytest.raises(ParameterException):
             stream_dedup_against(sdf, "text", "doc_id", index=object(), **kw)
         with _pytest.raises(ParameterException):
@@ -657,8 +718,8 @@ def test_stream_dedup_against_guards(spark, tmp_path_factory):
             stream_dedup_against(sdf, "text", "doc_id", index=bl,
                                  method="minhash", **kw)
     finally:
-        mh.release()
-        bl.release()
+        for idx in (mh, bl, sub, ivf, ivfpq, binary):
+            idx.release()
 
 
 def test_update_bloom_index_release_frees_increment_chain(spark):
