@@ -40,8 +40,7 @@ from ..errors import ParameterException
 from ..operators._util import resolve_col, spread
 from ..registry import renderer, spark_transform
 from ._cache import release_with, scoped_persist
-from ._litfast import centroid_array_lit
-from .similarity import _attach_centroids, _dot
+from .similarity import _argmax_cid, _attach_centroids
 
 CENT_ROUND = 9  # decimals kept on centroid components (both engines)
 # skip semantic_dedup's exact-dup collapse when the largest identical-vector
@@ -76,25 +75,13 @@ def _unit_rounded(df: DataFrame, vec_col: str, out_col: str = "__u") -> DataFram
     )
 
 
-def _cent_literals(cents: list) -> Column:
-    # one F.expr call, not k·dim py4j F.lit round trips — see _litfast
-    return centroid_array_lit(cents, id_type="bigint")
-
-
 def _assign_expr(cents, round_to: int, u_col: str = "__u") -> Column:
     """CLUSTER_ID of the max-cosine centroid over ROUNDED sims; ties ->
-    lowest cid (max over struct(sim, -cid)). ``cents`` is either the Python
-    centroid list (embedded as literals) or a Column already holding the
-    array<struct<c, v>> (the >256-centroid one-row broadcast from
-    ``_attach_centroids`` — identical rounded values, identical result)."""
-    sims = F.transform(
-        cents if isinstance(cents, Column) else _cent_literals(cents),
-        lambda ce: F.struct(
-            F.round(_dot(F.col(u_col), ce["v"]), round_to).alias("s"),
-            (-ce["c"]).alias("nc"),
-        ),
-    )
-    return (-F.array_max(sims)["nc"]).cast("bigint")
+    lowest cid. ``cents`` is either the Python centroid list (embedded as
+    literals) or a Column already holding the array<struct<c, v>> (the
+    >256-centroid one-row broadcast from ``_attach_centroids`` — identical
+    rounded values, identical result)."""
+    return _argmax_cid(cents, u_col, round_to)
 
 
 def _renorm_py(vec: list) -> list:
@@ -108,10 +95,9 @@ def _fit_kmeans(cached: DataFrame, k: int, iterations: int, round_to: int,
     frame (``_unit_rounded`` output): lowest-id seeds, per-pass argmax over
     ``round_to``-rounded cosines (ties -> lowest cid), 9-dp-rounded
     re-normalized means, empty clusters keep their previous centroid.
-    Returns the ``[(cid, [components])]`` list. Shared by
-    :func:`kmeans_cluster` and ``similarity_search_ivfpq`` so the rounded
-    determinism contract (the one the DuckDB replay oracles rely on) has a
-    single definition. Each Lloyd pass is one slim (cid, pos, value)
+    Returns the ``[(cid, [components])]`` list: the one definition of the
+    rounded determinism contract the DuckDB replay oracles rely on. Each
+    Lloyd pass is one slim (cid, pos, value)
     aggregation with a bounded k·dim collect — the corpus never shuffles.
 
     ``seed_rows`` (round 13): pre-collected lowest-``__id``-first rows with

@@ -45,7 +45,15 @@ from ._index import (
 )
 from ._litfast import centroid_array_lit, double_array_lit, double_matrix_lit
 from .cluster import CENT_ROUND, _assign_expr, _fit_kmeans, _unit_rounded
-from .similarity import _attach_centroids, _check_dim, _dot
+from .similarity import (
+    _attach_centroids,
+    _check_dim,
+    _dot,
+    _probe_lists,
+    _probe_sql,
+    _topk,
+    _topk_sql,
+)
 
 
 def _sq_dist(a: Column, b) -> Column:
@@ -826,32 +834,6 @@ def update_ivfpq_index(
     )
 
 
-def _probe_lists_rounded(qdf: DataFrame, cents: list, nprobe: int,
-                         id_col: str, u_col: str, round_to: int,
-                         carry: tuple = ()) -> DataFrame:
-    """Explode each query row to its ``nprobe`` highest ROUNDED-cosine
-    inverted lists (ties -> lowest cid) — the replayable twin of
-    ``similarity._probe_lists`` for DataFrame-shaped query sides, and the
-    probe step of :func:`_adc_scores` (sim desc at ``round_to`` dp, cid
-    asc). Shuffle-free sort+slice over the per-row sims array;
-    >256-centroid corpora take the one-row broadcast via
-    ``_attach_centroids``. ``carry`` names extra columns
-    preserved through the explosion (e.g. the pre-computed ADC LUT)."""
-    qbase, qcarr, _qd = _attach_centroids(qdf, cents)
-    sims = F.transform(
-        qcarr,
-        lambda ce: F.struct(
-            F.round(_dot(F.col(u_col), ce["v"]), round_to).alias("s"),
-            (-ce["c"]).alias("nc"),
-        ),
-    )
-    return qbase.select(
-        id_col, u_col, *carry,
-        F.explode(F.slice(F.sort_array(sims, asc=False), 1, nprobe)).alias("__p"),
-    ).select(id_col, u_col, *carry,
-             (-F.col("__p")["nc"]).cast("bigint").alias("__cid"))
-
-
 def _adc_query_luts(qdf: DataFrame, idx: IVFPQIndex,
                     q_u_col: str = "__qu") -> DataFrame:
     """Attach the ADC lookup table to the QUERY frame, BEFORE the probe
@@ -977,7 +959,7 @@ def _adc_scores(q: DataFrame, idx: IVFPQIndex, nprobe: int, mid: str,
     AQE). It lands here, after probing, because a hint on the raw query
     frame would be absorbed by the >256-centroid crossJoin inside the
     probe step and never reach the candidate join."""
-    probes = _probe_lists_rounded(
+    probes = _probe_lists(
         _adc_query_luts(q.filter(F.col("__qu").isNotNull()), idx, "__qu"),
         idx.centroids, nprobe, "__qid", "__qu", idx.round_to,
         carry=("__lut",),
@@ -999,44 +981,17 @@ def _adc_scores(q: DataFrame, idx: IVFPQIndex, nprobe: int, mid: str,
     )
 
 
-def _adc_topk(scored: DataFrame, idx: IVFPQIndex, mid: str, k: int,
-              queries: DataFrame | None = None, rerank_factor: int = 1,
-              hint: str | None = None) -> DataFrame:
-    """Each query's top ``k`` of a ``(__qid, mid, __score)`` frame by
-    (score desc, id asc), with ``RANK`` appended. With ``queries`` (the
-    ``(__qid, __qu)`` query vectors) it is the IVFADC+R refine of Jégou et
-    al. 2011 §V: the ADC window keeps ``k · rerank_factor`` survivors, and
-    only they pay an exact rounded cosine against the index's stored
-    full-width unit vectors before the same window keeps ``k`` —
-    ``__score`` becomes that cosine. The survivor set is determined by the
-    rounded ADC ordering (score + id tie-break), so the refine stays
-    inside the exact-replay contract, and under rotation both sides live
-    in rotated space, where the dot equals the original cosine. The
-    refine touches queries × k · rerank_factor rows, never the corpus
-    scan; ``hint`` is the caller's join hint for the survivors and query
-    vectors (see :func:`_adc_scores`)."""
-    w = Window.partitionBy("__qid").orderBy(
-        F.col("__score").desc(), F.col(mid).asc()
+def _exact_refine(idx: IVFPQIndex, mid: str, q: DataFrame) -> tuple:
+    """The IVFADC+R refine of Jégou et al. 2011 §V as a
+    :func:`~.similarity._topk` refine: the ADC survivors pay an exact
+    rounded cosine between the ``(__qid, __qu)`` query vectors and the
+    index's stored full-width unit vectors. Under rotation both sides live
+    in rotated space, where the dot equals the original cosine."""
+    return (
+        idx.frame.select(F.col("__id").alias(mid), F.col("__u").alias("__cu")),
+        q,
+        F.round(_dot(F.col("__qu"), F.col("__cu")), idx.round_to),
     )
-
-    def top(frame: DataFrame, keep: int) -> DataFrame:
-        ranked = frame.withColumn("RANK", F.row_number().over(w).cast("int"))
-        return ranked.filter(F.col("RANK") <= keep)
-
-    if queries is None:
-        return top(scored, k)
-    survivors = top(scored, k * rerank_factor).select("__qid", mid)
-    if hint is not None:
-        survivors, queries = survivors.hint(hint), queries.hint(hint)
-    refined = (
-        idx.frame.select(F.col("__id").alias(mid), F.col("__u").alias("__cu"))
-        .join(survivors, on=mid)
-        .join(queries, on="__qid")
-        .select("__qid", mid, F.round(
-            _dot(F.col("__qu"), F.col("__cu")), idx.round_to
-        ).alias("__score"))
-    )
-    return top(refined, k)
 
 
 @spark_transform("similarity_search_ivfpq", category="similarity", streaming_ok=False)
@@ -1158,8 +1113,9 @@ def similarity_search_ivfpq(
     )
     scored = _adc_scores(qdf, idx, nprobe, "MATCH_ID", hint="broadcast")
     scored = scored.filter(F.col("__qid") != F.col("MATCH_ID"))
-    out = _adc_topk(scored, idx, "MATCH_ID", k,
-                    qdf if rerank else None, rerank_factor, hint="broadcast")
+    out = _topk(scored, "MATCH_ID", k,
+                refine=_exact_refine(idx, "MATCH_ID", qdf) if rerank else None,
+                rerank_factor=rerank_factor, hint="broadcast")
     out = out.select(
         F.col("__qid").alias("QUERY_ID"), "MATCH_ID",
         F.col("__score").alias("COSINE" if rerank else "ADC_SCORE"), "RANK",
@@ -1226,19 +1182,8 @@ def _r_ivfpq_ranked(caller, corpus, vec_col, id_col, query, k,
     )
     # the centroids and the queries are named once: assignment, probe,
     # residual construction, coarse term and LUT slices all read them
-    ctes.append(f"__ivfpq_cents AS (SELECT c, v FROM {kcents})")
-    ctes.append(f"__ivfpq_asg AS (SELECT __id, c FROM {kassign('__ivfpq_cents')})")
-    ctes.append(
-        f"__ivfpq_q AS (SELECT qid, __u FROM ({query(nv, rotated)}) __q "
-        f"WHERE __u IS NOT NULL)"
-    )
-    sim = f"round({_dot_sql('t.__u', 's.v')}, {int(round_to)})"
-    ctes.append(
-        f"__ivfpq_probe AS (SELECT qid, c FROM (SELECT t.qid, s.c, "
-        f"ROW_NUMBER() OVER (PARTITION BY t.qid ORDER BY {sim} DESC, "
-        f"s.c ASC) AS rn FROM __ivfpq_q t CROSS JOIN __ivfpq_cents s) "
-        f"WHERE rn <= {int(nprobe)})"
-    )
+    ctes += _probe_sql("__ivfpq", kcents, kassign, query(nv, rotated), nprobe,
+                       round_to)
     vec_source = nv if rotate else None
     if residual:
         ctes.append(
@@ -1292,26 +1237,19 @@ def _r_ivfpq_ranked(caller, corpus, vec_col, id_col, query, k,
         f"WHERE cnd.{id_col} <> __ivfpq_probe.qid"
     )
 
-    def top(rel: str, keep: int) -> str:
-        return (
-            f"SELECT __qid, __mid, __score, RANK FROM (SELECT *, "
-            f"CAST(ROW_NUMBER() OVER (PARTITION BY __qid ORDER BY __score "
-            f"DESC, __mid ASC) AS INT) AS RANK FROM ({rel})) "
-            f"WHERE RANK <= {keep}"
-        )
-
+    refine = None
     if rerank:
         # IVFADC+R refine replay: the ADC-ranked survivor set (rounded
         # score + id tie-break — integer-determined given the replayed
         # fit) joins back to the staged unit vectors for the exact cosine
-        scored = (
+        refine = lambda c: (  # noqa: E731
             f"SELECT c.__qid, c.__mid, round("
             f"{_dot_sql('qn.__u', 'tn.__u')}, {int(round_to)}) AS __score "
-            f"FROM ({top(scored, int(k) * int(rerank_factor))}) c "
-            f"JOIN __ivfpq_q qn ON qn.qid = c.__qid "
+            f"FROM ({c}) c JOIN __ivfpq_q qn ON qn.qid = c.__qid "
             f"JOIN {nv} tn ON tn.__id = c.__mid"
         )
-    return ctes, top(scored, int(k))
+    return ctes, _topk_sql(scored, k, refine=refine,
+                           rerank_factor=rerank_factor)
 
 
 @_renderer("similarity_search_ivfpq")
@@ -1485,8 +1423,9 @@ def embedding_join_ivfpq(
     scored = _adc_scores(
         q, idx, _resolve_nprobe(nprobe, len(idx.centroids)), mid
     ).filter(F.col("__qid") != F.col(mid))
-    matches = _adc_topk(scored, idx, mid, k, q if rerank else None,
-                        rerank_factor)
+    matches = _topk(scored, mid, k,
+                    refine=_exact_refine(idx, mid, q) if rerank else None,
+                    rerank_factor=rerank_factor)
     out = df.join(
         matches.select(F.col("__qid").alias(i), mid,
                        F.col("__score").alias("COSINE"), "RANK"),

@@ -164,22 +164,26 @@ def _centroid_array(cents: list) -> "F.Column":
     return centroid_array_lit(cents, id_type="bigint")
 
 
-def _sims_expr(cents, nvec_col: str = "__nvec"):
-    """array<struct<s: sim, nc: -cid>> per row — one dot per centroid.
-    ``cents`` is either the Python centroid list (embedded as literals) or a
-    Column already holding the array<struct<c, v>> (broadcast fallback)."""
+def _sims_expr(cents, nvec_col: str = "__nvec", round_to: int | None = None):
+    """array<struct<s: sim, nc: -cid>> per row — one dot per centroid,
+    rounded to ``round_to`` dp under the rounded kmeans contract (None:
+    the raw dot, no ``F.round`` node). ``cents`` is either the Python
+    centroid list (embedded as literals) or a Column already holding the
+    array<struct<c, v>> (broadcast fallback)."""
     carr = cents if isinstance(cents, Column) else _centroid_array(cents)
+
+    def sim(ce):
+        s = _dot(F.col(nvec_col), ce["v"])
+        return s if round_to is None else F.round(s, round_to)
+
     return F.transform(
-        carr,
-        lambda ce: F.struct(
-            _dot(F.col(nvec_col), ce["v"]).alias("s"), (-ce["c"]).alias("nc")
-        ),
+        carr, lambda ce: F.struct(sim(ce).alias("s"), (-ce["c"]).alias("nc"))
     )
 
 
-def _argmax_cid(cents, nvec_col: str = "__nvec"):
+def _argmax_cid(cents, nvec_col: str = "__nvec", round_to: int | None = None):
     """cid of the highest-cosine centroid (ties → lowest cid via -cid max)."""
-    best = F.array_max(_sims_expr(cents, nvec_col))
+    best = F.array_max(_sims_expr(cents, nvec_col, round_to))
     return (-best["nc"]).cast("bigint")
 
 
@@ -241,21 +245,193 @@ def _attach_centroids(df: DataFrame, cents: list):
     return df.crossJoin(F.broadcast(one_row)), F.col("__cents"), ["__cents"]
 
 
-def _probe_lists(qdf: DataFrame, cents, nprobe: int, id_col: str, nvec_col: str) -> DataFrame:
-    """Explode each query row to its ``nprobe`` nearest inverted-list ids:
-    ``(id_col, nvec_col, __cid)`` — one row per (query, probed centroid).
-    Probe selection is a shuffle-free sort+slice over the per-row sims
-    array (struct sort: sim desc, ties → lowest cid because nc = -cid).
-    Shared by similarity_search_ivf / embedding_join_ivf /
-    dedup_against_embedding so probe semantics (including the
-    >256-centroid broadcast fallback) can never diverge between them."""
+def _probe_lists(qdf: DataFrame, cents, nprobe: int, id_col: str,
+                 vec_col: str, round_to: int | None = None,
+                 carry: tuple = ()) -> DataFrame:
+    """The probe step of every IVF-family scorer (flat IVF in both modes,
+    IVF-PQ): explode each query row to its ``nprobe`` nearest inverted
+    lists, ``(id_col, vec_col, *carry, __cid)`` — one row per (query,
+    probed centroid). Selection is a shuffle-free sort+slice over the
+    per-row sims array (struct sort: sim desc, ties → lowest cid because
+    nc = -cid). ``round_to`` rounds each sim first (the rounded replay
+    contract; None keeps the raw dot, bit-identical to the unrounded fit).
+    Above ``IVF_LITERAL_CENTROID_MAX`` centroids the array arrives by the
+    one-row broadcast of :func:`_attach_centroids`. ``carry`` names extra
+    query columns kept through the explosion (IVF-PQ's ADC LUT)."""
     qbase, qcarr, _qd = _attach_centroids(qdf, cents)
+    sims = _sims_expr(qcarr, vec_col, round_to)
     return qbase.select(
-        id_col, nvec_col,
-        F.explode(
-            F.slice(F.sort_array(_sims_expr(qcarr, nvec_col), asc=False), 1, nprobe)
-        ).alias("__p"),
-    ).select(id_col, nvec_col, (-F.col("__p")["nc"]).cast("bigint").alias("__cid"))
+        id_col, vec_col, *carry,
+        F.explode(F.slice(F.sort_array(sims, asc=False), 1, nprobe)).alias("__p"),
+    ).select(id_col, vec_col, *carry,
+             (-F.col("__p")["nc"]).cast("bigint").alias("__cid"))
+
+
+def _ivf_lists(df: DataFrame, vec_col: str, id_col: str, num_centroids,
+               index: "IVFIndex | None" = None, round_to: int | None = None):
+    """The inverted lists a flat-IVF search, join or dedup scores against:
+    ``(lists, centroids, cached)`` with ``lists`` = ``(__id, __v, __cid)``,
+    ``__v`` the stored unit vector. A prebuilt ``index`` serves its frame
+    (``cached`` None). Inline, ``df`` is fit with one Lloyd pass: the
+    unrounded fit of :func:`_ivf_assign`, or — ``round_to`` set — the
+    kmeans_cluster rounded-determinism contract (9-dp unit vectors and
+    centroids, ``round_to``-dp argmax) that the ``.sql()`` replay mirrors.
+    The two fits stay separate: they are different contracts. Callers
+    release ``cached`` with their final result."""
+    if index is not None:
+        frame, cents, cached = index.frame, index.centroids, None
+    elif round_to is None:
+        frame, cents, cached = _ivf_assign(df, vec_col, id_col, num_centroids, 1)
+    else:
+        from .cluster import _fit_kmeans, _unit_rounded
+
+        v, i = resolve_col(df, vec_col), resolve_col(df, id_col)
+        cached = scoped_persist(_unit_rounded(
+            spread(df).select(F.col(i).alias("__id"), F.col(v).alias("__vec")),
+            "__vec",
+        ))
+        kc = _resolve_k(num_centroids,
+                        cached.count() if isinstance(num_centroids, str) else 0)
+        cents = _fit_kmeans(cached, kc, 1, round_to)
+        base, carr, _ad = _attach_centroids(cached, cents)
+        lists = base.select(
+            "__id", F.col("__u").alias("__v"),
+            _argmax_cid(carr, "__u", round_to).alias("__cid"),
+        )
+        return lists, cents, cached
+    lists = frame.select(
+        "__id", F.col("__nvec").alias("__v"), F.col("CENTROID_ID").alias("__cid")
+    )
+    return lists, cents, cached
+
+
+def _ivf_queries(df: DataFrame, v: str, i: str, cents: list,
+                 round_to: int | None, what: str) -> DataFrame:
+    """The ``(__qid, __qv)`` query frame of a batch-shaped flat-IVF caller
+    (join, dedup): the dimension guard against the centroids, then the
+    normalization of the fit's contract (``round_to`` None: the unrounded
+    unit vector; else the 9-dp rounded one). ``spread()`` first, so the
+    probe ranking of a narrow batch does not run in one task."""
+    if cents:
+        _check_dim(df, v, len(cents[0][1]), what)
+    q = spread(df).select(F.col(i).alias("__qid"), F.col(v).alias("__qvec"))
+    if round_to is None:
+        q = _with_normalized(q, "__qvec", "__qv")
+    else:
+        from .cluster import _unit_rounded
+
+        q = _unit_rounded(q, "__qvec", "__qv")
+    return q.select("__qid", "__qv")
+
+
+def _ivf_scores(q: DataFrame, lists: DataFrame, cents: list, nprobe: int,
+                mid: str, round_scores: int | None = None,
+                probe_round: int | None = None,
+                hint: str | None = None) -> DataFrame:
+    """The flat-IVF candidate scorer shared by search, join and dedup, in
+    both modes: queries ``(__qid, __qv)`` × inverted lists ``(__id, __v,
+    __cid)`` (:func:`_ivf_lists`) → ``(__qid, mid, __score)`` for every
+    candidate in each query's ``nprobe`` probed lists (self-matches
+    included — callers filter). A NULL vector is neither a query nor a
+    candidate. Probing is :func:`_probe_lists` (``probe_round`` = the
+    rounded contract's probe rounding), candidates form by an equi-join on
+    the list id, and the score is the dot of the two unit vectors, rounded
+    to ``round_scores`` dp when set. ``hint`` is the caller's join hint for
+    the probe frame (``"broadcast"`` when the query side is bounded; None
+    keeps the join AQE-skew-eligible on hot lists). It lands after
+    probing, where the >256-centroid crossJoin cannot absorb it."""
+    probes = _probe_lists(q.filter(F.col("__qv").isNotNull()), cents, nprobe,
+                          "__qid", "__qv", probe_round)
+    if hint is not None:
+        probes = probes.hint(hint)
+    score = _dot(F.col("__qv"), F.col("__v"))
+    if round_scores is not None:
+        score = F.round(score, round_scores)
+    return (
+        lists.filter(F.col("__v").isNotNull())
+        .select(F.col("__id").alias(mid), "__v", "__cid")
+        .join(probes, on="__cid")
+        .select("__qid", mid, score.alias("__score"))
+    )
+
+
+def _topk(scored: DataFrame, mid: str, k: int, asc: bool = False,
+          refine: tuple | None = None, rerank_factor: int = 1,
+          hint: str | None = None) -> DataFrame:
+    """The top-k step of every IVF, binary and IVF-PQ search and join: each
+    query's best ``k`` rows of a ``(__qid, mid, __score)`` frame, ordered
+    by ``__score`` (desc for similarities, ``asc`` for distances such as
+    Hamming) and then ``mid`` asc, with an int ``RANK`` appended. The
+    filter on the rank lets Spark prune with WindowGroupLimit before the
+    window's shuffle.
+
+    ``refine`` is the two-stage rerank: ``(candidates, queries, score)``
+    with candidates ``(mid, …)``, queries ``(__qid, …)`` and the caller's
+    exact score Column over their columns (binary: rounded
+    ``cosine_expr``; IVF-PQ: the rounded dot of stored unit vectors). The
+    first stage keeps ``k · rerank_factor`` survivors per query, only they
+    join back to the two frames, and ``score`` — a similarity, ranked desc
+    — picks the final ``k``. The survivor set is fixed by the first
+    ordering's score and id tie-break, so replay stays exact. ``hint`` is
+    the caller's join hint for the survivors and queries."""
+    def top(frame: DataFrame, keep: int, asc: bool) -> DataFrame:
+        score = F.col("__score").asc() if asc else F.col("__score").desc()
+        w = Window.partitionBy("__qid").orderBy(score, F.col(mid).asc())
+        ranked = frame.withColumn("RANK", F.row_number().over(w).cast("int"))
+        return ranked.filter(F.col("RANK") <= keep)
+
+    if refine is None:
+        return top(scored, k, asc)
+    cands, queries, score = refine
+    survivors = top(scored, k * rerank_factor, asc).select("__qid", mid)
+    if hint is not None:
+        survivors, queries = survivors.hint(hint), queries.hint(hint)
+    refined = (
+        cands.join(survivors, on=mid).join(queries, on="__qid")
+        .select("__qid", mid, score.alias("__score"))
+    )
+    return top(refined, k, False)
+
+
+def _topk_sql(rel: str, k: int, asc: bool = False, refine=None,
+              rerank_factor: int = 1) -> str:
+    """SQL twin of :func:`_topk` over a ``(__qid, __mid, __score)``
+    relation → ``(__qid, __mid, __score, RANK)``. ``refine`` maps the
+    survivors' relation to the refined ``(__qid, __mid, __score)`` one."""
+    def top(rel: str, keep: int, asc: bool) -> str:
+        return (
+            f"SELECT __qid, __mid, __score, RANK FROM (SELECT *, "
+            f"CAST(ROW_NUMBER() OVER (PARTITION BY __qid ORDER BY __score "
+            f"{'ASC' if asc else 'DESC'}, __mid ASC) AS INT) AS RANK "
+            f"FROM ({rel})) WHERE RANK <= {int(keep)}"
+        )
+
+    if refine is None:
+        return top(rel, k, asc)
+    return top(refine(top(rel, int(k) * int(rerank_factor), asc)), k, False)
+
+
+def _probe_sql(prefix: str, kcents: str, kassign, query: str, nprobe: int,
+               round_to: int) -> list:
+    """SQL twin of the rounded probe step, as four named CTEs:
+    ``{prefix}_cents`` (c, v), the corpus assignment ``{prefix}_asg``
+    (__id, c), the queries ``{prefix}_q`` (qid, __u) without NULL vectors,
+    and ``{prefix}_probe`` (qid, c) — each query's ``nprobe`` best lists
+    by rounded sim desc, ties → lowest c. ``kcents``/``kassign`` come from
+    ``cluster._kmeans_render_parts``."""
+    from .cluster import _dot_sql
+
+    sim = f"round({_dot_sql('t.__u', 's.v')}, {int(round_to)})"
+    return [
+        f"{prefix}_cents AS (SELECT c, v FROM {kcents})",
+        f"{prefix}_asg AS (SELECT __id, c FROM {kassign(prefix + '_cents')})",
+        f"{prefix}_q AS (SELECT qid, __u FROM ({query}) __q "
+        f"WHERE __u IS NOT NULL)",
+        f"{prefix}_probe AS (SELECT qid, c FROM (SELECT t.qid, s.c, "
+        f"ROW_NUMBER() OVER (PARTITION BY t.qid ORDER BY {sim} DESC, "
+        f"s.c ASC) AS rn FROM {prefix}_q t CROSS JOIN {prefix}_cents s) "
+        f"WHERE rn <= {int(nprobe)})",
+    ]
 
 
 def _norm_py(vec: list) -> list:
@@ -313,8 +489,8 @@ def build_ivf_index(
 
 
 def _ivf_assign(df, vec_col, id_col, num_centroids, iterations):
-    """(normalized corpus with CENTROID_ID, centroid list, scoped cache) —
-    shared by build_ivf_index and similarity_search_ivf. The normalized
+    """(normalized corpus with CENTROID_ID, centroid list, scoped cache):
+    the unrounded IVF fit of every build and inline IVF call. The normalized
     corpus is persisted ONCE and reused by the seed collect, every Lloyd
     pass, and the final assignment (5 consumers otherwise recompute the
     normalization fold per pass); callers release it with the result."""
@@ -498,125 +674,90 @@ def embedding_join_ivf(
     """
     odf = other.df if hasattr(other, "df") else other
     v, i = resolve_col(df, vec_col), resolve_col(df, id_col)
-    if rounded:
-        if index is not None:
-            raise ParameterException(
-                "rounded=True is the replayable inline mode; prebuilt "
-                "IVFIndex artifacts hold the unrounded fit"
-            )
-        if round_scores is None:
-            raise ParameterException(
-                "rounded=True scores by the rounded replay contract; "
-                "round_scores must be an int"
-            )
-        if odf is None:
-            raise ParameterException(
-                "embedding_join_ivf needs a right-side frame (other=...)"
-            )
-        return _embedding_join_ivf_rounded(
-            df, v, i, odf, other_vec or vec_col, other_id or id_col, k,
-            num_centroids, nprobe, right_prefix, round_scores,
+    round_to = _rounded_mode(rounded, index, round_scores)
+    if rounded and odf is None:
+        raise ParameterException(
+            "embedding_join_ivf needs a right-side frame (other=...)"
         )
     if index is not None:
         check_fresh(index, odf, "right-side")
-        idx, cents, cached = index.frame, index.centroids, None
-    else:
-        if odf is None:
-            raise ParameterException(
-                "embedding_join_ivf needs a right-side frame (other=...) or "
-                "a prebuilt IVFIndex"
-            )
-        ov = resolve_col(odf, other_vec or vec_col)
-        oi = resolve_col(odf, other_id or id_col)
-        idx, cents, cached = _ivf_assign(odf, ov, oi, num_centroids, iterations=1)
-    nprobe = _resolve_nprobe(nprobe, len(cents))
-    q = _with_normalized(
-        spread(df).select(F.col(i).alias("QUERY_ID"), F.col(v).alias("__qvec")),
-        "__qvec", "__qnvec",
-    )
-    probes = _probe_lists(q, cents, nprobe, "QUERY_ID", "__qnvec")
-    cos = _dot(F.col("__qnvec"), F.col("__nvec"))
-    if round_scores is not None:
-        cos = F.round(cos, round_scores)
-    scored = (
-        idx.select(
-            F.col("__id").alias(f"{right_prefix}ID"), "__nvec",
-            F.col("CENTROID_ID").alias("__cid"),
+    elif odf is None:
+        raise ParameterException(
+            "embedding_join_ivf needs a right-side frame (other=...) or "
+            "a prebuilt IVFIndex"
         )
-        .join(probes, on="__cid")
-        .filter(F.col("QUERY_ID") != F.col(f"{right_prefix}ID"))
-        .withColumn("COSINE", cos)
+    lists, cents, cached = _ivf_lists(
+        odf, other_vec or vec_col, other_id or id_col, num_centroids, index,
+        round_to,
     )
-    w = Window.partitionBy("QUERY_ID").orderBy(
-        F.col("COSINE").desc(), F.col(f"{right_prefix}ID").asc()
+    mid = f"{right_prefix}ID"
+    scored = _ivf_scores(
+        _ivf_queries(df, v, i, cents, round_to, "left"), lists, cents,
+        _resolve_nprobe(nprobe, len(cents)), mid, round_scores, round_to,
     )
-    matches = (
-        scored.withColumn("RANK", F.row_number().over(w))
-        .filter(F.col("RANK") <= k)
-        .select(
-            F.col("QUERY_ID").alias(i), f"{right_prefix}ID", "COSINE", "RANK"
-        )
+    matches = _topk(scored.filter(F.col("__qid") != F.col(mid)), mid, k)
+    out = df.join(
+        matches.select(F.col("__qid").alias(i), mid,
+                       F.col("__score").alias("COSINE"), "RANK"),
+        on=i, how="inner",
     )
-    out = df.join(matches, on=i, how="inner")
     return out if cached is None else release_with(out, cached)
 
 
-def _embedding_join_ivf_rounded(df, v, i, odf, ov, oi, k, num_centroids,
-                                nprobe, right_prefix, round_to):
-    """Replayable ANN join: rounded kmeans over the right side (one Lloyd
-    pass, the shared _fit_kmeans contract), rounded probe selection for
-    every left row, rounded dot scoring over probed lists. Join shape and
-    skew posture match the unrounded path: probe frame equi-joins the
-    assigned corpus on the centroid id with no broadcast hint, so AQE can
-    split hot inverted lists. MIRROR NOTE: see
-    _similarity_search_ivf_rounded — the contract primitives are shared
-    single definitions; the composition glue is deliberately repeated in
-    the join shape."""
-    from .cluster import _fit_kmeans, _unit_rounded
-    from .cluster import _assign_expr as _rounded_assign
-    from .pq import _probe_lists_rounded
+def _rounded_mode(rounded: bool, index, round_scores) -> int | None:
+    """The probe/score rounding of a flat-IVF call: ``round_scores`` in
+    the replayable ``rounded=True`` mode (inline-only, int required),
+    None in the default unrounded one."""
+    if not rounded:
+        return None
+    if index is not None:
+        raise ParameterException(
+            "rounded=True is the replayable inline mode; prebuilt "
+            "IVFIndex artifacts hold the unrounded fit"
+        )
+    if round_scores is None:
+        raise ParameterException(
+            "rounded=True scores by the rounded replay contract; "
+            "round_scores must be an int"
+        )
+    return round_scores
 
-    ov, oi = resolve_col(odf, ov), resolve_col(odf, oi)
-    cached = scoped_persist(_unit_rounded(
-        spread(odf).select(F.col(oi).alias("__id"), F.col(ov).alias("__vec")),
-        "__vec",
-    ))
-    kc = (
-        _resolve_k(num_centroids, cached.count())
-        if isinstance(num_centroids, str) else _resolve_k(num_centroids, 0)
+
+def _r_ivf_ranked(caller, corpus, vec_col, id_col, query, k, num_centroids,
+                  nprobe, round_scores) -> tuple:
+    """The SQL replay of the rounded flat-IVF path, shared by the search
+    and join renderers: the kmeans_cluster renderer's one-pass fit over
+    ``corpus``, the probe CTEs (:func:`_probe_sql`) for the ``query``
+    relation ``(qid, __u)`` — ``query(nv)`` gets the normalized corpus —
+    and the rounded dot over probed lists ranked by :func:`_topk_sql`.
+    Returns ``(ctes, ranked)``; ``ranked`` is ``(__qid, __mid, __score,
+    RANK)``."""
+    from ..errors import TransformRenderingException
+    from .cluster import _dot_sql, _kmeans_render_parts
+
+    if isinstance(num_centroids, str) or isinstance(nprobe, str):
+        raise TransformRenderingException(
+            "auto sizing resolves from the corpus count at run time; pass "
+            "explicit num_centroids/nprobe to render"
+        )
+    if round_scores is None:
+        raise ParameterException("rounded=True requires an int round_scores")
+    if k < 1:
+        raise ParameterException("k must be >= 1")
+    nv, kcents, kassign = _kmeans_render_parts(
+        corpus, vec_col, id_col, num_centroids, 1, round_scores, caller,
     )
-    cents = _fit_kmeans(cached, kc, 1, round_to)
-    nprobe = _resolve_nprobe(nprobe, len(cents))
-    abase, carr, _ad = _attach_centroids(cached, cents)
-    asg = abase.withColumn("__cid", _rounded_assign(carr, round_to)).select(
-        "__id", "__u", "__cid"
-    )
-    q = _unit_rounded(
-        df.select(F.col(i).alias("QUERY_ID"), F.col(v).alias("__qvec")),
-        "__qvec", "__qu",
-    ).select("QUERY_ID", "__qu")
-    probes = _probe_lists_rounded(
-        q, cents, nprobe, "QUERY_ID", "__qu", round_to
-    )
+    ctes = _probe_sql("__ivf", kcents, kassign, query(nv), nprobe,
+                      round_scores)
+    cos = f"round({_dot_sql('q.__u', 't.__u')}, {int(round_scores)})"
     scored = (
-        asg.select(F.col("__id").alias(f"{right_prefix}ID"), "__u", "__cid")
-        .join(probes, on="__cid")
-        .filter(F.col("QUERY_ID") != F.col(f"{right_prefix}ID"))
-        .withColumn(
-            "COSINE", F.round(_dot(F.col("__qu"), F.col("__u")), round_to)
-        )
+        f"SELECT p.qid AS __qid, t.__id AS __mid, {cos} AS __score "
+        f"FROM {nv} t JOIN __ivf_asg a ON a.__id = t.__id "
+        f"JOIN __ivf_probe p ON p.c = a.c "
+        f"JOIN __ivf_q q ON q.qid = p.qid "
+        f"WHERE t.__id <> p.qid AND t.__u IS NOT NULL"
     )
-    w = Window.partitionBy("QUERY_ID").orderBy(
-        F.col("COSINE").desc(), F.col(f"{right_prefix}ID").asc()
-    )
-    matches = (
-        scored.withColumn("RANK", F.row_number().over(w))
-        .filter(F.col("RANK") <= k)
-        .select(
-            F.col("QUERY_ID").alias(i), f"{right_prefix}ID", "COSINE", "RANK"
-        )
-    )
-    return release_with(df.join(matches, on=i, how="inner"), cached)
+    return ctes, _topk_sql(scored, k)
 
 
 @renderer("embedding_join_ivf")
@@ -630,7 +771,7 @@ def _r_embedding_join_ivf(source, vec_col, id_col, other=None,
     as the similarity_search_ivf renderer with the fit over ``other`` and
     the probes over every left row."""
     from ..errors import TransformRenderingException
-    from .cluster import _dot_sql, _kmeans_render_parts, _unit_norm_sql
+    from .cluster import _unit_norm_sql
 
     if not rounded or index is not None or other in (None, "<dataframe>"):
         raise TransformRenderingException(
@@ -639,54 +780,21 @@ def _r_embedding_join_ivf(source, vec_col, id_col, other=None,
             "would be ULP-flaky in replay; a prebuilt index is an external "
             "artifact)"
         )
-    if isinstance(num_centroids, str) or isinstance(nprobe, str):
-        raise TransformRenderingException(
-            "auto sizing resolves from the corpus count at run time; pass "
-            "explicit num_centroids/nprobe to render"
-        )
-    if round_scores is None:
-        raise ParameterException("rounded=True requires an int round_scores")
-    if k < 1:
-        raise ParameterException("k must be >= 1")
-    nv, kcents, kassign = _kmeans_render_parts(
-        other, other_vec or vec_col, other_id or id_col, num_centroids, 1,
-        round_scores, "embedding_join_ivf",
+    ctes, ranked = _r_ivf_ranked(
+        "embedding_join_ivf", other, other_vec or vec_col,
+        other_id or id_col,
+        lambda nv: (
+            "SELECT __id AS qid, __u FROM "
+            f"{_unit_norm_sql(vec_col, id_col, source)} __ivf_qnv"
+        ),
+        k, num_centroids, nprobe, round_scores,
     )
-    qnv = _unit_norm_sql(vec_col, id_col, source)
-    sim = f"round({_dot_sql('t.__u', 's.v')}, {int(round_scores)})"
     mid = f"{right_prefix}ID"
-    ctes = [
-        f"__ivf_cents AS (SELECT c, v FROM {kcents})",
-        f"__ivf_asg AS (SELECT __id, c FROM {kassign('__ivf_cents')})",
-        (
-            f"__ivf_q AS (SELECT __id AS qid, __u FROM {qnv} __ivf_qnv)"
-        ),
-        (
-            f"__ivf_probe AS (SELECT __id AS qid, c FROM (SELECT t.__id, "
-            f"s.c, ROW_NUMBER() OVER (PARTITION BY t.__id ORDER BY {sim} "
-            f"DESC, s.c ASC) AS rn FROM (SELECT qid AS __id, __u "
-            f"FROM __ivf_q) t CROSS JOIN __ivf_cents s) "
-            f"WHERE rn <= {int(nprobe)})"
-        ),
-    ]
-    cos = f"round({_dot_sql('q.__u', 't.__u')}, {int(round_scores)})"
-    scored = (
-        f"SELECT p.qid AS __qid, t.__id AS {mid}, {cos} AS COSINE "
-        f"FROM {nv} t JOIN __ivf_asg a ON a.__id = t.__id "
-        f"JOIN __ivf_probe p ON p.c = a.c "
-        f"JOIN __ivf_q q ON q.qid = p.qid "
-        f"WHERE t.__id <> p.qid"
-    )
-    ranked = (
-        f"SELECT __qid, {mid}, COSINE, RANK FROM ("
-        f"SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY __qid "
-        f"ORDER BY COSINE DESC, {mid} ASC) AS INT) AS RANK "
-        f"FROM ({scored})) WHERE RANK <= {int(k)}"
-    )
     return (
         "SELECT * FROM (WITH " + ", ".join(ctes)
-        + f" SELECT s.*, m.{mid}, m.COSINE, m.RANK FROM {source} s "
-        f"JOIN ({ranked}) m ON m.__qid = s.{id_col}) __rivfj_out"
+        + f" SELECT s.*, m.__mid AS {mid}, m.__score AS COSINE, m.RANK "
+        f"FROM {source} s JOIN ({ranked}) m ON m.__qid = s.{id_col}"
+        f") __rivfj_out"
     )
 
 
@@ -787,7 +895,8 @@ def dedup_against_embedding(
             "BinaryIndex for 'binary')"
         )
     v, i = resolve_col(df, vec_col), resolve_col(df, id_col)
-    cached = None  # inline-built IVF frame, released with the final result
+    cached = None  # inline-built index frame, released with the final result
+    measure = "COSINE"
     if method == "brute":
         if reference is None or index is not None:
             raise ParameterException(
@@ -809,70 +918,27 @@ def dedup_against_embedding(
         cos = _dot(F.col("__qn"), F.col("__rn"))
         if round_scores is not None:
             cos = F.round(cos, round_scores)
-        scored = r.crossJoin(F.broadcast(q)).withColumn("__cos", cos)
-        matches = scored.filter(F.col("__cos") >= threshold)
+        scored = r.crossJoin(F.broadcast(q)).withColumn("__score", cos)
     elif method == "binary":
         if max_hamming < 0:
             raise ParameterException("max_hamming must be >= 0")
-        bdim = _check_dim(df, v, None, "batch")
-        if n_words is not None and bdim is not None:
-            # explicit n_words exists so .sql() chains can render (the
-            # renderer cannot derive dim); validate it against the data,
-            # same contract as binary_quantize
-            derived = max(1, (bdim + 31) // 32)
-            if int(n_words) != derived:
-                raise ParameterException(
-                    f"n_words={int(n_words)} but the {bdim}-dim "
-                    f"vectors pack to {derived} words"
-                )
         if index is not None:
             check_type(index, BinaryIndex, "method='binary'")
             check_fresh(index, reference)
-            n_words = _check_packing(index, bdim, None, "batch")
-            rp = index.frame
-        else:
-            if reference is None:
-                raise ParameterException(
-                    "method='binary' needs a reference frame or a prebuilt "
-                    "BinaryIndex"
-                )
-            rv = resolve_col(reference, ref_vec or vec_col)
-            ri = resolve_col(reference, ref_id or id_col)
-            rdim = reference.select(F.size(F.col(rv)).alias("d")).first()
-            if bdim is not None and rdim is not None and bdim != int(rdim["d"]):
-                raise ParameterException(
-                    f"batch dim {bdim} != reference dim {int(rdim['d'])}"
-                )
-            n_words = max(1, ((int(rdim["d"]) if rdim is not None else 0) + 31) // 32)
-            rp = spread(reference).select(
-                F.col(ri).alias("__rid"),
-                _sign_words_expr(f"`{rv}`", n_words).alias("__sig"),
+        elif reference is None:
+            raise ParameterException(
+                "method='binary' needs a reference frame or a prebuilt "
+                "BinaryIndex"
             )
-        qp = df.select(
-            F.col(i).alias("__qid"),
-            _sign_words_expr(f"`{v}`", n_words).alias("__qsig"),
+        rv, ri = ref_vec or vec_col, ref_id or id_col
+        nw = _sign_packing(df, v, n_words, "batch", index,
+                           (reference, rv, "reference"))
+        scored = _hamming_scores(
+            _packed(df, i, v, nw, "__qid", "__qsig"),
+            _signatures(index, reference, ri, rv, nw, "__rid"), "__rid",
+            max_hamming=max_hamming,
         )
-        ham = F.aggregate(
-            F.zip_with(
-                F.col("__qsig"), F.col("__sig"),
-                lambda a, b: F.bit_count(a.bitwiseXOR(b)).cast("bigint"),
-            ),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        )
-        # batch broadcasts; the reference signature scan reads 8 B/row
-        matches = (
-            rp.crossJoin(F.broadcast(qp))
-            .withColumn("__ham", ham)
-            .filter(F.col("__ham") <= max_hamming)
-        )
-        if mode == "pairs":
-            return matches.select(
-                F.col("__qid").alias("ID"), F.col("__rid").alias("REF_ID"),
-                F.col("__ham").alias("HAMMING"),
-            )
-        flagged = matches.select(F.col("__qid").alias(i)).dropDuplicates()
-        return df.join(flagged, on=i, how="left_anti").select(*df.columns)
+        measure = "HAMMING"
     elif method == "ivfpq":
         from .pq import IVFPQIndex, _adc_scores, _ivfpq_queries, ivfpq_index
 
@@ -884,7 +950,7 @@ def dedup_against_embedding(
         if index is not None:
             check_type(index, IVFPQIndex, "method='ivfpq'")
             check_fresh(index, reference)
-            pidx, cached = index, None
+            pidx = index
         else:
             rv = resolve_col(reference, ref_vec or vec_col)
             ri = resolve_col(reference, ref_id or id_col)
@@ -906,45 +972,27 @@ def dedup_against_embedding(
             q, pidx, _resolve_nprobe(nprobe, len(pidx.centroids)), "__rid",
             hint="broadcast",
         )
-        matches = scored.select(
-            "__qid", "__rid", F.col("__score").alias("__cos")
-        ).filter(F.col("__cos") >= threshold)
     else:
         if index is not None:
             check_type(index, IVFIndex, "method='ivf'")
             check_fresh(index, reference)
-            idx, cents, cached = index.frame, index.centroids, None
-        else:
-            rv = resolve_col(reference, ref_vec or vec_col)
-            ri = resolve_col(reference, ref_id or id_col)
-            idx, cents, cached = _ivf_assign(
-                reference, rv, ri, num_centroids, iterations=1
-            )
-        nprobe = _resolve_nprobe(nprobe, len(cents))
-        q = _with_normalized(
-            df.select(F.col(i).alias("__qid"), F.col(v).alias("__qvec")),
-            "__qvec", "__qn",
+        lists, cents, cached = _ivf_lists(
+            reference, ref_vec or vec_col, ref_id or id_col, num_centroids,
+            index,
         )
-        probes = _probe_lists(q, cents, nprobe, "__qid", "__qn")
-        cos = _dot(F.col("__qn"), F.col("__nvec"))
-        if round_scores is not None:
-            cos = F.round(cos, round_scores)
-        scored = (
-            idx.select(
-                F.col("__id").alias("__rid"), "__nvec",
-                F.col("CENTROID_ID").alias("__cid"),
-            )
-            .join(probes, on="__cid")
-            .withColumn("__cos", cos)
+        scored = _ivf_scores(
+            _ivf_queries(df, v, i, cents, None, "batch"), lists, cents,
+            _resolve_nprobe(nprobe, len(cents)), "__rid", round_scores,
         )
-        matches = scored.filter(F.col("__cos") >= threshold)
+    if measure == "COSINE":
+        scored = scored.filter(F.col("__score") >= threshold)
     if mode == "pairs":
-        out = matches.select(
+        out = scored.select(
             F.col("__qid").alias("ID"), F.col("__rid").alias("REF_ID"),
-            F.col("__cos").alias("COSINE"),
+            F.col("__score").alias(measure),
         )
     else:
-        flagged = matches.select(F.col("__qid").alias(i)).dropDuplicates()
+        flagged = scored.select(F.col("__qid").alias(i)).dropDuplicates()
         out = df.join(flagged, on=i, how="left_anti").select(*df.columns)
     # release ties to the FINAL result (the r5 scoped-cache liveness
     # lesson) — tying it to the intermediate would free the inline-built
@@ -1043,24 +1091,15 @@ def _r_dedup_against_embedding(
                 "dedup_against_embedding(method='binary') renders only "
                 "with an explicit n_words (= ceil(dim/32))"
             )
-        rp = (
-            f"(SELECT {ref_id or id_col} AS __rid, "
-            f"{_sign_words_sql(ref_vec or vec_col, int(n_words))} AS __sig "
-            f"FROM {reference})"
-        )
-        qp = (
-            f"(SELECT {id_col} AS __qid, "
-            f"{_sign_words_sql(vec_col, int(n_words))} AS __qsig FROM {source})"
-        )
-        ham = (
-            "aggregate(zip_with(q.__qsig, r.__sig, (a, b) -> "
-            "CAST(bit_count(a ^ b) AS BIGINT)), CAST(0 AS BIGINT), "
-            "(acc, x) -> acc + x)"
+        scored = _hamming_sql(
+            _packed_sql(source, id_col, vec_col, n_words, "__qid", "__qsig"),
+            _packed_sql(reference, ref_id or id_col, ref_vec or vec_col,
+                        n_words),
+            max_hamming,
         )
         pairs = (
-            f"SELECT __qid AS ID, __rid AS REF_ID, __ham AS HAMMING FROM "
-            f"(SELECT q.__qid, r.__rid, {ham} AS __ham "
-            f"FROM {rp} r CROSS JOIN {qp} q) WHERE __ham <= {int(max_hamming)}"
+            f"SELECT __qid AS ID, __mid AS REF_ID, __score AS HAMMING "
+            f"FROM ({scored})"
         )
         if mode == "pairs":
             return pairs
@@ -1136,111 +1175,24 @@ def similarity_search_ivf(
     centroids, no replay). Rounded mode is inline-only (``index`` must be
     None — IVFIndex artifacts store the unrounded fit) and one Lloyd pass,
     matching the inline build."""
-    if rounded:
-        if index is not None:
-            raise ParameterException(
-                "rounded=True is the replayable inline mode; prebuilt "
-                "IVFIndex artifacts hold the unrounded fit"
-            )
-        if round_scores is None:
-            raise ParameterException(
-                "rounded=True scores by the rounded replay contract; "
-                "round_scores must be an int"
-            )
-        return _similarity_search_ivf_rounded(
-            df, vec_col, id_col, query_ids, k, num_centroids, nprobe,
-            round_scores,
-        )
-    if index is not None:
-        idx, cents, cached = index.frame, index.centroids, None
-    else:
-        idx, cents, cached = _ivf_assign(df, vec_col, id_col, num_centroids, iterations=1)
-    nprobe = _resolve_nprobe(nprobe, len(cents))
-    probes = _probe_lists(
-        idx.filter(F.col("__id").isin(list(query_ids))).select(
-            F.col("__id").alias("QUERY_ID"), F.col("__nvec").alias("__qnvec")
-        ),
-        cents, nprobe, "QUERY_ID", "__qnvec",
+    round_to = _rounded_mode(rounded, index, round_scores)
+    if rounded and not query_ids:
+        raise ParameterException("query_ids must be non-empty")
+    lists, cents, cached = _ivf_lists(df, vec_col, id_col, num_centroids,
+                                      index, round_to)
+    q = lists.filter(F.col("__id").isin(list(query_ids))).select(
+        F.col("__id").alias("__qid"), F.col("__v").alias("__qv")
     )
-    cos = _dot(F.col("__qnvec"), F.col("__nvec"))
-    if round_scores is not None:
-        cos = F.round(cos, round_scores)
-    scored = (
-        idx.select(
-            F.col("__id").alias("MATCH_ID"), "__nvec",
-            F.col("CENTROID_ID").alias("__cid"),
-        )
-        .join(F.broadcast(probes), on="__cid")
-        .filter(F.col("QUERY_ID") != F.col("MATCH_ID"))
-        .withColumn("COSINE", cos)
+    scored = _ivf_scores(
+        q, lists, cents, _resolve_nprobe(nprobe, len(cents)), "MATCH_ID",
+        round_scores, round_to, hint="broadcast",
     )
-    w = Window.partitionBy("QUERY_ID").orderBy(F.col("COSINE").desc(), F.col("MATCH_ID").asc())
-    out = (
-        scored.withColumn("RANK", F.row_number().over(w))
-        .filter(F.col("RANK") <= k)
-        .select("QUERY_ID", "MATCH_ID", "COSINE", "RANK")
+    out = _topk(scored.filter(F.col("__qid") != F.col("MATCH_ID")),
+                "MATCH_ID", k).select(
+        F.col("__qid").alias("QUERY_ID"), "MATCH_ID",
+        F.col("__score").alias("COSINE"), "RANK",
     )
     return out if cached is None else release_with(out, cached)
-
-
-def _similarity_search_ivf_rounded(df, vec_col, id_col, query_ids, k,
-                                   num_centroids, nprobe, round_to):
-    """The replayable IVF search: rounded kmeans fit (shared _fit_kmeans
-    contract, one Lloyd pass like the inline unrounded build), rounded
-    probe ranking, rounded dot scoring. Same plan shape as the unrounded
-    path — persisted normalized corpus, broadcast probe frame, one
-    candidate window — so the 100 TB properties carry over unchanged.
-
-    MIRROR NOTE: _embedding_join_ivf_rounded repeats this glue in its
-    join shape (different query source, no broadcast hint on the probe
-    join, joined-back output). The pieces that define the CONTRACT —
-    _unit_rounded, _fit_kmeans, _assign_expr, _probe_lists_rounded — are
-    single definitions shared by both (and by the renderers/oracles);
-    only the composition is duplicated, so a contract change cannot
-    drift the two paths apart, but edits to the glue should be applied
-    to both."""
-    from .cluster import _fit_kmeans, _unit_rounded
-    from .cluster import _assign_expr as _rounded_assign
-    from .pq import _probe_lists_rounded
-
-    if not query_ids:
-        raise ParameterException("query_ids must be non-empty")
-    v, i = resolve_col(df, vec_col), resolve_col(df, id_col)
-    cached = scoped_persist(_unit_rounded(
-        spread(df).select(F.col(i).alias("__id"), F.col(v).alias("__vec")),
-        "__vec",
-    ))
-    kc = (
-        _resolve_k(num_centroids, cached.count())
-        if isinstance(num_centroids, str) else _resolve_k(num_centroids, 0)
-    )
-    cents = _fit_kmeans(cached, kc, 1, round_to)
-    nprobe = _resolve_nprobe(nprobe, len(cents))
-    abase, carr, _ad = _attach_centroids(cached, cents)
-    asg = abase.withColumn("__cid", _rounded_assign(carr, round_to)).select(
-        "__id", "__u", "__cid"
-    )
-    qdf = asg.filter(F.col("__id").isin(list(query_ids))).select(
-        F.col("__id").alias("QUERY_ID"), F.col("__u").alias("__qu")
-    )
-    probes = _probe_lists_rounded(
-        qdf, cents, nprobe, "QUERY_ID", "__qu", round_to
-    )
-    scored = (
-        asg.select(F.col("__id").alias("MATCH_ID"), "__u", "__cid")
-        .join(F.broadcast(probes), on="__cid")
-        .filter(F.col("QUERY_ID") != F.col("MATCH_ID"))
-        .withColumn("COSINE", F.round(_dot(F.col("__qu"), F.col("__u")), round_to))
-    )
-    w = Window.partitionBy("QUERY_ID").orderBy(
-        F.col("COSINE").desc(), F.col("MATCH_ID").asc()
-    )
-    out = (
-        scored.withColumn("RANK", F.row_number().over(w))
-        .filter(F.col("RANK") <= k)
-        .select("QUERY_ID", "MATCH_ID", "COSINE", "RANK")
-    )
-    return release_with(out, cached)
 
 
 @renderer("similarity_search_ivf")
@@ -1255,7 +1207,6 @@ def _r_similarity_search_ivf(source, vec_col, id_col, query_ids, k=10,
     pass, matching the inline build) with the probe ranking and a rounded
     dot scan over probed lists."""
     from ..errors import TransformRenderingException
-    from .cluster import _dot_sql, _kmeans_render_parts
 
     if not rounded or index is not None:
         raise TransformRenderingException(
@@ -1264,53 +1215,21 @@ def _r_similarity_search_ivf(source, vec_col, id_col, query_ids, k=10,
             "contract would be ULP-flaky in replay; a prebuilt index is "
             "an external artifact)"
         )
-    if isinstance(num_centroids, str) or isinstance(nprobe, str):
-        raise TransformRenderingException(
-            "auto sizing resolves from the corpus count at run time; pass "
-            "explicit num_centroids/nprobe to render"
-        )
-    if round_scores is None:
-        raise ParameterException(
-            "rounded=True requires an int round_scores"
-        )
     if not query_ids:
         raise ParameterException("query_ids must be non-empty")
-    if k < 1:
-        raise ParameterException("k must be >= 1")
-    nv, kcents, kassign = _kmeans_render_parts(
-        source, vec_col, id_col, num_centroids, 1, round_scores,
-        "similarity_search_ivf",
-    )
     qlist = ", ".join(_sql_id_literal(q) for q in query_ids)
-    sim = f"round({_dot_sql('t.__u', 's.v')}, {int(round_scores)})"
-    ctes = [
-        f"__ivf_cents AS (SELECT c, v FROM {kcents})",
-        f"__ivf_asg AS (SELECT __id, c FROM {kassign('__ivf_cents')})",
-        (
-            f"__ivf_probe AS (SELECT __id AS qid, c FROM (SELECT t.__id, "
-            f"s.c, ROW_NUMBER() OVER (PARTITION BY t.__id ORDER BY {sim} "
-            f"DESC, s.c ASC) AS rn FROM {nv} t CROSS JOIN __ivf_cents s "
-            f"WHERE t.__id IN ({qlist})) WHERE rn <= {int(nprobe)})"
+    ctes, ranked = _r_ivf_ranked(
+        "similarity_search_ivf", source, vec_col, id_col,
+        lambda nv: (
+            f"SELECT __id AS qid, __u FROM {nv} __ivf_qnv "
+            f"WHERE __id IN ({qlist})"
         ),
-        (
-            f"__ivf_q AS (SELECT __id AS qid, __u FROM {nv} __ivf_qnv "
-            f"WHERE __id IN ({qlist}))"
-        ),
-    ]
-    cos = f"round({_dot_sql('q.__u', 't.__u')}, {int(round_scores)})"
-    scored = (
-        f"SELECT p.qid AS QUERY_ID, t.__id AS MATCH_ID, {cos} AS COSINE "
-        f"FROM {nv} t JOIN __ivf_asg a ON a.__id = t.__id "
-        f"JOIN __ivf_probe p ON p.c = a.c "
-        f"JOIN __ivf_q q ON q.qid = p.qid "
-        f"WHERE t.__id <> p.qid"
+        k, num_centroids, nprobe, round_scores,
     )
     return (
         "SELECT * FROM (WITH " + ", ".join(ctes)
-        + f" SELECT QUERY_ID, MATCH_ID, COSINE, RANK FROM ("
-        f"SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY QUERY_ID "
-        f"ORDER BY COSINE DESC, MATCH_ID ASC) AS INT) AS RANK "
-        f"FROM ({scored})) WHERE RANK <= {int(k)}) __rivf_out"
+        + f" SELECT __qid AS QUERY_ID, __mid AS MATCH_ID, __score AS COSINE, "
+        f"RANK FROM ({ranked})) __rivf_out"
     )
 
 
@@ -1410,7 +1329,8 @@ def _sign_words_sql(vec_col: str, n_words: int) -> str:
     (max 2^31) never touches a bigint's sign bit — both engines then
     agree on the integer value without wraparound semantics entering the
     contract. Components beyond the vector's length contribute 0 (short
-    vectors pack as if zero-padded). ONE definition serves the DataFrame
+    vectors pack as if zero-padded); a NULL vector packs to a NULL
+    signature, never to the all-negative one. ONE definition serves the DataFrame
     path (via F.expr — pyspark's shiftleft binding wants a Python-int
     shift, the SQL function takes a column) and the renderer, so packing
     parity holds by construction."""
@@ -1420,7 +1340,10 @@ def _sign_words_sql(vec_col: str, n_words: int) -> str:
         "THEN shiftleft(CAST(1 AS BIGINT), CAST(i AS INT)) "
         "ELSE CAST(0 AS BIGINT) END), CAST(0 AS BIGINT), (acc, x) -> acc | x)"
     )
-    return f"transform(sequence(0, {int(n_words) - 1}), w -> {word})"
+    return (
+        f"CASE WHEN {vec_col} IS NOT NULL THEN "
+        f"transform(sequence(0, {int(n_words) - 1}), w -> {word}) END"
+    )
 
 
 def _sign_words_expr(vec_name: str, n_words: int) -> Column:
@@ -1441,19 +1364,8 @@ def binary_quantize(df: DataFrame, vec_col: str, id_col: str | None = None,
     exactly replayable (sign tests and bit ops have no float-accumulation
     ambiguity)."""
     v = resolve_col(df, vec_col)
-    first = df.select(F.size(F.col(v)).alias("d")).first()
-    dim = int(first["d"]) if first is not None else 0
-    derived = max(1, (dim + 31) // 32)
-    if n_words is None:
-        n_words = derived
-    elif first is not None and int(n_words) != derived:
-        # explicit n_words exists so .sql() chains can render (the data's
-        # dim is unknowable at render time); it must agree with the data
-        raise ParameterException(
-            f"n_words={int(n_words)} but the {dim}-dim vectors pack to "
-            f"{derived} words"
-        )
-    return df.withColumn("SIGN_BITS", _sign_words_expr(f"`{v}`", int(n_words)))
+    nw = _sign_packing(df, v, n_words, "input")
+    return df.withColumn("SIGN_BITS", _sign_words_expr(f"`{v}`", nw))
 
 
 @renderer("binary_quantize")
@@ -1526,6 +1438,153 @@ def _check_packing(index: BinaryIndex, dim: int | None, n_words,
     return int(index.n_words)
 
 
+def _sign_packing(df: DataFrame, vec_col: str, n_words, what: str,
+                  index: BinaryIndex | None = None, other: tuple | None = None,
+                  empty: str | None = None) -> int:
+    """The binary family's packing check, shared by ``binary_quantize``,
+    search, join and dedup: read ``df``'s dim (:func:`_check_dim`, one
+    job; ``empty`` is raised when no vector is non-NULL) and return the
+    word count to pack with. Against an ``index`` it comes from
+    :func:`_check_packing`. Otherwise ``other`` = ``(frame, vec_col,
+    name)`` is the right side an inline join or dedup packs too, whose dim
+    must agree, and it derives as ceil(dim/32) — an explicit
+    ``n_words`` (the ``.sql()`` render contract) must equal them."""
+    dim = _check_dim(df, vec_col, None, what)
+    if dim is None and empty is not None:
+        raise ParameterException(empty)
+    if index is not None:
+        return _check_packing(index, dim, n_words, what)
+    if other is not None:
+        odf, ov, owhat = other
+        odim = _check_dim(odf, resolve_col(odf, ov), None, owhat)
+        if dim is not None and odim is not None and dim != odim:
+            raise ParameterException(f"{what} dim {dim} != {owhat} dim {odim}")
+        dim = odim if dim is None else dim
+    derived = max(1, ((dim or 0) + 31) // 32)
+    if n_words is not None and dim is not None and int(n_words) != derived:
+        raise ParameterException(
+            f"n_words={int(n_words)} but the {dim}-dim vectors pack to "
+            f"{derived} words"
+        )
+    return derived if n_words is None else int(n_words)
+
+
+def _packed(df: DataFrame, id_col: str, vec_col: str, n_words: int,
+            id_alias: str, sig: str = "__sig") -> DataFrame:
+    """``(id_alias, sig)``: ``df``'s vectors packed to sign words."""
+    return df.select(
+        F.col(resolve_col(df, id_col)).alias(id_alias),
+        _sign_words_expr(f"`{resolve_col(df, vec_col)}`", n_words).alias(sig),
+    )
+
+
+def _signatures(index: BinaryIndex | None, df: DataFrame | None,
+                id_col: str, vec_col: str, n_words: int,
+                mid: str) -> DataFrame:
+    """The ``(mid, __sig)`` reference side of a binary search, join or
+    dedup: the prebuilt index's stored signatures, else ``df`` packed."""
+    if index is not None:
+        return index.frame.select(F.col("__rid").alias(mid), "__sig")
+    return _packed(spread(df), id_col, vec_col, n_words, mid)
+
+
+def _hamming_scores(q: DataFrame, r: DataFrame, mid: str,
+                    max_hamming: int | None = None, bands: tuple | None = None,
+                    exclude_self: bool = False) -> DataFrame:
+    """The binary candidate scorer shared by search, join and dedup:
+    queries ``(__qid, __qsig)`` × references ``(mid, __sig)`` →
+    ``(__qid, mid, __score)``, the Hamming distance (xor + popcount per
+    32-bit word, summed as bigint), at most ``max_hamming`` when set. A
+    NULL signature (a NULL vector) is neither a query nor a candidate.
+
+    ``bands=None`` broadcasts the bounded query side onto the reference
+    scan (8 B/row at 64 dims; search and dedup). ``bands=(n_words, nb)``
+    is the join's pigeonhole band equi-join (:func:`_nibble_band_keys`):
+    no broadcast and no cross product, and one row per pair survives
+    (a pair can agree on several bands). ``exclude_self`` drops id-equal
+    pairs before scoring."""
+    q = q.filter(F.col("__qsig").isNotNull())
+    r = r.filter(F.col("__sig").isNotNull())
+    if bands is None:
+        pairs = r.crossJoin(F.broadcast(q))
+    else:
+        def banded(frame: DataFrame, key: str, sig: str) -> DataFrame:
+            return frame.select(key, sig, F.explode(
+                F.array(*_nibble_band_keys(sig, *bands))).alias("__band"))
+
+        pairs = banded(q, "__qid", "__qsig").join(
+            banded(r, mid, "__sig"), on="__band")
+    if exclude_self:
+        pairs = pairs.filter(F.col("__qid") != F.col(mid))
+    ham = F.aggregate(
+        F.zip_with(
+            F.col("__qsig"), F.col("__sig"),
+            lambda a, b: F.bit_count(a.bitwiseXOR(b)).cast("bigint"),
+        ),
+        F.lit(0).cast("bigint"),
+        lambda acc, x: acc + x,
+    )
+    scored = pairs.select("__qid", mid, ham.alias("__score"))
+    if max_hamming is not None:
+        scored = scored.filter(F.col("__score") <= max_hamming)
+    return scored if bands is None else scored.dropDuplicates(["__qid", mid])
+
+
+def _cosine_refine(cands: DataFrame, queries: DataFrame, round_scores):
+    """The binary rerank's :func:`_topk` refine: candidates ``(mid,
+    __cvec)`` and queries ``(__qid, __qvec)`` scored by exact cosine,
+    rounded to ``round_scores`` dp when set."""
+    cos = cosine_expr(F.col("__qvec"), F.col("__cvec"))
+    return cands, queries, cos if round_scores is None else F.round(cos, round_scores)
+
+
+def _packed_sql(table: str, id_col: str, vec_col: str, n_words: int,
+                id_alias: str = "__mid", sig: str = "__sig") -> str:
+    """SQL twin of :func:`_packed`."""
+    return (
+        f"(SELECT {id_col} AS {id_alias}, "
+        f"{_sign_words_sql(vec_col, int(n_words))} AS {sig} FROM {table})"
+    )
+
+
+def _hamming_sql(q: str, r: str, max_hamming: int | None = None,
+                 exclude_self: bool = False) -> str:
+    """SQL twin of :func:`_hamming_scores` as the plain all-pairs join:
+    packed queries ``(__qid, __qsig)`` × references ``(__mid, __sig)`` →
+    ``(__qid, __mid, __score)``. The band join is a result-preserving
+    optimization (pigeonhole recall at ``max_hamming`` is exact), so the
+    replay needs no bands."""
+    ham = (
+        "aggregate(zip_with(q.__qsig, r.__sig, (a, b) -> "
+        "CAST(bit_count(a ^ b) AS BIGINT)), CAST(0 AS BIGINT), "
+        "(acc, x) -> acc + x)"
+    )
+    keep = "q.__qsig IS NOT NULL AND r.__sig IS NOT NULL"
+    if exclude_self:
+        keep += " AND q.__qid <> r.__mid"
+    rel = (
+        f"SELECT q.__qid, r.__mid, {ham} AS __score "
+        f"FROM {r} r CROSS JOIN {q} q WHERE {keep}"
+    )
+    if max_hamming is None:
+        return rel
+    return f"SELECT * FROM ({rel}) WHERE __score <= {int(max_hamming)}"
+
+
+def _cosine_refine_sql(cands: str, cand_id: str, cand_vec: str, queries: str,
+                       query_id: str, query_vec: str, round_scores):
+    """SQL twin of :func:`_cosine_refine`, as a :func:`_topk_sql` refine:
+    the survivors join back to the candidate and query tables by id."""
+    cos = _cosine_sql(f"qv.{query_vec}", f"cv.{cand_vec}")
+    if round_scores is not None:
+        cos = f"ROUND({cos}, {int(round_scores)})"
+    return lambda h: (
+        f"SELECT h.__qid, h.__mid, {cos} AS __score FROM ({h}) h "
+        f"JOIN {cands} cv ON cv.{cand_id} = h.__mid "
+        f"JOIN {queries} qv ON qv.{query_id} = h.__qid"
+    )
+
+
 def binary_index(reference: DataFrame, vec_col: str, id_col: str) -> BinaryIndex:
     """Build a reusable :class:`BinaryIndex` over a reference corpus —
     one row-local packing pass, persisted until ``release()``."""
@@ -1547,10 +1606,7 @@ def binary_index(reference: DataFrame, vec_col: str, id_col: str) -> BinaryIndex
         )
     dim = int(ext["lo"])
     n_words = max(1, (dim + 31) // 32)
-    frame, n = materialize(spread(reference).select(
-        F.col(ri).alias("__rid"),
-        _sign_words_expr(f"`{rv}`", n_words).alias("__sig"),
-    ))
+    frame, n = materialize(_packed(spread(reference), ri, rv, n_words, "__rid"))
     return BinaryIndex(frame, n_words, n_docs=n, dim=dim)
 
 
@@ -1582,13 +1638,9 @@ def update_binary_index(index: BinaryIndex, new_vecs: DataFrame,
     increments; returns a NEW index, eagerly materialized."""
     v, i = resolve_col(new_vecs, vec_col), resolve_col(new_vecs, id_col)
     _check_packing(index, _check_dim(new_vecs, v, None, "batch"), None, "batch")
-    packed = spread(new_vecs).select(
-        F.col(i).alias("__rid"),
-        _sign_words_expr(f"`{v}`", index.n_words).alias("__sig"),
-    )
-    merged, n = materialize(
-        index.frame.select("__rid", "__sig").unionByName(packed)
-    )
+    merged, n = materialize(index.frame.select("__rid", "__sig").unionByName(
+        _packed(spread(new_vecs), i, v, index.n_words, "__rid")
+    ))
     return BinaryIndex(merged, index.n_words, n_docs=n, dim=index.dim)
 
 
@@ -1660,75 +1712,30 @@ def similarity_search_binary(
     if rerank and rerank_factor < 1:
         raise ParameterException("rerank_factor must be >= 1")
     v, i = resolve_col(df, vec_col), resolve_col(df, id_col)
-    dim = _check_dim(df, v, None, "corpus")
-    if dim is None:
-        raise ParameterException("input is empty")
-    derived = max(1, (dim + 31) // 32)
     if index is not None:
         check_type(index, BinaryIndex, "similarity_search_binary")
-        n_words = _check_packing(index, dim, n_words, "corpus")
-        packed = index.frame.select(
-            F.col("__rid").alias("MATCH_ID"), "__sig"
-        )
-    else:
-        if n_words is None:
-            n_words = derived
-        elif int(n_words) != derived:
-            raise ParameterException(
-                f"n_words={int(n_words)} but the {dim}-dim "
-                f"vectors pack to {derived} words"
-            )
-        n_words = int(n_words)
-        packed = spread(df).select(
-            F.col(i).alias("MATCH_ID"),
-            _sign_words_expr(f"`{v}`", n_words).alias("__sig"),
-        )
+    nw = _sign_packing(df, v, n_words, "corpus", index, empty="input is empty")
+    packed = _signatures(index, df, i, v, nw, "MATCH_ID")
     q = packed.filter(F.col("MATCH_ID").isin(list(query_ids))).select(
-        F.col("MATCH_ID").alias("QUERY_ID"), F.col("__sig").alias("__qsig")
+        F.col("MATCH_ID").alias("__qid"), F.col("__sig").alias("__qsig")
     )
-    ham = F.aggregate(
-        F.zip_with(
-            F.col("__qsig"), F.col("__sig"),
-            lambda a, b: F.bit_count(a.bitwiseXOR(b)).cast("bigint"),
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    scored = (
-        packed.crossJoin(F.broadcast(q))
-        .filter(F.col("QUERY_ID") != F.col("MATCH_ID"))
-        .withColumn("HAMMING", ham)
-    )
-    w = Window.partitionBy("QUERY_ID").orderBy(
-        F.col("HAMMING").asc(), F.col("MATCH_ID").asc()
-    )
-    kf = k * rerank_factor if rerank else k
-    top = (
-        scored.withColumn("RANK", F.row_number().over(w).cast("int"))
-        .filter(F.col("RANK") <= kf)
-    )
-    if not rerank:
-        return top.select("QUERY_ID", "MATCH_ID", "HAMMING", "RANK")
     # survivors only pay the vector read: the tiny (queries x k x factor)
     # id frame broadcasts onto a second corpus projection, so the Hamming
     # scan stays 8 bytes/candidate and the corpus never shuffles
-    cvec = df.select(F.col(i).alias("MATCH_ID"), F.col(v).alias("__cvec"))
-    qvec = df.select(
-        F.col(i).alias("QUERY_ID"), F.col(v).alias("__qvec")
-    ).filter(F.col("QUERY_ID").isin(list(query_ids)))
-    cos = cosine_expr(F.col("__qvec"), F.col("__cvec"))
-    if round_scores is not None:
-        cos = F.round(cos, round_scores)
-    rw = Window.partitionBy("QUERY_ID").orderBy(
-        F.col("COSINE").desc(), F.col("MATCH_ID").asc()
+    refine = None if not rerank else _cosine_refine(
+        df.select(F.col(i).alias("MATCH_ID"), F.col(v).alias("__cvec")),
+        df.select(F.col(i).alias("__qid"), F.col(v).alias("__qvec"))
+        .filter(F.col("__qid").isin(list(query_ids))),
+        round_scores,
     )
-    return (
-        cvec.join(F.broadcast(top.select("QUERY_ID", "MATCH_ID")), on="MATCH_ID")
-        .join(F.broadcast(qvec), on="QUERY_ID")
-        .withColumn("COSINE", cos)
-        .withColumn("RANK", F.row_number().over(rw).cast("int"))
-        .filter(F.col("RANK") <= k)
-        .select("QUERY_ID", "MATCH_ID", "COSINE", "RANK")
+    top = _topk(
+        _hamming_scores(q, packed, "MATCH_ID", exclude_self=True), "MATCH_ID",
+        k, asc=True, refine=refine, rerank_factor=rerank_factor,
+        hint="broadcast",
+    )
+    return top.select(
+        F.col("__qid").alias("QUERY_ID"), "MATCH_ID",
+        F.col("__score").alias("COSINE" if rerank else "HAMMING"), "RANK",
     )
 
 
@@ -1764,42 +1771,18 @@ def _r_similarity_search_binary(source, vec_col, id_col, query_ids, k=10,
             "at render time"
         )
     qlist = ", ".join(_sql_id_literal(q) for q in query_ids)
-    packed = (
-        f"(SELECT {id_col} AS __bid, {_sign_words_sql(vec_col, int(n_words))} "
-        f"AS __sig FROM {source})"
+    packed = _packed_sql(source, id_col, vec_col, n_words)
+    q = (
+        f"(SELECT __mid AS __qid, __sig AS __qsig FROM {packed} __q "
+        f"WHERE __mid IN ({qlist}))"
     )
-    ham = (
-        "aggregate(zip_with(q.__sig, c.__sig, (a, b) -> "
-        "CAST(bit_count(a ^ b) AS BIGINT)), CAST(0 AS BIGINT), "
-        "(acc, x) -> acc + x)"
-    )
-    kf = int(k) * int(rerank_factor) if rerank else int(k)
-    hstage = (
-        f"SELECT QUERY_ID, MATCH_ID, HAMMING, RANK FROM ("
-        f"SELECT QUERY_ID, MATCH_ID, HAMMING, "
-        f"CAST(ROW_NUMBER() OVER (PARTITION BY QUERY_ID "
-        f"ORDER BY HAMMING ASC, MATCH_ID ASC) AS INT) AS RANK "
-        f"FROM (SELECT q.__bid AS QUERY_ID, c.__bid AS MATCH_ID, "
-        f"{ham} AS HAMMING FROM {packed} c CROSS JOIN "
-        f"(SELECT __bid, __sig FROM {packed} __q WHERE __bid IN ({qlist})) q "
-        f"WHERE q.__bid <> c.__bid)"
-        f") WHERE RANK <= {kf}"
-    )
-    if not rerank:
-        return hstage
-    cos = _cosine_sql(f"qv.{vec_col}", f"cv.{vec_col}")
-    if round_scores is not None:
-        cos = f"ROUND({cos}, {int(round_scores)})"
+    refine = None if not rerank else _cosine_refine_sql(
+        source, id_col, vec_col, source, id_col, vec_col, round_scores)
+    ranked = _topk_sql(_hamming_sql(q, packed, exclude_self=True), k,
+                       asc=True, refine=refine, rerank_factor=rerank_factor)
     return (
-        f"SELECT QUERY_ID, MATCH_ID, COSINE, RANK FROM ("
-        f"SELECT QUERY_ID, MATCH_ID, COSINE, "
-        f"CAST(ROW_NUMBER() OVER (PARTITION BY QUERY_ID "
-        f"ORDER BY COSINE DESC, MATCH_ID ASC) AS INT) AS RANK "
-        f"FROM (SELECT h.QUERY_ID, h.MATCH_ID, {cos} AS COSINE "
-        f"FROM ({hstage}) h "
-        f"JOIN {source} cv ON cv.{id_col} = h.MATCH_ID "
-        f"JOIN {source} qv ON qv.{id_col} = h.QUERY_ID)"
-        f") WHERE RANK <= {int(k)}"
+        f"SELECT __qid AS QUERY_ID, __mid AS MATCH_ID, __score AS "
+        f"{'COSINE' if rerank else 'HAMMING'}, RANK FROM ({ranked})"
     )
 
 
@@ -1892,10 +1875,7 @@ def embedding_join_binary(
         raise ParameterException("rerank_factor must be >= 1")
     odf = other.df if hasattr(other, "df") else other
     v, i = resolve_col(df, vec_col), resolve_col(df, id_col)
-    dim = _check_dim(df, v, None, "left")
-    if dim is None:
-        raise ParameterException("left side is empty")
-    derived = max(1, (dim + 31) // 32)
+    ov, oi = other_vec or vec_col, other_id or id_col
     if index is not None:
         check_type(index, BinaryIndex, "embedding_join_binary")
         if rerank and odf is None:
@@ -1904,31 +1884,13 @@ def embedding_join_binary(
                 "BinaryIndex holds signatures only"
             )
         check_fresh(index, odf, "right-side")
-        nw = _check_packing(index, dim, n_words, "left")
-        rp = index.frame.select("__rid", "__sig")
-    else:
-        if odf is None:
-            raise ParameterException(
-                "embedding_join_binary needs a right-side frame (other=...)"
-                " or a prebuilt BinaryIndex"
-            )
-        ov = resolve_col(odf, other_vec or vec_col)
-        oi = resolve_col(odf, other_id or id_col)
-        rdim = odf.select(F.size(F.col(ov)).alias("d")).first()
-        if rdim is not None and dim != int(rdim["d"]):
-            raise ParameterException(
-                f"left dim {dim} != right dim {int(rdim['d'])}"
-            )
-        if n_words is not None and int(n_words) != derived:
-            raise ParameterException(
-                f"n_words={int(n_words)} but the {dim}-dim "
-                f"vectors pack to {derived} words"
-            )
-        nw = derived
-        rp = spread(odf).select(
-            F.col(oi).alias("__rid"),
-            _sign_words_expr(f"`{ov}`", nw).alias("__sig"),
+    elif odf is None:
+        raise ParameterException(
+            "embedding_join_binary needs a right-side frame (other=...)"
+            " or a prebuilt BinaryIndex"
         )
+    nw = _sign_packing(df, v, n_words, "left", index, (odf, ov, "right"),
+                       empty="left side is empty")
     nb = max_hamming + 1
     if nb > nw * 8:
         raise ParameterException(
@@ -1936,74 +1898,25 @@ def embedding_join_binary(
             f"{nw * 8}-nibble signature supports at most {nw * 8} — use "
             "the IVF/IVF-PQ join for looser thresholds"
         )
-    qp = df.select(
-        F.col(i).alias("__qid"),
-        _sign_words_expr(f"`{v}`", nw).alias("__qsig"),
-    )
-    mid = f"{right_prefix}ID"
-    lb = qp.select(
-        "__qid", "__qsig",
-        F.explode(F.array(*_nibble_band_keys("__qsig", nw, nb))).alias("__band"),
-    )
-    rb = rp.select(
-        "__rid", "__sig",
-        F.explode(F.array(*_nibble_band_keys("__sig", nw, nb))).alias("__band"),
-    )
-    ham = F.aggregate(
-        F.zip_with(
-            F.col("__qsig"), F.col("__sig"),
-            lambda a, b: F.bit_count(a.bitwiseXOR(b)).cast("bigint"),
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    pairs = (
-        lb.join(rb, on="__band")
-        .filter(F.col("__qid") != F.col("__rid"))
-        .withColumn("__ham", ham)
-        .filter(F.col("__ham") <= max_hamming)
-        # a pair within the threshold can agree on SEVERAL bands — one
-        # surviving row per pair (__ham is pair-determined, so any row is
-        # the same row)
-        .dropDuplicates(["__qid", "__rid"])
-    )
-    w = Window.partitionBy("__qid").orderBy(
-        F.col("__ham").asc(), F.col("__rid").asc()
-    )
-    kf = k * rerank_factor if rerank else k
-    top = (
-        pairs.withColumn("RANK", F.row_number().over(w).cast("int"))
-        .filter(F.col("RANK") <= kf)
-    )
-    if not rerank:
-        matches = top.select(
-            F.col("__qid").alias(i), F.col("__rid").alias(mid),
-            F.col("__ham").alias("HAMMING"), "RANK",
-        )
-        return df.join(matches, on=i, how="inner")
     # survivors only pay the vector read — the join-back frames are
     # queries × k · factor rows, never a corpus
-    ov = resolve_col(odf, other_vec or vec_col)
-    oi = resolve_col(odf, other_id or id_col)
-    cvec = odf.select(F.col(oi).alias("__rid"), F.col(ov).alias("__cvec"))
-    qvec = df.select(F.col(i).alias("__qid"), F.col(v).alias("__qvec"))
-    cos = cosine_expr(F.col("__qvec"), F.col("__cvec"))
-    if round_scores is not None:
-        cos = F.round(cos, round_scores)
-    rw = Window.partitionBy("__qid").orderBy(
-        F.col("COSINE").desc(), F.col("__rid").asc()
+    refine = None if not rerank else _cosine_refine(
+        odf.select(F.col(resolve_col(odf, oi)).alias("__rid"),
+                   F.col(resolve_col(odf, ov)).alias("__cvec")),
+        df.select(F.col(i).alias("__qid"), F.col(v).alias("__qvec")),
+        round_scores,
     )
-    matches = (
-        top.select("__qid", "__rid")
-        .join(cvec, on="__rid")
-        .join(qvec, on="__qid")
-        .withColumn("COSINE", cos)
-        .withColumn("RANK", F.row_number().over(rw).cast("int"))
-        .filter(F.col("RANK") <= k)
-        .select(
-            F.col("__qid").alias(i), F.col("__rid").alias(mid),
-            "COSINE", "RANK",
-        )
+    top = _topk(
+        _hamming_scores(
+            _packed(df, i, v, nw, "__qid", "__qsig"),
+            _signatures(index, odf, oi, ov, nw, "__rid"), "__rid",
+            max_hamming=max_hamming, bands=(nw, nb), exclude_self=True,
+        ),
+        "__rid", k, asc=True, refine=refine, rerank_factor=rerank_factor,
+    )
+    matches = top.select(
+        F.col("__qid").alias(i), F.col("__rid").alias(f"{right_prefix}ID"),
+        F.col("__score").alias("COSINE" if rerank else "HAMMING"), "RANK",
     )
     return df.join(matches, on=i, how="inner")
 
@@ -2044,49 +1957,17 @@ def _r_embedding_join_binary(source, vec_col, id_col, other=None,
     if rerank and rerank_factor < 1:
         raise ParameterException("rerank_factor must be >= 1")
     ov, oi = other_vec or vec_col, other_id or id_col
-    mid = f"{right_prefix}ID"
-    qp = (
-        f"(SELECT {id_col} AS __qid, "
-        f"{_sign_words_sql(vec_col, int(n_words))} AS __qsig FROM {source})"
+    scored = _hamming_sql(
+        _packed_sql(source, id_col, vec_col, n_words, "__qid", "__qsig"),
+        _packed_sql(other, oi, ov, n_words), max_hamming, exclude_self=True,
     )
-    rp = (
-        f"(SELECT {oi} AS __rid, "
-        f"{_sign_words_sql(ov, int(n_words))} AS __sig FROM {other})"
-    )
-    ham = (
-        "aggregate(zip_with(q.__qsig, r.__sig, (a, b) -> "
-        "CAST(bit_count(a ^ b) AS BIGINT)), CAST(0 AS BIGINT), "
-        "(acc, x) -> acc + x)"
-    )
-    kf = int(k) * int(rerank_factor) if rerank else int(k)
-    hstage = (
-        f"SELECT __qid, {mid}, HAMMING, RANK FROM ("
-        f"SELECT __qid, {mid}, HAMMING, CAST(ROW_NUMBER() OVER ("
-        f"PARTITION BY __qid ORDER BY HAMMING ASC, {mid} ASC) AS INT) "
-        f"AS RANK FROM (SELECT q.__qid, r.__rid AS {mid}, {ham} AS HAMMING "
-        f"FROM {qp} q CROSS JOIN {rp} r WHERE q.__qid <> r.__rid) "
-        f"WHERE HAMMING <= {int(max_hamming)}) WHERE RANK <= {kf}"
-    )
-    if not rerank:
-        return (
-            f"SELECT s.*, m.{mid}, m.HAMMING, m.RANK FROM {source} s "
-            f"JOIN ({hstage}) m ON m.__qid = s.{id_col}"
-        )
-    from .dedup import _cosine_sql
-
-    cos = _cosine_sql(f"qv.{vec_col}", f"cv.{ov}")
-    if round_scores is not None:
-        cos = f"ROUND({cos}, {int(round_scores)})"
-    ranked = (
-        f"SELECT __qid, {mid}, COSINE, RANK FROM ("
-        f"SELECT __qid, {mid}, COSINE, CAST(ROW_NUMBER() OVER ("
-        f"PARTITION BY __qid ORDER BY COSINE DESC, {mid} ASC) AS INT) AS "
-        f"RANK FROM (SELECT h.__qid, h.{mid}, {cos} AS COSINE "
-        f"FROM ({hstage}) h JOIN {other} cv ON cv.{oi} = h.{mid} "
-        f"JOIN {source} qv ON qv.{id_col} = h.__qid)) WHERE RANK <= {int(k)}"
-    )
+    refine = None if not rerank else _cosine_refine_sql(
+        other, oi, ov, source, id_col, vec_col, round_scores)
+    ranked = _topk_sql(scored, k, asc=True, refine=refine,
+                       rerank_factor=rerank_factor)
     return (
-        f"SELECT s.*, m.{mid}, m.COSINE, m.RANK FROM {source} s "
+        f"SELECT s.*, m.__mid AS {right_prefix}ID, m.__score AS "
+        f"{'COSINE' if rerank else 'HAMMING'}, m.RANK FROM {source} s "
         f"JOIN ({ranked}) m ON m.__qid = s.{id_col}"
     )
 

@@ -353,6 +353,15 @@ def test_embedding_join_binary_prebuilt_rerank_and_guards(emb, spark):
         left, "embedding", "vec_id", k=3, max_hamming=15, index=idx)
     assert sorted(map(tuple, inline.select(*cols).collect())) == \
         sorted(map(tuple, pre.select(*cols).collect()))
+    # rerank: the prebuilt signatures pick the same survivors, and the
+    # exact cosine reads the vectors of the other= frame beside index=
+    rcols = ["vec_id", "label", "MATCH_ID", "COSINE", "RANK"]
+    rkw = dict(k=3, max_hamming=15, rerank=True, rerank_factor=2)
+    assert sorted(map(tuple, embedding_join_binary(
+        left, "embedding", "vec_id", other=right, **rkw
+    ).select(*rcols).collect())) == sorted(map(tuple, embedding_join_binary(
+        left, "embedding", "vec_id", other=right, index=idx, **rkw
+    ).select(*rcols).collect()))
     assert inline.columns == left.columns + ["MATCH_ID", "HAMMING", "RANK"]
     # rerank returns COSINE and never exceeds k rows per left id
     rr = embedding_join_binary(
@@ -443,79 +452,135 @@ def test_ivfpq_expression_key_join_survives_cache_eviction(emb, op):
     assert len(out.toPandas()) > 0
 
 
-def test_ivfpq_null_query_vectors_have_no_neighbours(emb, spark):
-    """A query row whose vector is NULL has no neighbours: search, join
-    and dedup drop it before probing (the search used to raise TypeError,
-    the join gave it k matches with a NULL COSINE), and the dim guards
-    read the first non-NULL vector — size(NULL) is NULL under ANSI, so a
-    NULL first row used to raise TypeError. The rendered join, whose query
-    relation filters NULL vectors the same way, equals the executed one."""
-    from rasgoql_spark.functions.pq import (
-        _r_embedding_join_ivfpq,
-        similarity_search_ivfpq,
-        update_ivfpq_index,
+def _null_vector_kind(kind):
+    """Per index kind: ``(search, join, render, index, index_runs,
+    update)`` for test_null_vectors_have_no_neighbours. ``index(right)``
+    builds the kind's prebuilt index (None: inline-only), ``index_runs``
+    run a batch against it, ``update`` folds a batch into it."""
+    from rasgoql_spark.functions import pq, similarity as sim
+
+    if kind == "ivfpq":
+        kw = dict(num_centroids=8, nprobe=3, m=8, codebook_size=16,
+                  iterations=0)
+        return (
+            lambda d, ids: pq.similarity_search_ivfpq(
+                d, "embedding", "vec_id", ids, k=5, **kw),
+            lambda d, r: embedding_join_ivfpq(
+                d, "embedding", "vec_id", other=r, k=2, **kw),
+            lambda s, r: pq._r_embedding_join_ivfpq(
+                s, "embedding", "vec_id", other=r, k=2, **kw),
+            lambda r: ivfpq_index(r, "embedding", "vec_id", num_centroids=8,
+                                  m=8, codebook_size=16, iterations=0),
+            (lambda d, i: embedding_join_ivfpq(
+                d, "embedding", "vec_id", k=2, nprobe=3, index=i),
+             lambda d, i: dedup_against_embedding(
+                d, "embedding", "vec_id", index=i, method="ivfpq",
+                threshold=0.3, nprobe=3, mode="pairs")),
+            pq.update_ivfpq_index,
+        )
+    if kind in ("ivf", "ivf-rounded"):
+        kw = dict(num_centroids=8, nprobe=3, rounded=kind == "ivf-rounded")
+        render = None if kind == "ivf" else (
+            lambda s, r: sim._r_embedding_join_ivf(
+                s, "embedding", "vec_id", other=r, k=2, **kw))
+        return (
+            lambda d, ids: sim.similarity_search_ivf(
+                d, "embedding", "vec_id", ids, k=5, **kw),
+            lambda d, r: sim.embedding_join_ivf(
+                d, "embedding", "vec_id", other=r, k=2, **kw),
+            render,
+            None if kind == "ivf-rounded" else (
+                lambda r: ivf_index(r, "embedding", "vec_id",
+                                    num_centroids=8)),
+            (lambda d, i: sim.embedding_join_ivf(
+                d, "embedding", "vec_id", k=2, nprobe=3, index=i),
+             lambda d, i: dedup_against_embedding(
+                d, "embedding", "vec_id", index=i, method="ivf",
+                threshold=0.3, nprobe=3, mode="pairs")),
+            sim.update_ivf_index,
+        )
+    return (
+        lambda d, ids: sim.similarity_search_binary(
+            d, "embedding", "vec_id", ids, k=5),
+        lambda d, r: sim.embedding_join_binary(
+            d, "embedding", "vec_id", other=r, k=2, max_hamming=15),
+        lambda s, r: sim._r_embedding_join_binary(
+            s, "embedding", "vec_id", other=r, k=2, max_hamming=15,
+            n_words=2),
+        lambda r: sim.binary_index(r, "embedding", "vec_id"),
+        (lambda d, i: sim.embedding_join_binary(
+            d, "embedding", "vec_id", k=2, max_hamming=15, index=i),
+         lambda d, i: dedup_against_embedding(
+            d, "embedding", "vec_id", index=i, method="binary",
+            max_hamming=15, mode="pairs")),
+        sim.update_binary_index,
     )
+
+
+@pytest.mark.parametrize("kind", ["ivfpq", "ivf", "ivf-rounded", "binary"])
+def test_null_vectors_have_no_neighbours(emb, spark, kind):
+    """A NULL vector is neither a query nor a candidate, for every index
+    kind: search, join and dedup drop it before probing or scoring (the
+    IVF paths used to give it k matches with a NULL COSINE; binary packed
+    it to the all-negative signature, so it matched at small Hamming
+    distances), and the dim guards read the first non-NULL vector —
+    size(NULL) is NULL under ANSI, so a NULL first row used to raise
+    TypeError. The rendered join, whose relations filter NULL vectors the
+    same way, equals the executed one."""
+    search, join, render, build, index_runs, update = _null_vector_kind(kind)
 
     def null_at(df, ids):
         return df.withColumn("embedding", F.when(
             F.col("vec_id").isin(ids), F.lit(None)
         ).otherwise(F.col("embedding")))
 
-    kw = dict(num_centroids=8, nprobe=3, m=8, codebook_size=16, iterations=0)
     corpus = null_at(emb, [77])
-    both = similarity_search_ivfpq(
-        corpus, "embedding", "vec_id", [0, 77], k=5, **kw)
-    alone = similarity_search_ivfpq(
-        corpus, "embedding", "vec_id", [0], k=5, **kw)
+    both = search(corpus, [0, 77])
+    alone = search(corpus, [0])
     assert sorted(map(tuple, both.collect())) == sorted(
         map(tuple, alone.collect()))
+    if kind != "ivfpq":  # IVF-PQ still encodes a NULL corpus vector
+        assert 77 not in {r[1] for r in search(corpus, [0, 1, 2]).collect()}
 
     left, right = emb.filter("vec_id >= 250"), emb.filter("vec_id < 250")
     nulls = null_at(left, [260, 300])
-    jdf = embedding_join_ivfpq(
-        nulls, "embedding", "vec_id", other=right, k=2, **kw)
-    cols = ["vec_id", "label", "MATCH_ID", "COSINE", "RANK"]
-    got = sorted(map(tuple, jdf.select(*cols).collect()))
+    jdf = join(nulls, right)
+    got = sorted(map(tuple, jdf.collect()))
     assert got and not {r[0] for r in got} & {260, 300}
-    nulls.createOrReplaceTempView("__r10_null_left")
-    right.createOrReplaceTempView("__r10_null_right")
-    jsql = _r_embedding_join_ivfpq(
-        "__r10_null_left", "embedding", "vec_id", other="__r10_null_right",
-        k=2, **kw)
-    assert sorted(map(tuple, spark.sql(jsql).select(*cols).collect())) == got
+    if render is not None:
+        nulls.createOrReplaceTempView("__r10_null_left")
+        right.createOrReplaceTempView("__r10_null_right")
+        rendered = spark.sql(render("__r10_null_left", "__r10_null_right"))
+        assert sorted(map(tuple, rendered.select(*jdf.columns).collect())) \
+            == got
 
-    idx = ivfpq_index(right, "embedding", "vec_id", num_centroids=8, m=8,
-                      codebook_size=16, iterations=0)
     rest = left.filter("vec_id > 250")
     first_null = null_at(left.filter("vec_id = 250"), [250]).unionByName(rest)
+    if build is None:  # the rounded mode is inline-only
+        assert sorted(map(tuple, join(first_null, right).collect())) == \
+            sorted(map(tuple, join(rest, right).collect()))
+        return
+    idx = build(right)
     try:
-        for run in (
-            lambda d: embedding_join_ivfpq(
-                d, "embedding", "vec_id", k=2, nprobe=3, index=idx
-            ).select(*cols),
-            lambda d: dedup_against_embedding(
-                d, "embedding", "vec_id", index=idx, method="ivfpq",
-                threshold=0.3, nprobe=3, mode="pairs"),
-        ):
-            assert sorted(map(tuple, run(first_null).collect())) == sorted(
-                map(tuple, run(rest).collect()))
-        from rasgoql_spark.functions.similarity import (
-            binary_index,
-            update_binary_index,
-            update_ivf_index,
-        )
-
-        ivf = ivf_index(right, "embedding", "vec_id", num_centroids=4)
-        bix = binary_index(right, "embedding", "vec_id")
-        for base, update in ((idx, update_ivfpq_index), (ivf, update_ivf_index),
-                             (bix, update_binary_index)):
-            upd = update(base, first_null, "embedding", "vec_id")
-            assert upd.n_docs == base.n_docs + first_null.count()
-            upd.release()
-        ivf.release()
-        bix.release()
+        for run in index_runs:
+            assert sorted(map(tuple, run(first_null, idx).collect())) == \
+                sorted(map(tuple, run(rest, idx).collect()))
+        upd = update(idx, first_null, "embedding", "vec_id")
+        assert upd.n_docs == idx.n_docs + first_null.count()
+        upd.release()
     finally:
         idx.release()
+    if kind == "binary":
+        # a real all-negative batch vector packs to the all-zero
+        # signature, which a NULL reference vector used to pack to too
+        neg = left.filter("vec_id = 251").withColumn(
+            "embedding", F.transform("embedding", lambda x: -F.abs(x) - 1))
+        ref = null_at(right, [0])
+        kept = dedup_against_embedding(
+            neg, "embedding", "vec_id", reference=ref, method="binary",
+            max_hamming=0, mode="filter")
+        assert [r["vec_id"] for r in kept.collect()] == [251]
+
 
 def test_search_ivfpq_rerank_factor1_membership_and_guards(emb):
     """rerank=True with rerank_factor=1: the survivor set IS the plain ADC

@@ -122,11 +122,48 @@ def test_embedding_join_ivf_index_path_identical(session):
 
 def test_embedding_join_ivf_validation(session):
     from rasgoql_spark.errors import ParameterException
+    from rasgoql_spark.functions.similarity import (
+        dedup_against_embedding,
+        embedding_join_ivf,
+        ivf_index,
+    )
 
     emb = session.dataset("embeddings").df
     with pytest.raises(ParameterException):
         rql.get_transform("embedding_join_ivf").apply(
             emb, vec_col="embedding", id_col="vec_id")  # no other, no index
+    # a batch whose dim differs from the index's is an error, not k
+    # NULL-COSINE matches (join) or a silently kept row (dedup filter)
+    right = emb.filter("vec_id < 400")
+    short = emb.filter("vec_id >= 400").withColumn(
+        "embedding", F.slice("embedding", 1, 4))
+    idx = ivf_index(right, "embedding", "vec_id", num_centroids=8)
+    try:
+        for run in (
+            lambda: embedding_join_ivf(
+                short, "embedding", "vec_id", other=right, num_centroids=8,
+                nprobe=3),
+            lambda: embedding_join_ivf(
+                short, "embedding", "vec_id", other=right, num_centroids=8,
+                nprobe=3, rounded=True),
+            lambda: embedding_join_ivf(
+                short, "embedding", "vec_id", nprobe=3, index=idx),
+        ):
+            with pytest.raises(ParameterException,
+                               match="left vectors have dim 4 but the index "
+                                     "covers dim 64"):
+                run()
+        for mode in ("pairs", "filter"):
+            for kw in ({"reference": right, "num_centroids": 8},
+                       {"index": idx}):
+                with pytest.raises(ParameterException,
+                                   match="batch vectors have dim 4 but the "
+                                         "index covers dim 64"):
+                    dedup_against_embedding(
+                        short, "embedding", "vec_id", method="ivf",
+                        nprobe=3, mode=mode, **kw)
+    finally:
+        idx.release()
 
 
 # ------------------------------------------------- IVF index lifecycle

@@ -593,6 +593,25 @@ def test_binary_n_words_and_dim_guards(emb, spark):
         max_hamming=20, mode="pairs")
     assert sorted(map(tuple, ok.collect())) == sorted(
         map(tuple, same.collect()))
+    # the right side's and binary_quantize's dims come from the first
+    # non-NULL vector: a NULL first row used to raise TypeError
+    from rasgoql_spark.functions.similarity import embedding_join_binary
+
+    ref_rest = ref.filter("vec_id > 0")
+    ref_null_first = ref.filter("vec_id = 0").withColumn(
+        "embedding", F.when(F.lit(False), F.col("embedding"))
+    ).unionByName(ref_rest)
+    for run in (
+        lambda r: embedding_join_binary(
+            batch, "embedding", "vec_id", other=r, k=2, max_hamming=15),
+        lambda r: dedup_against_embedding(
+            batch, "embedding", "vec_id", reference=r, method="binary",
+            max_hamming=20, mode="pairs"),
+    ):
+        assert sorted(map(tuple, run(ref_null_first).collect())) == sorted(
+            map(tuple, run(ref_rest).collect()))
+    packed = binary_quantize(ref_null_first, "embedding", "vec_id")
+    assert packed.filter("vec_id = 0").first()["SIGN_BITS"] is None
     # r10 advice fix: binary_index aggregate-checks dim uniformity at its
     # one-time build (mixed dims would silently skew Hamming distances)
     mixed = ref.union(short.select(*ref.columns))

@@ -679,20 +679,26 @@ def test_similarity_search_ivfpq_residual_renderer_matches_execution(session, sp
     assert via_sql.exceptAll(via_df).count() == 0
 
 
-def test_similarity_search_ivf_rounded_renderer_matches_execution(session, spark):
+def test_similarity_search_ivf_rounded_renderer_matches_execution(
+        session, spark, monkeypatch):
     """Round 9: the opt-in rounded=True replay of the production IVF
-    search (the unrounded default stays render-excluded)."""
+    search (the unrounded default stays render-excluded). The second
+    input executes through the >IVF_LITERAL_CENTROID_MAX one-row
+    broadcast fallback of the shared probe step."""
     import rasgoql_spark as rql
+    import rasgoql_spark.functions.similarity as sim
 
-    chain = session.dataset("embeddings").similarity_search_ivf(
-        vec_col="embedding", id_col="vec_id", query_ids=[0, 1, 2], k=8,
-        num_centroids=8, nprobe=3, rounded=True)
     session.dataset("embeddings").df.createOrReplaceTempView("embeddings")
-    via_sql = spark.sql(chain.sql())
-    via_df = chain.df
-    assert via_sql.columns == via_df.columns
-    assert via_df.exceptAll(via_sql).count() == 0
-    assert via_sql.exceptAll(via_df).count() == 0
+    for literal_max in (256, 2):
+        monkeypatch.setattr(sim, "IVF_LITERAL_CENTROID_MAX", literal_max)
+        chain = session.dataset("embeddings").similarity_search_ivf(
+            vec_col="embedding", id_col="vec_id", query_ids=[0, 1, 2], k=8,
+            num_centroids=8, nprobe=3, rounded=True)
+        via_sql = spark.sql(chain.sql())
+        via_df = chain.df
+        assert via_sql.columns == via_df.columns
+        assert via_df.exceptAll(via_sql).count() == 0
+        assert via_sql.exceptAll(via_df).count() == 0
     # the unrounded default and auto sizing stay principled exclusions
     with pytest.raises(rql.TransformRenderingException):
         session.dataset("embeddings").similarity_search_ivf(
@@ -704,24 +710,29 @@ def test_similarity_search_ivf_rounded_renderer_matches_execution(session, spark
             rounded=True).sql()
 
 
-def test_embedding_join_ivf_rounded_renderer_matches_execution(session, spark):
+def test_embedding_join_ivf_rounded_renderer_matches_execution(
+        session, spark, monkeypatch):
     """Round 9: the rounded=True replay of the ANN join, right side as a
-    chain subquery."""
+    chain subquery; the second input takes the one-row centroid
+    broadcast."""
     import rasgoql_spark as rql
+    import rasgoql_spark.functions.similarity as sim
 
     right = session.dataset("embeddings").filter(
         filter_statements=["vec_id < 250"])
-    chain = session.dataset("embeddings").filter(
-        filter_statements=["vec_id >= 250"]
-    ).embedding_join_ivf(
-        vec_col="embedding", id_col="vec_id", other=right, k=2,
-        num_centroids=8, nprobe=3, rounded=True)
     session.dataset("embeddings").df.createOrReplaceTempView("embeddings")
-    via_sql = spark.sql(chain.sql())
-    via_df = chain.df
-    assert via_sql.columns == via_df.columns
-    assert via_df.exceptAll(via_sql).count() == 0
-    assert via_sql.exceptAll(via_df).count() == 0
+    for literal_max in (256, 2):
+        monkeypatch.setattr(sim, "IVF_LITERAL_CENTROID_MAX", literal_max)
+        chain = session.dataset("embeddings").filter(
+            filter_statements=["vec_id >= 250"]
+        ).embedding_join_ivf(
+            vec_col="embedding", id_col="vec_id", other=right, k=2,
+            num_centroids=8, nprobe=3, rounded=True)
+        via_sql = spark.sql(chain.sql())
+        via_df = chain.df
+        assert via_sql.columns == via_df.columns
+        assert via_df.exceptAll(via_sql).count() == 0
+        assert via_sql.exceptAll(via_df).count() == 0
     with pytest.raises(rql.TransformRenderingException):
         session.dataset("embeddings").embedding_join_ivf(
             vec_col="embedding", id_col="vec_id", other=right, k=2).sql()

@@ -157,9 +157,11 @@ ANNOTATED = [
     ("embedding_join_ivf (round 6)", "embedding_join_ivf",
      "ANN join: per-left-row probe selection is a shuffle-free sort+slice "
      "over the centroid array (literal <= 256 centroids, one-row broadcast "
-     "above); candidates form by an equi-join on CENTROID_ID so per-row "
-     "cost is corpus x nprobe / num_centroids; top-k is one window over "
-     "the candidate set. (Plan shown for the verification-summary query, "
+     "above); candidates form by an equi-join on CENTROID_ID (the shared "
+     "_ivf_scores path of IVF search, join and dedup) so per-row cost is "
+     "corpus x nprobe / num_centroids; top-k is one window over the "
+     "candidate set (the shared _topk step). (Plan shown for the "
+     "verification-summary query, "
      "which adds the exact brute companion join.)"),
     ("similarity_search_ivfpq (round 8)", "similarity_search_ivfpq",
      "IVF-PQ ANN (inline fit shown — the gate query's form): coarse "
@@ -182,7 +184,8 @@ ANNOTATED = [
      "this). The reference side moves zero bytes."),
     ("similarity_search_binary rerank (round 9)", "similarity_search_binary_rerank",
      "Two-stage binary ANN: stage 1 scans 8-byte packed signatures "
-     "(2 xor+bit_count per candidate, broadcast query side), "
+     "(2 xor+bit_count per candidate, broadcast query side — the shared "
+     "_hamming_scores path), "
      "WindowGroupLimit prunes to k x factor before the only window "
      "shuffle; stage 2 joins the tiny survivor frame BACK onto a second "
      "corpus projection by broadcast, so full vectors are read for "
