@@ -1,5 +1,42 @@
 """Deduplication operators (north-star extension; SURVEY §7.2 M7):
-exact, minhash-LSH, simhash, n-gram Jaccard, embedding-cosine.
+exact, minhash-LSH, simhash, n-gram Jaccard and containment,
+embedding-cosine, exact substring.
+
+The near-duplicate pipeline. ``dedup_minhash``, ``minhash_similarity``,
+``dedup_ngram_jaccard``, ``ngram_containment``, ``dedup_simhash``,
+``dedup_embedding``, ``dedup_against(method='minhash')``,
+``minhash_index``/``update_minhash_index`` and ``winnow.dedup_winnow``
+run the same six stages, one shared helper each; the operators differ
+only in the candidate key and the verify score.
+
+1. Front end (``_shingle_sets``, ``minhash_signatures``): a staged,
+   row-local ``(__id, __sh)`` shingle-set projection, plus the minhash
+   vector ``__mh`` for the banded operators.
+2. Exact-duplicate collapse (``_annotate_sets`` over ``_annotate_groups``):
+   one representative per identical shingle set (``_set_fp``), behind a
+   guard that skips the collapse when no group exceeds
+   ``COLLAPSE_MIN_GROUP``. The candidate join runs over representatives
+   only (``_reps``), so exact copies cannot form hot buckets.
+3. Candidate join (``_candidate_pairs``): only slim ``(id, key)`` rows
+   (band key, shingle posting, sign bucket, fingerprint) cross the
+   shuffle; the output is distinct ``(__id_a, __id_b)`` pairs, a self-join
+   kept at ``__id_a < __id_b`` or a cross-corpus join.
+4. Verify (``_attach``): the per-side arrays (``__sh``, ``__mh``, ``__fp``)
+   attach to surviving candidate pairs only, and the exact score is
+   computed there (``_jaccard_pairs`` for set Jaccard).
+5. Expand (``_expand_collapsed``): representative-level pairs go back to
+   member level. Members share their representative's signature, so two
+   docs collide iff their representatives collide and identical sets
+   score exactly 1.0; the collapse never changes the result.
+6. Filter (``_check_mode`` up front, ``_filter_input``, ``_finish``):
+   mode='filter' is the input minus the larger id of every pair. The
+   input is consumed twice (the pipeline and the anti-join's left side),
+   so a mid-chain input is persisted across both unless
+   ``cheap_to_recompute`` says a re-scan is cheaper.
+
+The renderers reproduce the plain (uncollapsed) path with the same
+stages: ``_shingle_sets_sql``, ``_cand_sql``, ``_attach_sql``,
+``_jaccard_sql`` and ``_drop_sql``.
 
 Design for 100 TB:
 - Exact dedup is a fingerprint hash-groupBy — one shuffle on a 128-bit key.
@@ -39,7 +76,7 @@ from ._index import (
     read_params,
     save_artifact,
 )
-from ._hash import MERSENNE, affine_hash, hash_params, md5_int, shingles_expr, tokens_expr
+from ._hash import MERSENNE, md5_int, shingles_expr, tokens_expr
 
 
 @spark_transform("dedup_exact", category="dedup", streaming_ok=False)
@@ -67,21 +104,35 @@ def _r_dedup_exact(source, text, id_col, keep="min") -> str:
     )
 
 
-def _jaccard_terms(frame: DataFrame, a: str = "__sh_a", b: str = "__sh_b"):
-    """Stage ``|A∩B|`` as a real column (``__ji``) and derive
-    ``|A∪B| = |A| + |B| − |A∩B|`` arithmetically — exact because every
-    shingle column here is ``shingles_expr`` output, which is
-    ``array_distinct``'ed (a SET). Saves building the union array per
-    candidate pair in the verification joins (guide §2.3: shuffle/compute
-    fewer bytes); the staged column keeps the intersect evaluated once
-    (it is referenced by both terms — the repo's HOF/CSE staging rule).
-    Returns ``(frame, inter, un)`` with both terms cast to double, so the
-    JACCARD division is bit-identical to the renderers'
-    ``size(array_union(...))`` form."""
+def _jaccard(frame: DataFrame, a: str = "__sh_a", b: str = "__sh_b"):
+    """Exact set Jaccard of two attached shingle sets. Stages ``|A∩B|`` as
+    a real column (``__ji``) and derives ``|A∪B| = |A| + |B| − |A∩B|``
+    arithmetically — exact because every shingle column here is
+    ``shingles_expr`` output, which is ``array_distinct``'ed (a SET). Saves
+    building the union array per candidate pair (guide §2.3: shuffle/compute
+    fewer bytes); the staged column keeps the intersect evaluated once (it
+    is referenced by both terms — the repo's HOF/CSE staging rule). Both
+    terms are cast to double, so the division is bit-identical to the
+    renderers' ``size(array_union(...))`` form (``_jaccard_sql``). Returns
+    ``(frame, jaccard)``; an empty union scores 0.0."""
     frame = frame.withColumn("__ji", F.size(F.array_intersect(a, b)))
     inter = F.col("__ji").cast("double")
     un = (F.size(a) + F.size(b) - F.col("__ji")).cast("double")
-    return frame, inter, un
+    return frame, F.when(un > 0, inter / un).otherwise(F.lit(0.0))
+
+
+def _shingle_sets(df: DataFrame, text: str, id_col: str, shingle_size: int) -> DataFrame:
+    """The front end: ``(__id, __sh)`` distinct word shingles per document.
+
+    STAGED projections, deliberately: a lambda that captures a non-trivial
+    expression re-evaluates it PER ARRAY ELEMENT (no invariant hoisting in
+    Spark's higher-order functions). Each stage binds the previous result
+    to a column referenced >1× downstream, which also stops Catalyst's
+    CollapseProject from re-inlining it. Measured 25× faster than the
+    single-expression form at sf0.1."""
+    t, i = resolve_col(df, text), resolve_col(df, id_col)
+    staged_t = spread(df).select(F.col(i).alias("__id"), tokens_expr(F.col(t)).alias("__t"))
+    return staged_t.select("__id", shingles_expr(F.col("__t"), shingle_size).alias("__sh"))
 
 
 def minhash_signatures(
@@ -100,17 +151,7 @@ def minhash_signatures(
     measured 16× slower at sf0.1. Empty shingle sets get sentinel MERSENNE
     (matches no non-empty doc).
     """
-    t, i = resolve_col(df, text), resolve_col(df, id_col)
-    # STAGED projections, deliberately: a lambda that captures a non-trivial
-    # expression re-evaluates it PER ARRAY ELEMENT (no invariant hoisting in
-    # Spark's higher-order functions). Each stage binds the previous result
-    # to a column referenced >1× downstream, which also stops Catalyst's
-    # CollapseProject from re-inlining it. Measured 25× faster than the
-    # single-expression form at sf0.1.
-    staged_t = spread(df).select(F.col(i).alias("__id"), tokens_expr(F.col(t)).alias("__t"))
-    staged_sh = staged_t.select(
-        "__id", shingles_expr(F.col("__t"), shingle_size).alias("__sh")
-    )
+    staged_sh = _shingle_sets(df, text, id_col, shingle_size)
     # One aggregate pass computes ALL minhashes: fold over the md5-hashed
     # shingle array, zip_with(least) against a running minimum vector — md5
     # runs exactly once per shingle, not once per hash member.
@@ -189,6 +230,167 @@ def _annotate_groups(
     return annotated, True, (annotated,)
 
 
+def _set_fp() -> Column:
+    """Exact fingerprint of the shingle SET ``__sh`` (order-free: sorted
+    before hashing), the group key of every set-keyed collapse and the
+    distinct-set count of ``_capped_postings``."""
+    return F.md5(F.concat_ws("\x1f", F.array_sort("__sh")))
+
+
+def _annotate_sets(sig: DataFrame) -> tuple[DataFrame, bool, tuple]:
+    """``_annotate_groups`` for a shingle-set table: grouped by
+    ``_set_fp``, ``__ne`` = non-empty set. The guard probes a cheap
+    set-functional hash — the minhash vector when ``sig`` carries one
+    (itself an order-free function of the set), else the sorted set."""
+    probe = F.hash("__mh") if "__mh" in sig.columns else F.hash(F.array_sort("__sh"))
+    return _annotate_groups(sig, _set_fp(), F.size("__sh") > 0, probe_key=probe)
+
+
+def _reps(annotated: DataFrame) -> DataFrame:
+    """One row per exact-duplicate group: its representative."""
+    return annotated.filter(F.col("__id") == F.col("__rep"))
+
+
+def _dup_score() -> Column:
+    """Score of a pair inside one exact-duplicate group: 1.0, or 0.0 for
+    the (single) empty group — the empty-set / zero-vector branch of the
+    exact scores."""
+    return F.when(F.col("__ne"), F.lit(1.0)).otherwise(F.lit(0.0))
+
+
+def _side(frame: DataFrame, s: str, *cols: str, keys=()) -> DataFrame:
+    """One side of a candidate pair: ``__id`` as ``__id_{s}`` and each of
+    ``cols`` as ``{col}_{s}``; ``keys`` pass through unrenamed."""
+    return frame.select(
+        F.col("__id").alias(f"__id_{s}"), *keys,
+        *[F.col(c).alias(f"{c}_{s}") for c in cols],
+    )
+
+
+def _candidate_pairs(
+    keyed: DataFrame, key: str, other: DataFrame | None = None, carry=()
+) -> DataFrame:
+    """The candidate join: distinct ``(__id_a, __id_b)`` pairs of keyed
+    rows ``(__id, key)`` that share a key. Alone, ``keyed`` joins itself
+    and keeps ``__id_a < __id_b``; with ``other`` (already in the b-side
+    shape ``(__id_b, key)`` a MinHashIndex stores) it is the cross-corpus
+    join. ``carry`` columns ride the join as ``{col}_a``/``{col}_b`` — they
+    must be functions of the id, so dropping duplicate pairs keeps them
+    exact — which spares a verify attach."""
+    a = _side(keyed, "a", *carry, keys=(key,))
+    b = _side(keyed, "b", *carry, keys=(key,)) if other is None else other
+    pairs = a.join(b, on=key)
+    if other is None:
+        pairs = pairs.filter(F.col("__id_a") < F.col("__id_b"))
+    cols = [f"{c}_{s}" for s in "ab" for c in carry]
+    return pairs.select("__id_a", "__id_b", *cols).dropDuplicates(["__id_a", "__id_b"])
+
+
+def _attach(
+    cand: DataFrame, cols, sides: DataFrame, other: DataFrame | None = None
+) -> DataFrame:
+    """The verify attach: join the per-side arrays ``cols`` of ``sides``
+    (keyed by ``__id``) onto candidate pairs as ``{col}_a`` on ``__id_a``
+    and, from ``other`` (default ``sides``), as ``{col}_b`` on ``__id_b`` —
+    arrays travel only with pairs that survived the slim candidate join."""
+    cand = cand.join(_side(sides, "a", *cols), on="__id_a")
+    return cand.join(_side(sides if other is None else other, "b", *cols), on="__id_b")
+
+
+def _jaccard_pairs(
+    cand: DataFrame, reps: DataFrame, threshold: float,
+    other: DataFrame | None = None, ids=("ID_A", "ID_B"),
+) -> DataFrame:
+    """Verify candidate pairs by exact shingle-set Jaccard: ``(ids...,
+    JACCARD)`` for pairs at or above ``threshold``."""
+    cand, jac = _jaccard(_attach(cand, ("__sh",), reps, other))
+    return (
+        cand.withColumn("JACCARD", jac)
+        .filter(F.col("JACCARD") >= threshold)
+        .select(F.col("__id_a").alias(ids[0]), F.col("__id_b").alias(ids[1]), "JACCARD")
+    )
+
+
+def _bands_long(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """Slim ``(__id, __band)`` table from a minhash signature table: md5 over
+    each band's signature slice, exploded one row per band — the only thing
+    that flows through an LSH candidate-join shuffle."""
+    rpb = num_hashes // bands
+    band_cols = [
+        F.md5(
+            F.concat_ws(
+                ",", F.lit(b), *[F.col("__mh")[b * rpb + r] for r in range(rpb)]
+            )
+        )
+        for b in range(bands)
+    ]
+    return sig.select("__id", F.explode(F.array(*band_cols)).alias("__band"))
+
+
+def _ref_bands(reps: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """A reference corpus's band table in the b-side shape
+    ``(__id_b, __band)`` that ``MinHashIndex`` stores and saves."""
+    return _bands_long(reps, num_hashes, bands).withColumnRenamed("__id", "__id_b")
+
+
+def _check_bands(num_hashes: int, bands, threshold: float | None = None) -> int:
+    """The one banding check: ``bands`` must be a positive int dividing
+    ``num_hashes``. Given the verify ``threshold`` (dedup_minhash only),
+    ``bands='auto'`` first resolves through the ``minhash_tune`` S-curve.
+    Returns the band count."""
+    if threshold is not None and bands == "auto":
+        bands = minhash_tune(threshold, num_hashes)["bands"]
+    if not isinstance(bands, int) or isinstance(bands, bool) or bands < 1:
+        raise ParameterException(
+            "bands must be a positive int" + (" or 'auto'" if threshold is not None else "")
+        )
+    if num_hashes % bands != 0:
+        raise ParameterException("num_hashes must be divisible by bands")
+    return bands
+
+
+def _check_mode(mode: str, modes=("pairs", "filter", "edges")) -> None:
+    """Reject an unknown ``mode`` before the operator persists or runs
+    anything."""
+    if mode not in modes:
+        q = [f"'{m}'" for m in modes]
+        listed = " or ".join(q) if len(q) == 2 else ", ".join(q[:-1]) + ", or " + q[-1]
+        raise ParameterException(f"mode must be {listed}")
+
+
+def _filter_input(df: DataFrame, mode: str) -> tuple[DataFrame, tuple]:
+    """The filter step's front: mode='filter' consumes the INPUT twice —
+    the pipeline and the final anti-join's left side — and the collapse
+    guard is an action, so without a cache a mid-chain input's upstream
+    lineage executes once per consumer (a curation chain would re-run
+    every upstream operator). Persist such an input across both
+    consumers; pairs/edges consume it once. A scan-rooted input skips the
+    persist: re-scanning is cheaper than the cache write
+    (``cheap_to_recompute``). Call after every parameter check. Returns
+    ``(df, caches)``; pass ``caches`` to ``_finish``."""
+    if mode == "filter" and not cheap_to_recompute(df):
+        df = scoped_persist(df)
+        return df, (df,)
+    return df, ()
+
+
+def _finish(
+    df: DataFrame, id_col: str, mode: str, out: DataFrame, *caches: DataFrame,
+    key: str = "ID_B",
+) -> DataFrame:
+    """The filter step's end: mode='filter' returns the input rows minus
+    every ``key`` id of ``out`` (the larger id of each near-dup pair), any
+    other mode ``out`` itself; either way ``caches`` are released with the
+    result."""
+    if mode != "filter":
+        return release_with(out, *caches)
+    i = resolve_col(df, id_col)
+    dupes = out.select(F.col(key).alias(i)).distinct()
+    return release_with(
+        df.join(dupes, on=i, how="left_anti").select(*df.columns), *caches
+    )
+
+
 def _expand_collapsed(
     rep_pairs: DataFrame,
     members: DataFrame,
@@ -199,6 +401,7 @@ def _expand_collapsed(
     has_dups: bool = True,
     require_ne: bool = False,
     live_reps: DataFrame | None = None,
+    swap=None,
 ) -> DataFrame:
     """Expand representative-level LSH pairs back to member level.
 
@@ -222,24 +425,26 @@ def _expand_collapsed(
     rep-level pairs are already member-level and intra-group pairs are
     empty.
 
-    ``members`` is ``(__id, __rep, __ne)`` — one row per input doc with its
-    exact-duplicate group representative (see ``_annotate_groups``). Members
-    share their representative's signature, so two docs collide on a band
-    iff their reps collide — rep-level results are exact.
+    ``members`` is the annotated table (``__id, __rep, __ne`` are read) —
+    one row per input doc with its exact-duplicate group representative
+    (see ``_annotate_groups``). Members share their representative's
+    signature, so two docs collide on a band iff their reps collide —
+    rep-level results are exact.
 
     mode='pairs': full member-level ``(ID_A, ID_B, score)``. Cross-group
     pairs inherit the rep pair's score (identical sets ⇒ identical
     similarity); same-group pairs score ``intra_score`` and pass through the
     ``keep`` predicate. Inherently quadratic inside exact-duplicate groups —
     that is the contract of 'pairs', not an implementation artifact.
+    ``swap`` (asymmetric scores): maps a score to its mirror, applied to a
+    cross-group pair whose id normalization (least, greatest) reverses the
+    representatives' order.
     mode='edges' (and the 'filter' internals): connectivity-preserving
     ``(ID_A, ID_B)`` — rep-level pairs plus ONE star edge per exact copy
     (join-free: just a filter on ``members``), O(n + rep_pairs) rows.
     Connected components (and the dropped-id set ``ID_B``) are identical to
     the full expansion's.
     """
-    if mode not in ("pairs", "edges", "filter"):
-        raise ParameterException("mode must be 'pairs', 'filter', or 'edges'")
     if not has_dups:
         return rep_pairs if mode == "pairs" else rep_pairs.select("ID_A", "ID_B")
     imembers = members.filter(F.col("__ne")) if require_ne else members
@@ -254,13 +459,16 @@ def _expand_collapsed(
         return rep_pairs.select("ID_A", "ID_B").unionByName(star)
     ma = members.select(F.col("__rep").alias("ID_A"), F.col("__id").alias("__xa"))
     mb = members.select(F.col("__rep").alias("ID_B"), F.col("__id").alias("__xb"))
+    score = F.col(score_col)
+    if swap is not None:
+        score = F.when(F.col("__xa") > F.col("__xb"), swap(score)).otherwise(score)
     cross = (
         rep_pairs.join(ma, on="ID_A")
         .join(mb, on="ID_B")
         .select(
             F.least("__xa", "__xb").alias("ID_A"),
             F.greatest("__xa", "__xb").alias("ID_B"),
-            score_col,
+            score.alias(score_col),
         )
     )
     m1 = imembers.select("__rep", "__ne", F.col("__id").alias("__xa"))
@@ -305,11 +513,8 @@ def _capped_postings(
     inv = rep_base.select("__id", F.explode("__sh").alias("__s"))
     if max_doc_freq is None:
         return inv, None
-    if max_doc_freq < 1:
-        raise ParameterException("max_doc_freq must be >= 1 (or None)")
-    fp = F.md5(F.concat_ws("\x1f", F.array_sort("__sh")))
     inv_fp = rep_base.select(
-        fp.alias("__fp"), "__id", F.explode("__sh").alias("__s")
+        _set_fp().alias("__fp"), "__id", F.explode("__sh").alias("__s")
     )
     dfreq = (
         inv_fp.groupBy("__s")
@@ -320,6 +525,11 @@ def _capped_postings(
     capped = inv_fp.join(dfreq, on="__s").select("__id", "__s")
     live = capped.select(F.col("__id").alias("__rep")).distinct()
     return capped, live
+
+
+def _check_doc_freq(max_doc_freq) -> None:
+    if max_doc_freq is not None and max_doc_freq < 1:
+        raise ParameterException("max_doc_freq must be >= 1 (or None)")
 
 
 @spark_transform("dedup_minhash", category="dedup", streaming_ok=False)
@@ -333,11 +543,10 @@ def dedup_minhash(
     threshold: float = 0.5,
     mode: str = "pairs",
 ) -> DataFrame:
-    """MinHash + LSH near-duplicate detection (SURVEY §7.2 M7).
-
-    Pipeline: shingle → 16 minhashes → collapse identical shingle SETS to one
-    representative → 4 bands of 4 → band-bucket equi-join for candidates →
-    exact Jaccard on shingle sets → threshold → expand back to member pairs.
+    """MinHash + LSH near-duplicate detection (SURVEY §7.2 M7): the
+    module's near-dup pipeline with ``num_hashes`` minhashes cut into
+    ``bands`` band keys as the candidate key and exact shingle-set Jaccard
+    as the verify score.
     bands='auto' picks the banding from the S-curve optimizer
     (``minhash_tune(threshold, num_hashes)``) so the LSH knee sits at the
     verification threshold — candidate recall/cost tracks the threshold the
@@ -350,107 +559,24 @@ def dedup_minhash(
 
     Skew note: exact duplicates (20-30% of real web crawls) share identical
     signatures and would collide on EVERY band — a 100k-copy boilerplate page
-    puts ~10^10 candidate pairs in one bucket. The collapse makes the band
-    self-join see each distinct shingle set once, so hot buckets can't form
-    from exact copies. Output is unchanged: members share their rep's bands,
-    so two docs collide iff their reps collide, and identical sets have
-    Jaccard exactly 1.0.
+    puts ~10^10 candidate pairs in one bucket; the collapse makes the band
+    self-join see each distinct shingle set once.
     """
-    if bands == "auto":
-        bands = minhash_tune(threshold, num_hashes)["bands"]
-    if not isinstance(bands, int) or isinstance(bands, bool):
-        raise ParameterException("bands must be an int or 'auto'")
-    if num_hashes % bands != 0:
-        raise ParameterException("num_hashes must be divisible by bands")
-    rows_per_band = num_hashes // bands
-    input_caches: tuple = ()
-    if mode == "filter" and not cheap_to_recompute(df):
-        # filter mode consumes the INPUT twice — the signature pipeline and
-        # the final anti-join's left side — and the collapse guard probe is
-        # an action, so without a cache the full upstream lineage executes
-        # once per downstream action (a curation chain like pipeline_e2e
-        # re-runs every upstream operator a second time). Persist the input
-        # across its two consumers; released with the result (round 14).
-        # pairs/edges modes consume the input once — no cache there. A
-        # scan-rooted input skips the persist: re-scanning is cheaper than
-        # the cache write (cheap_to_recompute, round-14 session 3).
-        df = scoped_persist(df)
-        input_caches = (df,)
-    # persist: the annotated signature table feeds the band join, both sides
-    # of the candidate verification join, AND the member expansion — without
-    # it the whole shingle+minhash pipeline is recomputed per consumer;
-    # released when the result is GC'd. The group key is a 32-byte
-    # set-fingerprint (identical shingle SETS ⇒ same group), so the window
-    # shuffle stays slim.
-    cached_sig, has_dups, caches = _annotate_groups(
-        minhash_signatures(df, text, id_col, num_hashes, shingle_size),
-        F.md5(F.concat_ws("\x1f", F.array_sort("__sh"))),
-        F.size("__sh") > 0,
-        # cheap set-functional probe: the minhash vector is itself an
-        # order-free function of the shingle set
-        probe_key=F.hash("__mh"),
+    bands = _check_bands(num_hashes, bands, threshold)
+    _check_mode(mode)
+    df, inp = _filter_input(df, mode)
+    # persisted inside: the annotated signature table feeds the band join,
+    # both verify sides AND the member expansion; released with the result
+    sig, has_dups, caches = _annotate_sets(
+        minhash_signatures(df, text, id_col, num_hashes, shingle_size)
     )
-    members = cached_sig.select("__id", "__rep", "__ne")
-    rep_sig = cached_sig.filter(F.col("__id") == F.col("__rep"))
-    band_cols = [
-        F.md5(
-            F.concat_ws(
-                ",",
-                F.lit(b),
-                *[F.col("__mh")[b * rows_per_band + r] for r in range(rows_per_band)],
-            )
-        ).alias(f"__band{b}")
-        for b in range(bands)
-    ]
-    rep_sig = rep_sig.select("__id", "__sh", *band_cols)
-    # Candidate generation stays SLIM: only (id, band) flows through the
-    # self-join shuffle — shingle arrays would otherwise be duplicated per
-    # band and per candidate pair, dominating shuffle bytes at scale.
-    shingle_tbl = rep_sig.select("__id", "__sh")
-    bands_long = rep_sig.select(
-        "__id",
-        F.explode(F.array(*[F.col(f"__band{b}") for b in range(bands)])).alias("__band"),
-    )
-    left = bands_long.select(F.col("__id").alias("__id_a"), "__band")
-    right = bands_long.select(F.col("__id").alias("__id_b"), "__band")
-    cand_ids = (
-        left.join(right, on="__band")
-        .filter(F.col("__id_a") < F.col("__id_b"))
-        .select("__id_a", "__id_b")
-        .dropDuplicates(["__id_a", "__id_b"])
-    )
-    # attach shingle sets only for surviving candidate pairs
-    cand = cand_ids.join(
-        shingle_tbl.select(F.col("__id").alias("__id_a"), F.col("__sh").alias("__sh_a")),
-        on="__id_a",
-    ).join(
-        shingle_tbl.select(F.col("__id").alias("__id_b"), F.col("__sh").alias("__sh_b")),
-        on="__id_b",
-    )
-    cand, inter, un = _jaccard_terms(cand)
-    jac = F.when(un > 0, inter / un).otherwise(F.lit(0.0))
-    rep_pairs = (
-        cand.withColumn("JACCARD", jac)
-        .filter(F.col("JACCARD") >= threshold)
-        .select(
-            F.col("__id_a").alias("ID_A"), F.col("__id_b").alias("ID_B"), "JACCARD"
-        )
-    )
-    # identical shingle sets: J = 1.0 exactly; the (single) empty-set group
-    # scores 0.0, matching the un=0 branch of the verification expression
-    intra = F.when(F.col("__ne"), F.lit(1.0)).otherwise(F.lit(0.0))
+    reps = _reps(sig)
+    cand = _candidate_pairs(_bands_long(reps, num_hashes, bands), "__band")
     out = _expand_collapsed(
-        rep_pairs, members, mode, "JACCARD", intra, lambda c: c >= threshold,
-        has_dups=has_dups,
+        _jaccard_pairs(cand, reps, threshold), sig, mode, "JACCARD",
+        _dup_score(), lambda c: c >= threshold, has_dups=has_dups,
     )
-    if mode == "filter":
-        i = resolve_col(df, id_col)
-        dupes = out.select(F.col("ID_B").alias(i)).distinct()
-        return release_with(
-            df.join(dupes, on=i, how="left_anti").select(*df.columns),
-            *caches, *input_caches,
-        )
-    return release_with(out, *caches)
+    return _finish(df, id_col, mode, out, *caches, *inp)
 
 
 @spark_transform("ngram_containment", category="dedup", streaming_ok=False)
@@ -470,50 +596,21 @@ def ngram_containment(
     exactly these (a 100-word doc pasted into a 10k-word page has
     J ≈ 0.01 but containment 1.0), and MinHash-LSH band recall is itself
     governed by Jaccard — so candidates come from the exact inverted
-    shingle index (``dedup_ngram_jaccard``'s machinery: any pair with
-    containment > 0 shares a posting), not from bands.
+    shingle index (any pair with containment > 0 shares a posting), not
+    from bands.
 
     Output ``(ID_A, ID_B, CONT_A_IN_B, CONT_B_IN_A)`` for candidate pairs
     (ID_A < ID_B) where the LARGER direction ≥ ``threshold``; containment
-    of an empty shingle set scores 0.0.
-
-    Scale shape = dedup_ngram_jaccard: exact-duplicate groups collapse to
-    one representative before the posting self-join (guarded by the same
-    max-group pre-count), only slim ``(id, shingle)`` rows cross the
-    candidate shuffle, and exact containment is computed on surviving
-    candidates alone. Exact but shuffle-heavier than sketch methods —
-    same documented trade as dedup_ngram_jaccard (prefer sketches beyond
-    ~10^8 docs). ``max_doc_freq`` caps posting document frequency exactly
-    as in dedup_ngram_jaccard (see ``_capped_postings`` for the recall
-    contract); ``None`` disables the cap.
+    of an empty shingle set scores 0.0. Exact but shuffle-heavier than
+    sketch methods (prefer sketches beyond ~10^8 docs). ``max_doc_freq``
+    caps posting document frequency (see ``_capped_postings`` for the
+    recall contract); ``None`` disables the cap.
     """
-    t, i = resolve_col(df, text), resolve_col(df, id_col)
-    cached_sig, has_dups, caches = _annotate_groups(
-        spread(df)
-        .select(F.col(i).alias("__id"), tokens_expr(F.col(t)).alias("__t"))
-        .select("__id", shingles_expr(F.col("__t"), shingle_size).alias("__sh")),
-        F.md5(F.concat_ws("\x1f", F.array_sort("__sh"))),
-        F.size("__sh") > 0,
-        probe_key=F.hash(F.array_sort("__sh")),
-    )
-    rep_sig = cached_sig.filter(F.col("__id") == F.col("__rep"))
-    inv, live = _capped_postings(rep_sig, max_doc_freq)
-    left = inv.select(F.col("__id").alias("__id_a"), "__s")
-    right = inv.select(F.col("__id").alias("__id_b"), "__s")
-    cand_ids = (
-        left.join(right, on="__s")
-        .filter(F.col("__id_a") < F.col("__id_b"))
-        .select("__id_a", "__id_b")
-        .dropDuplicates(["__id_a", "__id_b"])
-    )
-    shingle_tbl = rep_sig.select("__id", "__sh")
-    cand = cand_ids.join(
-        shingle_tbl.select(F.col("__id").alias("__id_a"), F.col("__sh").alias("__sh_a")),
-        on="__id_a",
-    ).join(
-        shingle_tbl.select(F.col("__id").alias("__id_b"), F.col("__sh").alias("__sh_b")),
-        on="__id_b",
-    )
+    _check_doc_freq(max_doc_freq)
+    sig, has_dups, caches = _annotate_sets(_shingle_sets(df, text, id_col, shingle_size))
+    reps = _reps(sig)
+    inv, live = _capped_postings(reps, max_doc_freq)
+    cand = _attach(_candidate_pairs(inv, "__s"), ("__sh",), reps)
     inter = F.size(F.array_intersect("__sh_a", "__sh_b")).cast("double")
     c_ab = F.when(F.size("__sh_a") > 0, inter / F.size("__sh_a")).otherwise(F.lit(0.0))
     c_ba = F.when(F.size("__sh_b") > 0, inter / F.size("__sh_b")).otherwise(F.lit(0.0))
@@ -523,51 +620,25 @@ def ngram_containment(
         .filter(F.greatest("CONT_A_IN_B", "CONT_B_IN_A") >= threshold)
         .select(
             F.col("__id_a").alias("ID_A"), F.col("__id_b").alias("ID_B"),
-            "CONT_A_IN_B", "CONT_B_IN_A",
+            F.struct(
+                F.col("CONT_A_IN_B").alias("ab"), F.col("CONT_B_IN_A").alias("ba")
+            ).alias("__sc"),
         )
     )
-    if not has_dups:
-        return release_with(rep_pairs, *caches)
-    # expansion back to member level (two score columns, so the shared
-    # _expand_collapsed doesn't apply): cross-group pairs inherit the rep
-    # pair's containments, SWAPPED when id normalization flips which
-    # group holds the smaller member id. Same-group pairs have identical
-    # sets — containment 1.0 both ways — and are emitted only for groups
-    # the plain path could pair: non-empty (an empty set owns no posting,
-    # so empty dups never meet even at threshold <= 0) and, under
-    # max_doc_freq, still owning >= 1 surviving posting.
-    members = cached_sig.select("__id", "__rep", "__ne")
-    ma = members.select(F.col("__rep").alias("ID_A"), F.col("__id").alias("__xa"))
-    mb = members.select(F.col("__rep").alias("ID_B"), F.col("__id").alias("__xb"))
-    flip = F.col("__xa") > F.col("__xb")
-    cross = (
-        rep_pairs.join(ma, on="ID_A")
-        .join(mb, on="ID_B")
-        .select(
-            F.least("__xa", "__xb").alias("ID_A"),
-            F.greatest("__xa", "__xb").alias("ID_B"),
-            F.when(flip, F.col("CONT_B_IN_A")).otherwise(F.col("CONT_A_IN_B")).alias("CONT_A_IN_B"),
-            F.when(flip, F.col("CONT_A_IN_B")).otherwise(F.col("CONT_B_IN_A")).alias("CONT_B_IN_A"),
-        )
+    # identical sets contain each other fully; an empty set owns no
+    # posting, so its copies never pair (require_ne), and under
+    # max_doc_freq only groups still owning a live posting do (live_reps)
+    out = _expand_collapsed(
+        rep_pairs, sig, "pairs", "__sc",
+        F.struct(F.lit(1.0).alias("ab"), F.lit(1.0).alias("ba")),
+        lambda c: F.greatest(c["ab"], c["ba"]) >= threshold,
+        has_dups=has_dups, require_ne=True, live_reps=live,
+        swap=lambda c: F.struct(c["ba"].alias("ab"), c["ab"].alias("ba")),
+    ).select(
+        "ID_A", "ID_B",
+        F.col("__sc.ab").alias("CONT_A_IN_B"), F.col("__sc.ba").alias("CONT_B_IN_A"),
     )
-    imembers = members.filter(F.col("__ne"))
-    if live is not None:
-        imembers = imembers.join(live, on="__rep", how="left_semi")
-    intra_score = F.lit(1.0)
-    m1 = imembers.select("__rep", F.col("__id").alias("__xa"))
-    m2 = imembers.select("__rep", F.col("__id").alias("__xb"))
-    intra = (
-        m1.join(m2, on="__rep")
-        .filter(F.col("__xa") < F.col("__xb"))
-        .withColumn("CONT_A_IN_B", intra_score)
-        .withColumn("CONT_B_IN_A", intra_score)
-        .filter(F.greatest("CONT_A_IN_B", "CONT_B_IN_A") >= threshold)
-        .select(
-            F.col("__xa").alias("ID_A"), F.col("__xb").alias("ID_B"),
-            "CONT_A_IN_B", "CONT_B_IN_A",
-        )
-    )
-    return release_with(cross.unionByName(intra), *caches)
+    return release_with(out, *caches)
 
 
 @spark_transform("near_dup_clusters", category="dedup", streaming_ok=False)
@@ -728,18 +799,19 @@ def dedup_simhash(
     self-join runs over one representative per DISTINCT signature, and
     same-signature pairs (HAMMING = 0 by definition) are expanded afterwards.
     """
+    inp: tuple = ()
+    if mode != "signatures":
+        _check_mode(mode)
+        df, inp = _filter_input(df, mode)
     t, i = resolve_col(df, text), resolve_col(df, id_col)
-    toks = tokens_expr(F.col(t))
     sig = spread(df).select(
         F.col(i).alias("__id"),
-        F.array_distinct(F.transform(toks, md5_int)).alias("__hv"),
+        F.array_distinct(F.transform(tokens_expr(F.col(t)), md5_int)).alias("__hv"),
     ).select("__id", _simhash_over_hashes(F.col("__hv")).alias("SIMHASH"))
     if mode == "signatures":
         return sig.select(F.col("__id").alias(i), "SIMHASH")
-    cached_sig, has_dups, caches = _annotate_groups(sig, F.col("SIMHASH"), F.lit(True))
-    members = cached_sig.select("__id", "__rep", "__ne")
-    rep_sig = cached_sig.filter(F.col("__id") == F.col("__rep"))
-    bands_long = rep_sig.select(
+    sig, has_dups, caches = _annotate_groups(sig, F.col("SIMHASH"), F.lit(True))
+    band_keys = _reps(sig).select(
         "__id",
         "SIMHASH",
         F.explode(
@@ -753,38 +825,85 @@ def dedup_simhash(
             )
         ).alias("__band"),
     )
-    left = bands_long.select(
-        F.col("__id").alias("__id_a"), F.col("SIMHASH").alias("__s_a"), "__band"
-    )
-    right = bands_long.select(
-        F.col("__id").alias("__id_b"), F.col("SIMHASH").alias("__s_b"), "__band"
-    )
-    ham = F.bit_count(F.col("__s_a").bitwiseXOR(F.col("__s_b")))
+    # the 8-byte signatures ride the band join, so verifying needs no attach
+    ham = F.bit_count(F.col("SIMHASH_a").bitwiseXOR(F.col("SIMHASH_b")))
     rep_pairs = (
-        left.join(right, on="__band")
-        .filter(F.col("__id_a") < F.col("__id_b"))
-        .dropDuplicates(["__id_a", "__id_b"])
+        _candidate_pairs(band_keys, "__band", carry=("SIMHASH",))
         .withColumn("HAMMING", ham)
         .filter(F.col("HAMMING") <= hamming_threshold)
         .select(F.col("__id_a").alias("ID_A"), F.col("__id_b").alias("ID_B"), "HAMMING")
     )
     out = _expand_collapsed(
-        rep_pairs, members, mode, "HAMMING",
+        rep_pairs, sig, mode, "HAMMING",
         F.lit(0).cast("integer"), lambda c: c <= hamming_threshold,
         has_dups=has_dups,
     )
-    if mode == "filter":
-        # r7 fix: same fell-through-to-edges bug as dedup_ngram_jaccard
-        dupes = out.select(F.col("ID_B").alias(i)).distinct()
-        return release_with(
-            df.join(dupes, on=i, how="left_anti").select(*df.columns), *caches
-        )
-    return release_with(out, *caches)
+    return _finish(df, id_col, mode, out, *caches, *inp)
 
 
 def _md5_int_spark_sql(x: str = "x") -> str:
     """Spark-SQL rendering of _hash.md5_int."""
     return f"CAST(conv(substr(md5({x}), 1, 8), 16, 10) AS BIGINT)"
+
+
+def _shingle_sets_sql(source, text, id_col, shingle_size) -> str:
+    """SQL twin of ``_shingle_sets``: the staged ``(__id, __sh)`` table."""
+    from .curation import _shingles_spark_sql
+    from .text import _tokens_sql
+
+    return (
+        f"(SELECT __id, {_shingles_spark_sql('__t', shingle_size)} AS __sh "
+        f"FROM (SELECT {id_col} AS __id, {_tokens_sql(text)} AS __t "
+        f"FROM {source}))"
+    )
+
+
+def _cand_sql(keyed: str, key: str) -> str:
+    """SQL twin of ``_candidate_pairs`` (self-join form): distinct
+    ``(__ida, __idb)`` pairs of ``keyed`` rows sharing ``key``."""
+    return (
+        f"(SELECT DISTINCT a.__id AS __ida, b.__id AS __idb FROM {keyed} a "
+        f"JOIN {keyed} b ON a.{key} = b.{key} AND a.__id < b.__id)"
+    )
+
+
+def _attach_sql(cand: str, tbl: str) -> str:
+    """SQL twin of ``_attach``: candidate pairs ``c`` joined to both
+    sides' rows of ``tbl`` as ``sa`` and ``sb``."""
+    return (
+        f"{cand} c JOIN {tbl} sa ON sa.__id = c.__ida "
+        f"JOIN {tbl} sb ON sb.__id = c.__idb"
+    )
+
+
+def _jaccard_sql(a: str = "sa", b: str = "sb") -> str:
+    """SQL twin of ``_jaccard``: exact set Jaccard of ``a.__sh`` and
+    ``b.__sh``, in the ``size(array_union(...))`` form."""
+    un = f"size(array_union({a}.__sh, {b}.__sh))"
+    return (
+        f"CASE WHEN {un} > 0 THEN "
+        f"CAST(size(array_intersect({a}.__sh, {b}.__sh)) AS DOUBLE) / {un} "
+        f"ELSE CAST(0.0 AS DOUBLE) END"
+    )
+
+
+def _jaccard_pairs_sql(tbl: str, cand: str, threshold) -> str:
+    """SQL twin of ``_jaccard_pairs`` over a shingle table and its
+    candidate pairs."""
+    return (
+        f"SELECT __ida AS ID_A, __idb AS ID_B, JACCARD FROM "
+        f"(SELECT c.__ida, c.__idb, {_jaccard_sql()} AS JACCARD FROM "
+        f"{_attach_sql(cand, tbl)}) WHERE JACCARD >= {threshold}"
+    )
+
+
+def _drop_sql(source, id_col, pairs: str, key: str = "ID_B") -> str:
+    """SQL twin of ``_finish``'s filter mode: ``source`` rows minus every
+    ``key`` id of ``pairs``."""
+    return (
+        f"SELECT s.* FROM {source} s LEFT ANTI JOIN "
+        f"(SELECT DISTINCT {key} FROM ({pairs})) d ON s.{id_col} = d.{key}"
+    )
 
 
 def _simhash_spark_sql(hv: str = "__hv", bits: int = 32) -> str:
@@ -840,12 +959,7 @@ def _r_dedup_simhash(
         f"FROM {sig_tbl} a JOIN {sig_tbl} b ON a.__id < b.__id "
         f"WHERE {ham} <= {int(hamming_threshold)}"
     )
-    if mode == "pairs":
-        return pairs
-    return (
-        f"SELECT s.* FROM {source} s LEFT ANTI JOIN "
-        f"(SELECT DISTINCT ID_B FROM ({pairs})) d ON s.{id_col} = d.ID_B"
-    )
+    return pairs if mode == "pairs" else _drop_sql(source, id_col, pairs)
 
 
 def _minhash_sig_spark_sql(sh: str, num_hashes: int) -> str:
@@ -882,31 +996,11 @@ def _r_dedup_minhash(
             "dedup_minhash renders for mode='pairs'/'filter' only "
             "(edges is a multi-stage connectivity artifact)"
         )
-    if bands == "auto":
-        bands = minhash_tune(threshold, num_hashes)["bands"]
-    if not isinstance(bands, int) or isinstance(bands, bool):
-        raise ParameterException("bands must be an int or 'auto'")
     mh_tbl, cand = _banded_minhash_sql(
-        source, text, id_col, num_hashes, bands, shingle_size
+        source, text, id_col, num_hashes, bands, shingle_size, threshold
     )
-    un = "size(array_union(sa.__sh, sb.__sh))"
-    jac = (
-        f"CASE WHEN {un} > 0 THEN "
-        f"CAST(size(array_intersect(sa.__sh, sb.__sh)) AS DOUBLE) / {un} "
-        f"ELSE CAST(0.0 AS DOUBLE) END"
-    )
-    pairs = (
-        f"SELECT __ida AS ID_A, __idb AS ID_B, JACCARD FROM "
-        f"(SELECT c.__ida, c.__idb, {jac} AS JACCARD FROM {cand} c "
-        f"JOIN {mh_tbl} sa ON sa.__id = c.__ida "
-        f"JOIN {mh_tbl} sb ON sb.__id = c.__idb) WHERE JACCARD >= {threshold}"
-    )
-    if mode == "pairs":
-        return pairs
-    return (
-        f"SELECT s.* FROM {source} s LEFT ANTI JOIN "
-        f"(SELECT DISTINCT ID_B FROM ({pairs})) d ON s.{id_col} = d.ID_B"
-    )
+    pairs = _jaccard_pairs_sql(mh_tbl, cand, threshold)
+    return pairs if mode == "pairs" else _drop_sql(source, id_col, pairs)
 
 
 @spark_transform("dedup_ngram_jaccard", category="dedup", streaming_ok=False)
@@ -938,56 +1032,18 @@ def dedup_ngram_jaccard(
     (see ``_capped_postings``); a pair is then missed only if every
     shingle it shares is that common. ``None`` disables the cap (exact,
     unbounded)."""
-    t, i = resolve_col(df, text), resolve_col(df, id_col)
-    base, has_dups, caches = _annotate_groups(
-        spread(df)
-        .select(F.col(i).alias("__id"), tokens_expr(F.col(t)).alias("__t"))
-        .select("__id", shingles_expr(F.col("__t"), shingle_size).alias("__sh")),
-        F.md5(F.concat_ws("\x1f", F.array_sort("__sh"))),
-        F.size("__sh") > 0,
-        probe_key=F.hash(F.array_sort("__sh")),
-    )  # persisted inside; reused by inverted index, verification, expansion
-    # staged projections: see minhash_signatures on per-element re-eval
-    members = base.select("__id", "__rep", "__ne")
-    rep_base = base.filter(F.col("__id") == F.col("__rep"))
-    # slim inverted index: only (id, shingle) shuffles; arrays attach to
-    # surviving candidate pairs afterwards (see dedup_minhash note)
-    inv, live = _capped_postings(rep_base, max_doc_freq)
-    left = inv.select(F.col("__id").alias("__id_a"), "__s")
-    right = inv.select(F.col("__id").alias("__id_b"), "__s")
-    cand_ids = (
-        left.join(right, on="__s")
-        .filter(F.col("__id_a") < F.col("__id_b"))
-        .select("__id_a", "__id_b")
-        .dropDuplicates(["__id_a", "__id_b"])
-    )
-    cand = cand_ids.join(
-        rep_base.select(F.col("__id").alias("__id_a"), F.col("__sh").alias("__sh_a")),
-        on="__id_a",
-    ).join(
-        rep_base.select(F.col("__id").alias("__id_b"), F.col("__sh").alias("__sh_b")),
-        on="__id_b",
-    )
-    cand, inter, un = _jaccard_terms(cand)
-    rep_pairs = (
-        cand.withColumn("JACCARD", F.when(un > 0, inter / un).otherwise(F.lit(0.0)))
-        .filter(F.col("JACCARD") >= threshold)
-        .select(F.col("__id_a").alias("ID_A"), F.col("__id_b").alias("ID_B"), "JACCARD")
-    )
-    intra = F.when(F.col("__ne"), F.lit(1.0)).otherwise(F.lit(0.0))
+    _check_doc_freq(max_doc_freq)
+    _check_mode(mode)
+    df, inp = _filter_input(df, mode)
+    sig, has_dups, caches = _annotate_sets(_shingle_sets(df, text, id_col, shingle_size))
+    reps = _reps(sig)
+    inv, live = _capped_postings(reps, max_doc_freq)
     out = _expand_collapsed(
-        rep_pairs, members, mode, "JACCARD", intra, lambda c: c >= threshold,
+        _jaccard_pairs(_candidate_pairs(inv, "__s"), reps, threshold), sig, mode,
+        "JACCARD", _dup_score(), lambda c: c >= threshold,
         has_dups=has_dups, require_ne=True, live_reps=live,
     )
-    if mode == "filter":
-        # r7 fix: mode='filter' previously fell through and returned the
-        # EDGE LIST instead of the filtered rows (only dedup_minhash had
-        # the anti-join conversion)
-        dupes = out.select(F.col("ID_B").alias(i)).distinct()
-        return release_with(
-            df.join(dupes, on=i, how="left_anti").select(*df.columns), *caches
-        )
-    return release_with(out, *caches)
+    return _finish(df, id_col, mode, out, *caches, *inp)
 
 
 def _inverted_cand_sql(source, text, id_col, shingle_size, max_doc_freq):
@@ -997,14 +1053,7 @@ def _inverted_cand_sql(source, text, id_col, shingle_size, max_doc_freq):
     path — the exact-dup collapse is a result-preserving optimization, and
     the df cap counts DISTINCT shingle sets (COUNT(DISTINCT array_sort)),
     so the rendered SQL reproduces the executed results exactly."""
-    from .curation import _shingles_spark_sql
-    from .text import _tokens_sql
-
-    sh_tbl = (
-        f"(SELECT __id, {_shingles_spark_sql('__t', shingle_size)} AS __sh "
-        f"FROM (SELECT {id_col} AS __id, {_tokens_sql(text)} AS __t "
-        f"FROM {source}))"
-    )
+    sh_tbl = _shingle_sets_sql(source, text, id_col, shingle_size)
     inv0 = f"(SELECT __id, array_sort(__sh) AS __ss, explode(__sh) AS __s FROM {sh_tbl})"
     if max_doc_freq is None:
         inv = f"(SELECT __id, __s FROM {inv0})"
@@ -1016,11 +1065,7 @@ def _inverted_cand_sql(source, text, id_col, shingle_size, max_doc_freq):
         inv = (
             f"(SELECT i.__id, i.__s FROM {inv0} i JOIN {live} l ON i.__s = l.__s)"
         )
-    cand = (
-        f"(SELECT DISTINCT a.__id AS __ida, b.__id AS __idb FROM {inv} a "
-        f"JOIN {inv} b ON a.__s = b.__s AND a.__id < b.__id)"
-    )
-    return sh_tbl, cand
+    return sh_tbl, _cand_sql(inv, "__s")
 
 
 @renderer("dedup_ngram_jaccard")
@@ -1036,24 +1081,8 @@ def _r_dedup_ngram_jaccard(
             "(edges is a multi-stage connectivity artifact)"
         )
     sh_tbl, cand = _inverted_cand_sql(source, text, id_col, shingle_size, max_doc_freq)
-    un = "size(array_union(sa.__sh, sb.__sh))"
-    jac = (
-        f"CASE WHEN {un} > 0 THEN "
-        f"CAST(size(array_intersect(sa.__sh, sb.__sh)) AS DOUBLE) / {un} "
-        f"ELSE CAST(0.0 AS DOUBLE) END"
-    )
-    pairs = (
-        f"SELECT __ida AS ID_A, __idb AS ID_B, JACCARD FROM "
-        f"(SELECT c.__ida, c.__idb, {jac} AS JACCARD FROM {cand} c "
-        f"JOIN {sh_tbl} sa ON sa.__id = c.__ida "
-        f"JOIN {sh_tbl} sb ON sb.__id = c.__idb) WHERE JACCARD >= {threshold}"
-    )
-    if mode == "pairs":
-        return pairs
-    return (
-        f"SELECT s.* FROM {source} s LEFT ANTI JOIN ({pairs}) p "
-        f"ON s.{id_col} = p.ID_B"
-    )
+    pairs = _jaccard_pairs_sql(sh_tbl, cand, threshold)
+    return pairs if mode == "pairs" else _drop_sql(source, id_col, pairs)
 
 
 @renderer("ngram_containment")
@@ -1072,9 +1101,7 @@ def _r_ngram_containment(
     return (
         f"SELECT __ida AS ID_A, __idb AS ID_B, CONT_A_IN_B, CONT_B_IN_A FROM "
         f"(SELECT c.__ida, c.__idb, {cont('sa')} AS CONT_A_IN_B, "
-        f"{cont('sb')} AS CONT_B_IN_A FROM {cand} c "
-        f"JOIN {sh_tbl} sa ON sa.__id = c.__ida "
-        f"JOIN {sh_tbl} sb ON sb.__id = c.__idb) "
+        f"{cont('sb')} AS CONT_B_IN_A FROM {_attach_sql(cand, sh_tbl)}) "
         f"WHERE greatest(CONT_A_IN_B, CONT_B_IN_A) >= {threshold}"
     )
 
@@ -1207,8 +1234,7 @@ def dedup_embedding(
     reproducible across engines/float orderings. Output (ID_A, ID_B, COSINE).
     mode='edges' returns the connectivity-preserving (ID_A, ID_B) form;
     mode='filter' returns the input rows minus any row embedding-duplicate
-    of a smaller id (r7: previously fell through to the edge list — the
-    same bug fixed for dedup_ngram_jaccard/dedup_simhash).
+    of a smaller id.
 
     Skew note: byte-identical vectors (re-crawled pages, default embeddings)
     all land in the same sign bucket; with ``round_scores`` set (the
@@ -1219,17 +1245,21 @@ def dedup_embedding(
     preserve bit-identical output.
     """
     v, i = resolve_col(df, vec_col), resolve_col(df, id_col)
+    if method not in ("lsh", "brute"):
+        raise ParameterException("method must be 'lsh' or 'brute'")
+    _check_mode(mode)
+    collapse = round_scores is not None
+    if not collapse and mode != "pairs":
+        raise ParameterException("mode='edges'/'filter' requires round_scores")
+    df, inp = _filter_input(df, mode)
     base = spread(df).select(F.col(i).alias("__id"), F.col(v).alias("__vec"))
     if method == "lsh":
         sig = F.concat_ws(
             "", *[_hyperplane_sign(F.col("__vec"), j).cast("string") for j in range(num_planes)]
         )
-        base = base.withColumn("__sig", sig)
-    elif method == "brute":
-        base = base.withColumn("__sig", F.lit(1))
     else:
-        raise ParameterException("method must be 'lsh' or 'brute'")
-    collapse = round_scores is not None
+        sig = F.lit(1)
+    base = base.withColumn("__sig", sig)
     if collapse:
         gkey = F.md5(
             F.concat_ws(",", F.transform(F.col("__vec"), lambda x: x.cast("string")))
@@ -1245,10 +1275,10 @@ def dedup_embedding(
         base, has_dups, caches = _annotate_groups(
             base, gkey, nz, probe_key=F.hash("__vec")
         )
-        members = base.select("__id", "__rep", "__ne")
-        pair_src = base.filter(F.col("__id") == F.col("__rep"))
+        pair_src = _reps(base)
     else:
-        pair_src = base
+        pair_src, has_dups, caches = base, False, ()
+    # one sign bucket per vector, so the bucket join emits each pair once
     left = pair_src.select(
         F.col("__id").alias("__id_a"), F.col("__vec").alias("__v_a"), "__sig"
     )
@@ -1265,26 +1295,11 @@ def dedup_embedding(
         .filter(F.col("COSINE") >= threshold)
         .select(F.col("__id_a").alias("ID_A"), F.col("__id_b").alias("ID_B"), "COSINE")
     )
-    if mode not in ("pairs", "edges", "filter"):
-        raise ParameterException("mode must be 'pairs', 'filter', or 'edges'")
-    if not collapse:
-        if mode != "pairs":
-            raise ParameterException(
-                "mode='edges'/'filter' requires round_scores"
-            )
-        return rep_pairs
-    intra = F.when(F.col("__ne"), F.lit(1.0)).otherwise(F.lit(0.0))
     out = _expand_collapsed(
-        rep_pairs, members, mode, "COSINE", intra, lambda c: c >= threshold,
+        rep_pairs, base, mode, "COSINE", _dup_score(), lambda c: c >= threshold,
         has_dups=has_dups,
     )
-    if mode == "filter":
-        # r7 fix: same fell-through-to-edges bug as dedup_ngram_jaccard
-        dupes = out.select(F.col("ID_B").alias(i)).distinct()
-        return release_with(
-            df.join(dupes, on=i, how="left_anti").select(*df.columns), *caches
-        )
-    return release_with(out, *caches)
+    return _finish(df, id_col, mode, out, *caches, *inp)
 
 
 @renderer("dedup_embedding")
@@ -1315,12 +1330,7 @@ def _r_dedup_embedding(
         f"FROM {side} a CROSS JOIN {side} b "
         f"WHERE a.__id < b.__id AND {cos} >= {threshold}"
     )
-    if mode == "pairs":
-        return pairs
-    return (
-        f"SELECT s.* FROM {source} s LEFT ANTI JOIN "
-        f"(SELECT DISTINCT ID_B FROM ({pairs})) d ON s.{id_col} = d.ID_B"
-    )
+    return pairs if mode == "pairs" else _drop_sql(source, id_col, pairs)
 
 
 def _bands_long(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
@@ -1377,8 +1387,7 @@ def dedup_against(
     passed, the reference row count is checked against the count recorded in
     the index at build time, so a stale index can't silently under-dedup.
     """
-    if mode not in ("filter", "pairs"):
-        raise ParameterException("mode must be 'filter' or 'pairs'")
+    _check_mode(mode, ("filter", "pairs"))
     if reference is None and index is None:
         raise ParameterException(
             "dedup_against needs a reference frame or a prebuilt MinHashIndex"
@@ -1425,18 +1434,7 @@ def dedup_against(
         )
         return df.join(matched, on=i, how="left_anti").select(*df.columns)
     if method == "minhash":
-        if num_hashes % bands != 0:
-            raise ParameterException("num_hashes must be divisible by bands")
-        # Exact-duplicate collapse on BOTH corpora (same rationale as the
-        # self-join ops): a boilerplate page with 100k copies in the
-        # ACCEPTED reference corpus would otherwise sit in every band
-        # bucket 100k deep. Band join runs reps × reps; results expand back
-        # exactly because members share their rep's signature.
-        gkey = F.md5(F.concat_ws("\x1f", F.array_sort("__sh")))
-        sig_a, _, caches_a = _annotate_groups(
-            minhash_signatures(df, t, i, num_hashes, shingle_size),
-            gkey, F.size("__sh") > 0, probe_key=F.hash("__mh"),
-        )
+        bands = _check_bands(num_hashes, bands)
         if index is not None:
             # prebuilt reference index (minhash_index): skip the whole
             # reference-side signature/collapse/banding phase — the
@@ -1451,43 +1449,26 @@ def dedup_against(
             # a stale index silently under-dedups. Omit reference entirely
             # (it is unused on the index path) to skip the count.
             check_fresh(index, reference)
-            sig_b, rep_b, bb, caches_b = index.sig, index.reps, index.bands_long, ()
+        df, inp = _filter_input(df, mode)
+        # Exact-duplicate collapse on BOTH corpora: a boilerplate page with
+        # 100k copies in the ACCEPTED reference corpus would otherwise sit
+        # in every band bucket 100k deep.
+        sig_a, _, caches = _annotate_sets(
+            minhash_signatures(df, t, i, num_hashes, shingle_size)
+        )
+        if index is not None:
+            sig_b, rep_b, bb = index.sig, index.reps, index.bands_long
         else:
-            sig_b, _, caches_b = _annotate_groups(
-                minhash_signatures(reference, rt, ri, num_hashes, shingle_size),
-                gkey, F.size("__sh") > 0, probe_key=F.hash("__mh"),
+            sig_b, _, caches_b = _annotate_sets(
+                minhash_signatures(reference, rt, ri, num_hashes, shingle_size)
             )
-            rep_b = sig_b.filter(F.col("__id") == F.col("__rep"))
-            bb = _bands_long(rep_b, num_hashes, bands).select(
-                F.col("__id").alias("__id_b"), "__band"
-            )
-        rep_a = sig_a.filter(F.col("__id") == F.col("__rep"))
-        ba = _bands_long(rep_a, num_hashes, bands).select(
-            F.col("__id").alias("__id_a"), "__band"
-        )
-        cand = (
-            ba.join(bb, on="__band")
-            .select("__id_a", "__id_b")
-            .dropDuplicates(["__id_a", "__id_b"])
-        )
-        cand = cand.join(
-            rep_a.select(F.col("__id").alias("__id_a"), F.col("__sh").alias("__sh_a")),
-            on="__id_a",
-        ).join(
-            rep_b.select(F.col("__id").alias("__id_b"), F.col("__sh").alias("__sh_b")),
-            on="__id_b",
-        )
-        cand, inter, un = _jaccard_terms(cand)
-        jac = F.when(un > 0, inter / un).otherwise(F.lit(0.0))
-        rep_pairs = (
-            cand.withColumn("JACCARD", jac)
-            .filter(F.col("JACCARD") >= threshold)
-            .select(
-                F.col("__id_a").alias("ID"),
-                F.col("__id_b").alias("REF_ID"),
-                "JACCARD",
-            )
-        )
+            rep_b = _reps(sig_b)
+            bb = _ref_bands(rep_b, num_hashes, bands)
+            caches += caches_b
+        caches += inp
+        rep_a = _reps(sig_a)
+        cand = _candidate_pairs(_bands_long(rep_a, num_hashes, bands), "__band", other=bb)
+        rep_pairs = _jaccard_pairs(cand, rep_a, threshold, other=rep_b, ids=("ID", "REF_ID"))
         if mode == "pairs":
             ma = sig_a.select(F.col("__rep").alias("ID"), F.col("__id").alias("__xa"))
             mb = sig_b.select(F.col("__rep").alias("REF_ID"), F.col("__id").alias("__xb"))
@@ -1500,18 +1481,14 @@ def dedup_against(
                     "JACCARD",
                 )
             )
-            return release_with(pairs, *caches_a, *caches_b)
+            return release_with(pairs, *caches)
         # a batch doc matches some reference doc iff its REP matches some
         # reference rep — the dropped set expands join-free off sig_a
         matched = rep_pairs.select(F.col("ID").alias("__rep")).dropDuplicates()
-        dupes = (
-            sig_a.join(matched, on="__rep", how="left_semi")
-            .select(F.col("__id").alias(i))
+        dupes = sig_a.join(matched, on="__rep", how="left_semi").select(
+            F.col("__id").alias("ID")
         )
-        return release_with(
-            df.join(dupes, on=i, how="left_anti").select(*df.columns),
-            *caches_a, *caches_b,
-        )
+        return _finish(df, id_col, mode, dupes, *caches, key="ID")
     raise ParameterException("method must be 'exact' or 'minhash'")
 
 
@@ -1609,83 +1586,30 @@ def minhash_similarity(
     Output: (ID_A, ID_B, EST_JACCARD, JACCARD) for banded candidates with
     ``EST_JACCARD >= min_est``. EST is k/num_hashes (exact binary fraction —
     no rounding needed cross-engine); JACCARD is the exact set ratio.
-
-    Scale: identical pipeline shape as ``dedup_minhash`` — row-local
-    signatures, exact-duplicate collapse before banding (hot-bucket guard),
-    slim (id, band) self-join, per-candidate verification only; member
-    pairs re-expand after (intra-group pairs score est=1.0 by signature
-    identity).
     """
-    if num_hashes % bands != 0:
-        raise ParameterException("num_hashes must be divisible by bands")
-    rows_per_band = num_hashes // bands
-    cached_sig, has_dups, caches = _annotate_groups(
-        minhash_signatures(df, text, id_col, num_hashes, shingle_size),
-        F.md5(F.concat_ws("\x1f", F.array_sort("__sh"))),
-        F.size("__sh") > 0,
-        probe_key=F.hash("__mh"),
+    bands = _check_bands(num_hashes, bands)
+    sig, has_dups, caches = _annotate_sets(
+        minhash_signatures(df, text, id_col, num_hashes, shingle_size)
     )
-    members = cached_sig.select("__id", "__rep", "__ne")
-    rep_sig = cached_sig.filter(F.col("__id") == F.col("__rep"))
-    band_cols = [
-        F.md5(
-            F.concat_ws(
-                ",",
-                F.lit(b),
-                *[F.col("__mh")[b * rows_per_band + r] for r in range(rows_per_band)],
-            )
-        ).alias(f"__band{b}")
-        for b in range(bands)
-    ]
-    rep_sig = rep_sig.select("__id", "__sh", "__mh", *band_cols)
-    sig_tbl = rep_sig.select("__id", "__sh", "__mh")
-    bands_long = rep_sig.select(
-        "__id",
-        F.explode(F.array(*[F.col(f"__band{b}") for b in range(bands)])).alias("__band"),
-    )
-    left = bands_long.select(F.col("__id").alias("__id_a"), "__band")
-    right = bands_long.select(F.col("__id").alias("__id_b"), "__band")
-    cand_ids = (
-        left.join(right, on="__band")
-        .filter(F.col("__id_a") < F.col("__id_b"))
-        .select("__id_a", "__id_b")
-        .dropDuplicates(["__id_a", "__id_b"])
-    )
-    cand = cand_ids.join(
-        sig_tbl.select(
-            F.col("__id").alias("__id_a"),
-            F.col("__sh").alias("__sh_a"),
-            F.col("__mh").alias("__mh_a"),
-        ),
-        on="__id_a",
-    ).join(
-        sig_tbl.select(
-            F.col("__id").alias("__id_b"),
-            F.col("__sh").alias("__sh_b"),
-            F.col("__mh").alias("__mh_b"),
-        ),
-        on="__id_b",
+    reps = _reps(sig)
+    cand = _attach(
+        _candidate_pairs(_bands_long(reps, num_hashes, bands), "__band"),
+        ("__sh", "__mh"), reps,
     )
     agree = F.size(
         F.filter(F.zip_with("__mh_a", "__mh_b", lambda x, y: x == y), lambda b: b)
     )
     est = agree.cast("double") / F.lit(float(num_hashes))
-    cand, inter, un = _jaccard_terms(cand)
-    jac = F.when(un > 0, inter / un).otherwise(F.lit(0.0))
+    cand, jac = _jaccard(cand)
     rep_pairs = cand.select(
         F.col("__id_a").alias("ID_A"),
         F.col("__id_b").alias("ID_B"),
         F.struct(est.alias("e"), jac.alias("j")).alias("__sc"),
     )
-    # intra-group pairs: identical shingle sets => identical signatures =>
-    # est is exactly 1.0; exact J is 1.0 for non-empty sets, 0.0 for the
-    # (single) empty-set group — mirrors dedup_minhash's intra scoring
-    intra = F.when(
-        F.col("__ne"),
-        F.struct(F.lit(1.0).alias("e"), F.lit(1.0).alias("j")),
-    ).otherwise(F.struct(F.lit(1.0).alias("e"), F.lit(0.0).alias("j")))
+    # identical shingle sets have identical signatures: est is exactly 1.0
+    intra = F.struct(F.lit(1.0).alias("e"), _dup_score().alias("j"))
     expanded = _expand_collapsed(
-        rep_pairs, members, "pairs", "__sc", intra,
+        rep_pairs, sig, "pairs", "__sc", intra,
         lambda c: c["e"] >= min_est, has_dups=has_dups,
     )
     out = expanded.filter(F.col("__sc.e") >= min_est).select(
@@ -1698,7 +1622,8 @@ def minhash_similarity(
 
 
 def _banded_minhash_sql(
-    source, text, id_col, num_hashes: int, bands: int, shingle_size: int
+    source, text, id_col, num_hashes: int, bands, shingle_size: int,
+    threshold: float | None = None,
 ) -> tuple:
     """Shared Spark-SQL rendering of the banded-LSH candidate pipeline
     (signature fold -> band md5s -> band equi-join) used by both the
@@ -1708,12 +1633,9 @@ def _banded_minhash_sql(
     each reference in the final statement (cand a/b + both verification
     sides = up to 4x recompute when the rendered SQL is EXECUTED) — the
     DataFrame path persists this intermediate instead; the render is the
-    reference/export artifact, not the scale path."""
-    from .curation import _shingles_spark_sql
-    from .text import _tokens_sql
-
-    if num_hashes % bands != 0:
-        raise ParameterException("num_hashes must be divisible by bands")
+    reference/export artifact, not the scale path. ``threshold`` resolves
+    bands='auto' (dedup_minhash only, see ``_check_bands``)."""
+    bands = _check_bands(num_hashes, bands, threshold)
     rpb = num_hashes // bands
     band_exprs = ", ".join(
         "md5(concat_ws(',', {b}, {hs}))".format(
@@ -1723,16 +1645,10 @@ def _banded_minhash_sql(
     )
     mh_tbl = (
         f"(SELECT __id, __sh, {_minhash_sig_spark_sql('__sh', num_hashes)} AS __mh "
-        f"FROM (SELECT __id, {_shingles_spark_sql('__t', shingle_size)} AS __sh "
-        f"FROM (SELECT {id_col} AS __id, {_tokens_sql(text)} AS __t FROM {source})))"
+        f"FROM {_shingle_sets_sql(source, text, id_col, shingle_size)})"
     )
-    cand = (
-        f"(SELECT DISTINCT a.__id AS __ida, b.__id AS __idb FROM "
-        f"(SELECT __id, explode(array({band_exprs})) AS __band FROM {mh_tbl}) a "
-        f"JOIN (SELECT __id, explode(array({band_exprs})) AS __band FROM {mh_tbl}) b "
-        f"ON a.__band = b.__band AND a.__id < b.__id)"
-    )
-    return mh_tbl, cand
+    bands_long = f"(SELECT __id, explode(array({band_exprs})) AS __band FROM {mh_tbl})"
+    return mh_tbl, _cand_sql(bands_long, "__band")
 
 
 @renderer("minhash_similarity")
@@ -1749,21 +1665,13 @@ def _r_minhash_similarity(
         source, text, id_col, num_hashes, bands, shingle_size
     )
     est = (
-        "CAST(size(filter(zip_with(ma.__mh, mb.__mh, (x, y) -> x = y), "
+        "CAST(size(filter(zip_with(sa.__mh, sb.__mh, (x, y) -> x = y), "
         f"b -> b)) AS DOUBLE) / {float(num_hashes)}"
-    )
-    un = "size(array_union(ma.__sh, mb.__sh))"
-    jac = (
-        f"CASE WHEN {un} > 0 THEN "
-        f"CAST(size(array_intersect(ma.__sh, mb.__sh)) AS DOUBLE) / {un} "
-        f"ELSE CAST(0.0 AS DOUBLE) END"
     )
     return (
         f"SELECT ID_A, ID_B, EST_JACCARD, JACCARD FROM "
         f"(SELECT c.__ida AS ID_A, c.__idb AS ID_B, {est} AS EST_JACCARD, "
-        f"{jac} AS JACCARD FROM {cand} c "
-        f"JOIN {mh_tbl} ma ON ma.__id = c.__ida "
-        f"JOIN {mh_tbl} mb ON mb.__id = c.__idb) "
+        f"{_jaccard_sql()} AS JACCARD FROM {_attach_sql(cand, mh_tbl)}) "
         f"WHERE EST_JACCARD >= {float(min_est)}"
     )
 
@@ -1865,18 +1773,12 @@ def minhash_index(
     the same signature / exact-dup-collapse / banding pipeline
     ``dedup_against(method='minhash')`` runs internally, persisted for
     reuse across batches. Frames stay cached until ``release()``."""
-    if num_hashes % bands != 0:
-        raise ParameterException("num_hashes must be divisible by bands")
-    rt, ri = resolve_col(reference, text), resolve_col(reference, id_col)
-    gkey = F.md5(F.concat_ws("\x1f", F.array_sort("__sh")))
-    sig, _, caches = _annotate_groups(
-        minhash_signatures(reference, rt, ri, num_hashes, shingle_size),
-        gkey, F.size("__sh") > 0, probe_key=F.hash("__mh"),
+    bands = _check_bands(num_hashes, bands)
+    sig, _, caches = _annotate_sets(
+        minhash_signatures(reference, text, id_col, num_hashes, shingle_size)
     )
-    reps = sig.filter(F.col("__id") == F.col("__rep"))
-    bands_long, _ = materialize(_bands_long(reps, num_hashes, bands).select(
-        F.col("__id").alias("__id_b"), "__band"
-    ))
+    reps = _reps(sig)
+    bands_long, _ = materialize(_ref_bands(reps, num_hashes, bands))
     return MinHashIndex(
         sig, reps, bands_long, num_hashes, bands, shingle_size,
         tuple(caches) + (bands_long,),
@@ -1930,17 +1832,12 @@ def update_minhash_index(
     Returns a NEW index; the old one remains usable — ``release()``
     whichever you keep when done (shared frames tolerate double release).
     """
-    rt, ri = resolve_col(new_docs, text), resolve_col(new_docs, id_col)
-    gkey = F.md5(F.concat_ws("\x1f", F.array_sort("__sh")))
-    new_sig, _, new_caches = _annotate_groups(
-        minhash_signatures(new_docs, rt, ri, index.num_hashes,
-                           index.shingle_size),
-        gkey, F.size("__sh") > 0, probe_key=F.hash("__mh"),
+    new_sig, _, new_caches = _annotate_sets(
+        minhash_signatures(new_docs, text, id_col, index.num_hashes,
+                           index.shingle_size)
     )
-    new_reps = new_sig.filter(F.col("__id") == F.col("__rep"))
-    new_bands = _bands_long(new_reps, index.num_hashes, index.bands).select(
-        F.col("__id").alias("__id_b"), "__band"
-    )
+    new_reps = _reps(new_sig)
+    new_bands = _ref_bands(new_reps, index.num_hashes, index.bands)
     # both tables save_minhash_index writes are persisted and materialized
     # here, so saving the update never re-reads the artifact its base was
     # loaded from (the load -> update -> save-to-the-same-path refresh loop)
@@ -1970,7 +1867,7 @@ def load_minhash_index(spark, path: str, persist: bool = True) -> MinHashIndex:
     prm = read_params(spark, path, MinHashIndex)
     sig, bands_long = read_frames(spark, path, ("sig", "bands"), persist)
     return loaded(MinHashIndex(
-        sig, sig.filter(F.col("__id") == F.col("__rep")), bands_long,
+        sig, _reps(sig), bands_long,
         int(prm["num_hashes"]), int(prm["bands"]), int(prm["shingle_size"]),
         (sig, bands_long) if persist else (), n_docs=prm["n_docs"],
     ), path)
@@ -2118,7 +2015,7 @@ def dedup_substring(
     from the surviving normalized tokens, the dedup_spans convention) and
     ``TOKENS_REMOVED``.
 
-    Scale shape = dedup_ngram_jaccard: exact-duplicate documents collapse
+    Scale: exact-duplicate documents collapse
     to one representative before the posting self-join (guarded
     ``_annotate_groups`` — 10^8 identical copies meet as ONE rep, and
     member pairs re-expand afterwards, self-alignments included), only
@@ -2366,10 +2263,7 @@ def _r_dedup_substring(
     if mode == "pairs":
         return pairs
     if mode == "filter":
-        return (
-            f"SELECT s.* FROM {source} s LEFT ANTI JOIN ({pairs}) p "
-            f"ON s.{id_col} = p.ID_B"
-        )
+        return _drop_sql(source, id_col, pairs)
     # mode='clean': merge each later doc's deletion intervals (islands over
     # running max end), then a positional HOF filter rebuilds the text
     iv0 = (
@@ -2946,9 +2840,4 @@ def _r_dedup_against_substring(
         f"CAST(COUNT(1) + {k} - 1 AS BIGINT) AS MATCH_TOKENS "
         f"FROM {runs} GROUP BY __bid, __rid, __diag, __grp"
     )
-    if mode == "pairs":
-        return pairs
-    return (
-        f"SELECT s.* FROM {source} s LEFT ANTI JOIN ({pairs}) p "
-        f"ON s.{id_col} = p.ID"
-    )
+    return pairs if mode == "pairs" else _drop_sql(source, id_col, pairs, key="ID")

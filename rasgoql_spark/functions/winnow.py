@@ -10,8 +10,8 @@ least ``k + w - 1`` tokens contributes a shared fingerprint, while keeping
 the set size ~2/(w+1) of the gram count.
 
 Everything is row-local JVM array expressions (no Python, no shuffle for
-fingerprinting); overlap detection reuses the slim inverted-index pattern of
-``dedup_ngram_jaccard``. All hashes are md5-derived (functions/_hash.py), so
+fingerprinting); overlap detection runs the near-dup pipeline stages of
+``dedup.py`` (candidate join, verify attach, filter step). All hashes are md5-derived (functions/_hash.py), so
 the DuckDB oracles replicate every stage bit-for-bit.
 
 STAGING NOTE (the repo's HOF rule, see minhash_signatures): the token and
@@ -27,7 +27,8 @@ from pyspark.sql import functions as F
 
 from ..operators._util import resolve_col, spread
 from ..registry import renderer, spark_transform
-from ._cache import release_with, scoped_persist
+from ._cache import scoped_persist
+from .dedup import _attach, _candidate_pairs, _check_mode, _filter_input, _finish
 from ._hash import md5_int_sql, tokens_expr
 
 
@@ -170,18 +171,19 @@ def dedup_winnow(
     passages, templated pages with long shared spans) surface even when
     whole-document Jaccard is low — the complement of ``dedup_minhash``.
 
-    Scale: fingerprinting is row-local; candidates come from a slim
-    ``(id, fp_hash)`` inverted-index self-join (never all pairs); only
-    candidate pairs pay the exact intersection. Output
+    Scale: fingerprinting is row-local; the rest is the near-dup
+    pipeline of :mod:`.dedup` with the fingerprint hash as the candidate
+    key (a slim ``(id, fp_hash)`` inverted-index self-join, never all
+    pairs) and only candidate pairs paying the exact intersection. Output
     (ID_A, ID_B, CONTAINMENT); mode='filter' drops the higher id of each
     qualifying pair from the input.
     """
     from ..errors import ParameterException
 
-    if mode not in ("pairs", "filter"):
-        raise ParameterException("mode must be 'pairs' or 'filter'")
+    _check_mode(mode, ("pairs", "filter"))
     if k < 1 or window < 1:
         raise ParameterException("k and window must be >= 1")
+    df, inp = _filter_input(df, mode)
     t, i = resolve_col(df, text), resolve_col(df, id_col)
     base = scoped_persist(
         _with_winnow(
@@ -190,21 +192,7 @@ def dedup_winnow(
         .select("__id", "__fp")
     )
     inv = base.select("__id", F.explode("__fp").alias("__h"))
-    left = inv.select(F.col("__id").alias("__id_a"), "__h")
-    right = inv.select(F.col("__id").alias("__id_b"), "__h")
-    cand = (
-        left.join(right, on="__h")
-        .filter(F.col("__id_a") < F.col("__id_b"))
-        .select("__id_a", "__id_b")
-        .dropDuplicates(["__id_a", "__id_b"])
-    )
-    cand = cand.join(
-        base.select(F.col("__id").alias("__id_a"), F.col("__fp").alias("__fp_a")),
-        on="__id_a",
-    ).join(
-        base.select(F.col("__id").alias("__id_b"), F.col("__fp").alias("__fp_b")),
-        on="__id_b",
-    )
+    cand = _attach(_candidate_pairs(inv, "__h"), ("__fp",), base)
     inter = F.size(F.array_intersect("__fp_a", "__fp_b")).cast("double")
     mn = F.least(F.size("__fp_a"), F.size("__fp_b")).cast("double")
     containment = F.round(F.when(mn > 0, inter / mn).otherwise(F.lit(0.0)), 6)
@@ -217,12 +205,7 @@ def dedup_winnow(
             "CONTAINMENT",
         )
     )
-    if mode == "filter":
-        dupes = pairs.select(F.col("ID_B").alias(i)).distinct()
-        return release_with(
-            df.join(dupes, on=i, how="left_anti").select(*df.columns), base
-        )
-    return release_with(pairs, base)
+    return _finish(df, id_col, mode, pairs, base, *inp)
 
 
 # NOTE (round 8): a dedup_winnow renderer was prototyped and produced

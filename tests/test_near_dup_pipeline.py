@@ -1,0 +1,116 @@
+"""The shared near-duplicate pipeline (functions/dedup.py module docstring):
+parameter checks run before any Spark job or cache, and every operator on
+it returns the same rows whatever the shuffle partitioning."""
+
+import gc
+
+import pytest
+from pyspark.sql import functions as F
+
+import rasgoql_spark as rql
+from rasgoql_spark.errors import ParameterException
+
+
+def _persisted_ids(sc):
+    gc.collect()
+    return {int(k) for k in sc._jsc.getPersistentRDDs().keys()}
+
+
+@pytest.mark.parametrize("transform", [
+    "dedup_minhash", "dedup_simhash", "dedup_ngram_jaccard", "dedup_embedding",
+])
+def test_bad_mode_raises_before_any_job_or_cache(spark, transform):
+    """An unknown mode must be rejected up front: no Spark job runs and no
+    signature table is left persisted (it used to run the collapse guard's
+    jobs first and leak the cache it had pinned)."""
+    sc = spark.sparkContext
+    if transform == "dedup_embedding":
+        df = spark.createDataFrame(
+            [(i, [float(i), 1.0, 0.5]) for i in range(5)], "vec_id long, embedding array<float>")
+        kw = {"vec_col": "embedding", "id_col": "vec_id"}
+    else:
+        df = spark.createDataFrame(
+            [(i, f"alpha beta gamma delta doc{i % 2}") for i in range(5)], ["doc_id", "text"])
+        kw = {"text": "text", "id_col": "doc_id"}
+    before = _persisted_ids(sc)
+    group = f"bad-mode-{transform}"
+    sc.setJobGroup(group, "bad mode must not run jobs")
+    try:
+        with pytest.raises(ParameterException, match="mode must be"):
+            rql.get_transform(transform).apply(df, mode="bogus", **kw)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == []
+    assert _persisted_ids(sc) - before == set()
+
+
+def _docs(spark, session):
+    """The test documents plus planted exact copies (one group above
+    COLLAPSE_MIN_GROUP), near copies and empty texts, so every stage of
+    the pipeline has rows to get wrong."""
+    docs = session.dataset("documents").df.select("doc_id", "text")
+    copies = docs.filter("doc_id < 30").select(
+        (F.col("doc_id") + 100000).alias("doc_id"), "text")
+    near = docs.filter("doc_id < 30").select(
+        (F.col("doc_id") + 200000).alias("doc_id"),
+        F.concat("text", F.lit(" tail words")).alias("text"))
+    hot = spark.range(20).select((F.col("id") + 300000).alias("doc_id")).crossJoin(
+        docs.filter("doc_id = 3").select("text"))
+    empty = spark.createDataFrame([(400001, ""), (400002, "...")], "doc_id long, text string")
+    return docs.unionByName(copies).unionByName(near).unionByName(hot).unionByName(empty)
+
+
+# the planted 20-copy group exceeds COLLAPSE_MIN_GROUP, so every operator
+# takes the collapse path; the plain path is forced for ngram_containment
+# (COLLAPSE_MIN_GROUP 10,000), whose expansion is the one that swaps scores
+_RUNS = [
+    ("dedup_minhash", {"threshold": 0.3, "mode": "pairs"}, None),
+    ("dedup_minhash", {"threshold": 0.3, "mode": "edges"}, None),
+    ("dedup_minhash", {"threshold": 0.3, "mode": "filter"}, None),
+    ("minhash_similarity", {"min_est": 0.25}, None),
+    ("dedup_ngram_jaccard", {"threshold": 0.3, "max_doc_freq": 4}, None),
+    ("ngram_containment", {"threshold": 0.5, "max_doc_freq": 4}, None),
+    ("ngram_containment", {"threshold": 0.5, "max_doc_freq": 4}, 10_000),
+    ("dedup_simhash", {"mode": "pairs"}, None),
+    ("dedup_winnow", {"threshold": 0.5}, None),
+]
+
+
+def test_near_dup_family_is_partition_invariant(spark, session, monkeypatch):
+    """ROADMAP 4(a): the merged operators return identical rows at
+    spark.sql.shuffle.partitions 1, 7 and 32 and with AQE off, on both
+    collapse paths."""
+    import rasgoql_spark.functions.dedup as dd
+
+    df = _docs(spark, session)
+    settings = [
+        {"spark.sql.shuffle.partitions": "1"},
+        {"spark.sql.shuffle.partitions": "7"},
+        {"spark.sql.shuffle.partitions": "32"},
+        {"spark.sql.adaptive.enabled": "false"},
+    ]
+    default_group = dd.COLLAPSE_MIN_GROUP
+
+    def results():
+        out = {}
+        for n, (name, kw, group) in enumerate(_RUNS):
+            monkeypatch.setattr(dd, "COLLAPSE_MIN_GROUP", group or default_group)
+            frame = rql.get_transform(name).apply(df, text="text", id_col="doc_id", **kw)
+            out[n] = sorted(tuple(r) for r in frame.collect())
+        return out
+
+    base = results()
+    assert all(base.values()), [_RUNS[n] for n, v in base.items() if not v]
+    for conf in settings:
+        saved = {k: spark.conf.get(k) for k in conf}
+        try:
+            for k, v in conf.items():
+                spark.conf.set(k, v)
+            got = results()
+        finally:
+            for k, v in saved.items():
+                spark.conf.set(k, v)
+        for n, rows in base.items():
+            assert got[n] == rows, (conf, _RUNS[n])

@@ -35,6 +35,30 @@ def test_bands_auto_resolves_via_minhash_tune(near_dup_docs):
     explicit = _minhash_pairs(near_dup_docs, threshold=0.2, bands=8)
     assert auto == explicit
     assert (1, 2) in auto
+    # one banding check serves every banded entry point: a non-int,
+    # non-positive or non-dividing band count is a parameter error ('auto'
+    # resolves only where the verify threshold tunes it: dedup_minhash)
+    from rasgoql_spark.functions.dedup import (
+        _r_minhash_similarity,
+        dedup_against,
+        minhash_index,
+    )
+
+    sim = rql.get_transform("minhash_similarity").apply
+    kw = {"text": "text", "id_col": "doc_id"}
+    for bad in (0, -4, 5, "auto", 2.0, True):
+        if bad != "auto":
+            with pytest.raises(ParameterException):
+                _minhash_pairs(near_dup_docs, threshold=0.2, bands=bad)
+        with pytest.raises(ParameterException):
+            sim(near_dup_docs, bands=bad, **kw)
+        with pytest.raises(ParameterException):
+            dedup_against(near_dup_docs, reference=near_dup_docs,
+                          method="minhash", bands=bad, **kw)
+        with pytest.raises(ParameterException):
+            minhash_index(near_dup_docs, bands=bad, **kw)
+        with pytest.raises(ParameterException):
+            _r_minhash_similarity("docs", bands=bad, **kw)
 
 
 def test_bands_auto_differs_from_default_banding_at_low_threshold(spark):
