@@ -32,7 +32,8 @@ only in the candidate key and the verify score.
    mode='filter' is the input minus the larger id of every pair. The
    input is consumed twice (the pipeline and the anti-join's left side),
    so a mid-chain input is persisted across both unless
-   ``cheap_to_recompute`` says a re-scan is cheaper.
+   ``cheap_to_recompute`` says a re-scan is cheaper (``_reread_input``;
+   the cluster operators' shared ``_clusters`` applies the same rule).
 
 The renderers reproduce the plain (uncollapsed) path with the same
 stages: ``_shingle_sets_sql``, ``_cand_sql``, ``_attach_sql``,
@@ -358,20 +359,26 @@ def _check_mode(mode: str, modes=("pairs", "filter", "edges")) -> None:
         raise ParameterException(f"mode must be {listed}")
 
 
+def _reread_input(df: DataFrame) -> tuple[DataFrame, tuple]:
+    """Persist an input the operator reads twice with eager jobs in
+    between (the collapse guard, the min-label loop): without a cache a
+    mid-chain input's upstream lineage executes once per read (a curation
+    chain would re-run every upstream operator). A scan-rooted input
+    skips the persist: re-scanning is cheaper than the cache write
+    (``cheap_to_recompute``). Call after every parameter check. Returns
+    ``(df, caches)``; the caller releases ``caches`` with its result."""
+    if cheap_to_recompute(df):
+        return df, ()
+    df = scoped_persist(df)
+    return df, (df,)
+
+
 def _filter_input(df: DataFrame, mode: str) -> tuple[DataFrame, tuple]:
     """The filter step's front: mode='filter' consumes the INPUT twice —
-    the pipeline and the final anti-join's left side — and the collapse
-    guard is an action, so without a cache a mid-chain input's upstream
-    lineage executes once per consumer (a curation chain would re-run
-    every upstream operator). Persist such an input across both
-    consumers; pairs/edges consume it once. A scan-rooted input skips the
-    persist: re-scanning is cheaper than the cache write
-    (``cheap_to_recompute``). Call after every parameter check. Returns
+    the pipeline and the final anti-join's left side — so it goes through
+    ``_reread_input``; pairs/edges consume it once. Returns
     ``(df, caches)``; pass ``caches`` to ``_finish``."""
-    if mode == "filter" and not cheap_to_recompute(df):
-        df = scoped_persist(df)
-        return df, (df,)
-    return df, ()
+    return _reread_input(df) if mode == "filter" else (df, ())
 
 
 def _finish(
@@ -666,24 +673,51 @@ def near_dup_clusters(
     ``connected_components``. Output: ``(id_col, CLUSTER_ID)`` for every
     input row (singletons own themselves).
     """
+    _, out, caches = _clusters(
+        df, text, id_col, method, threshold, max_iterations, **kwargs
+    )
+    return release_with(out, *caches)
+
+
+def _clusters(
+    df: DataFrame,
+    text: str,
+    id_col: str,
+    method: str = "minhash",
+    threshold: float = 0.5,
+    max_iterations: int = 20,
+    **kwargs,
+) -> tuple[DataFrame, DataFrame, tuple]:
+    """``near_dup_clusters``' pipeline, shared by the three operators built
+    on it. Each reads ``df`` again after the clustering's eager jobs (the
+    final join back to the input), so a mid-chain input is persisted once
+    here (``_reread_input``), at the outermost consumer. Returns ``(df,
+    clusters, caches)``: the input to read from, the ``(id_col,
+    CLUSTER_ID)`` frame, and the caches the caller ties to its result with
+    ``release_with``."""
     from .graph import check_max_iterations, min_label_components
 
     check_max_iterations(max_iterations)
     i = resolve_col(df, id_col)
+    if method not in ("minhash", "simhash"):
+        raise ParameterException("method must be 'minhash' or 'simhash'")
+    df, inp = _reread_input(df)
     # 'edges' mode: rep-level pairs + star edges — same connected components
     # as the full pair set at O(n + rep_pairs) rows, where 'pairs' is
     # quadratic inside exact-duplicate groups (a 100k-copy page would emit
     # ~5·10^9 intra-group pairs that all carry the same label information).
     # The pair frame itself is not kept, so its signature caches free before
     # the loop runs; the loop reads only its own edge cache.
-    if method not in ("minhash", "simhash"):
-        raise ParameterException("method must be 'minhash' or 'simhash'")
-    pairs = (
-        dedup_minhash(df, text, id_col, threshold=threshold, mode="edges", **kwargs)
-        if method == "minhash"
-        else dedup_simhash(df, text, id_col, mode="edges", **kwargs)
-    ).select(F.col("ID_A").alias("__src"), F.col("ID_B").alias("__dst"))
-    labels, edges = min_label_components(pairs, max_iterations)
+    try:
+        pairs = (
+            dedup_minhash(df, text, id_col, threshold=threshold, mode="edges", **kwargs)
+            if method == "minhash"
+            else dedup_simhash(df, text, id_col, mode="edges", **kwargs)
+        ).select(F.col("ID_A").alias("__src"), F.col("ID_B").alias("__dst"))
+        labels, edges = min_label_components(pairs, max_iterations)
+    except Exception:
+        release_now(*inp)  # free the input cache when the clustering raises
+        raise
     # CLUSTER_ID stays in the id column's native type: a bigint cast on a
     # string doc-id column would NULL every label and make dedup_by_cluster's
     # (id == CLUSTER_ID) filter drop all rows.
@@ -693,7 +727,7 @@ def near_dup_clusters(
         F.col(i),
         F.coalesce("__lab", F.col(i)).cast(df.schema[i].dataType).alias("CLUSTER_ID"),
     )
-    return release_with(out, edges)
+    return df, out, (edges, *inp)
 
 
 @spark_transform("dedup_by_cluster", category="dedup", streaming_ok=False)
@@ -710,9 +744,9 @@ def dedup_by_cluster(
     dedup guarantee: A~B~C collapses to A even when A and C never pair
     directly. Input rows whose id equals their cluster id survive."""
     i = resolve_col(df, id_col)
-    clusters = near_dup_clusters(df, text, id_col, method, threshold, **kwargs)
+    df, clusters, caches = _clusters(df, text, id_col, method, threshold, **kwargs)
     reps = clusters.filter(F.col(i) == F.col("CLUSTER_ID")).select(i)
-    return df.join(reps, on=i, how="left_semi")
+    return release_with(df.join(reps, on=i, how="left_semi"), *caches)
 
 
 @spark_transform("dedup_soft", category="dedup", streaming_ok=False)
@@ -746,7 +780,7 @@ def dedup_soft(
     if power <= 0:
         raise ParameterException("power must be > 0")
     i = resolve_col(df, id_col)
-    clusters = near_dup_clusters(df, text, id_col, method, threshold, **kwargs)
+    df, clusters, caches = _clusters(df, text, id_col, method, threshold, **kwargs)
     sizes = clusters.groupBy("CLUSTER_ID").agg(
         F.count(F.lit(1)).cast("bigint").alias("DUP_COUNT")
     )
@@ -755,7 +789,7 @@ def dedup_soft(
         F.round(F.pow(F.col("DUP_COUNT").cast("double"), -float(power)),
                 round_to),
     )
-    return df.join(lab, on=i, how="inner")
+    return release_with(df.join(lab, on=i, how="inner"), *caches)
 
 
 def _simhash_over_hashes(hashes: Column, bits: int = 32) -> Column:
@@ -1550,7 +1584,7 @@ def dedup_keep_best(
     (already slim) cluster id."""
     i = resolve_col(df, id_col)
     s = resolve_col(df, score_col)
-    clusters = near_dup_clusters(df, text, id_col, method, threshold, **kwargs)
+    df, clusters, caches = _clusters(df, text, id_col, method, threshold, **kwargs)
     scored = clusters.select(i, "CLUSTER_ID").join(
         df.select(F.col(i), F.col(s).alias("__score")), on=i
     )
@@ -1562,7 +1596,7 @@ def dedup_keep_best(
         .filter("__rn = 1")
         .select(i)
     )
-    return df.join(best, on=i, how="left_semi")
+    return release_with(df.join(best, on=i, how="left_semi"), *caches)
 
 
 @spark_transform("minhash_similarity", category="dedup", streaming_ok=False)

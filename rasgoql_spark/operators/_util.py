@@ -223,31 +223,27 @@ def spread(df: DataFrame) -> DataFrame:
     small input is cheap; big inputs pass through untouched (at 100 TB the
     branch never triggers — scans come pre-split and shuffles stay wide).
 
-    The small/big decision uses Catalyst's size ESTIMATE of the optimized
-    plan, not ``df.rdd.getNumPartitions()`` (round 13): under AQE, ``.rdd``
-    on a mid-chain frame EXECUTES every upstream shuffle stage just to
-    learn the partition count, and those stages then re-execute in the
-    final query (a separate QueryExecution — no exchange reuse across the
-    two). The estimate is free, and the threshold — parallelism x 32 MB —
-    is scale-adaptive: row-local hash/vector work wants every core well
-    below the ~64 MB-per-partition layout that byte-oriented AQE sizing
-    targets, while anything estimated beyond it already has the
-    parallelism. Overestimates (post-filter stats) only skip a repartition
-    AQE sizing then handles; underestimates only add one small shuffle."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
+    The decision runs no Spark job. It reads Catalyst's size ESTIMATE of
+    the optimized plan, which py4j hands back as a Python ``int`` (the
+    ``str`` round trip also accepts a JVM ``BigInt``). It never asks
+    ``.rdd`` for the partition count: under AQE, ``.rdd`` on a mid-chain
+    frame EXECUTES every upstream shuffle stage just to learn that count,
+    and those stages then re-execute in the final query (a separate
+    QueryExecution — no exchange reuse across the two). The
+    threshold — parallelism x 32 MB — is scale-adaptive: row-local
+    hash/vector work wants every core well below the ~64 MB-per-partition
+    layout that byte-oriented AQE sizing targets, while anything estimated
+    beyond it already has the parallelism. An unreadable estimate is
+    treated as small: one repartition is cheap, a job is not.
+    Overestimates (post-filter stats) only skip a repartition AQE sizing
+    then handles; underestimates only add one small shuffle."""
+    target = df.sparkSession.sparkContext.defaultParallelism
     try:
-        est = int(
-            df._jdf.queryExecution().optimizedPlan().stats()
-            .sizeInBytes().toString()
-        )
+        est = int(str(
+            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        ))
     except Exception:
-        est = None
-    if est is None:
-        # estimate unavailable: fall back to the (executing) probe
-        if df.rdd.getNumPartitions() < target:
-            return df.repartition(target)
-        return df
+        est = 0
     if est <= target * 32 * 1024 * 1024:
         return df.repartition(target)
     return df

@@ -71,6 +71,14 @@ def default_spark(
         .config("spark.sql.optimizer.excludedRules",
                 "org.apache.spark.sql.catalyst.optimizer."
                 "InferFiltersFromGenerate")
+        # generated-class cache (static, JVM-wide; default 100 entries): one
+        # curation-chain plus near_dup_clusters pass compiles ~230 distinct
+        # Janino classes, so the default LRU evicts each pass's classes
+        # before the next pass reuses them and every re-run recompiles
+        # ~210 of them on the driver and in tasks (~2.3 s of compile
+        # time). 1000 holds that working set with headroom; warm re-runs
+        # then compile ~20 classes, at ~2 MiB more Metaspace per pass
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))

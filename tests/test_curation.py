@@ -453,3 +453,38 @@ def test_filter_mode_input_cache_is_selective(spark, corpus, eval_set):
     del out_heavy
     gc.collect()
     assert len(_cache._ENTRIES) == n0
+
+
+def test_warm_rerun_reuses_generated_code(session):
+    """A chain rebuilt and re-run against the same engine must not recompile
+    its generated classes: the curation chain plus near_dup_clusters
+    compiles more classes than Spark's default 100-entry codegen cache
+    holds, so without default_spark's larger cache every re-run evicted and
+    recompiled them (~116 compiles on the test documents)."""
+    codegen = session.spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    url = (
+        "SELECT doc_id, text, lang, CASE WHEN doc_id % 4 = 0 THEN "
+        "concat('HTTP://WWW.Site', CAST(doc_id % 97 AS STRING), '.com:80/a/?b=2&a=1#f') "
+        "ELSE concat('https://site', CAST(doc_id AS STRING), '.org/p') END AS url "
+        "FROM {{source_table}}"
+    )
+
+    def run():
+        docs = session.dataset("documents")
+        ev = docs.filter(filter_statements=["doc_id % 50 = 3"])
+        c = docs.apply(sql=url).url_normalize(url="url").dedup_url(url="url", id_col="doc_id")
+        c = c.decontaminate(text="text", id_col="doc_id", eval_table=ev, ngram=5,
+                            threshold=0.5, mode="filter")
+        c = c.quality_filter(text="text", min_tokens=20, max_word_rep_ratio=0.6)
+        c = c.dedup_minhash(text="text", id_col="doc_id", threshold=0.5, mode="filter")
+        en = c.filter(filter_statements=["lang = 'en'"])
+        rest = c.filter(filter_statements=["lang <> 'en'"])
+        mixed = en.mix_datasets(others=[rest], weights=[3, 1], key="doc_id")
+        ndc = docs.filter(filter_statements=["doc_id % 6 = 1"]).near_dup_clusters(
+            text="text", id_col="doc_id", threshold=0.5)
+        return mixed.df.count(), ndc.df.count()
+
+    first = run()
+    before = codegen.METRIC_COMPILATION_TIME().getCount()
+    assert run() == first
+    assert codegen.METRIC_COMPILATION_TIME().getCount() - before <= 10

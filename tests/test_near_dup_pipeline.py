@@ -114,3 +114,33 @@ def test_near_dup_family_is_partition_invariant(spark, session, monkeypatch):
                 spark.conf.set(k, v)
         for n, rows in base.items():
             assert got[n] == rows, (conf, _RUNS[n])
+
+
+@pytest.mark.parametrize("transform, kw", [
+    ("near_dup_clusters", {}),
+    ("dedup_by_cluster", {}),
+    ("dedup_soft", {}),
+    ("dedup_keep_best", {"score_col": "score"}),
+])
+def test_cluster_family_persists_a_mid_chain_input(spark, session, transform, kw):
+    """The cluster operators read their input again after the clustering's
+    eager jobs. A mid-chain input (an aggregate upstream) is persisted once,
+    at the outermost operator, cached while the result is alive and freed
+    with it; the rows equal the scan-rooted run's."""
+    from pyspark import StorageLevel
+
+    from rasgoql_spark.functions import _cache
+
+    docs = session.dataset("documents").df.select(
+        "doc_id", "text", F.length("text").alias("score"))
+    mid = docs.groupBy("doc_id", "text", "score").count().drop("count")
+    op = rql.get_transform(transform)
+    want = sorted(tuple(r) for r in op.apply(
+        docs, text="text", id_col="doc_id", threshold=0.3, **kw).collect())
+    out = op.apply(mid, text="text", id_col="doc_id", threshold=0.3, **kw)
+    assert sorted(tuple(r) for r in out.collect()) == want
+    assert mid.storageLevel != StorageLevel.NONE
+    assert _cache._ENTRIES[mid.semanticHash()][0] == 1
+    del out
+    gc.collect()
+    assert mid.storageLevel == StorageLevel.NONE

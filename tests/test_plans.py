@@ -172,6 +172,33 @@ def test_ivf_assignment_is_shuffle_free(session):
     assert all(e == "RoundRobinPartitioning" for e in exchanges), exchanges
 
 
+def test_spread_decides_without_a_job(spark):
+    """spread() sizes its input from Catalyst's estimate: on a frame with a
+    shuffle upstream it runs no Spark job (an ``.rdd`` partition-count
+    probe would execute the upstream stage under AQE, and the query would
+    then execute it again)."""
+    from rasgoql_spark.operators._util import spread
+
+    sc = spark.sparkContext
+    df = spark.range(10_000).groupBy((F.col("id") % 97).alias("k")).count()
+    group = "spread-without-a-job"
+    sc.setJobGroup(group, "spread must not run jobs")
+    try:
+        spread(df)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == []
+
+
+def test_spread_repartitions_a_small_input(spark):
+    from rasgoql_spark.operators._util import spread
+
+    out = spread(spark.range(100).coalesce(1))
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+
+
 def test_decontaminate_broadcasts_eval_ngrams(session):
     """The eval n-gram inventory must reach the corpus as a broadcast — the
     corpus side never shuffles for the membership join (only the slim
