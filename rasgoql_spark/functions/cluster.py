@@ -1,37 +1,55 @@
-"""Deterministic distributed k-means clustering over embedding columns
-(spherical k-means / Lloyd's algorithm — public technique). Corpus-level
-document clustering is a standard LLM-pipeline step: topic bucketing for
-mixture design, cluster-based quality triage, semantic sharding.
+"""Deterministic Lloyd fits over embedding columns, and the k-means
+operators built on them (spherical k-means and product-quantization
+codebooks — Lloyd's algorithm, public technique). Corpus-level document
+clustering is a standard LLM-pipeline step: topic bucketing for mixture
+design, cluster-based quality triage, semantic sharding.
 
-Determinism contract (what makes an exact cross-engine oracle possible,
-unlike typical randomized k-means):
-- seeds = the unit-normalized vectors of the ``k`` LOWEST ids;
-- every cosine is rounded to ``round_to`` decimals BEFORE the argmax
-  (ties -> lowest centroid id);
-- centroid components are rounded to 9 decimals after normalization and
-  after every Lloyd mean — double-precision summation order differs across
-  engines (and across Spark partitionings), and the rounding absorbs it.
-The whole fit — seed, ``iterations`` Lloyd passes, final assignment — can
-then be replayed bit-for-bit as unrolled ANSI SQL, which is exactly what
-the DuckDB oracle does.
+One loop, three contracts. :func:`lloyd_fit` is the package's only
+executed Lloyd loop: it owns the lowest-id seed collect, the pass (assign,
+``posexplode``, one mean per (book, code, position), one ``collect``,
+re-assembly on the driver), the update rule, and the fusion of several
+independent fits' passes under one union (one collect per pass level).
+Callers hand it :class:`Lloyd` records; a record's fields are the
+contract:
 
-100 TB design (same shape as the IVF index build, similarity.py): vectors
-normalize row-locally; the k centroids are a bounded driver collect
-(k·dim doubles) re-embedded as literals, so every assignment pass is a
-shuffle-free projection — the corpus never joins or explodes for
-assignment. Above ``similarity.IVF_LITERAL_CENTROID_MAX`` (256) centroids
-the literal expression tree would grow linearly with k (semantic_dedup's
-``k="auto"`` mandates k ≈ n/5000 — k≈200,000 at 1B docs), so the shared
-``_attach_centroids`` helper ships the centroid array as a ONE-ROW
-broadcast instead: the corpus still never shuffles (broadcast nested-loop
-against a single row) and plan size stays O(1) in k. Only the Lloyd
-re-average shuffles, and it ships slim (cid, pos, value) triples with
-partial combine. Python never touches row data.
+- **rounded spherical** (``round_to`` set, ``m`` 0 — kmeans_cluster,
+  semantic_dedup, rounded flat IVF, the IVF-PQ coarse quantizer): argmax
+  over ``round_to``-rounded cosines, ties -> lowest centroid id;
+  9-dp-rounded seeds and means, re-normalized; an empty cluster keeps its
+  previous centroid.
+- **PQ codebooks** (``m`` >= 1 — pq_encode, pq_search, IVF-PQ): per
+  subspace, argmin over ``round_to``-rounded squared L2, ties -> lowest
+  code; 9-dp-rounded seeds and means, no re-normalization; an empty code
+  keeps its centroid.
+- **unrounded IVF** (``round_to`` None — build_ivf_index, ivf_index,
+  inline unrounded IVF): raw seeds and means, re-normalized; an empty
+  cluster is dropped.
+
+Seeds are always the vectors of the LOWEST ids. The rounding of the
+rounded contracts absorbs summation-order differences across engines and
+Spark partitionings, so seed, passes and final assignment replay
+bit-for-bit as unrolled ANSI SQL (:func:`_lloyd_sql`, the one SQL twin of
+the loop), which is what the DuckDB oracles do.
+
+100 TB design: vectors normalize row-locally; the k centroids are a
+bounded driver collect (k·dim doubles) re-embedded as literals, so every
+assignment pass is a shuffle-free projection — the corpus never joins or
+explodes for assignment. Above ``similarity.IVF_LITERAL_CENTROID_MAX``
+(256) centroids the literal expression tree would grow linearly with k
+(semantic_dedup's ``k="auto"`` mandates k ≈ n/5000 — k≈200,000 at 1B
+docs), so the shared ``_attach_centroids`` helper ships the centroid array
+as a ONE-ROW broadcast instead: the corpus still never shuffles
+(broadcast nested-loop against a single row) and plan size stays O(1) in
+k. Only the Lloyd re-average shuffles, and it ships slim (book, code,
+pos, value) tuples with partial combine. Python never touches row data.
 
 No counterpart in the reference; cites the public algorithm only.
 """
 
 from __future__ import annotations
+
+from functools import reduce
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -40,6 +58,7 @@ from ..errors import ParameterException
 from ..operators._util import resolve_col, spread
 from ..registry import renderer, spark_transform
 from ._cache import release_with, scoped_persist
+from ._litfast import centroid_array_lit
 from .similarity import _argmax_cid, _attach_centroids
 
 CENT_ROUND = 9  # decimals kept on centroid components (both engines)
@@ -75,13 +94,59 @@ def _unit_rounded(df: DataFrame, vec_col: str, out_col: str = "__u") -> DataFram
     )
 
 
-def _assign_expr(cents, round_to: int, u_col: str = "__u") -> Column:
-    """CLUSTER_ID of the max-cosine centroid over ROUNDED sims; ties ->
-    lowest cid. ``cents`` is either the Python centroid list (embedded as
-    literals) or a Column already holding the array<struct<c, v>> (the
-    >256-centroid one-row broadcast from ``_attach_centroids`` — identical
-    rounded values, identical result)."""
-    return _argmax_cid(cents, u_col, round_to)
+def _unit_corpus(df: DataFrame, v: str, i: str,
+                 rotation: list | None = None) -> DataFrame:
+    """The persisted corpus of every rounded fit: the slim ``(__id, __u)``
+    with ``__u`` the 9-dp unit vector of column ``v`` — pre-rotated by
+    ``rotation`` (IVF-PQ's ``rotate=True``) when given. Nothing downstream
+    reads the raw vector, so it is not cached; callers release the frame
+    with their result."""
+    base = _unit_rounded(
+        spread(df).select(F.col(i).alias("__id"), F.col(v).alias("__vec")), "__vec"
+    )
+    if rotation is not None:
+        from .pq import _rotate_expr
+
+        base = base.withColumn("__u", _rotate_expr("__u", rotation))
+    return scoped_persist(base.select("__id", "__u"))
+
+
+def _sq_dist(a: Column, b) -> Column:
+    """Sequential-fold squared L2 — same evaluation order both engines."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _code_expr(sub_col: str, codebook: list, round_to: int) -> Column:
+    """argmin code over ROUNDED squared distances; ties -> lowest code."""
+    # one F.expr call, not codes·dim py4j F.lit round trips — see _litfast
+    cents = centroid_array_lit(codebook, id_type="int")
+    dists = F.transform(
+        cents,
+        lambda ce: F.struct(
+            F.round(_sq_dist(F.col(sub_col), ce["v"]), round_to).alias("d"),
+            ce["c"].alias("c"),
+        ),
+    )
+    return F.array_min(dists)["c"]
+
+
+def _codes(books: list, round_to: int) -> Column:
+    """``array<int>`` of the per-subspace PQ codes over the ``__s{s}``
+    columns of :func:`_stage_subvectors`."""
+    return F.array(*[_code_expr(f"__s{s}", b, round_to) for s, b in enumerate(books)])
+
+
+def _stage_subvectors(df: DataFrame, m: int, d_sub: int, u_col: str = "__u") -> DataFrame:
+    """Materialize each subspace slice behind a projection boundary (HOF
+    staging rule): the argmin lambda evaluates its input once per codebook
+    entry, so it must reference a plain column, not the slice expression."""
+    return df.withColumns(
+        {f"__s{s}": F.slice(F.col(u_col), s * d_sub + 1, d_sub) for s in range(m)}
+    )
 
 
 def _renorm_py(vec: list) -> list:
@@ -89,46 +154,140 @@ def _renorm_py(vec: list) -> list:
     return [round(x / s, CENT_ROUND) for x in vec] if s > 0 else list(vec)
 
 
-def _fit_kmeans(cached: DataFrame, k: int, iterations: int, round_to: int,
-                seed_rows: list | None = None) -> list:
-    """Deterministic spherical-kmeans fit over a persisted ``(__id, __u)``
-    frame (``_unit_rounded`` output): lowest-id seeds, per-pass argmax over
-    ``round_to``-rounded cosines (ties -> lowest cid), 9-dp-rounded
-    re-normalized means, empty clusters keep their previous centroid.
-    Returns the ``[(cid, [components])]`` list: the one definition of the
-    rounded determinism contract the DuckDB replay oracles rely on. Each
-    Lloyd pass is one slim (cid, pos, value)
-    aggregation with a bounded k·dim collect — the corpus never shuffles.
+def _norm_py(vec: list) -> list:
+    s = sum(x * x for x in vec) ** 0.5
+    return [x / s for x in vec] if s > 0 else [0.0 for _ in vec]
 
-    ``seed_rows`` (round 13): pre-collected lowest-``__id``-first rows with
-    a ``__u`` field (at least ``k`` of them when the corpus has ``k``
-    rows) — callers that already paid a seeds collect (e.g. the fused
-    IVF-PQ build, which shares ONE TakeOrdered job between the coarse and
-    codebook seeds) pass it to skip this function's own job. Values are
-    identical: the slice below takes the same lowest-id ``__u`` doubles
-    the internal collect would return."""
-    seeds = (
-        seed_rows[:k] if seed_rows is not None
-        else cached.orderBy("__id").limit(k).select("__u").collect()
-    )
-    cents = [(j, [round(float(x), CENT_ROUND) for x in r["__u"]]) for j, r in enumerate(seeds)]
-    for _ in range(iterations):
-        abase, carr, _adrop = _attach_centroids(cached, cents)
-        assigned = abase.withColumn("__cid", _assign_expr(carr, round_to))
-        rows = (
-            assigned.select("__cid", F.posexplode("__u").alias("__pos", "__v"))
-            .groupBy("__cid", "__pos")
-            .agg(F.round(F.avg("__v"), CENT_ROUND).alias("__m"))
-            .collect()
+
+class Lloyd(NamedTuple):
+    """One Lloyd recurrence handed to :func:`lloyd_fit`, its contract as
+    data (see the module docstring): ``k`` lowest-id seeds from column
+    ``vec`` of the persisted ``frame`` and ``iterations`` passes over it.
+    ``round_to`` None is the unrounded IVF contract; ``m`` >= 1 trains
+    ``m`` PQ codebooks over ``d_sub``-wide slices instead of one set of
+    spherical centroids."""
+
+    frame: DataFrame
+    k: int
+    iterations: int
+    round_to: int | None = None
+    m: int = 0
+    d_sub: int = 0
+    vec: str = "__u"
+
+
+def _seed_rows(frame: DataFrame, n: int, vec: str = "__u") -> list:
+    """The one lowest-id seed collect: column ``vec`` of the ``n``
+    lowest-``__id`` rows of ``frame`` — one TakeOrdered job."""
+    return frame.orderBy("__id").limit(n).select(vec).collect()
+
+
+def _seed_books(fit: Lloyd, rows: list) -> list:
+    """The fit's initial books from lowest-id-first seed rows."""
+    vecs = [r[fit.vec] for r in rows[:fit.k]]
+    if fit.round_to is None:
+        return [[(c, list(v)) for c, v in enumerate(vecs)]]
+    vecs = [[round(float(x), CENT_ROUND) for x in v] for v in vecs]
+    if not fit.m:
+        return [list(enumerate(vecs))]
+    d = fit.d_sub
+    return [[(c, v[s * d:(s + 1) * d]) for c, v in enumerate(vecs)]
+            for s in range(fit.m)]
+
+
+def _pass(fit: Lloyd, books: list, off: int) -> DataFrame:
+    """One Lloyd pass of ``fit`` as a slim aggregation: every row assigned
+    against the current ``books``, then ``(__b, __c, __pos, __m)`` — the
+    mean of position ``__pos`` over the rows of code ``__c`` in book
+    ``__b`` (numbered from ``off``, so fused fits never share a key). The
+    means collect as books·codes·dim rows (bounded) and re-assemble on the
+    driver, which skips a second shuffle round."""
+    if fit.m:
+        d = fit.d_sub
+        sub = F.transform(
+            F.sequence(F.lit(0), F.lit(fit.m - 1)),
+            lambda s: F.struct(
+                (s + off).alias("__b"),
+                F.element_at("__codes", s + 1).cast("bigint").alias("__c"),
+                F.slice("__u", s * d + 1, d).alias("__v"),
+            ),
         )
-        acc: dict = {}
-        for r in rows:
-            acc.setdefault(r["__cid"], {})[r["__pos"]] = r["__m"]
-        cents = [
-            (cid, _renorm_py([acc[cid][p] for p in range(len(acc[cid]))]) if cid in acc else old)
-            for cid, old in cents
-        ]
-    return cents
+        keyed = (
+            _stage_subvectors(fit.frame, fit.m, d)
+            .withColumn("__codes", _codes(books, fit.round_to))
+            .select(F.explode(sub).alias("__x")).select("__x.*")
+        )
+    else:
+        base, carr, _drop = _attach_centroids(fit.frame, books[0])
+        keyed = base.select(
+            F.lit(off).alias("__b"),
+            _argmax_cid(carr, fit.vec, fit.round_to).alias("__c"),
+            F.col(fit.vec).alias("__v"),
+        )
+    mean = F.avg("__x")
+    if fit.round_to is not None:
+        mean = F.round(mean, CENT_ROUND)
+    return (
+        keyed.select("__b", "__c", F.posexplode("__v").alias("__pos", "__x"))
+        .groupBy("__b", "__c", "__pos")
+        .agg(mean.alias("__m"))
+    )
+
+
+def _update(fit: Lloyd, book: list, means: dict) -> list:
+    """The fit's update rule over one book, given the pass means
+    ``{code: {pos: mean}}`` of that book."""
+    out = []
+    for c, old in book:
+        d = means.get(c)
+        if d is None:
+            # rounded contracts keep an empty cluster's centroid; the
+            # unrounded IVF fit drops it
+            if fit.round_to is not None:
+                out.append((c, old))
+            continue
+        vec = [d[p] for p in range(len(d))]
+        if not fit.m:
+            vec = _renorm_py(vec) if fit.round_to is not None else _norm_py(vec)
+        out.append((c, vec))
+    return out
+
+
+def lloyd_fit(*fits: Lloyd, seed_rows: list | None = None) -> list:
+    """Run every fit in ``fits`` to its ``iterations`` and return each
+    one's result: the ``[(cid, vector)]`` centroid list of a spherical fit,
+    the ``m`` ``[(code, vector)]`` codebooks of a PQ fit.
+
+    Seeds come from ONE lowest-id collect over the first fit's frame
+    (:func:`_seed_rows`), unless the caller passes ``seed_rows`` it
+    already collected — lowest-id-first rows holding each fit's ``vec``
+    column, at least ``k`` of them when the corpus has ``k`` rows. The
+    IVF-PQ build does, since the same collect is its dimension probe and
+    cache fill.
+
+    Independent fits run pass-fused: pass level j unions the slim
+    aggregation of every fit that still has a pass j, and ONE ``collect``
+    returns them all — max(iterations) collects instead of their sum (plan-level
+    fusion rather than driver threads, which were measured slower on a
+    shared core pool). Each branch aggregates by its own keys before the
+    union, so every rounded mean is the value the fit alone produces."""
+    if seed_rows is None:
+        seed_rows = _seed_rows(fits[0].frame, max(f.k for f in fits), fits[0].vec)
+    books, offs = [], []
+    for f in fits:
+        offs.append(len(books))
+        books += _seed_books(f, seed_rows)
+    for j in range(max(f.iterations for f in fits)):
+        live = [(f, o, o + max(f.m, 1)) for f, o in zip(fits, offs) if j < f.iterations]
+        fused = reduce(DataFrame.unionByName,
+                       [_pass(f, books[lo:hi], lo) for f, lo, hi in live])
+        means: dict = {}
+        for r in fused.collect():
+            means.setdefault(r["__b"], {}).setdefault(r["__c"], {})[r["__pos"]] = r["__m"]
+        for f, lo, hi in live:
+            for b in range(lo, hi):
+                books[b] = _update(f, books[b], means.get(b, {}))
+    return [books[o:o + f.m] if f.m else books[o] for f, o in zip(fits, offs)]
 
 
 @spark_transform("kmeans_cluster", category="similarity", streaming_ok=False)
@@ -149,13 +308,11 @@ def kmeans_cluster(
     if iterations < 0:
         raise ParameterException("iterations must be >= 0")
     v, i = resolve_col(df, vec_col), resolve_col(df, id_col)
-    cached = scoped_persist(_unit_rounded(
-        spread(df).select(F.col(i).alias("__id"), F.col(v).alias("__vec")), "__vec"
-    ))
-    cents = _fit_kmeans(cached, k, iterations, round_to)
+    cached = _unit_corpus(df, v, i)
+    (cents,) = lloyd_fit(Lloyd(cached, k, iterations, round_to))
     fbase, fcarr, _fdrop = _attach_centroids(cached, cents)
-    out_assign = fbase.withColumn("CLUSTER_ID", _assign_expr(fcarr, round_to)).select(
-        F.col("__id").alias(i), "CLUSTER_ID"
+    out_assign = fbase.select(
+        F.col("__id").alias(i), _argmax_cid(fcarr, "__u", round_to).alias("CLUSTER_ID")
     )
     return release_with(
         df.join(out_assign, on=i, how="inner").select(*df.columns, "CLUSTER_ID"),
@@ -201,15 +358,12 @@ def _norm_sql(arr: str) -> str:
 
 @renderer("kmeans_cluster")
 def _r_kmeans_cluster(source, vec_col, id_col, k=8, iterations=1, round_to=6) -> str:
-    """Unrolled Lloyd replay in Spark SQL (the pq/pagerank oracle technique
-    applied to the renderer side): lowest-id seeds, per-iteration argmax
-    assignment over ``round_to``-rounded cosines (ties -> lowest cid),
-    9-dp-rounded re-normalized means, empty clusters keep their previous
-    centroid, final assignment joined back onto the source rows. The
-    DataFrame path collects the per-iteration means to the driver and
-    embeds them as literals; the rendered SQL computes them in-flight —
-    equality holds because assignments compare ROUNDED sims (the same
-    argmin-robustness contract the DuckDB oracle relies on). The
+    """Unrolled replay of the rounded spherical fit in Spark SQL
+    (:func:`_lloyd_sql`), then the final assignment joined back onto the
+    source rows. The DataFrame path collects the per-iteration means to
+    the driver and embeds them as literals; the rendered SQL computes them
+    in-flight — equality holds because assignments compare ROUNDED sims
+    (the same argmin-robustness contract the DuckDB oracle relies on). The
     normalized-input subquery inlines at each reference (seeds + per-
     iteration assign/mean + final assign) — executed-SQL recompute the
     DataFrame path avoids by persisting; the render is an export artifact."""
@@ -223,18 +377,74 @@ def _r_kmeans_cluster(source, vec_col, id_col, k=8, iterations=1, round_to=6) ->
     )
 
 
+def _mean_sql(exploded: str, key: str = "", out: str = "mv") -> str:
+    """SQL twin of the pass mean: over ``exploded`` rows ``([key,] pos,
+    val)``, the 9-dp-rounded mean of each position re-assembled in
+    position order as array ``out`` (one row per ``key``, or one row)."""
+    k, g = (f"{key}, ", f" GROUP BY {key}") if key else ("", "")
+    return (
+        f"SELECT {k}transform(array_sort(collect_list(struct(pos, m))), "
+        f"e -> e.m) AS {out} FROM (SELECT {k}pos, round(avg(val), {CENT_ROUND}) "
+        f"AS m FROM ({exploded}) GROUP BY {k}pos){g}"
+    )
+
+
+def _lloyd_sql(rel: str, k: int, iterations: int, round_to: int,
+               l2: bool = False):
+    """SQL twin of one rounded :func:`lloyd_fit` book over ``rel``
+    ``(__id, __u)``: returns ``(cents, assign)`` — the post-Lloyd relation
+    ``(c, v)`` and a function rendering the assignment ``(__id, c)``
+    against any centroid relation. Seeds are the ``k`` lowest ids; the
+    assignment ranks ``round_to``-rounded cosines desc (``l2``: rounded
+    squared L2 asc, int codes — one PQ subspace), ties -> lowest c; each
+    pass takes the 9-dp mean (re-normalized unless ``l2``) and an empty
+    cluster keeps its previous centroid."""
+    if l2:
+        score = ("aggregate(zip_with(t.__u, s.v, (x, y) -> (x - y) * (x - y)), "
+                 "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)")
+        order, ctype = "ASC", "INT"
+    else:
+        score, order, ctype = _dot_sql("t.__u", "s.v"), "DESC", "BIGINT"
+    prev = (
+        f"(SELECT CAST(ROW_NUMBER() OVER (ORDER BY __id) - 1 AS {ctype}) AS c, "
+        f"__u AS v FROM (SELECT __id, __u FROM {rel} ORDER BY __id LIMIT {int(k)}))"
+    )
+
+    def assign(cents_sql: str) -> str:
+        return (
+            f"(SELECT __id, c FROM (SELECT t.__id, s.c, ROW_NUMBER() OVER "
+            f"(PARTITION BY t.__id ORDER BY round({score}, {int(round_to)}) "
+            f"{order}, s.c ASC) AS rn FROM {rel} t CROSS JOIN {cents_sql} s) "
+            f"WHERE rn = 1)"
+        )
+
+    mv = "m.mv" if l2 else (
+        f"CASE WHEN {_norm_sql('m.mv')} > 0 THEN "
+        f"transform(m.mv, x -> round(x / {_norm_sql('m.mv')}, {CENT_ROUND})) "
+        f"ELSE m.mv END"
+    )
+    for _ in range(int(iterations)):
+        mm = _mean_sql(
+            f"SELECT a.c, posexplode(t.__u) AS (pos, val) FROM {rel} t "
+            f"JOIN {assign(prev)} a ON a.__id = t.__id", "c",
+        )
+        prev = (
+            f"(SELECT p.c, COALESCE({mv}, p.v) AS v FROM {prev} p "
+            f"LEFT JOIN ({mm}) m ON p.c = m.c)"
+        )
+    return prev, assign
+
+
 def _kmeans_render_parts(source, vec_col, id_col, k, iterations, round_to,
                          caller: str, nv_override: str | None = None):
-    """Shared SQL chains for the spherical-kmeans replay renderers: returns
-    ``(nv, cents_sql, assign_fn)`` — the normalized-corpus subquery, the
-    post-Lloyd centroid relation ``(c, v)``, and a function rendering the
-    rounded-argmax assignment ``(__id, c)`` against any centroid relation.
-    One definition so kmeans_cluster and similarity_search_ivfpq can never
-    drift on the fit contract. ``nv_override`` swaps the normalized-corpus
-    relation for a caller-built one exposing ``(__id, __u)`` — the
-    rotated-PQ hook (pass a NAMED CTE: the relation is referenced by the
-    seeds and every Lloyd pass, and an inline 64x64 rotation literal
-    would explode the statement)."""
+    """The rounded spherical fit's SQL for the replay renderers (kmeans,
+    semantic_dedup, rounded IVF, IVF-PQ's coarse quantizer): returns
+    ``(nv, cents_sql, assign_fn)`` — the normalized-corpus subquery, then
+    :func:`_lloyd_sql`'s centroid relation and assignment. ``nv_override``
+    swaps the normalized-corpus relation for a caller-built one exposing
+    ``(__id, __u)`` — the rotated-PQ hook (pass a NAMED CTE: the relation
+    is referenced by the seeds and every Lloyd pass, and an inline 64x64
+    rotation literal would explode the statement)."""
     from ..errors import TransformRenderingException
 
     if k < 1:
@@ -247,37 +457,7 @@ def _kmeans_render_parts(source, vec_col, id_col, k, iterations, round_to,
             "produces an impractically large statement"
         )
     nv = nv_override or _unit_norm_sql(vec_col, id_col, source)
-    prev = (
-        f"(SELECT CAST(ROW_NUMBER() OVER (ORDER BY __id) - 1 AS BIGINT) AS c, "
-        f"__u AS v FROM (SELECT __id, __u FROM {nv} ORDER BY __id LIMIT {int(k)}))"
-    )
-
-    def assign(cents_sql: str) -> str:
-        sim = f"round({_dot_sql('t.__u', 's.v')}, {int(round_to)})"
-        return (
-            f"(SELECT __id, c FROM (SELECT t.__id, s.c, ROW_NUMBER() OVER "
-            f"(PARTITION BY t.__id ORDER BY {sim} DESC, s.c ASC) AS rn "
-            f"FROM {nv} t CROSS JOIN {cents_sql} s) WHERE rn = 1)"
-        )
-
-    for _ in range(int(iterations)):
-        mm = (
-            f"(SELECT c, transform(array_sort(collect_list(struct(pos, m))), "
-            f"e -> e.m) AS mv FROM (SELECT c, pos, round(avg(val), {CENT_ROUND}) "
-            f"AS m FROM (SELECT a.c, posexplode(t.__u) AS (pos, val) "
-            f"FROM {nv} t JOIN {assign(prev)} a ON a.__id = t.__id) "
-            f"GROUP BY c, pos) GROUP BY c)"
-        )
-        renorm = (
-            f"CASE WHEN {_norm_sql('m.mv')} > 0 THEN "
-            f"transform(m.mv, x -> round(x / {_norm_sql('m.mv')}, {CENT_ROUND})) "
-            f"ELSE m.mv END"
-        )
-        prev = (
-            f"(SELECT p.c, COALESCE({renorm}, p.v) AS v FROM {prev} p "
-            f"LEFT JOIN {mm} m ON p.c = m.c)"
-        )
-    return nv, prev, assign
+    return (nv, *_lloyd_sql(nv, k, iterations, round_to))
 
 
 @spark_transform("embedding_outliers", category="similarity", streaming_ok=False)
@@ -305,9 +485,7 @@ def embedding_outliers(
     if not 0.0 <= bottom <= 1.0:
         raise ParameterException("bottom must be in [0, 1]")
     v, i = resolve_col(df, vec_col), resolve_col(df, id_col)
-    base = scoped_persist(_unit_rounded(
-        spread(df).select(F.col(i).alias("__id"), F.col(v).alias("__vec")), "__vec", "__u"
-    ))
+    base = _unit_corpus(df, v, i)
     mean_row = (
         base.select(F.posexplode("__u").alias("__pos", "__v"))
         .groupBy("__pos")
@@ -365,12 +543,9 @@ def _r_embedding_outliers(source, vec_col, id_col, bottom=0.05, round_to=6) -> s
         f"__eo_nv AS (SELECT * FROM "
         f"{_unit_norm_sql(vec_col, id_col, source)} __eo_base)"
     )
-    c0 = (
-        "__eo_c0 AS (SELECT transform(array_sort(collect_list(struct(pos, m))), "
-        "e -> e.m) AS c FROM (SELECT pos, round(avg(val), "
-        f"{CENT_ROUND}) AS m FROM (SELECT posexplode(__u) AS (pos, val) "
-        "FROM __eo_nv) GROUP BY pos))"
-    )
+    c0 = "__eo_c0 AS (" + _mean_sql(
+        "SELECT posexplode(__u) AS (pos, val) FROM __eo_nv", out="c"
+    ) + ")"
     cent = (
         f"__eo_cent AS (SELECT CASE WHEN {_norm_sql('c')} > 0 THEN "
         f"transform(c, x -> round(x / {_norm_sql('c')}, {CENT_ROUND})) "
@@ -573,16 +748,12 @@ def semantic_dedup(
     # slim (__id, __u, CLUSTER_ID) frame below is the only thing every
     # consumer needs, and the interpreted k x dim assignment fold still
     # evaluates once (asg is the persisted boundary)
-    cached = scoped_persist(_unit_rounded(
-        spread(df).select(F.col(i).alias("__id"), F.col(v).alias("__vec")),
-        "__vec",
-    ).select("__id", "__u"))
-    cents = _fit_kmeans(cached, k, iterations, round_to)
+    cached = _unit_corpus(df, v, i)
+    (cents,) = lloyd_fit(Lloyd(cached, k, iterations, round_to))
     fbase, fcarr, _fdrop = _attach_centroids(cached, cents)
-    asg = scoped_persist(
-        fbase.withColumn("CLUSTER_ID", _assign_expr(fcarr, round_to))
-        .select("__id", "__u", "CLUSTER_ID")
-    )
+    asg = scoped_persist(fbase.select(
+        "__id", "__u", _argmax_cid(fcarr, "__u", round_to).alias("CLUSTER_ID")
+    ))
     _, pairs, member_drops, caches = _semantic_candidates(
         asg, threshold, round_to, max_cluster_size
     )

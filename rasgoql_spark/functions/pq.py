@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from ..errors import ParameterException
 from ..operators._util import resolve_col, spread
 from ..registry import renderer as _renderer, spark_transform
-from ._cache import release_with, scoped_persist
+from ._cache import release_now, release_with, scoped_persist
 from ._index import (
     PersistedIndex,
     check_fresh,
@@ -43,9 +43,19 @@ from ._index import (
     save_artifact,
     vector_table,
 )
-from ._litfast import centroid_array_lit, double_array_lit, double_matrix_lit
-from .cluster import CENT_ROUND, _assign_expr, _fit_kmeans, _unit_rounded
+from ._litfast import double_array_lit, double_matrix_lit
+from .cluster import (
+    CENT_ROUND,
+    Lloyd,
+    _codes,
+    _seed_rows,
+    _stage_subvectors,
+    _unit_corpus,
+    _unit_rounded,
+    lloyd_fit,
+)
 from .similarity import (
+    _argmax_cid,
     _attach_centroids,
     _check_dim,
     _dot,
@@ -56,164 +66,33 @@ from .similarity import (
 )
 
 
-def _sq_dist(a: Column, b) -> Column:
-    """Sequential-fold squared L2 — same evaluation order both engines."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+def _pq_seeds(cached: DataFrame, n: int, m: int) -> tuple:
+    """The one lowest-id collect of a PQ build over the persisted
+    ``(__id, __u)`` corpus: ``n`` seed rows, which double as the emptiness
+    check, the dimension probe and the cache fill. Returns ``(seed_rows,
+    d_sub)``; releases ``cached`` before raising."""
+    rows = _seed_rows(cached, n)
+    if not rows:
+        release_now(cached)
+        raise ParameterException("input is empty")
+    dim = len(rows[0]["__u"])
+    if m < 1 or dim % m != 0:
+        release_now(cached)
+        raise ParameterException(f"m must divide the vector dimension ({dim})")
+    return rows, dim // m
+
+
+def _pq_fit(df: DataFrame, v: str, i: str, m: int, codebook_size: int,
+            iterations: int, round_to: int) -> tuple:
+    """The staged corpus and trained codebooks of pq_encode / pq_search:
+    ``(staged, books, cached)`` — ``staged`` is the persisted ``cached``
+    corpus with its subvector columns, ``books`` the ``m`` codebooks."""
+    cached = _unit_corpus(df, v, i)
+    seeds, d_sub = _pq_seeds(cached, max(int(codebook_size), 1), m)
+    (books,) = lloyd_fit(
+        Lloyd(cached, codebook_size, iterations, round_to, m, d_sub), seed_rows=seeds
     )
-
-
-def _code_expr(sub_col: str, codebook: list, round_to: int) -> Column:
-    """argmin code over ROUNDED squared distances; ties -> lowest code."""
-    # one F.expr call, not codes·dim py4j F.lit round trips — see _litfast
-    cents = centroid_array_lit(codebook, id_type="int")
-    dists = F.transform(
-        cents,
-        lambda ce: F.struct(
-            F.round(_sq_dist(F.col(sub_col), ce["v"]), round_to).alias("d"),
-            ce["c"].alias("c"),
-        ),
-    )
-    return F.array_min(dists)["c"]
-
-
-def _stage_subvectors(df: DataFrame, m: int, d_sub: int, u_col: str = "__u") -> DataFrame:
-    """Materialize each subspace slice behind a projection boundary (HOF
-    staging rule): the argmin lambda evaluates its input once per codebook
-    entry, so it must reference a plain column, not the slice expression."""
-    return df.withColumns(
-        {f"__s{s}": F.slice(F.col(u_col), s * d_sub + 1, d_sub) for s in range(m)}
-    )
-
-
-def _train_codebooks(
-    staged: DataFrame, m: int, d_sub: int, codebook_size: int, iterations: int, round_to: int
-) -> list:
-    """Deterministic per-subspace Lloyd. ``staged`` must be persisted with
-    __id, __s0..__s{m-1}. Returns [subspace][(code, centroid)] lists."""
-    seed_rows = staged.orderBy("__id").limit(codebook_size).select(
-        *[f"__s{s}" for s in range(m)]
-    ).collect()
-    books = [
-        [(c, [round(float(x), CENT_ROUND) for x in r[f"__s{s}"]])
-         for c, r in enumerate(seed_rows)]
-        for s in range(m)
-    ]
-    for _ in range(iterations):
-        codes = F.array(*[_code_expr(f"__s{s}", books[s], round_to) for s in range(m)])
-        assigned = staged.withColumn("__codes", codes)
-        sub_structs = F.transform(
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            lambda s: F.struct(
-                s.alias("s"),
-                F.element_at("__codes", s + 1).alias("c"),
-                F.slice("__u", s * d_sub + 1, d_sub).alias("v"),
-            ),
-        )
-        # ONE aggregation pass covers every subspace: slim (s, c, pos, val)
-        rows = (
-            assigned.select(F.explode(sub_structs).alias("x"))
-            .select("x.s", "x.c", F.posexplode("x.v").alias("__pos", "__val"))
-            .groupBy("s", "c", "__pos")
-            .agg(F.round(F.avg("__val"), CENT_ROUND).alias("__m"))
-            .collect()
-        )
-        acc: dict = {}
-        for r in rows:
-            acc.setdefault((r["s"], r["c"]), {})[r["__pos"]] = r["__m"]
-        books = [
-            [
-                (c, [acc[(s, c)][p] for p in range(d_sub)]) if (s, c) in acc else (c, old)
-                for c, old in books[s]
-            ]
-            for s in range(m)
-        ]
-    return books
-
-
-def _fused_fit(cached: DataFrame, staged: DataFrame, cents: list, books: list,
-               coarse_iterations: int, pq_iterations: int, m: int, d_sub: int,
-               round_to: int) -> tuple:
-    """Run the coarse-kmeans Lloyd passes and the per-subspace PQ codebook
-    Lloyd passes in ONE collect job per pass level (round 13, guide §2.6's
-    "overlap independent work" applied as plan-level fusion instead of
-    driver threads — threads were measured slower on a shared core pool).
-    In the non-residual IVF-PQ build the two fits are independent: kmeans
-    pass j needs only cents_{j-1}, codebook pass j needs only books_{j-1}.
-    Each pass level unions the two slim aggregation subtrees — each branch
-    aggregates by ITS OWN original keys before the union, so the per-branch
-    rounded means are the exact values the sequential fits produce — and
-    one ``collect`` returns both (kmeans rows tagged ``__s = -1``).
-    Job count: max(ci, pi) instead of ci + pi."""
-    for j in range(max(coarse_iterations, pq_iterations)):
-        branches = []
-        if j < coarse_iterations:
-            abase, carr, _ad = _attach_centroids(cached, cents)
-            assigned = abase.withColumn("__cid", _assign_expr(carr, round_to))
-            branches.append(
-                assigned.select("__cid", F.posexplode("__u").alias("__pos", "__v"))
-                .groupBy("__cid", "__pos")
-                .agg(F.round(F.avg("__v"), CENT_ROUND).alias("__m"))
-                .select(
-                    F.lit(-1).cast("int").alias("__s"),
-                    F.col("__cid").cast("bigint").alias("__c"),
-                    F.col("__pos"), F.col("__m"),
-                )
-            )
-        if j < pq_iterations:
-            codes = F.array(*[_code_expr(f"__s{s}", books[s], round_to) for s in range(m)])
-            assigned_pq = staged.withColumn("__codes", codes)
-            sub_structs = F.transform(
-                F.sequence(F.lit(0), F.lit(m - 1)),
-                lambda s: F.struct(
-                    s.alias("s"),
-                    F.element_at("__codes", s + 1).alias("c"),
-                    F.slice("__u", s * d_sub + 1, d_sub).alias("v"),
-                ),
-            )
-            branches.append(
-                assigned_pq.select(F.explode(sub_structs).alias("x"))
-                .select("x.s", "x.c", F.posexplode("x.v").alias("__pos", "__val"))
-                .groupBy("s", "c", "__pos")
-                .agg(F.round(F.avg("__val"), CENT_ROUND).alias("__m"))
-                .select(
-                    F.col("s").cast("int").alias("__s"),
-                    F.col("c").cast("bigint").alias("__c"),
-                    F.col("__pos"), F.col("__m"),
-                )
-            )
-        fused = branches[0]
-        for b in branches[1:]:
-            fused = fused.unionByName(b)
-        rows = fused.collect()
-        kacc: dict = {}
-        bacc: dict = {}
-        for r in rows:
-            if r["__s"] < 0:
-                kacc.setdefault(r["__c"], {})[r["__pos"]] = r["__m"]
-            else:
-                bacc.setdefault((r["__s"], r["__c"]), {})[r["__pos"]] = r["__m"]
-        if j < coarse_iterations:
-            from .cluster import _renorm_py
-
-            cents = [
-                (cid,
-                 _renorm_py([kacc[cid][p] for p in range(len(kacc[cid]))])
-                 if cid in kacc else old)
-                for cid, old in cents
-            ]
-        if j < pq_iterations:
-            books = [
-                [
-                    (c, [bacc[(s, c)][p] for p in range(d_sub)])
-                    if (s, c) in bacc else (c, old)
-                    for c, old in books[s]
-                ]
-                for s in range(m)
-            ]
-    return cents, books
+    return _stage_subvectors(cached, m, d_sub), books, cached
 
 
 @spark_transform("pq_encode", category="similarity", streaming_ok=False)
@@ -230,10 +109,8 @@ def pq_encode(
     compression of the unit-normalized vector. ~dim·4-byte floats become m
     small ints — the memory layout that makes billion-vector ANN fit."""
     v, i = resolve_col(df, vec_col), resolve_col(df, id_col)
-    staged, d_sub, cached = _staged_corpus(df, v, i, m)
-    books = _train_codebooks(staged, m, d_sub, codebook_size, iterations, round_to)
-    codes = F.array(*[_code_expr(f"__s{s}", books[s], round_to) for s in range(m)])
-    out = staged.withColumn("PQ_CODE", codes).select(F.col("__id").alias(i), "PQ_CODE")
+    staged, books, cached = _pq_fit(df, v, i, m, codebook_size, iterations, round_to)
+    out = staged.select(F.col("__id").alias(i), _codes(books, round_to).alias("PQ_CODE"))
     return release_with(
         df.join(out, on=i, how="inner").select(*df.columns, "PQ_CODE"), cached
     )
@@ -315,41 +192,20 @@ def _rotate_sql(mat: list, nv: str, engine: str = "spark") -> str:
     return f"(SELECT __id, {rot} AS __u FROM {nv} __pq_rot)"
 
 
-def _staged_corpus(df: DataFrame, v: str, i: str, m: int,
-                   rotation: list | None = None):
-    first_dim = df.select(F.size(F.col(v)).alias("d")).first()
-    if first_dim is None:
-        raise ParameterException("input is empty")
-    dim = int(first_dim["d"])
-    if m < 1 or dim % m != 0:
-        raise ParameterException(f"m must divide the vector dimension ({dim})")
-    if rotation is not None and len(rotation) != dim:
-        raise ParameterException(
-            f"rotation matrix is {len(rotation)}x{len(rotation)} but the "
-            f"vectors have dim {dim}"
-        )
-    d_sub = dim // m
-    base = _unit_rounded(
-        spread(df).select(F.col(i).alias("__id"), F.col(v).alias("__vec")),
-        "__vec",
-    )
-    if rotation is not None:
-        base = base.withColumn("__u", _rotate_expr("__u", rotation))
-    staged = scoped_persist(_stage_subvectors(base, m, d_sub))
-    return staged, d_sub, staged
-
-
 def _pq_render_parts(source, vec_col, id_col, m, codebook_size, iterations,
                      round_to, caller: str, vec_source: str | None = None):
-    """Shared per-subspace SQL chains for the pq_encode / pq_search
-    renderers: for each subspace returns ``(sub, codebook, assign)`` —
-    the staged subvector relation, the post-Lloyd codebook relation, and
-    the final code assignment — all as inline subqueries. ``vec_source``
-    overrides the relation subvectors slice from (must expose
-    ``(__id, __u)``) — the residual-IVFPQ hook, where the PQ fit runs
-    over vector-minus-assigned-centroid instead of the normalized
-    corpus."""
+    """Per-subspace SQL of the PQ codebook fit for the pq_encode /
+    pq_search / IVF-PQ renderers: for each subspace returns ``(sub,
+    codebook, assign)`` — the subvector relation ``(__id, __u)``, the
+    post-Lloyd codebook relation (:func:`~.cluster._lloyd_sql` with
+    ``l2``), and the final code assignment — all as inline subqueries.
+    Subvector bounds derive row-locally (``size(u) DIV m``) since the
+    renderer never sees the data. ``vec_source`` overrides the relation
+    subvectors slice from (must expose ``(__id, __u)``) — the
+    residual-IVFPQ hook, where the PQ fit runs over vector-minus-assigned-
+    centroid instead of the normalized corpus."""
     from ..errors import TransformRenderingException
+    from .cluster import _lloyd_sql, _unit_norm_sql
 
     if m < 1:
         raise ParameterException("m must be >= 1")
@@ -361,62 +217,28 @@ def _pq_render_parts(source, vec_col, id_col, m, codebook_size, iterations,
             "iterations > 8 or m > 16 produces an impractically large "
             "statement"
         )
-    from .cluster import _unit_norm_sql
-
     nv = vec_source or _unit_norm_sql(vec_col, id_col, source)
-    sq = (
-        "aggregate(zip_with(t.v, s.v, (x, y) -> (x - y) * (x - y)), "
-        "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-    )
     parts = []
     for s_ix in range(int(m)):
         sub = (
             f"(SELECT __id, slice(__u, {s_ix} * (size(__u) DIV {int(m)}) + 1, "
-            f"size(__u) DIV {int(m)}) AS v FROM {nv} __pq_nv)"
+            f"size(__u) DIV {int(m)}) AS __u FROM {nv} __pq_nv)"
         )
-        prev = (
-            f"(SELECT CAST(ROW_NUMBER() OVER (ORDER BY __id) - 1 AS INT) AS c, "
-            f"v FROM (SELECT __id, v FROM {sub} ORDER BY __id "
-            f"LIMIT {int(codebook_size)}))"
-        )
-
-        def assign(cents_sql: str) -> str:
-            d = f"round({sq}, {int(round_to)})"
-            return (
-                f"(SELECT __id, c FROM (SELECT t.__id, s.c, ROW_NUMBER() OVER "
-                f"(PARTITION BY t.__id ORDER BY {d} ASC, s.c ASC) AS rn "
-                f"FROM {sub} t CROSS JOIN {cents_sql} s) WHERE rn = 1)"
-            )
-
-        for _ in range(int(iterations)):
-            mm = (
-                f"(SELECT c, transform(array_sort(collect_list(struct(pos, m))), "
-                f"e -> e.m) AS mv FROM (SELECT c, pos, round(avg(val), {CENT_ROUND}) "
-                f"AS m FROM (SELECT a.c, posexplode(t.v) AS (pos, val) "
-                f"FROM {sub} t JOIN {assign(prev)} a ON a.__id = t.__id) "
-                f"GROUP BY c, pos) GROUP BY c)"
-            )
-            prev = (
-                f"(SELECT p.c, COALESCE(m.mv, p.v) AS v FROM {prev} p "
-                f"LEFT JOIN {mm} m ON p.c = m.c)"
-            )
-        parts.append((sub, prev, assign(prev)))
+        cb, assign = _lloyd_sql(sub, codebook_size, iterations, round_to, l2=True)
+        parts.append((sub, cb, assign(cb)))
     return parts
 
 
 @_renderer("pq_encode")
 def _r_pq_encode(source, vec_col, id_col, m=4, codebook_size=8, iterations=1,
                  round_to=6) -> str:
-    """Unrolled per-subspace Lloyd replay in Spark SQL (the kmeans_cluster
-    renderer technique, L2 distances instead of cosines): lowest-id seeds,
-    argmin over ``round_to``-rounded squared distances (ties -> lowest
-    code), 9-dp-rounded means with empty codes keeping their previous
-    centroid, final per-subspace codes assembled into PQ_CODE. Subvector
-    bounds derive row-locally (``size(u) DIV m``) since the renderer never
-    sees the data; equality with the DataFrame path (driver-collected
-    codebooks as literals) holds through the rounded-distance argmin
-    robustness contract. The normalized corpus inlines at each reference —
-    executed-SQL recompute; the render is an export artifact."""
+    """Unrolled replay of the PQ codebook fit in Spark SQL, one
+    :func:`_pq_render_parts` chain per subspace, with the final
+    per-subspace codes assembled into PQ_CODE. Equality with the DataFrame
+    path (driver-collected codebooks as literals) holds through the
+    rounded-distance argmin robustness contract. The normalized corpus
+    inlines at each reference — executed-SQL recompute; the render is an
+    export artifact."""
     parts = _pq_render_parts(
         source, vec_col, id_col, m, codebook_size, iterations, round_to,
         "pq_encode",
@@ -453,10 +275,8 @@ def pq_search(
     if k < 1:
         raise ParameterException("k must be >= 1")
     v, i = resolve_col(df, vec_col), resolve_col(df, id_col)
-    staged, d_sub, cached = _staged_corpus(df, v, i, m)
-    books = _train_codebooks(staged, m, d_sub, codebook_size, iterations, round_to)
-    codes = F.array(*[_code_expr(f"__s{s}", books[s], round_to) for s in range(m)])
-    encoded = staged.withColumn("__codes", codes).select("__id", "__codes")
+    staged, books, cached = _pq_fit(df, v, i, m, codebook_size, iterations, round_to)
+    encoded = staged.select("__id", _codes(books, round_to).alias("__codes"))
     qrows = (
         staged.filter(F.col("__id").isin([int(q) for q in query_ids]))
         .select("__id", *[f"__s{s}" for s in range(m)])
@@ -639,98 +459,42 @@ def ivfpq_index(
                 f"dim {int(dfirst['d'])}"
             )
         rotation = rotation_matrix(rotation_seed, int(dfirst["d"]), rotation_sweeps)
-    # slim persisted corpus (__id, __u) — the __vec copy and the __s
-    # subvector slices never earn cache bytes: slices are cheap row-local
-    # projections their (few) consumers recompute above the cache, with
-    # the same once-per-row HOF staging guarantee (projection boundary),
-    # and __vec is never read after normalization (round 13)
-    base = _unit_rounded(
-        spread(df).select(F.col(i).alias("__id"), F.col(v).alias("__vec")),
-        "__vec",
-    )
-    if rotation is not None:
-        base = base.withColumn("__u", _rotate_expr("__u", rotation))
-    cached = scoped_persist(base.select("__id", "__u"))
-    from ._cache import release_now
-
+    # slim persisted corpus (__id, __u): the __s subvector slices are
+    # cheap row-local projections their (few) consumers recompute above
+    # the cache, with the same once-per-row HOF staging guarantee
+    cached = _unit_corpus(df, v, i, rotation)
     # ONE TakeOrdered job collects the lowest-id rows for BOTH fits' seeds
-    # and doubles as the dim probe + cache materialization (round 13: this
-    # replaces three driver jobs — the dim first(), the kmeans seeds
-    # collect, and the codebook seeds collect — with one; the values each
-    # consumer sees are the identical lowest-id __u doubles)
-    seed_rows = (
-        cached.orderBy("__id")
-        .limit(max(int(num_centroids), int(codebook_size)))
-        .select("__u").collect()
-    )
-    if not seed_rows:
-        release_now(cached)
-        raise ParameterException("input is empty")
-    dim = len(seed_rows[0]["__u"])
-    if m < 1 or dim % m != 0:
-        release_now(cached)
-        raise ParameterException(f"m must divide the vector dimension ({dim})")
-    d_sub = dim // m
-    staged = _stage_subvectors(cached, m, d_sub)
+    # and doubles as the dim probe + cache materialization
+    seed_rows, d_sub = _pq_seeds(cached, max(int(num_centroids), int(codebook_size)), m)
+    coarse = Lloyd(cached, num_centroids, coarse_iterations, round_to)
     if residual:
-        # the residual PQ fit consumes the kmeans result (codes quantize
-        # vector - assigned centroid), so the two fits stay sequential here
-        cents = _fit_kmeans(cached, num_centroids, coarse_iterations,
-                            round_to, seed_rows=seed_rows)
-        abase, carr, _adrop = _attach_centroids(staged, cents)
-        assigned = abase.withColumn("__cid", _assign_expr(carr, round_to))
-        # restage: the PQ fit/encode slices come from the residual vector,
-        # which takes the ``__u`` seat so _train_codebooks/_code_expr see
-        # the same column shape as the plain path
-        res = _cent_vec_of_cid(assigned, cents).withColumn(
-            "__r", F.zip_with("__u", F.col("__cv"), lambda x, y: x - y)
-        )
-        rstaged = scoped_persist(
-            _stage_subvectors(
-                res.select(
-                    "__id", "__cid", F.col("__u").alias("__orig"),
-                    F.col("__r").alias("__u"),
-                ),
-                m, d_sub,
-            )
-        )
-        books = _train_codebooks(
-            rstaged, m, d_sub, codebook_size, iterations, round_to
-        )
-        codes = F.array(
-            *[_code_expr(f"__s{s}", books[s], round_to) for s in range(m)]
-        )
-        frame, n = materialize(
-            rstaged.withColumn("__codes", codes)
-            .select("__id", F.col("__orig").alias("__u"), "__cid", "__codes")
-        )
-        release_now(rstaged)
+        # the residual PQ fit consumes the coarse result (codes quantize
+        # vector - assigned centroid), so the two fits run one after the
+        # other; the residual takes the ``__u`` seat the PQ fit reads
+        (cents,) = lloyd_fit(coarse, seed_rows=seed_rows)
+        abase, carr, _adrop = _attach_centroids(cached, cents)
+        assigned = abase.withColumn("__cid", _argmax_cid(carr, "__u", round_to))
+        rcached = scoped_persist(_cent_vec_of_cid(assigned, cents).select(
+            "__id", "__cid", F.col("__u").alias("__orig"),
+            F.zip_with("__u", F.col("__cv"), lambda x, y: x - y).alias("__u"),
+        ))
+        (books,) = lloyd_fit(Lloyd(rcached, codebook_size, iterations, round_to, m, d_sub))
+        frame, n = materialize(_stage_subvectors(rcached, m, d_sub).select(
+            "__id", F.col("__orig").alias("__u"), "__cid",
+            _codes(books, round_to).alias("__codes"),
+        ))
+        release_now(rcached)
     else:
-        # independent fits: seed both from the shared collect, then run
-        # the two Lloyd recurrences pass-fused (one collect per level)
-        cents = [
-            (j, [round(float(x), CENT_ROUND) for x in r["__u"]])
-            for j, r in enumerate(seed_rows[:num_centroids])
-        ]
-        books = [
-            [
-                (c, [round(float(x), CENT_ROUND)
-                     for x in r["__u"][s * d_sub:(s + 1) * d_sub]])
-                for c, r in enumerate(seed_rows[:codebook_size])
-            ]
-            for s in range(m)
-        ]
-        cents, books = _fused_fit(
-            cached, staged, cents, books, coarse_iterations, iterations,
-            m, d_sub, round_to,
+        # independent fits: one pass-fused loop, one collect per level
+        cents, books = lloyd_fit(
+            coarse, Lloyd(cached, codebook_size, iterations, round_to, m, d_sub),
+            seed_rows=seed_rows,
         )
-        abase, carr, _adrop = _attach_centroids(staged, cents)
-        assigned = abase.withColumn("__cid", _assign_expr(carr, round_to))
-        codes = F.array(*[_code_expr(f"__s{s}", books[s], round_to) for s in range(m)])
-        frame, n = materialize(
-            assigned.withColumn("__codes", codes)
-            .select("__id", "__u", "__cid", "__codes")
-        )
+        abase, carr, _adrop = _attach_centroids(_stage_subvectors(cached, m, d_sub), cents)
+        frame, n = materialize(abase.select(
+            "__id", "__u", _argmax_cid(carr, "__u", round_to).alias("__cid"),
+            _codes(books, round_to).alias("__codes"),
+        ))
     release_now(cached)
     return IVFPQIndex(
         frame, cents, books, m, d_sub, round_to, n_docs=n, residual=residual,
@@ -787,7 +551,7 @@ def update_ivfpq_index(
     cadence. Returns a NEW index; ids must stay unique across increments."""
     v, i = resolve_col(new_vecs, vec_col), resolve_col(new_vecs, id_col)
     # F.slice / zip_with would silently truncate a mismatched-dim batch
-    # into wrong codes (inline builds are protected by _staged_corpus's
+    # into wrong codes (inline builds are protected by _pq_seeds'
     # divisibility check; the fold-in path checks the index's geometry)
     _check_dim(new_vecs, v, index.m * index.d_sub, "batch")
     base = _unit_rounded(
@@ -799,7 +563,7 @@ def update_ivfpq_index(
         # live in rotated space
         base = base.withColumn("__u", _rotate_expr("__u", index.rotation))
     abase, carr, _adrop = _attach_centroids(base, index.centroids)
-    withcid = abase.withColumn("__cid", _assign_expr(carr, index.round_to))
+    withcid = abase.withColumn("__cid", _argmax_cid(carr, "__u", index.round_to))
     if index.residual:
         # codes encode the residual vs the assigned coarse centroid — the
         # batch must replay the build-time encoding exactly
@@ -813,11 +577,7 @@ def update_ivfpq_index(
         )
     else:
         enc = _stage_subvectors(withcid, index.m, index.d_sub)
-    codes = F.array(*[
-        _code_expr(f"__s{s}", index.books[s], index.round_to)
-        for s in range(index.m)
-    ])
-    assigned = enc.withColumn("__codes", codes)
+    assigned = enc.withColumn("__codes", _codes(index.books, index.round_to))
     if index.residual:
         assigned = assigned.select(
             "__id", F.col("__orig").alias("__u"), "__cid", "__codes"
@@ -1520,7 +1280,7 @@ def _r_pq_search(source, vec_col, id_col, query_ids, k=10, m=4,
         ctes.append(f"__pq_cb{j} AS (SELECT c, v FROM {cb})")
         ctes.append(f"__pq_f{j} AS (SELECT __id, c FROM {a})")
         ctes.append(
-            f"__pq_q{j} AS (SELECT __id AS qid, v FROM {sub} "
+            f"__pq_q{j} AS (SELECT __id AS qid, __u AS v FROM {sub} "
             f"WHERE __id IN ({qlist}))"
         )
     dot = (

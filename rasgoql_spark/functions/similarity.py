@@ -272,27 +272,23 @@ def _ivf_lists(df: DataFrame, vec_col: str, id_col: str, num_centroids,
     """The inverted lists a flat-IVF search, join or dedup scores against:
     ``(lists, centroids, cached)`` with ``lists`` = ``(__id, __v, __cid)``,
     ``__v`` the stored unit vector. A prebuilt ``index`` serves its frame
-    (``cached`` None). Inline, ``df`` is fit with one Lloyd pass: the
-    unrounded fit of :func:`_ivf_assign`, or — ``round_to`` set — the
-    kmeans_cluster rounded-determinism contract (9-dp unit vectors and
+    (``cached`` None). Inline, ``df`` is fit with one pass of the one
+    Lloyd loop (:func:`~.cluster.lloyd_fit`) under one of two contracts:
+    the unrounded IVF fit of :func:`_ivf_assign`, or — ``round_to`` set —
+    the kmeans_cluster rounded-determinism contract (9-dp unit vectors and
     centroids, ``round_to``-dp argmax) that the ``.sql()`` replay mirrors.
-    The two fits stay separate: they are different contracts. Callers
-    release ``cached`` with their final result."""
+    Callers release ``cached`` with their final result."""
     if index is not None:
         frame, cents, cached = index.frame, index.centroids, None
     elif round_to is None:
         frame, cents, cached = _ivf_assign(df, vec_col, id_col, num_centroids, 1)
     else:
-        from .cluster import _fit_kmeans, _unit_rounded
+        from .cluster import Lloyd, _unit_corpus, lloyd_fit
 
-        v, i = resolve_col(df, vec_col), resolve_col(df, id_col)
-        cached = scoped_persist(_unit_rounded(
-            spread(df).select(F.col(i).alias("__id"), F.col(v).alias("__vec")),
-            "__vec",
-        ))
+        cached = _unit_corpus(df, resolve_col(df, vec_col), resolve_col(df, id_col))
         kc = _resolve_k(num_centroids,
                         cached.count() if isinstance(num_centroids, str) else 0)
-        cents = _fit_kmeans(cached, kc, 1, round_to)
+        (cents,) = lloyd_fit(Lloyd(cached, kc, 1, round_to))
         base, carr, _ad = _attach_centroids(cached, cents)
         lists = base.select(
             "__id", F.col("__u").alias("__v"),
@@ -434,29 +430,6 @@ def _probe_sql(prefix: str, kcents: str, kassign, query: str, nprobe: int,
     ]
 
 
-def _norm_py(vec: list) -> list:
-    s = sum(x * x for x in vec) ** 0.5
-    return [x / s for x in vec] if s > 0 else [0.0 for _ in vec]
-
-
-def _elementwise_mean(df: DataFrame, group_col: str, vec_col: str) -> DataFrame:
-    """Per-group elementwise mean of array columns via posexplode →
-    (group, pos) average → re-assemble sorted by position. Distributed —
-    no driver-side vector math."""
-    exploded = df.select(group_col, F.posexplode(vec_col).alias("__pos", "__v"))
-    return (
-        exploded.groupBy(group_col, "__pos")
-        .agg(F.avg(F.col("__v").cast("double")).alias("__m"))
-        .groupBy(group_col)
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("__pos", "__m"))),
-                lambda s: s["__m"],
-            ).alias(vec_col)
-        )
-    )
-
-
 @spark_transform("build_ivf_index", category="similarity", streaming_ok=False)
 def build_ivf_index(
     df: DataFrame,
@@ -490,10 +463,14 @@ def build_ivf_index(
 
 def _ivf_assign(df, vec_col, id_col, num_centroids, iterations):
     """(normalized corpus with CENTROID_ID, centroid list, scoped cache):
-    the unrounded IVF fit of every build and inline IVF call. The normalized
-    corpus is persisted ONCE and reused by the seed collect, every Lloyd
-    pass, and the final assignment (5 consumers otherwise recompute the
-    normalization fold per pass); callers release it with the result."""
+    the unrounded IVF fit (:func:`~.cluster.lloyd_fit` with ``round_to``
+    None) of every build and inline IVF call. The normalized corpus is
+    persisted ONCE and reused by the seed collect, every Lloyd pass, and
+    the final assignment (5 consumers otherwise recompute the
+    normalization fold per pass); callers release it with the result. It
+    keeps the raw ``__vec``, which ``build_ivf_index`` returns."""
+    from .cluster import Lloyd, lloyd_fit
+
     v, i = resolve_col(df, vec_col), resolve_col(df, id_col)
     cached = scoped_persist(_with_normalized(
         spread(df).select(F.col(i).alias("__id"), F.col(v).alias("__vec")), "__vec"
@@ -504,26 +481,7 @@ def _ivf_assign(df, vec_col, id_col, num_centroids, iterations):
         num_centroids = _resolve_k(num_centroids, cached.count())
     else:
         num_centroids = _resolve_k(num_centroids, 0)
-    seeds = cached.orderBy("__id").limit(num_centroids).select("__nvec").collect()
-    cents = [(j, list(r["__nvec"])) for j, r in enumerate(seeds)]
-    for _ in range(iterations):
-        abase, carr, _adrop = _attach_centroids(cached, cents)
-        assigned = abase.withColumn("__cid", _argmax_cid(carr))
-        # per-(cid, pos) averages collect as k·dim rows (bounded); the final
-        # re-assembly happens on the driver — skips a second shuffle round
-        rows = (
-            assigned.select("__cid", F.posexplode("__nvec").alias("__pos", "__v"))
-            .groupBy("__cid", "__pos")
-            .agg(F.avg("__v").alias("__m"))
-            .collect()
-        )
-        acc: dict = {}
-        for r in rows:
-            acc.setdefault(r["__cid"], {})[r["__pos"]] = r["__m"]
-        cents = [
-            (cid, _norm_py([d[p] for p in range(len(d))]))
-            for cid, d in sorted(acc.items())
-        ]
+    (cents,) = lloyd_fit(Lloyd(cached, num_centroids, iterations, vec="__nvec"))
     fbase, fcarr, fdrop = _attach_centroids(cached, cents)
     final = fbase.withColumn("CENTROID_ID", _argmax_cid(fcarr)).drop(*fdrop)
     return final, cents, cached

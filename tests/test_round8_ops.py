@@ -276,7 +276,7 @@ def test_ivfpq_full_probe_equals_pq_search(session):
 def test_ivfpq_probe_restricts_candidates(session):
     """nprobe=1 candidates must all come from the query's single probed
     list — verified against an independent kmeans-contract assignment of
-    the matches (same centroids arise from the shared _fit_kmeans seed
+    the matches (same centroids arise from the shared lloyd_fit seed
     path), and the result must be a subset of the full-probe ranking's
     candidate pool."""
     narrow = _ivfpq(
