@@ -27,16 +27,6 @@ def md5_int_sql(expr: str) -> str:
     return f"CAST(('0x' || substr(md5({expr}), 1, 8)) AS BIGINT)"
 
 
-def affine_hash(col: Column, a: int, b: int) -> Column:
-    """Universal-hash family member: (a*md5_int(x) + b) mod 2^31-1."""
-    return (md5_int(col) * F.lit(a) + F.lit(b)) % F.lit(MERSENNE)
-
-
-def hash_params(i: int) -> tuple[int, int]:
-    """Deterministic (a, b) for hash-family member i (odd a, fixed stride)."""
-    return 2 * i + 1, i * 12_345 + 1
-
-
 def tokens_expr(text: Column) -> Column:
     """Normalized word tokens: lowercase, strip non-alphanumerics, split on
     whitespace. Empty text → empty array."""
@@ -68,14 +58,28 @@ def shingles_expr(tokens: Column, k: int) -> Column:
     )
 
 
-def shingles_sql(tokens_sql: str, k: int) -> str:
-    """DuckDB rendering of shingles_expr over a list-of-tokens expression."""
-    ngram = (
-        f"list_distinct(list_transform(range(1, len(__toks) - {k - 2}), "
-        f"i -> array_to_string(__toks[i : i + {k - 1}], ' ')))"
+def shingles_spark_sql(toks: str, k: int) -> str:
+    """Spark-SQL twin of shingles_expr over a token-array expression."""
+    ngrams = (
+        f"transform(sequence(1, size({toks}) - {k - 1}), "
+        f"i -> concat_ws(' ', slice({toks}, i, {k})))"
     )
     return (
-        f"(SELECT CASE WHEN len(__toks) >= {k} THEN {ngram} "
-        f"WHEN len(__toks) > 0 THEN [array_to_string(__toks, ' ')] "
-        f"ELSE [] END FROM (SELECT {tokens_sql} AS __toks))"
+        f"array_distinct(CASE WHEN size({toks}) >= {k} THEN {ngrams} "
+        f"WHEN size({toks}) > 0 THEN array(concat_ws(' ', {toks})) "
+        f"ELSE CAST(array() AS ARRAY<STRING>) END)"
+    )
+
+
+def norm_fp(text: Column) -> Column:
+    """Normalized-content fingerprint: md5 of the lowercased text with
+    non-alphanumerics blanked and whitespace collapsed. The exact-dedup
+    key of ``fingerprint``, ``dedup_against(method='exact')`` and the
+    Bloom screens, so all of them agree row for row."""
+    return F.md5(
+        F.trim(
+            F.regexp_replace(
+                F.regexp_replace(F.lower(text), r"[^a-z0-9\s]", " "), r"\s+", " "
+            )
+        )
     )

@@ -29,13 +29,15 @@ No counterpart in the reference repo; cites the public algorithm only.
 
 from __future__ import annotations
 
-from ._cache import release_now, scoped_persist
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..errors import ParameterException
 from ..operators._util import resolve_col
 from ..registry import spark_transform
+from ._cache import release_now, scoped_persist
+from ._filter import finish, reread_input
+from ._hash import norm_fp
 from ._index import (
     PersistedIndex,
     check_fresh,
@@ -45,18 +47,6 @@ from ._index import (
     read_params,
     save_artifact,
 )
-
-
-def _norm_fp(c: Column) -> Column:
-    """Normalized-content fingerprint — identical to dedup_against's exact
-    path so bloom-based and join-based incremental dedup agree row-for-row."""
-    return F.md5(
-        F.trim(
-            F.regexp_replace(
-                F.regexp_replace(F.lower(c), r"[^a-z0-9\s]", " "), r"\s+", " "
-            )
-        )
-    )
 
 
 def _bit_positions(fp: Column, num_hashes: int, m: int) -> Column:
@@ -89,7 +79,7 @@ def bloom_bits(
     m = 1 << bits_log2
     return (
         df.select(
-            F.explode(_bit_positions(_norm_fp(F.col(t)), num_hashes, m)).alias("BIT")
+            F.explode(_bit_positions(norm_fp(F.col(t)), num_hashes, m)).alias("BIT")
         )
         .dropDuplicates(["BIT"])
     )
@@ -145,10 +135,11 @@ def dedup_against_bloom(
     if bits is None:
         bits = bloom_bits(reference, rt, bits_log2, num_hashes)
     bits = bits.select(F.col("BIT").alias("__bit"))
-
+    # df is read three times: the probes, the confirm and the drop
+    df, inp = reread_input(df)
     probes = df.select(
         F.col(i).alias("__id"),
-        F.posexplode(_bit_positions(_norm_fp(F.col(t)), num_hashes, m)).alias(
+        F.posexplode(_bit_positions(norm_fp(F.col(t)), num_hashes, m)).alias(
             "__hi", "__bit"
         ),
     )
@@ -167,14 +158,13 @@ def dedup_against_bloom(
     # batch-invariant work that dominates at large reference:batch ratios
     # (the reason BloomIndex exists)
     if ref_fps is None:
-        ref_fps = reference.select(_norm_fp(F.col(rt)).alias("__fp")).dropDuplicates()
+        ref_fps = reference.select(norm_fp(F.col(rt)).alias("__fp")).dropDuplicates()
     confirmed = (
         df.join(positive.withColumnRenamed("__id", i), on=i, how="left_semi")
-        .select(F.col(i).alias("__did"), _norm_fp(F.col(t)).alias("__fp"))
+        .select(F.col(i).alias("__did"), norm_fp(F.col(t)).alias("__fp"))
         .join(ref_fps, on="__fp", how="left_semi")
-        .select(F.col("__did").alias(i))
     )
-    return df.join(confirmed, on=i, how="left_anti")
+    return finish(df, id_col, "filter", confirmed, *inp, key="__did")
 
 
 class BloomIndex(PersistedIndex):
@@ -216,7 +206,7 @@ def bloom_index(
     # one cached fingerprint scan feeds BOTH the row count and the distinct
     # fps, so n_docs is consistent-by-construction with the indexed rows
     rows, n_docs = materialize(
-        reference.select(_norm_fp(F.col(rt)).alias("__fp"))
+        reference.select(norm_fp(F.col(rt)).alias("__fp"))
     )
     fps = scoped_persist(rows.dropDuplicates())
     # materializes fps too (bits derives from it)
@@ -244,7 +234,7 @@ def update_bloom_index(
     rt = resolve_col(new_docs, text)
     m = 1 << index.bits_log2
     rows, n_new = materialize(
-        new_docs.select(_norm_fp(F.col(rt)).alias("__fp"))
+        new_docs.select(norm_fp(F.col(rt)).alias("__fp"))
     )
     new_fps = rows.dropDuplicates()
     fps, _ = materialize(index.fps.unionByName(new_fps).dropDuplicates())

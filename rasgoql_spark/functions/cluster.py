@@ -58,6 +58,7 @@ from ..errors import ParameterException
 from ..operators._util import resolve_col, spread
 from ..registry import renderer, spark_transform
 from ._cache import release_with, scoped_persist
+from ._filter import drop_sql, finish, reread_input
 from ._litfast import centroid_array_lit
 from .similarity import _argmax_cid, _attach_centroids
 
@@ -734,13 +735,15 @@ def semantic_dedup(
         raise ParameterException("threshold must be in [-1, 1]")
     if max_cluster_size is not None and max_cluster_size < 2:
         raise ParameterException("max_cluster_size must be >= 2")
-    if isinstance(k, str):
-        if k != "auto":
-            raise ParameterException("k must be an int or 'auto'")
+    if isinstance(k, str) and k != "auto":
+        raise ParameterException("k must be an int or 'auto'")
+    v, i = resolve_col(df, vec_col), resolve_col(df, id_col)
+    # df is read by the count, the corpus cache and the labeled drop
+    df, inp = reread_input(df)
+    if k == "auto":
         import math
 
         k = max(8, math.ceil(df.count() / 5000))
-    v, i = resolve_col(df, vec_col), resolve_col(df, id_col)
     # one normalized corpus cache shared by the fit, the pair join, and
     # the final assignment (round 13): composing kmeans_cluster here used
     # to normalize the corpus TWICE (once inside its own cache, once for
@@ -761,15 +764,11 @@ def semantic_dedup(
         pairs.filter(F.col("__cos") >= threshold)
         .select(F.col("__idb").alias("__id"))
         .unionByName(member_drops)
-        .select(F.col("__id").alias(i))
-        .dropDuplicates()
     )
-    out = (
-        df.join(asg.select(F.col("__id").alias(i), "CLUSTER_ID"), on=i, how="inner")
-        .select(*df.columns, "CLUSTER_ID")
-        .join(drops, on=i, how="left_anti")
-    )
-    return release_with(out, cached, asg, *caches)
+    labeled = df.join(
+        asg.select(F.col("__id").alias(i), "CLUSTER_ID"), on=i, how="inner"
+    ).select(*df.columns, "CLUSTER_ID")
+    return finish(labeled, i, "filter", drops, cached, asg, *caches, *inp, key="__id")
 
 @renderer("semantic_dedup")
 def _r_semantic_dedup(
@@ -807,13 +806,12 @@ def _r_semantic_dedup(
         " __sd_base)"
     )
     drops = (
-        f"__sd_d AS (SELECT DISTINCT b.__id FROM __sd_u a JOIN __sd_u b "
+        f"SELECT b.__id FROM __sd_u a JOIN __sd_u b "
         f"ON a.CLUSTER_ID = b.CLUSTER_ID AND a.__id < b.__id "
         f"WHERE round({_dot_sql('a.__u', 'b.__u')}, {int(round_to)}) >= "
-        f"CAST({float(threshold)!r} AS DOUBLE))"
+        f"CAST({float(threshold)!r} AS DOUBLE)"
     )
     return (
-        f"SELECT * FROM (WITH __sd_a AS ({kmeans_sql}), {withu}, {drops} "
-        f"SELECT x.* FROM __sd_a x LEFT ANTI JOIN __sd_d d "
-        f"ON x.{id_col} = d.__id) __sd_out"
+        f"SELECT * FROM (WITH __sd_a AS ({kmeans_sql}), {withu} "
+        f"{drop_sql('__sd_a', id_col, drops, key='__id')}) __sd_out"
     )

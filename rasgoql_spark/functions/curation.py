@@ -7,7 +7,8 @@ Design for 100 TB:
   distinct n-grams are broadcast (eval benchmarks are tiny next to a training
   corpus), the corpus explodes to slim ``(id, ngram)`` rows that join
   map-side, and the per-document roll-up shuffles only ``(id, two ints)``.
-  Filter mode broadcasts the flagged-id set (contaminated docs ≪ corpus).
+  Filter mode drops the flagged ids with the shared filter step
+  (``functions/_filter.py``).
 - Everything else is row-local JVM expressions (regex / array built-ins) —
   embarrassingly parallel, no shuffle, whole-stage codegen.
 - ``shuffle_deterministic`` is a seeded total sort: Spark's range-partitioned
@@ -26,8 +27,9 @@ from ..errors import ParameterException
 from ..naming import cleanse_name
 from ..operators._util import as_list, resolve_col, spread, with_columns_sql
 from ..registry import renderer, spark_transform
-from ._cache import cheap_to_recompute, release_with, scoped_persist
-from ._hash import shingles_expr, tokens_expr
+from ._filter import check_mode, drop_sql, finish, reread_input
+from ._hash import shingles_expr, shingles_spark_sql, tokens_expr
+from .dedup import _cosine_sql, _shingle_sets, _shingle_sets_sql, cosine_expr
 
 # PII patterns — deliberately simple alternation-free shapes: identical match
 # spans under Java regex (Spark) and RE2 (DuckDB oracle).
@@ -36,19 +38,6 @@ IP_PATTERN = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
 PHONE_PATTERN = r"\+?\d[\d().\- ]{7,14}\d"
 URL_PATTERN = r"https?://[^\s]+"
 DOMAIN_PATTERN = r"https?://([^/:?#]+)"
-
-
-def _shingles_spark_sql(toks: str, k: int) -> str:
-    """Spark-SQL rendering of _hash.shingles_expr over a token-array expr."""
-    ngrams = (
-        f"transform(sequence(1, size({toks}) - {k - 1}), "
-        f"i -> concat_ws(' ', slice({toks}, i, {k})))"
-    )
-    return (
-        f"array_distinct(CASE WHEN size({toks}) >= {k} THEN {ngrams} "
-        f"WHEN size({toks}) > 0 THEN array(concat_ws(' ', {toks})) "
-        f"ELSE CAST(array() AS ARRAY<STRING>) END)"
-    )
 
 
 @spark_transform("decontaminate", category="curation", streaming_ok=False)
@@ -74,41 +63,22 @@ def decontaminate(
     corpus side explodes to slim (id, ngram) pairs that join without
     shuffling the corpus; the per-doc count shuffles (id, int, int) only.
     """
-    if mode not in ("score", "filter"):
-        raise ParameterException("mode must be 'score' or 'filter'")
+    check_mode(mode, ("score", "filter"))
     t, i = resolve_col(df, text), resolve_col(df, id_col)
     et = resolve_col(eval_table, eval_text or text)
-    input_caches: tuple = ()
-    if mode == "filter" and not cheap_to_recompute(df):
-        # filter mode consumes the input twice (the n-gram scoring pipeline
-        # and the anti-join's left side). A bare scan re-reads cheaper than
-        # it caches; a mid-chain input (e.g. dedup_url output inside
-        # pipeline_e2e, whose window re-executes per consumer above the
-        # reused exchange) gets one scoped persist across the two consumers,
-        # released with the result (round 14).
-        df = scoped_persist(df)
-        input_caches = (df,)
-    # stage tokens as a REAL column before the shingle HOF: a lambda that
-    # captures the raw tokenization expression re-evaluates it per array
-    # element (the round-1 25× lesson, dedup.py:59-71); referenced >1×, the
-    # staged column survives CollapseProject and the lambda reads an attribute
-    staged = (
-        spread(df)
-        .select(F.col(i), tokens_expr(F.col(t)).alias("__tk"))
-        .select(F.col(i), shingles_expr(F.col("__tk"), ngram).alias("__sh"))
-    )
+    df, inp = reread_input(df, mode)
     ev = (
         eval_table.select(tokens_expr(F.col(et)).alias("__tk"))
         .select(F.explode(shingles_expr(F.col("__tk"), ngram)).alias("__ng"))
         .distinct()
         .withColumn("__hit", F.lit(1))
     )
-    exploded = staged.select(
-        i, F.size("__sh").alias("__tot"), F.explode_outer("__sh").alias("__ng")
+    exploded = _shingle_sets(df, t, i, ngram).select(
+        "__id", F.size("__sh").alias("__tot"), F.explode_outer("__sh").alias("__ng")
     )
     scored = (
         exploded.join(F.broadcast(ev), "__ng", "left")
-        .groupBy(i)
+        .groupBy("__id")
         .agg(
             F.max("__tot").cast("bigint").alias("NGRAM_TOTAL"),
             F.count("__hit").cast("bigint").alias("NGRAM_MATCHED"),
@@ -121,14 +91,15 @@ def decontaminate(
         6,
     )
     if mode == "score":
-        return scored.withColumn("CONTAMINATION", contamination)
-    flagged = scored.filter(contamination >= F.lit(threshold)).select(i)
-    # no broadcast hint: the contaminated-id set is data-dependent and
-    # unbounded in principle (a wholly-contaminated corpus flags every id) —
-    # let AQE pick broadcast vs shuffle from the observed size at runtime
-    return release_with(
-        df.join(flagged, i, "left_anti").select(*df.columns), *input_caches
-    )
+        return scored.select(
+            F.col("__id").alias(i), "NGRAM_TOTAL", "NGRAM_MATCHED",
+            contamination.alias("CONTAMINATION"),
+        )
+    # no broadcast hint on the drop: the contaminated-id set is
+    # data-dependent and unbounded in principle (a wholly-contaminated
+    # corpus flags every id) — AQE picks broadcast vs shuffle at runtime
+    flagged = scored.filter(contamination >= F.lit(threshold))
+    return finish(df, id_col, mode, flagged, *inp, key="__id")
 
 
 @renderer("decontaminate")
@@ -139,21 +110,19 @@ def _r_decontaminate(
     from .text import _tokens_sql
 
     et = eval_text or text
-    corpus_sh = _shingles_spark_sql("__t", ngram)
     x = (
-        f"(SELECT {id_col}, size(__sh) AS __tot, explode_outer(__sh) AS __ng "
-        f"FROM (SELECT {id_col}, {corpus_sh} AS __sh "
-        f"FROM (SELECT {id_col}, {_tokens_sql(text)} AS __t FROM {source})))"
+        f"(SELECT __id, size(__sh) AS __tot, explode_outer(__sh) AS __ng "
+        f"FROM {_shingle_sets_sql(source, text, id_col, ngram)})"
     )
     e = (
         f"(SELECT DISTINCT explode(__sh) AS __ng "
-        f"FROM (SELECT {_shingles_spark_sql('__t', ngram)} AS __sh "
+        f"FROM (SELECT {shingles_spark_sql('__t', ngram)} AS __sh "
         f"FROM (SELECT {_tokens_sql(et)} AS __t FROM {eval_table})))"
     )
     scored = (
-        f"SELECT x.{id_col}, CAST(max(x.__tot) AS BIGINT) AS NGRAM_TOTAL, "
+        f"SELECT x.__id, CAST(max(x.__tot) AS BIGINT) AS NGRAM_TOTAL, "
         f"CAST(count(e.__ng) AS BIGINT) AS NGRAM_MATCHED "
-        f"FROM {x} x LEFT JOIN {e} e ON x.__ng = e.__ng GROUP BY x.{id_col}"
+        f"FROM {x} x LEFT JOIN {e} e ON x.__ng = e.__ng GROUP BY x.__id"
     )
     contamination = (
         "ROUND(CASE WHEN NGRAM_TOTAL > 0 "
@@ -161,14 +130,11 @@ def _r_decontaminate(
     )
     if mode == "score":
         return (
-            f"SELECT {id_col}, NGRAM_TOTAL, NGRAM_MATCHED, "
+            f"SELECT __id AS {id_col}, NGRAM_TOTAL, NGRAM_MATCHED, "
             f"{contamination} AS CONTAMINATION FROM ({scored})"
         )
-    return (
-        f"SELECT s.* FROM {source} s LEFT ANTI JOIN "
-        f"(SELECT {id_col} FROM ({scored}) WHERE {contamination} >= {threshold}) f "
-        f"ON s.{id_col} = f.{id_col}"
-    )
+    flagged = f"SELECT __id FROM ({scored}) WHERE {contamination} >= {threshold}"
+    return drop_sql(source, id_col, flagged, key="__id")
 
 
 @spark_transform("pii_scrub", category="curation")
@@ -935,12 +901,10 @@ def decontaminate_embedding(
     itself never shuffles, and the per-id rollup ships one (id, double)
     row per corpus row at most.
     """
-    from .dedup import cosine_expr
-
-    if mode not in ("score", "filter"):
-        raise ParameterException("mode must be 'score' or 'filter'")
+    check_mode(mode, ("score", "filter"))
     v, i = resolve_col(df, vec_col), resolve_col(df, id_col)
     ev = resolve_col(eval_table, eval_vec or vec_col)
+    df, inp = reread_input(df, mode)
     evs = spread(eval_table).select(F.col(ev).alias("__evec"))
     cos = F.round(cosine_expr(F.col(v), F.col("__evec")), round_to)
     scored = (
@@ -952,8 +916,8 @@ def decontaminate_embedding(
     )
     if mode == "score":
         return scored
-    flagged = scored.filter(F.col("MAX_EVAL_COSINE") >= threshold).select(i)
-    return df.join(flagged, i, "left_anti").select(*df.columns)
+    flagged = scored.filter(F.col("MAX_EVAL_COSINE") >= threshold)
+    return finish(df, id_col, mode, flagged, *inp, key=i)
 
 
 @renderer("decontaminate_embedding")
@@ -962,7 +926,6 @@ def _r_decontaminate_embedding(
     mode="score", round_to=6,
 ) -> str:
     from ..errors import TransformRenderingException
-    from .dedup import _cosine_sql
 
     if eval_table is None or eval_table == "<dataframe>":
         raise TransformRenderingException(
@@ -977,11 +940,8 @@ def _r_decontaminate_embedding(
     )
     if mode == "score":
         return scored
-    return (
-        f"SELECT src.* FROM {source} src LEFT ANTI JOIN "
-        f"(SELECT {id_col} FROM ({scored}) WHERE MAX_EVAL_COSINE >= "
-        f"{threshold}) f ON src.{id_col} = f.{id_col}"
-    )
+    flagged = f"SELECT {id_col} FROM ({scored}) WHERE MAX_EVAL_COSINE >= {threshold}"
+    return drop_sql(source, id_col, flagged, key=id_col)
 
 
 @renderer("bigram_logprob")

@@ -28,16 +28,16 @@ only in the candidate key and the verify score.
    member level. Members share their representative's signature, so two
    docs collide iff their representatives collide and identical sets
    score exactly 1.0; the collapse never changes the result.
-6. Filter (``_check_mode`` up front, ``_filter_input``, ``_finish``):
-   mode='filter' is the input minus the larger id of every pair. The
-   input is consumed twice (the pipeline and the anti-join's left side),
-   so a mid-chain input is persisted across both unless
-   ``cheap_to_recompute`` says a re-scan is cheaper (``_reread_input``;
-   the cluster operators' shared ``_clusters`` applies the same rule).
+6. Filter (``functions/_filter.py``, shared with every other
+   filter-mode operator): mode='filter' is the input minus the larger id
+   of every pair. ``check_mode`` runs up front; ``reread_input`` persists
+   a mid-chain input across its two reads (the pipeline and the
+   anti-join's left side; the cluster operators' shared ``_clusters``
+   applies the same rule); ``finish`` drops the ids.
 
 The renderers reproduce the plain (uncollapsed) path with the same
 stages: ``_shingle_sets_sql``, ``_cand_sql``, ``_attach_sql``,
-``_jaccard_sql`` and ``_drop_sql``.
+``_jaccard_sql`` and ``_filter.drop_sql``.
 
 Design for 100 TB:
 - Exact dedup is a fingerprint hash-groupBy — one shuffle on a 128-bit key.
@@ -61,12 +61,8 @@ from pyspark.sql import functions as F
 from ..errors import ParameterException
 from ..operators._util import resolve_col, spread
 from ..registry import renderer, spark_transform
-from ._cache import (
-    cheap_to_recompute,
-    release_now,
-    release_with,
-    scoped_persist,
-)
+from ._cache import release_now, release_with, scoped_persist
+from ._filter import check_mode, drop_sql, finish, released_on_error, reread_input
 from ._index import (
     PersistedIndex,
     check_fresh,
@@ -77,7 +73,9 @@ from ._index import (
     read_params,
     save_artifact,
 )
-from ._hash import MERSENNE, md5_int, shingles_expr, tokens_expr
+from ._hash import (
+    MERSENNE, md5_int, norm_fp, shingles_expr, shingles_spark_sql, tokens_expr,
+)
 
 
 @spark_transform("dedup_exact", category="dedup", streaming_ok=False)
@@ -350,54 +348,6 @@ def _check_bands(num_hashes: int, bands, threshold: float | None = None) -> int:
     return bands
 
 
-def _check_mode(mode: str, modes=("pairs", "filter", "edges")) -> None:
-    """Reject an unknown ``mode`` before the operator persists or runs
-    anything."""
-    if mode not in modes:
-        q = [f"'{m}'" for m in modes]
-        listed = " or ".join(q) if len(q) == 2 else ", ".join(q[:-1]) + ", or " + q[-1]
-        raise ParameterException(f"mode must be {listed}")
-
-
-def _reread_input(df: DataFrame) -> tuple[DataFrame, tuple]:
-    """Persist an input the operator reads twice with eager jobs in
-    between (the collapse guard, the min-label loop): without a cache a
-    mid-chain input's upstream lineage executes once per read (a curation
-    chain would re-run every upstream operator). A scan-rooted input
-    skips the persist: re-scanning is cheaper than the cache write
-    (``cheap_to_recompute``). Call after every parameter check. Returns
-    ``(df, caches)``; the caller releases ``caches`` with its result."""
-    if cheap_to_recompute(df):
-        return df, ()
-    df = scoped_persist(df)
-    return df, (df,)
-
-
-def _filter_input(df: DataFrame, mode: str) -> tuple[DataFrame, tuple]:
-    """The filter step's front: mode='filter' consumes the INPUT twice —
-    the pipeline and the final anti-join's left side — so it goes through
-    ``_reread_input``; pairs/edges consume it once. Returns
-    ``(df, caches)``; pass ``caches`` to ``_finish``."""
-    return _reread_input(df) if mode == "filter" else (df, ())
-
-
-def _finish(
-    df: DataFrame, id_col: str, mode: str, out: DataFrame, *caches: DataFrame,
-    key: str = "ID_B",
-) -> DataFrame:
-    """The filter step's end: mode='filter' returns the input rows minus
-    every ``key`` id of ``out`` (the larger id of each near-dup pair), any
-    other mode ``out`` itself; either way ``caches`` are released with the
-    result."""
-    if mode != "filter":
-        return release_with(out, *caches)
-    i = resolve_col(df, id_col)
-    dupes = out.select(F.col(key).alias(i)).distinct()
-    return release_with(
-        df.join(dupes, on=i, how="left_anti").select(*df.columns), *caches
-    )
-
-
 def _expand_collapsed(
     rep_pairs: DataFrame,
     members: DataFrame,
@@ -570,8 +520,8 @@ def dedup_minhash(
     self-join see each distinct shingle set once.
     """
     bands = _check_bands(num_hashes, bands, threshold)
-    _check_mode(mode)
-    df, inp = _filter_input(df, mode)
+    check_mode(mode)
+    df, inp = reread_input(df, mode)
     # persisted inside: the annotated signature table feeds the band join,
     # both verify sides AND the member expansion; released with the result
     sig, has_dups, caches = _annotate_sets(
@@ -583,7 +533,7 @@ def dedup_minhash(
         _jaccard_pairs(cand, reps, threshold), sig, mode, "JACCARD",
         _dup_score(), lambda c: c >= threshold, has_dups=has_dups,
     )
-    return _finish(df, id_col, mode, out, *caches, *inp)
+    return finish(df, id_col, mode, out, *caches, *inp)
 
 
 @spark_transform("ngram_containment", category="dedup", streaming_ok=False)
@@ -691,7 +641,7 @@ def _clusters(
     """``near_dup_clusters``' pipeline, shared by the three operators built
     on it. Each reads ``df`` again after the clustering's eager jobs (the
     final join back to the input), so a mid-chain input is persisted once
-    here (``_reread_input``), at the outermost consumer. Returns ``(df,
+    here (``reread_input``), at the outermost consumer. Returns ``(df,
     clusters, caches)``: the input to read from, the ``(id_col,
     CLUSTER_ID)`` frame, and the caches the caller ties to its result with
     ``release_with``."""
@@ -701,23 +651,20 @@ def _clusters(
     i = resolve_col(df, id_col)
     if method not in ("minhash", "simhash"):
         raise ParameterException("method must be 'minhash' or 'simhash'")
-    df, inp = _reread_input(df)
+    df, inp = reread_input(df)
     # 'edges' mode: rep-level pairs + star edges — same connected components
     # as the full pair set at O(n + rep_pairs) rows, where 'pairs' is
     # quadratic inside exact-duplicate groups (a 100k-copy page would emit
     # ~5·10^9 intra-group pairs that all carry the same label information).
     # The pair frame itself is not kept, so its signature caches free before
     # the loop runs; the loop reads only its own edge cache.
-    try:
+    with released_on_error(*inp):
         pairs = (
             dedup_minhash(df, text, id_col, threshold=threshold, mode="edges", **kwargs)
             if method == "minhash"
             else dedup_simhash(df, text, id_col, mode="edges", **kwargs)
         ).select(F.col("ID_A").alias("__src"), F.col("ID_B").alias("__dst"))
         labels, edges = min_label_components(pairs, max_iterations)
-    except Exception:
-        release_now(*inp)  # free the input cache when the clustering raises
-        raise
     # CLUSTER_ID stays in the id column's native type: a bigint cast on a
     # string doc-id column would NULL every label and make dedup_by_cluster's
     # (id == CLUSTER_ID) filter drop all rows.
@@ -835,8 +782,8 @@ def dedup_simhash(
     """
     inp: tuple = ()
     if mode != "signatures":
-        _check_mode(mode)
-        df, inp = _filter_input(df, mode)
+        check_mode(mode)
+        df, inp = reread_input(df, mode)
     t, i = resolve_col(df, text), resolve_col(df, id_col)
     sig = spread(df).select(
         F.col(i).alias("__id"),
@@ -872,7 +819,7 @@ def dedup_simhash(
         F.lit(0).cast("integer"), lambda c: c <= hamming_threshold,
         has_dups=has_dups,
     )
-    return _finish(df, id_col, mode, out, *caches, *inp)
+    return finish(df, id_col, mode, out, *caches, *inp)
 
 
 def _md5_int_spark_sql(x: str = "x") -> str:
@@ -882,11 +829,10 @@ def _md5_int_spark_sql(x: str = "x") -> str:
 
 def _shingle_sets_sql(source, text, id_col, shingle_size) -> str:
     """SQL twin of ``_shingle_sets``: the staged ``(__id, __sh)`` table."""
-    from .curation import _shingles_spark_sql
     from .text import _tokens_sql
 
     return (
-        f"(SELECT __id, {_shingles_spark_sql('__t', shingle_size)} AS __sh "
+        f"(SELECT __id, {shingles_spark_sql('__t', shingle_size)} AS __sh "
         f"FROM (SELECT {id_col} AS __id, {_tokens_sql(text)} AS __t "
         f"FROM {source}))"
     )
@@ -928,15 +874,6 @@ def _jaccard_pairs_sql(tbl: str, cand: str, threshold) -> str:
         f"SELECT __ida AS ID_A, __idb AS ID_B, JACCARD FROM "
         f"(SELECT c.__ida, c.__idb, {_jaccard_sql()} AS JACCARD FROM "
         f"{_attach_sql(cand, tbl)}) WHERE JACCARD >= {threshold}"
-    )
-
-
-def _drop_sql(source, id_col, pairs: str, key: str = "ID_B") -> str:
-    """SQL twin of ``_finish``'s filter mode: ``source`` rows minus every
-    ``key`` id of ``pairs``."""
-    return (
-        f"SELECT s.* FROM {source} s LEFT ANTI JOIN "
-        f"(SELECT DISTINCT {key} FROM ({pairs})) d ON s.{id_col} = d.{key}"
     )
 
 
@@ -993,7 +930,7 @@ def _r_dedup_simhash(
         f"FROM {sig_tbl} a JOIN {sig_tbl} b ON a.__id < b.__id "
         f"WHERE {ham} <= {int(hamming_threshold)}"
     )
-    return pairs if mode == "pairs" else _drop_sql(source, id_col, pairs)
+    return pairs if mode == "pairs" else drop_sql(source, id_col, pairs)
 
 
 def _minhash_sig_spark_sql(sh: str, num_hashes: int) -> str:
@@ -1034,7 +971,7 @@ def _r_dedup_minhash(
         source, text, id_col, num_hashes, bands, shingle_size, threshold
     )
     pairs = _jaccard_pairs_sql(mh_tbl, cand, threshold)
-    return pairs if mode == "pairs" else _drop_sql(source, id_col, pairs)
+    return pairs if mode == "pairs" else drop_sql(source, id_col, pairs)
 
 
 @spark_transform("dedup_ngram_jaccard", category="dedup", streaming_ok=False)
@@ -1067,8 +1004,8 @@ def dedup_ngram_jaccard(
     shingle it shares is that common. ``None`` disables the cap (exact,
     unbounded)."""
     _check_doc_freq(max_doc_freq)
-    _check_mode(mode)
-    df, inp = _filter_input(df, mode)
+    check_mode(mode)
+    df, inp = reread_input(df, mode)
     sig, has_dups, caches = _annotate_sets(_shingle_sets(df, text, id_col, shingle_size))
     reps = _reps(sig)
     inv, live = _capped_postings(reps, max_doc_freq)
@@ -1077,7 +1014,7 @@ def dedup_ngram_jaccard(
         "JACCARD", _dup_score(), lambda c: c >= threshold,
         has_dups=has_dups, require_ne=True, live_reps=live,
     )
-    return _finish(df, id_col, mode, out, *caches, *inp)
+    return finish(df, id_col, mode, out, *caches, *inp)
 
 
 def _inverted_cand_sql(source, text, id_col, shingle_size, max_doc_freq):
@@ -1116,7 +1053,7 @@ def _r_dedup_ngram_jaccard(
         )
     sh_tbl, cand = _inverted_cand_sql(source, text, id_col, shingle_size, max_doc_freq)
     pairs = _jaccard_pairs_sql(sh_tbl, cand, threshold)
-    return pairs if mode == "pairs" else _drop_sql(source, id_col, pairs)
+    return pairs if mode == "pairs" else drop_sql(source, id_col, pairs)
 
 
 @renderer("ngram_containment")
@@ -1281,11 +1218,11 @@ def dedup_embedding(
     v, i = resolve_col(df, vec_col), resolve_col(df, id_col)
     if method not in ("lsh", "brute"):
         raise ParameterException("method must be 'lsh' or 'brute'")
-    _check_mode(mode)
+    check_mode(mode)
     collapse = round_scores is not None
     if not collapse and mode != "pairs":
         raise ParameterException("mode='edges'/'filter' requires round_scores")
-    df, inp = _filter_input(df, mode)
+    df, inp = reread_input(df, mode)
     base = spread(df).select(F.col(i).alias("__id"), F.col(v).alias("__vec"))
     if method == "lsh":
         sig = F.concat_ws(
@@ -1333,7 +1270,7 @@ def dedup_embedding(
         rep_pairs, base, mode, "COSINE", _dup_score(), lambda c: c >= threshold,
         has_dups=has_dups,
     )
-    return _finish(df, id_col, mode, out, *caches, *inp)
+    return finish(df, id_col, mode, out, *caches, *inp)
 
 
 @renderer("dedup_embedding")
@@ -1364,7 +1301,7 @@ def _r_dedup_embedding(
         f"FROM {side} a CROSS JOIN {side} b "
         f"WHERE a.__id < b.__id AND {cos} >= {threshold}"
     )
-    return pairs if mode == "pairs" else _drop_sql(source, id_col, pairs)
+    return pairs if mode == "pairs" else drop_sql(source, id_col, pairs)
 
 
 def _bands_long(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
@@ -1421,7 +1358,7 @@ def dedup_against(
     passed, the reference row count is checked against the count recorded in
     the index at build time, so a stale index can't silently under-dedup.
     """
-    _check_mode(mode, ("filter", "pairs"))
+    check_mode(mode, ("filter", "pairs"))
     if reference is None and index is None:
         raise ParameterException(
             "dedup_against needs a reference frame or a prebuilt MinHashIndex"
@@ -1442,31 +1379,17 @@ def dedup_against(
                 "method='exact' requires a reference frame and no index "
                 "(MinHashIndex only serves method='minhash')"
             )
-        def fp(c):
-            return F.md5(
-                F.trim(
-                    F.regexp_replace(
-                        F.regexp_replace(F.lower(c), r"[^a-z0-9\s]", " "),
-                        r"\s+",
-                        " ",
-                    )
-                )
-            )
-
-        a = df.select(F.col(i).alias("__id"), fp(F.col(t)).alias("__fp"))
-        b = reference.select(F.col(ri).alias("__rid"), fp(F.col(rt)).alias("__fp"))
+        df, inp = reread_input(df, mode)
+        a = df.select(F.col(i).alias("__id"), norm_fp(F.col(t)).alias("__fp"))
+        b = reference.select(F.col(ri).alias("__rid"), norm_fp(F.col(rt)).alias("__fp"))
         if mode == "pairs":
             return a.join(b, "__fp").select(
                 F.col("__id").alias("ID"),
                 F.col("__rid").alias("REF_ID"),
                 F.lit(1.0).alias("JACCARD"),
             )
-        matched = (
-            a.join(b.select("__fp").dropDuplicates(), "__fp", "leftsemi")
-            .select(F.col("__id").alias(i))
-            .dropDuplicates()
-        )
-        return df.join(matched, on=i, how="left_anti").select(*df.columns)
+        matched = a.join(b.select("__fp").dropDuplicates(), "__fp", "leftsemi")
+        return finish(df, id_col, mode, matched, *inp, key="__id")
     if method == "minhash":
         bands = _check_bands(num_hashes, bands)
         if index is not None:
@@ -1483,7 +1406,7 @@ def dedup_against(
             # a stale index silently under-dedups. Omit reference entirely
             # (it is unused on the index path) to skip the count.
             check_fresh(index, reference)
-        df, inp = _filter_input(df, mode)
+        df, inp = reread_input(df, mode)
         # Exact-duplicate collapse on BOTH corpora: a boilerplate page with
         # 100k copies in the ACCEPTED reference corpus would otherwise sit
         # in every band bucket 100k deep.
@@ -1522,7 +1445,7 @@ def dedup_against(
         dupes = sig_a.join(matched, on="__rep", how="left_semi").select(
             F.col("__id").alias("ID")
         )
-        return _finish(df, id_col, mode, dupes, *caches, key="ID")
+        return finish(df, id_col, mode, dupes, *caches, key="ID")
     raise ParameterException("method must be 'exact' or 'minhash'")
 
 
@@ -1557,10 +1480,11 @@ def _r_dedup_against(
             f"FROM {source} s JOIN {reference} r "
             f"ON md5({_norm_sql(f's.{text}')}) = md5({_norm_sql(f'r.{et}')})"
         )
-    return (
-        f"SELECT s.* FROM {source} s LEFT ANTI JOIN ({ref_fps}) f "
+    matched = (
+        f"SELECT s.{id_col} AS ID FROM {source} s LEFT SEMI JOIN ({ref_fps}) f "
         f"ON md5({_norm_sql(f's.{text}')}) = f.__fp"
     )
+    return drop_sql(source, id_col, matched, key="ID")
 
 
 @spark_transform("dedup_keep_best", category="dedup", streaming_ok=False)
@@ -2070,8 +1994,7 @@ def dedup_substring(
     unaffected); ``None`` disables, or pre-clean with
     remove_repeated_spans for the paper-exact result on loopy corpora.
     """
-    if mode not in ("pairs", "filter", "clean"):
-        raise ParameterException("mode must be 'pairs', 'filter' or 'clean'")
+    check_mode(mode, ("pairs", "filter", "clean"))
     if min_tokens < 2:
         raise ParameterException("min_tokens must be >= 2")
     if max_doc_freq is not None and max_doc_freq < 1:
@@ -2080,6 +2003,7 @@ def dedup_substring(
         raise ParameterException("max_positions must be >= 1 (or None)")
     k = int(min_tokens)
     t, i = resolve_col(df, text), resolve_col(df, id_col)
+    df, inp = reread_input(df, mode)
     base = spread(df).select(
         F.col(i).alias("__id"), tokens_expr(F.col(t)).alias("__t")
     )
@@ -2183,12 +2107,8 @@ def dedup_substring(
         pairs = out_cross.unionByName(out_intra)
     else:
         pairs = runs
-    if mode == "pairs":
-        return release_with(pairs, inv, *caches)
-    if mode == "filter":
-        drop = pairs.select(F.col("ID_B").alias("__drop_id")).distinct()
-        kept = df.join(drop, F.col(i) == F.col("__drop_id"), "left_anti")
-        return release_with(kept, inv, *caches)
+    if mode != "clean":
+        return finish(df, id_col, mode, pairs, inv, *caches, *inp)
     # mode='clean' — the paper's actual output: delete the shared-run
     # tokens from the LATER document of every pair (keep-min keeps the
     # first occurrence intact), merge overlapping deletions per doc, and
@@ -2247,8 +2167,7 @@ def _r_dedup_substring(
     because identical contents have identical position sets."""
     from .text import _tokens_sql
 
-    if mode not in ("pairs", "filter", "clean"):
-        raise ParameterException("mode must be 'pairs', 'filter' or 'clean'")
+    check_mode(mode, ("pairs", "filter", "clean"))
     if min_tokens < 2:
         raise ParameterException("min_tokens must be >= 2")
     k = int(min_tokens)
@@ -2297,7 +2216,7 @@ def _r_dedup_substring(
     if mode == "pairs":
         return pairs
     if mode == "filter":
-        return _drop_sql(source, id_col, pairs)
+        return drop_sql(source, id_col, pairs)
     # mode='clean': merge each later doc's deletion intervals (islands over
     # running max end), then a positional HOF filter rebuilds the text
     iv0 = (
@@ -2721,8 +2640,7 @@ def dedup_against_substring(
     contract; with a prebuilt index the cap is baked into its postings
     (explicit conflicting values raise, omitting uses the index's).
     """
-    if mode not in ("filter", "pairs"):
-        raise ParameterException("mode must be 'filter' or 'pairs'")
+    check_mode(mode, ("filter", "pairs"))
     if reference is None and index is None:
         raise ParameterException(
             "dedup_against_substring needs a reference frame or a prebuilt "
@@ -2765,6 +2683,7 @@ def dedup_against_substring(
             max_positions=max_positions,
         )
     t, i = resolve_col(df, text), resolve_col(df, id_col)
+    df, inp = reread_input(df, mode)
     k = idx.min_tokens
     # the batch side gets the same within-doc repetition bound as the
     # index side — the alignment blowup is the r x s product of both
@@ -2793,16 +2712,12 @@ def dedup_against_substring(
         )
     )
     if mode == "pairs":
-        out = runs.join(idx.members, on="__ck").select(
+        runs = runs.join(idx.members, on="__ck").select(
             F.col("__bid").alias("ID"), F.col("__id").alias("REF_ID"),
             "START", "REF_START", "MATCH_TOKENS",
         )
-    else:
-        hit = runs.select("__bid").distinct()
-        out = df.join(hit, F.col(i) == F.col("__bid"), "left_anti")
-    if built is not None:
-        return release_with(out, *built._owned)
-    return out
+    owned = () if built is None else built._owned
+    return finish(df, id_col, mode, runs, *owned, *inp, key="__bid")
 
 
 @renderer("dedup_against_substring")
@@ -2816,8 +2731,7 @@ def _r_dedup_against_substring(
     reference content, diagonal) maximal runs, member expansion."""
     from .text import _tokens_sql
 
-    if mode not in ("filter", "pairs"):
-        raise ParameterException("mode must be 'filter' or 'pairs'")
+    check_mode(mode, ("filter", "pairs"))
     if min_tokens < 2:
         raise ParameterException("min_tokens must be >= 2")
     k = int(min_tokens)
@@ -2874,4 +2788,4 @@ def _r_dedup_against_substring(
         f"CAST(COUNT(1) + {k} - 1 AS BIGINT) AS MATCH_TOKENS "
         f"FROM {runs} GROUP BY __bid, __rid, __diag, __grp"
     )
-    return pairs if mode == "pairs" else _drop_sql(source, id_col, pairs, key="ID")
+    return pairs if mode == "pairs" else drop_sql(source, id_col, pairs, key="ID")

@@ -18,6 +18,7 @@ from ..errors import ParameterException
 from ..operators._util import resolve_col, spread
 from ..registry import renderer, spark_transform
 from ._cache import release_now, release_with, scoped_persist
+from ._filter import check_mode, drop_sql, finish, released_on_error, reread_input
 from ._index import (
     PersistedIndex,
     check_fresh,
@@ -840,8 +841,7 @@ def dedup_against_embedding(
     ``load_ivfpq_index``, foldable with ``update_ivfpq_index``) amortizes
     both fits so per-batch cost is independent of reference size.
     """
-    if mode not in ("filter", "pairs"):
-        raise ParameterException("mode must be 'filter' or 'pairs'")
+    check_mode(mode, ("filter", "pairs"))
     if method not in ("brute", "ivf", "ivfpq", "binary"):
         raise ParameterException(
             "method must be 'brute', 'ivf', 'ivfpq' or 'binary'"
@@ -853,109 +853,109 @@ def dedup_against_embedding(
             "BinaryIndex for 'binary')"
         )
     v, i = resolve_col(df, vec_col), resolve_col(df, id_col)
-    cached = None  # inline-built index frame, released with the final result
-    measure = "COSINE"
-    if method == "brute":
-        if reference is None or index is not None:
-            raise ParameterException(
-                "method='brute' requires a reference frame and no index "
-                "(IVFIndex only serves method='ivf')"
-            )
-        rv = resolve_col(reference, ref_vec or vec_col)
-        ri = resolve_col(reference, ref_id or id_col)
-        q = _with_normalized(
-            df.select(F.col(i).alias("__qid"), F.col(v).alias("__qvec")),
-            "__qvec", "__qn",
-        ).select("__qid", "__qn")
-        r = _with_normalized(
-            spread(reference).select(
-                F.col(ri).alias("__rid"), F.col(rv).alias("__rvec")
-            ),
-            "__rvec", "__rn",
-        ).select("__rid", "__rn")
-        cos = _dot(F.col("__qn"), F.col("__rn"))
-        if round_scores is not None:
-            cos = F.round(cos, round_scores)
-        scored = r.crossJoin(F.broadcast(q)).withColumn("__score", cos)
-    elif method == "binary":
-        if max_hamming < 0:
-            raise ParameterException("max_hamming must be >= 0")
-        if index is not None:
-            check_type(index, BinaryIndex, "method='binary'")
-            check_fresh(index, reference)
-        elif reference is None:
-            raise ParameterException(
-                "method='binary' needs a reference frame or a prebuilt "
-                "BinaryIndex"
-            )
-        rv, ri = ref_vec or vec_col, ref_id or id_col
-        nw = _sign_packing(df, v, n_words, "batch", index,
-                           (reference, rv, "reference"))
-        scored = _hamming_scores(
-            _packed(df, i, v, nw, "__qid", "__qsig"),
-            _signatures(index, reference, ri, rv, nw, "__rid"), "__rid",
-            max_hamming=max_hamming,
-        )
-        measure = "HAMMING"
-    elif method == "ivfpq":
-        from .pq import IVFPQIndex, _adc_scores, _ivfpq_queries, ivfpq_index
-
-        if round_scores is None:
-            raise ParameterException(
-                "method='ivfpq' scores by the rounded replay contract; "
-                "round_scores must be an int"
-            )
-        if index is not None:
-            check_type(index, IVFPQIndex, "method='ivfpq'")
-            check_fresh(index, reference)
-            pidx = index
-        else:
+    df, inp = reread_input(df, mode)
+    # held: the pinned input plus any inline-built index frame, released
+    # with the FINAL result (the r5 scoped-cache liveness lesson — tying
+    # them to an intermediate would free the index before the action runs)
+    with released_on_error(*inp) as held:
+        measure = "COSINE"
+        if method == "brute":
+            if reference is None or index is not None:
+                raise ParameterException(
+                    "method='brute' requires a reference frame and no index "
+                    "(IVFIndex only serves method='ivf')"
+                )
             rv = resolve_col(reference, ref_vec or vec_col)
             ri = resolve_col(reference, ref_id or id_col)
-            kc = (
-                num_centroids if isinstance(num_centroids, int)
-                else _resolve_k(num_centroids, reference.count())
+            q = _with_normalized(
+                df.select(F.col(i).alias("__qid"), F.col(v).alias("__qvec")),
+                "__qvec", "__qn",
+            ).select("__qid", "__qn")
+            r = _with_normalized(
+                spread(reference).select(
+                    F.col(ri).alias("__rid"), F.col(rv).alias("__rvec")
+                ),
+                "__rvec", "__rn",
+            ).select("__rid", "__rn")
+            cos = _dot(F.col("__qn"), F.col("__rn"))
+            if round_scores is not None:
+                cos = F.round(cos, round_scores)
+            scored = r.crossJoin(F.broadcast(q)).withColumn("__score", cos)
+        elif method == "binary":
+            if max_hamming < 0:
+                raise ParameterException("max_hamming must be >= 0")
+            if index is not None:
+                check_type(index, BinaryIndex, "method='binary'")
+                check_fresh(index, reference)
+            elif reference is None:
+                raise ParameterException(
+                    "method='binary' needs a reference frame or a prebuilt "
+                    "BinaryIndex"
+                )
+            rv, ri = ref_vec or vec_col, ref_id or id_col
+            nw = _sign_packing(df, v, n_words, "batch", index,
+                               (reference, rv, "reference"))
+            scored = _hamming_scores(
+                _packed(df, i, v, nw, "__qid", "__qsig"),
+                _signatures(index, reference, ri, rv, nw, "__rid"), "__rid",
+                max_hamming=max_hamming,
             )
-            pidx = ivfpq_index(
-                reference, rv, ri, num_centroids=kc, coarse_iterations=1,
-                m=pq_m, codebook_size=pq_codebook_size,
-                iterations=pq_iterations, round_to=round_scores,
-                residual=residual,
+            measure = "HAMMING"
+        elif method == "ivfpq":
+            from .pq import IVFPQIndex, _adc_scores, _ivfpq_queries, ivfpq_index
+
+            if round_scores is None:
+                raise ParameterException(
+                    "method='ivfpq' scores by the rounded replay contract; "
+                    "round_scores must be an int"
+                )
+            if index is not None:
+                check_type(index, IVFPQIndex, "method='ivfpq'")
+                check_fresh(index, reference)
+                pidx = index
+            else:
+                rv = resolve_col(reference, ref_vec or vec_col)
+                ri = resolve_col(reference, ref_id or id_col)
+                kc = (
+                    num_centroids if isinstance(num_centroids, int)
+                    else _resolve_k(num_centroids, reference.count())
+                )
+                pidx = ivfpq_index(
+                    reference, rv, ri, num_centroids=kc, coarse_iterations=1,
+                    m=pq_m, codebook_size=pq_codebook_size,
+                    iterations=pq_iterations, round_to=round_scores,
+                    residual=residual,
+                )
+                held.append(pidx.frame)
+            q = _ivfpq_queries(df, v, i, pidx, "batch")
+            # the batch is the small side by the operator's contract: its probe
+            # frame broadcasts, so the reference/PQ frame never shuffles
+            scored = _adc_scores(
+                q, pidx, _resolve_nprobe(nprobe, len(pidx.centroids)), "__rid",
+                hint="broadcast",
             )
-            cached = pidx.frame
-        q = _ivfpq_queries(df, v, i, pidx, "batch")
-        # the batch is the small side by the operator's contract: its probe
-        # frame broadcasts, so the reference/PQ frame never shuffles
-        scored = _adc_scores(
-            q, pidx, _resolve_nprobe(nprobe, len(pidx.centroids)), "__rid",
-            hint="broadcast",
-        )
-    else:
-        if index is not None:
-            check_type(index, IVFIndex, "method='ivf'")
-            check_fresh(index, reference)
-        lists, cents, cached = _ivf_lists(
-            reference, ref_vec or vec_col, ref_id or id_col, num_centroids,
-            index,
-        )
-        scored = _ivf_scores(
-            _ivf_queries(df, v, i, cents, None, "batch"), lists, cents,
-            _resolve_nprobe(nprobe, len(cents)), "__rid", round_scores,
-        )
+        else:
+            if index is not None:
+                check_type(index, IVFIndex, "method='ivf'")
+                check_fresh(index, reference)
+            lists, cents, inline = _ivf_lists(
+                reference, ref_vec or vec_col, ref_id or id_col, num_centroids,
+                index,
+            )
+            if inline is not None:
+                held.append(inline)
+            scored = _ivf_scores(
+                _ivf_queries(df, v, i, cents, None, "batch"), lists, cents,
+                _resolve_nprobe(nprobe, len(cents)), "__rid", round_scores,
+            )
     if measure == "COSINE":
         scored = scored.filter(F.col("__score") >= threshold)
     if mode == "pairs":
-        out = scored.select(
+        scored = scored.select(
             F.col("__qid").alias("ID"), F.col("__rid").alias("REF_ID"),
             F.col("__score").alias(measure),
         )
-    else:
-        flagged = scored.select(F.col("__qid").alias(i)).dropDuplicates()
-        out = df.join(flagged, on=i, how="left_anti").select(*df.columns)
-    # release ties to the FINAL result (the r5 scoped-cache liveness
-    # lesson) — tying it to the intermediate would free the inline-built
-    # index before the action runs
-    return out if cached is None else release_with(out, cached)
+    return finish(df, id_col, mode, scored, *held, key="__qid")
 
 
 def _topk_matches_sql(
@@ -1040,8 +1040,7 @@ def _r_dedup_against_embedding(
         # integer-exact replay: packed signatures both sides, xor+popcount
         # threshold; n_words must be explicit (dim unknowable at render
         # time — the binary_quantize renderer's guard)
-        if mode not in ("filter", "pairs"):
-            raise ParameterException("mode must be 'filter' or 'pairs'")
+        check_mode(mode, ("filter", "pairs"))
         if max_hamming < 0:
             raise ParameterException("max_hamming must be >= 0")
         if n_words is None:
@@ -1059,12 +1058,7 @@ def _r_dedup_against_embedding(
             f"SELECT __qid AS ID, __mid AS REF_ID, __score AS HAMMING "
             f"FROM ({scored})"
         )
-        if mode == "pairs":
-            return pairs
-        return (
-            f"SELECT s.* FROM {source} s LEFT ANTI JOIN "
-            f"(SELECT DISTINCT ID FROM ({pairs})) f ON s.{id_col} = f.ID"
-        )
+        return pairs if mode == "pairs" else drop_sql(source, id_col, pairs, key="ID")
     if method != "brute" or index is not None or reference is None:
         raise TransformRenderingException(
             "dedup_against_embedding is SQL-renderable only for "
@@ -1086,12 +1080,7 @@ def _r_dedup_against_embedding(
         f"(SELECT __qid, __rid, {cos} AS __cos FROM {r} r CROSS JOIN {q} q) "
         f"WHERE __cos >= {threshold}"
     )
-    if mode == "pairs":
-        return pairs
-    return (
-        f"SELECT s.* FROM {source} s LEFT ANTI JOIN ({pairs}) m "
-        f"ON s.{id_col} = m.ID"
-    )
+    return pairs if mode == "pairs" else drop_sql(source, id_col, pairs, key="ID")
 
 
 @spark_transform("similarity_search_ivf", category="similarity", streaming_ok=False)

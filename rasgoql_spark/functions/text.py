@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from ..errors import ParameterException
 from ..operators._util import resolve_col, spread, with_columns_sql
 from ..registry import renderer, spark_transform
-from ._hash import tokens_expr
+from ._hash import norm_fp, tokens_expr
 
 
 def _tokens_sql(t: str) -> str:
@@ -508,11 +508,7 @@ def fingerprint(df: DataFrame, text: str, name: str = "FINGERPRINT") -> DataFram
     """Normalized-content fingerprint: md5 of lowercased text with
     punctuation stripped and whitespace collapsed. The basis for exact
     near-normalized dedup; identical in DuckDB (md5 + regexp_replace)."""
-    c = F.col(resolve_col(df, text))
-    norm = F.trim(
-        F.regexp_replace(F.regexp_replace(F.lower(c), r"[^a-z0-9\s]", " "), r"\s+", " ")
-    )
-    return df.withColumn(name, F.md5(norm))
+    return df.withColumn(name, norm_fp(F.col(resolve_col(df, text))))
 
 
 @renderer("fingerprint")

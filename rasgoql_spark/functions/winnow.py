@@ -28,7 +28,8 @@ from pyspark.sql import functions as F
 from ..operators._util import resolve_col, spread
 from ..registry import renderer, spark_transform
 from ._cache import scoped_persist
-from .dedup import _attach, _candidate_pairs, _check_mode, _filter_input, _finish
+from ._filter import check_mode, finish, reread_input
+from .dedup import _attach, _candidate_pairs
 from ._hash import md5_int_sql, tokens_expr
 
 
@@ -180,10 +181,10 @@ def dedup_winnow(
     """
     from ..errors import ParameterException
 
-    _check_mode(mode, ("pairs", "filter"))
+    check_mode(mode, ("pairs", "filter"))
     if k < 1 or window < 1:
         raise ParameterException("k and window must be >= 1")
-    df, inp = _filter_input(df, mode)
+    df, inp = reread_input(df, mode)
     t, i = resolve_col(df, text), resolve_col(df, id_col)
     base = scoped_persist(
         _with_winnow(
@@ -205,7 +206,7 @@ def dedup_winnow(
             "CONTAINMENT",
         )
     )
-    return _finish(df, id_col, mode, pairs, base, *inp)
+    return finish(df, id_col, mode, pairs, base, *inp)
 
 
 # NOTE (round 8): a dedup_winnow renderer was prototyped and produced

@@ -4,7 +4,12 @@ import sys
 import pytest
 from pyspark.sql.types import StructType
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Python UDF workers import the package too, and the Spark JVM launched by
+# the session below hands them this environment's PYTHONPATH: put the
+# checkout under test first, so the tests run from any working directory
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, (ROOT, os.environ.get("PYTHONPATH"))))
 
 import rasgoql_spark as rql
 
@@ -22,6 +27,23 @@ def spark():
 @pytest.fixture(scope="session")
 def session(spark):
     return rql.RasgoSession(spark, data_dir=SF_DIR)
+
+
+@pytest.fixture(scope="session")
+def drop_table(spark):
+    """Drop a catalog table and remove its directory under the session's
+    warehouse, so a test can re-create a managed table from any working
+    directory."""
+    import shutil
+    from urllib.parse import urlparse
+
+    root = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+
+    def drop(name):
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        shutil.rmtree(os.path.join(root, name), ignore_errors=True)
+
+    return drop
 
 
 def pytest_configure(config):

@@ -92,11 +92,8 @@ def test_unknown_transform(session):
         session.dataset("region").no_such_transform(x=1)
 
 
-def test_dataset_from_df_roundtrip(session, tmp_path):
-    import shutil
-
-    session.spark.sql("DROP TABLE IF EXISTS t_roundtrip")
-    shutil.rmtree("/root/repo/spark-warehouse/t_roundtrip", ignore_errors=True)
+def test_dataset_from_df_roundtrip(session, tmp_path, drop_table):
+    drop_table("t_roundtrip")
     pdf = pd.DataFrame({"my col": [1, 2, 3], "VAL": [1.5, 2.5, 3.5]})
     ds = session.dataset_from_df(pdf, "t_roundtrip", method="replace")
     out = ds.to_df()

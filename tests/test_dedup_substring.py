@@ -389,6 +389,34 @@ def test_max_positions_bounds_generation_loop_corpus(spark):
         max_positions=None, mode="filter").count() == 1
 
 
+def test_max_positions_postings_and_alignments_invariant_in_r(spark):
+    """The max_positions bound makes a generation-loop doc's capped
+    postings and candidate alignments INVARIANT in its repeat count r
+    (uncapped they grow O(r) and O(r^2)); the cross-doc run is still
+    reported at every r."""
+    from pyspark.sql import functions as SF
+
+    from rasgoql_spark.functions.dedup import (
+        _cap_positions, _positioned_postings, dedup_substring)
+
+    seen = set()
+    for r in (300, 1_000, 3_000):
+        loop = ("the model repeats this phrase " * r).strip()
+        docs = spark.createDataFrame(
+            [(1, loop),
+             (2, "intro the model repeats this phrase and then moves on")],
+            "id BIGINT, text STRING")
+        p = _cap_positions(_positioned_postings(docs, "text", "id", 5), 20, "__id")
+        la = p.select(SF.col("__id").alias("ia"), SF.col("__pos").alias("pa"), "__fp")
+        lb = p.select(SF.col("__id").alias("ib"), SF.col("__pos").alias("pb"), "__fp")
+        alignments = la.join(lb, on="__fp").filter("ia <= ib").count()
+        seen.add((p.count(), alignments))
+        pairs = dedup_substring(docs, "text", "id", min_tokens=5,
+                                max_doc_freq=None).collect()
+        assert any(q["ID_A"] == 1 and q["ID_B"] == 2 for q in pairs), r
+    assert len(seen) == 1, seen
+
+
 def test_row_local_cap_equals_windowed_cap(spark):
     """Round 13 optimization: the production position cap is applied
     row-locally inside the explode (_capped_positioned_explode — no

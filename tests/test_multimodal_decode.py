@@ -2,6 +2,7 @@
 and PCM16 WAV sample decode, validated against independently-synthesized
 payloads with every PNG filter type."""
 
+import os
 import struct
 import zlib
 
@@ -12,6 +13,9 @@ from rasgoql_spark.functions.multimodal import (
     _decode_png_pixels,
     _decode_wav_samples,
 )
+
+# the checkout root, where __spark_entry__.py lives
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _chunk(ctype: bytes, body: bytes) -> bytes:
@@ -248,7 +252,7 @@ def test_image_pixels_op_decodes_gif(spark):
 
 def test_gif_frames_multiframe_roundtrip(spark):
     import sys
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, _ROOT)
     from __spark_entry__ import _synth_gif
 
     from rasgoql_spark.functions.multimodal import _gif_frames
@@ -269,7 +273,7 @@ def test_gif_frames_rejects_non_gif_and_truncated(spark):
 
     assert _gif_frames(b"not a gif at all", 3) is None
     import sys
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, _ROOT)
     from __spark_entry__ import _synth_gif
 
     data = _synth_gif(7)
@@ -278,7 +282,7 @@ def test_gif_frames_rejects_non_gif_and_truncated(spark):
 
 def test_frame_sample_gif_vs_stub_paths(spark):
     import sys
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, _ROOT)
     from __spark_entry__ import _synth_gif
 
     from rasgoql_spark.functions.multimodal import frame_sample

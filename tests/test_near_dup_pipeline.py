@@ -1,6 +1,8 @@
-"""The shared near-duplicate pipeline (functions/dedup.py module docstring):
-parameter checks run before any Spark job or cache, and every operator on
-it returns the same rows whatever the shuffle partitioning."""
+"""The shared near-duplicate pipeline (functions/dedup.py module docstring)
+and the shared filter step (functions/_filter.py): parameter checks run
+before any Spark job or cache, every operator on the pipeline returns the
+same rows whatever the shuffle partitioning, and every filter-mode
+operator caches a mid-chain input once and frees it with its result."""
 
 import gc
 
@@ -16,15 +18,20 @@ def _persisted_ids(sc):
     return {int(k) for k in sc._jsc.getPersistentRDDs().keys()}
 
 
+_VEC_OPS = ("dedup_embedding", "decontaminate_embedding", "dedup_against_embedding")
+
+
 @pytest.mark.parametrize("transform", [
     "dedup_minhash", "dedup_simhash", "dedup_ngram_jaccard", "dedup_embedding",
+    "decontaminate", "decontaminate_embedding", "dedup_against",
+    "dedup_against_embedding", "dedup_substring", "dedup_against_substring",
 ])
 def test_bad_mode_raises_before_any_job_or_cache(spark, transform):
     """An unknown mode must be rejected up front: no Spark job runs and no
     signature table is left persisted (it used to run the collapse guard's
     jobs first and leak the cache it had pinned)."""
     sc = spark.sparkContext
-    if transform == "dedup_embedding":
+    if transform in _VEC_OPS:
         df = spark.createDataFrame(
             [(i, [float(i), 1.0, 0.5]) for i in range(5)], "vec_id long, embedding array<float>")
         kw = {"vec_col": "embedding", "id_col": "vec_id"}
@@ -32,6 +39,10 @@ def test_bad_mode_raises_before_any_job_or_cache(spark, transform):
         df = spark.createDataFrame(
             [(i, f"alpha beta gamma delta doc{i % 2}") for i in range(5)], ["doc_id", "text"])
         kw = {"text": "text", "id_col": "doc_id"}
+    if transform.startswith("decontaminate"):
+        kw["eval_table"] = df
+    elif transform.startswith("dedup_against"):
+        kw["reference"] = df
     before = _persisted_ids(sc)
     group = f"bad-mode-{transform}"
     sc.setJobGroup(group, "bad mode must not run jobs")
@@ -144,3 +155,79 @@ def test_cluster_family_persists_a_mid_chain_input(spark, session, transform, kw
     del out
     gc.collect()
     assert mid.storageLevel == StorageLevel.NONE
+
+
+def _filter_case(session, case):
+    """``(input, kwargs)`` of one filter-mode operator run over the test
+    documents or embeddings, against a reference sharing part of them."""
+    docs = session.dataset("documents").df.select("doc_id", "text")
+    emb = session.dataset("embeddings").df.select("vec_id", "embedding")
+    ref_docs = docs.filter("doc_id < 100").select(
+        (F.col("doc_id") + 10000).alias("doc_id"), "text")
+    ref_emb = emb.filter("vec_id < 100").select(
+        (F.col("vec_id") + 10000).alias("vec_id"), "embedding")
+    text = {"text": "text", "id_col": "doc_id"}
+    vec = {"vec_col": "embedding", "id_col": "vec_id"}
+    name, _, method = case.partition("-")
+    kw = {
+        "decontaminate": dict(text, eval_table=docs.filter("doc_id < 20").select("text"),
+                              ngram=3, mode="filter"),
+        "decontaminate_embedding": dict(
+            vec, eval_table=emb.filter("vec_id < 20").select("embedding"), mode="filter"),
+        "dedup_against": dict(text, reference=ref_docs, method="exact"),
+        "dedup_substring": dict(text, min_tokens=8, mode="filter"),
+        "dedup_against_substring": dict(text, reference=ref_docs, min_tokens=8),
+        "dedup_against_bloom": dict(text, reference=ref_docs, bits_log2=12),
+        "semantic_dedup": dict(vec, k=8),
+        "dedup_against_embedding": dict(vec, reference=ref_emb, method=method,
+                                        num_centroids=4),
+    }[name]
+    return (emb if "vec_col" in kw else docs), name, kw
+
+
+@pytest.mark.parametrize("case", [
+    "decontaminate", "decontaminate_embedding", "dedup_against", "dedup_substring",
+    "dedup_against_substring", "dedup_against_bloom", "semantic_dedup",
+    "dedup_against_embedding-brute", "dedup_against_embedding-ivf",
+    "dedup_against_embedding-ivfpq", "dedup_against_embedding-binary",
+])
+def test_filter_mode_persists_a_mid_chain_input(spark, session, case):
+    """Every filter-mode operator reads its input twice (the scoring and
+    the drop), with eager jobs in between for most. Through the shared
+    filter step (functions/_filter.py) a mid-chain input is persisted
+    once, cached while the result is alive and freed with it; the rows
+    equal the scan-rooted run's."""
+    from pyspark import StorageLevel
+
+    from rasgoql_spark.functions import _cache
+
+    frame, name, kw = _filter_case(session, case)
+    mid = frame.groupBy(*frame.columns).count().drop("count")
+    op = rql.get_transform(name)
+    want = sorted(tuple(r) for r in op.apply(frame, **kw).collect())
+    out = op.apply(mid, **kw)
+    assert sorted(tuple(r) for r in out.collect()) == want
+    assert mid.storageLevel != StorageLevel.NONE
+    assert _cache._ENTRIES[mid.semanticHash()][0] == 1
+    del out
+    gc.collect()
+    assert mid.storageLevel == StorageLevel.NONE
+
+
+@pytest.mark.parametrize("method", ["ivf", "ivfpq"])
+def test_rejected_batch_frees_the_inline_index(spark, session, method):
+    """dedup_against_embedding builds an inline index before its batch dim
+    guard runs; when the guard rejects the batch, the index cache and the
+    pinned mid-chain input are both freed (the index cache used to stay
+    persisted)."""
+    sc = spark.sparkContext
+    emb = session.dataset("embeddings").df.select("vec_id", "embedding")
+    bad = emb.filter("vec_id >= 100").withColumn("embedding", F.slice("embedding", 1, 16))
+    mid = bad.groupBy("vec_id", "embedding").count().drop("count")
+    for batch in (bad, mid):
+        before = _persisted_ids(sc)
+        with pytest.raises(ParameterException, match="dim 16"):
+            rql.get_transform("dedup_against_embedding").apply(
+                batch, vec_col="embedding", id_col="vec_id",
+                reference=emb.filter("vec_id < 100"), method=method, num_centroids=4)
+        assert _persisted_ids(sc) - before == set()

@@ -82,18 +82,16 @@ def test_interval_join_is_hash_not_nested_loop(spark, session):
     assert "o_totalprice" in plan
 
 
-def test_bucketed_tables_join_without_exchange(spark, session, tmp_path):
+def test_bucketed_tables_join_without_exchange(spark, session, tmp_path, drop_table):
     """Bucketed layouts are the shuffle-free co-located join path at 100 TB:
     both sides pre-bucketed on the join key ⇒ SortMergeJoin with NO Exchange."""
     import contextlib
     import io
-    import shutil
 
     from rasgoql_spark.sources import write_table
 
     for t in ("b_lineitem", "b_orders"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"/root/repo/spark-warehouse/{t}", ignore_errors=True)
+        drop_table(t)
     li = session.dataset("lineitem").df.select("l_orderkey", "l_quantity")
     od = session.dataset("orders").df.select("o_orderkey", "o_totalprice")
     write_table(li, "b_lineitem", bucket_by=(4, "l_orderkey"), sort_by="l_orderkey")

@@ -2,7 +2,6 @@
 transform surface, results checked against the batch plan."""
 
 import os
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -76,13 +75,10 @@ def test_stream_dedup_with_watermark(spark, events_stream_dir):
     assert got.count() == spark.read.parquet(events_stream_dir).count()  # ids unique
 
 
-def test_foreach_batch_sink_to_table(spark, events_stream_dir, tmp_path):
-    import shutil
-
+def test_foreach_batch_sink_to_table(spark, events_stream_dir, tmp_path, drop_table):
     from rasgoql_spark.streaming.ops import write_stream_to_table
 
-    spark.sql("DROP TABLE IF EXISTS t_sink")
-    shutil.rmtree("/root/repo/spark-warehouse/t_sink", ignore_errors=True)
+    drop_table("t_sink")
     sdf = read_events_stream(spark, events_stream_dir)
     filtered = sdf.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "value")
@@ -868,7 +864,7 @@ def test_stream_dedup_against_ivfpq_index(spark, tmp_path_factory):
         idx.release()
 
 
-def test_stream_table_sink_guards_and_empty_replay(spark, tmp_path_factory):
+def test_stream_table_sink_guards_and_empty_replay(spark, tmp_path_factory, drop_table):
     """Two exactly-once corner cases: (a) a pre-existing NON-partitioned
     sink table is refused loudly (dynamic overwrite would silently
     truncate it every batch); (b) a replayed batch whose recomputed output
@@ -890,9 +886,7 @@ def test_stream_table_sink_guards_and_empty_replay(spark, tmp_path_factory):
 
     # (a) legacy non-partitioned table with the same name -> typed refusal
     legacy = "sdat_legacy_plain"
-    spark.sql(f"DROP TABLE IF EXISTS {legacy}")
-    import shutil
-    shutil.rmtree(f"/root/repo/spark-warehouse/{legacy}", ignore_errors=True)
+    drop_table(legacy)
     batch.withColumn("__batch_id", F.lit(0)).write.saveAsTable(legacy)
     try:
         q = stream_dedup_against(
@@ -909,8 +903,7 @@ def test_stream_table_sink_guards_and_empty_replay(spark, tmp_path_factory):
     # reference that now matches everything -> recomputed output is empty
     # -> the old partition must be cleared
     table = "sdat_empty_replay"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    shutil.rmtree(f"/root/repo/spark-warehouse/{table}", ignore_errors=True)
+    drop_table(table)
     try:
         q1 = stream_dedup_against(
             mk(), "text", "doc_id", checkpoint=str(tmp / "c1"),
