@@ -37,6 +37,13 @@ unpersist after a new invocation's ``persist()`` but before that
 invocation registered, silently evicting the entry the new run is about
 to use (perf-only, but exactly the warm-run race this module exists to
 close).
+
+Checkpoints: a frame from ``localCheckpoint`` is marked with
+``register_checkpoint``, and ``release_now`` then unpersists its checkpoint
+RDD, which would otherwise wait for the JVM's ContextCleaner. Unlike an
+unpersisted cache, a released checkpoint cannot be recomputed, so only a
+checkpoint no plan reads any more may go. The graph loops
+(``graph._truncate``) are the only users.
 """
 
 from __future__ import annotations
@@ -144,10 +151,32 @@ def cheap_to_recompute(df: DataFrame) -> bool:
     return True
 
 
+def register_checkpoint(df: DataFrame) -> DataFrame:
+    """Mark ``df``, a frame ``localCheckpoint`` returned, so that
+    ``release_now`` unpersists its checkpoint RDD instead of leaving it to
+    the JVM's ContextCleaner. Each checkpoint is its own RDD, so it is
+    released uncounted. Its blocks cannot be recomputed: release it only
+    once no plan will read it again, for example once a later checkpoint
+    cut from it has been materialized by a job. ``release_with`` takes no
+    checkpoint: a frame derived from the result (``out.select(...)``) can
+    outlive ``out`` and still read it."""
+    df._rql_checkpoint = df._jdf.queryExecution().logical().rdd()
+    return df
+
+
+def is_checkpoint(df: DataFrame) -> bool:
+    """True for a frame marked by ``register_checkpoint``."""
+    return "_rql_checkpoint" in vars(df)
+
+
 def release_now(*dfs: DataFrame) -> None:
-    """Eagerly release frames persisted with ``scoped_persist``."""
+    """Eagerly release frames persisted with ``scoped_persist`` or marked
+    by ``register_checkpoint``."""
     for df in dfs:
-        _dec_and_maybe_unpersist(_sem_hash(df), df._jdf)
+        if is_checkpoint(df):
+            _unpersist_quiet(df._rql_checkpoint)
+        else:
+            _dec_and_maybe_unpersist(_sem_hash(df), df._jdf)
 
 
 def _release_pairs(pairs: list) -> None:

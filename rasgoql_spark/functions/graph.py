@@ -1,38 +1,149 @@
-"""Graph centrality over edge tables (public technique: Brin & Page 1998).
+"""Graph transforms over edge tables: PageRank (Brin & Page 1998), label
+propagation, k-core, triangle counts and min-label connected components.
 
 Link-graph authority is a first-class crawl-curation signal: Common Crawl
 publishes host-level link graphs and rank files precisely so pipelines can
-weight or gate documents by the linking structure of their origin. This
-module computes PageRank with the standard dangling-mass redistribution as
-pure DataFrame iteration — no GraphX/graphframes dependency (neither ships
-with a stock PySpark container).
+weight or gate documents by the linking structure of their origin. Every
+transform here is pure DataFrame iteration — no GraphX/graphframes
+dependency (neither ships with a stock PySpark container).
 
 Determinism contract (same idea as cluster.kmeans_cluster): every rank is
 rounded to ``round_to`` decimals after each iteration, absorbing
 double-summation order differences across engines and partitionings, so the
 whole fixed-iteration computation replays as unrolled ANSI SQL — the DuckDB
-oracle does exactly that.
+oracle does exactly that. The renderers replay every loop unrolled, round
+for round, whatever the executed loop truncates or caches.
 
-100 TB design: ranks and out-degrees are slim ``(node, double)`` tables;
-each iteration is one edges-by-src join + one sum-by-dst shuffle — partial
-aggregation combines map-side, AQE handles skewed hub nodes. The dangling
-mass is a one-row aggregate broadcast back (never a collect of node data).
-``localCheckpoint`` every few rounds bounds lineage (the min-label loop
-behind connected_components and dedup.near_dup_clusters checkpoints once
-per two-level batch).
+Loop contract. ``pagerank``, ``label_propagation``, ``kcore`` and the
+min-label loop behind ``connected_components`` and
+``dedup.near_dup_clusters`` (:func:`min_label_components`) run through one
+loop, :func:`_iterate`. Each caller supplies its step (one round) and,
+where it has one, its round action: pagerank's dangling-mass collect,
+kcore's edge count, the min-label changed-count. ``_iterate`` owns the rest:
+
+- Cadence. Round ``r``'s state is truncated when ``r`` is a multiple of
+  ``every``: every two-level batch of the min-label loop, every 3rd round
+  of the others. pagerank runs its last update outside ``_iterate``, so it
+  never truncates its last round. In a loop whose step reads its input
+  more than once (pagerank, kcore) a state that is not truncated is
+  scoped-cached instead. The round action then reads the state, and a true
+  result ends the loop early.
+- Truncation. :func:`_truncate` is the package's one ``localCheckpoint``.
+  It cuts the Catalyst plan when it is called, but stores nothing until a
+  job reads the state: the next round action, or the result's own action.
+  Under AQE the call does run the upstream shuffle stages, as jobs of the
+  chain's construction; with AQE off it runs none.
+- Release. Once the loop's round action has materialized a truncation,
+  everything the state held before it is released: earlier truncations and
+  round caches, the initial state's included. The round caches held after
+  it go back to the caller, which ties them to its result with
+  ``release_with``. Three other release points are unsafe. A plain cached
+  successor does not free its predecessors: ``unpersist()`` makes Spark
+  re-cache dependents that are not yet loaded, so later round caches would
+  recompute the whole unrolled lineage (measured: 2 -> 381 Exchanges in
+  pagerank's final plan). A truncation is not freed before its successor
+  is materialized: the next read of the successor fails with
+  ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``. And a truncation no round action
+  superseded (the last one, and every one of label_propagation, which has
+  no round action) is not freed with the result: a frame derived from the
+  result, such as ``out.select(...)``, can outlive ``out`` and still read
+  it. The JVM's ContextCleaner frees it once no plan references it.
 """
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..errors import ParameterException
+from ..errors import ParameterException, TransformRenderingException
 from ..operators._util import resolve_col
 from ..registry import renderer, spark_transform
-from ._cache import release_now, release_with, scoped_persist
+from ._cache import (
+    is_checkpoint,
+    register_checkpoint,
+    release_now,
+    release_with,
+    scoped_persist,
+)
+
+
+def _edge_list(df: DataFrame, src: str, dst: str) -> DataFrame:
+    """``df``'s edge columns as ``(__src, __dst)``."""
+    s, d = resolve_col(df, src), resolve_col(df, dst)
+    return df.select(F.col(s).alias("__src"), F.col(d).alias("__dst"))
+
+
+def _undirected(half: DataFrame, distinct: bool) -> DataFrame:
+    """The scoped-cached undirected edge list of ``half``'s ``(__src,
+    __dst)`` edges: each one in both directions. ``distinct`` gives the
+    simple graph label_propagation and kcore run on: NULL endpoints and
+    self-loops drop, duplicate and reverse edges collapse."""
+    if distinct:
+        half = half.filter(
+            F.col("__src").isNotNull() & F.col("__dst").isNotNull()
+            & (F.col("__src") != F.col("__dst"))
+        )
+    both = half.union(
+        half.select(F.col("__dst").alias("__src"), F.col("__src").alias("__dst"))
+    )
+    return scoped_persist(both.dropDuplicates() if distinct else both)
+
+
+def _undirected_sql(source: str, src: str, dst: str, h: str, e: str) -> list:
+    """:func:`_undirected`'s simple graph as two CTEs: ``h`` the distinct
+    half, ``e`` both directions."""
+    return [
+        f"{h} AS (SELECT DISTINCT {src} AS src, {dst} AS dst FROM {source} "
+        f"WHERE {src} IS NOT NULL AND {dst} IS NOT NULL AND {src} <> {dst})",
+        f"{e} AS (SELECT src, dst FROM {h} UNION SELECT dst, src FROM {h})",
+    ]
+
+
+def _truncate(df: DataFrame, eager: bool = False) -> DataFrame:
+    """Cut ``df``'s plan with a local checkpoint, registered so that
+    ``release_now`` can free its blocks once no plan reads them (module
+    docstring)."""
+    return register_checkpoint(df.localCheckpoint(eager=eager))
+
+
+def _iterate(state, step, rounds, every, act=None, cache=False):
+    """Run ``rounds`` rounds of ``step`` from ``state`` under the module's
+    loop contract. ``act(state)`` is the round action, run on each
+    truncated or cached state; a true result ends the loop. ``cache`` marks
+    a step that reads its input more than once. ``_iterate`` takes over the
+    initial state's cache or truncation. Returns ``(state, held)``: the
+    last state and the round caches it still holds, for ``release_with``."""
+    held = [state] if state.is_cached or is_checkpoint(state) else []
+    for r in range(1, rounds + 1):
+        state = step(state)
+        cut = r % every == 0
+        if cut or cache:
+            state = _truncate(state) if cut else scoped_persist(state)
+            held.append(state)
+        if act is None:
+            continue
+        stop = act(state)
+        if cut:
+            # newest first: no released cache has a dependent left to re-cache
+            release_now(*reversed(held[:-1]))
+            del held[:-1]
+        if stop:
+            break
+    return state, [h for h in held if not is_checkpoint(h)]
+
 
 RANK_ROUND_MAX = 15
+
+
+def _check_pagerank(damping: float, iterations: int, round_to: int) -> None:
+    if not 0.0 < damping < 1.0:
+        raise ParameterException("damping must be in (0, 1)")
+    if iterations < 0:
+        raise ParameterException("iterations must be >= 0")
+    if not 1 <= round_to <= RANK_ROUND_MAX:
+        raise ParameterException(f"round_to must be in [1, {RANK_ROUND_MAX}]")
 
 
 @spark_transform("pagerank", category="graph", streaming_ok=False)
@@ -50,19 +161,15 @@ def pagerank(
     target. Duplicate edges collapse to one; nodes with no out-edges
     (dangling) redistribute their mass uniformly each iteration — the
     standard formulation, so ranks sum to ~1.
+
+    Scale: ranks and out-degrees are slim ``(node, double)`` tables; each
+    iteration is one edges-by-src join + one sum-by-dst shuffle — partial
+    aggregation combines map-side, AQE handles skewed hub nodes. The
+    dangling mass is a one-row aggregate collected as one scalar
+    (never a collect of node data).
     """
-    if not 0.0 < damping < 1.0:
-        raise ParameterException("damping must be in (0, 1)")
-    if iterations < 0:
-        raise ParameterException("iterations must be >= 0")
-    if not 1 <= round_to <= RANK_ROUND_MAX:
-        raise ParameterException(f"round_to must be in [1, {RANK_ROUND_MAX}]")
-    s, d = resolve_col(df, src), resolve_col(df, dst)
-    edges = (
-        df.select(F.col(s).alias("__src"), F.col(d).alias("__dst"))
-        .dropDuplicates(["__src", "__dst"])
-    )
-    edges = scoped_persist(edges)
+    _check_pagerank(damping, iterations, round_to)
+    edges = scoped_persist(_edge_list(df, src, dst).dropDuplicates(["__src", "__dst"]))
     # ONE endpoint-explode aggregation replaces the union+dedup node build,
     # the separate out-degree aggregation, and the nodes-x-outdeg join
     # (round 13): each edge contributes (src, 1) and (dst, 0); summing per
@@ -101,54 +208,48 @@ def pagerank(
     ranks = nodes_meta.select(
         "__node", "__dang", F.round(F.lit(1.0 / n), round_to).alias("__r")
     )
-    iter_caches: list[DataFrame] = []
-    for it in range(iterations):
-        # ranks feeds TWO consumers per iteration (contrib join + dangling
-        # mass); without a cache the lineage re-executes each prior
-        # iteration per consumer — exponential recompute
-        ranks = scoped_persist(ranks)
-        iter_caches.append(ranks)
-        # dangling mass as a DRIVER SCALAR (round 13): the one-row
-        # aggregate used to ride a crossJoin(broadcast(...)) — under AQE
-        # that broadcast is its own job cascade per iteration, and the
-        # scalar must synchronize before the next level either way (rank
-        # i+1 needs it). Collecting the single double and re-embedding it
-        # as a literal is bit-exact (the same aggregated double) and drops
-        # one broadcast exchange + one join per iteration at any scale;
-        # the collect doubles as this iteration's cache materialization.
-        # NOTE: iteration caches must stay registered until the RESULT is
-        # dropped — Dataset.unpersist() recaches dependents by plan, so an
-        # eager mid-loop release would clear every later iteration's
-        # materialized cache and the final query would recompute the whole
-        # unrolled lineage uncached (measured: 2 -> 381 Exchanges in the
-        # final plan when released eagerly).
-        dm = ranks.filter(F.col("__dang")).agg(
+    masses: list[float] = []
+
+    def dangling_mass(r):
+        # one collected scalar (round 13): the one-row aggregate used to ride a
+        # crossJoin(broadcast(...)) — under AQE that broadcast is its own
+        # job cascade per iteration, and the scalar must synchronize before
+        # the next level either way. Collecting the single double and
+        # re-embedding it as a literal is bit-exact (the same aggregated
+        # double) and drops one broadcast exchange + one join per iteration
+        masses.append(r.filter(F.col("__dang")).agg(
             F.coalesce(F.sum("__r"), F.lit(0.0)).alias("__dm")
-        ).first()["__dm"]
+        ).first()["__dm"])
+
+    def update(r):
         contrib = (
-            edges_deg.join(ranks, edges_deg["__src"] == ranks["__node"])
+            edges_deg.join(r, edges_deg["__src"] == r["__node"])
             .select(F.col("__dst").alias("__node"), (F.col("__r") / F.col("__deg")).alias("__c"))
             .groupBy("__node")
             .agg(F.sum("__c").alias("__sum"))
         )
-        ranks = (
-            nodes_meta.join(contrib, on="__node", how="left")
-            .select(
-                "__node", "__dang",
-                F.round(
-                    F.lit(base)
-                    + damping
-                    * (F.coalesce(F.col("__sum"), F.lit(0.0)) + F.lit(float(dm)) / n),
-                    round_to,
-                ).alias("__r"),
-            )
+        return nodes_meta.join(contrib, on="__node", how="left").select(
+            "__node", "__dang",
+            F.round(
+                F.lit(base)
+                + damping
+                * (F.coalesce(F.col("__sum"), F.lit(0.0)) + F.lit(float(masses[-1])) / n),
+                round_to,
+            ).alias("__r"),
         )
-        # bound lineage every few rounds — but never on the LAST iteration,
-        # whose checkpoint would only re-materialize the final ranks
-        if (it + 1) % 3 == 0 and it + 1 < iterations:
-            ranks = ranks.localCheckpoint(eager=False)
+
+    held: list = []
+    if iterations:
+        # each rank level feeds two readers (the mass collect and the next
+        # update): the first is cached here, the rest by _iterate
+        ranks = scoped_persist(ranks)
+        dangling_mass(ranks)
+        ranks, held = _iterate(
+            ranks, update, iterations - 1, 3, act=dangling_mass, cache=True
+        )
+        ranks = update(ranks)
     out = ranks.select(F.col("__node").alias("NODE"), F.col("__r").alias("PAGERANK"))
-    return release_with(out, edges, node_stats, edges_deg, *iter_caches)
+    return release_with(out, edges, node_stats, edges_deg, *held)
 
 
 PAGERANK_RENDER_MAX_ITER = 6
@@ -167,15 +268,8 @@ def _r_pagerank(
     twice (neighbor-sum + dangling mass), so plan size grows ~2^iterations
     when Catalyst inlines the CTEs; rendering is capped at
     ``PAGERANK_RENDER_MAX_ITER`` iterations (the DataFrame path has no
-    cap — it persists per-iteration instead)."""
-    from ..errors import TransformRenderingException
-
-    if not 0.0 < damping < 1.0:
-        raise ParameterException("damping must be in (0, 1)")
-    if iterations < 0:
-        raise ParameterException("iterations must be >= 0")
-    if not 1 <= round_to <= RANK_ROUND_MAX:
-        raise ParameterException(f"round_to must be in [1, {RANK_ROUND_MAX}]")
+    cap: it truncates its plan every 3rd round, module docstring)."""
+    _check_pagerank(damping, iterations, round_to)
     if iterations > PAGERANK_RENDER_MAX_ITER:
         raise TransformRenderingException(
             "pagerank renders unrolled iterations; iterations > "
@@ -256,9 +350,9 @@ def pagerank_oracle_sql(
 
 
 def check_max_iterations(max_iterations: int) -> None:
-    """The min-label loop's cap contract, shared by its executed callers
-    (:func:`connected_components`, ``dedup.near_dup_clusters``) and the
-    renderer."""
+    """The iteration cap contract of the min-label loop's callers
+    (:func:`connected_components`, ``dedup.near_dup_clusters``), of
+    :func:`kcore` and of their renderers."""
     if max_iterations < 1:
         raise ParameterException("max_iterations must be >= 1")
 
@@ -272,56 +366,38 @@ def min_label_components(half: DataFrame, max_iterations: int):
     edge endpoint, ``__lab`` the minimum id reachable within
     ``max_iterations`` propagation levels; ``edges`` is the symmetrized
     edge cache the labels read, which the caller ties to its own output
-    with ``release_with``."""
-    edges = scoped_persist(half.union(
-        half.select(F.col("__dst").alias("__src"), F.col("__src").alias("__dst"))
-    ))
-    labels = (
+    with ``release_with``.
+
+    Each round is a batch of TWO plain propagation levels (one when a
+    single level is left) with ONE action, a count that fuses the
+    convergence check: the second level carries each node's PREVIOUS label
+    through the min-aggregation — labels holds exactly one row per id, so
+    max(__old) recovers it (msgs contribute nulls, which aggregates
+    ignore), and min(__lab) aggregates the same union rows as a plain
+    level. The loop was measured job-cascade-bound, not compute-bound
+    (round 14: 88 jobs for 4 core-seconds of task work on the sf0.1
+    entry), so this halves its actions and drops the join of new labels
+    back to old ones. Every batch is truncated: each level references the
+    previous frame twice (union + msgs), so an uncut plan costs the planner
+    2^k shared-subtree paths at every plan build. Early exit checks the
+    batch's LAST transition: min-propagation is monotone, so an unchanged
+    last level is a fixpoint, and the output equals the plain loop's.
+
+    NOT taken: a pointer-doubling shortcut (lab <- lab-of-lab) converges
+    in O(log diameter) rounds and measured 2.8 s here — but
+    max_iterations is part of the operator contract (the .sql() renderer
+    unrolls exactly N plain propagation levels and the renderer-parity
+    fixtures pin capped, non-converged graphs), and shortcut rounds
+    advance further per round than the rendered SQL. The label at every
+    level is the plain one-level recurrence, bit-identical at every cap."""
+    edges = _undirected(half, distinct=False)
+    labels = _truncate(
         edges.select(F.col("__src").alias("__id"))
         .dropDuplicates()
-        .withColumn("__lab", F.col("__id"))
+        .withColumn("__lab", F.col("__id")),
+        eager=True,
     )
     lab_type = labels.schema["__lab"].dataType
-    # Round-14 loop, two changes over the round-13 form (10.7 s before on
-    # the sf0.1 entry — 88 jobs for 4 core-seconds of task work, i.e.
-    # job-count/driver-bound, not compute-bound):
-    #
-    # 1. Fused convergence check: carry each node's PREVIOUS label through
-    #    the min-aggregation — labels holds exactly one row per id, so
-    #    max(__old) recovers it (msgs contribute nulls, which aggregates
-    #    ignore); min(__lab) aggregates exactly the same union rows as
-    #    before, so labels are unchanged. The old form joined new labels
-    #    back to old labels: one extra join + exchange per round, in its
-    #    own job.
-    # 2. Plan truncation EVERY batch (lazy localCheckpoint; the
-    #    changed-count materializes it, so each batch still pays exactly
-    #    one action). Each level references the previous frame twice
-    #    (union + msgs), so between the round-13 every-5-rounds
-    #    checkpoints the driver re-traversed 2^k shared-subtree paths at
-    #    every plan build. Per-batch truncation makes planning cost
-    #    constant; the checkpointed frames are the slim (id, label) pairs
-    #    the loop must materialize anyway.
-    #
-    # NOT taken: a pointer-doubling shortcut (lab <- lab-of-lab) converges
-    # in O(log diameter) rounds and measured 2.8 s here — but
-    # max_iterations is part of the operator contract (the .sql() renderer
-    # unrolls exactly N plain propagation levels and the renderer-parity
-    # fixtures pin capped, non-converged graphs), and shortcut rounds
-    # advance further per round than the rendered SQL. Kept the plain
-    # per-round trajectory, bit-identical at every cap.
-    # Batching (round 14, second pass): TWO plain propagation levels per
-    # action. The first level of each batch is composed lazily (no
-    # checkpoint, no count); the second carries the fused __old check and
-    # materializes both via one count. The label value at every level is
-    # still the plain one-level recurrence — batching only changes WHERE
-    # the plan is cut, so the capped trajectory stays bit-identical to
-    # the renderer's unrolled SQL. Early exit checks the batch's LAST
-    # transition: min-propagation is monotone, so an unchanged last level
-    # means a fixpoint (the composed extra level is then the identity and
-    # the output equals the plain loop's early-exit output). Halves the
-    # action count — the loop was measured job-cascade-bound, not
-    # compute-bound.
-    labels = labels.localCheckpoint(eager=True)
 
     def _level(lab_frame, with_old: bool):
         msgs = edges.join(
@@ -339,23 +415,19 @@ def min_label_components(half: DataFrame, max_iterations: int):
             .agg(F.min("__lab").alias("__lab"), F.max("__old").alias("__old"))
         )
 
-    done = 0
-    while done < max_iterations:
-        if max_iterations - done >= 2:
-            mid = _level(labels, with_old=False)
-            done += 2
-        else:
-            mid = labels
-            done += 1
-        new_labels = _level(mid, with_old=True).localCheckpoint(eager=False)
-        # one job per batch: the count doubles as the checkpoint painting
-        changed = new_labels.filter(
-            ~F.col("__lab").eqNullSafe(F.col("__old"))
-        ).count()
-        labels = new_labels.select("__id", "__lab")
-        if changed == 0:
-            break
-    return labels, edges
+    levels = iter([2] * (max_iterations // 2) + [1] * (max_iterations % 2))
+
+    def batch(state):
+        lab = state.select("__id", "__lab")
+        if next(levels) == 2:
+            lab = _level(lab, with_old=False)
+        return _level(lab, with_old=True)
+
+    def unchanged(state):
+        return state.filter(~F.col("__lab").eqNullSafe(F.col("__old"))).count() == 0
+
+    state, _ = _iterate(labels, batch, (max_iterations + 1) // 2, 1, act=unchanged)
+    return state.select("__id", "__lab"), edges
 
 
 @spark_transform("connected_components", category="graph", streaming_ok=False)
@@ -374,16 +446,16 @@ def connected_components(
     text-dedup API.
 
     Scale: each level is one slim (node, label) join + min-aggregation;
-    converges in <= component-diameter levels with an early-exit count;
-    two levels run per action, and a ``localCheckpoint`` per two-level
-    batch bounds lineage and driver planning.
+    converges in <= component-diameter levels with an early-exit count,
+    two levels per action.
     """
     check_max_iterations(max_iterations)
-    s, d = resolve_col(df, src), resolve_col(df, dst)
-    half = df.select(F.col(s).alias("__src"), F.col(d).alias("__dst")).dropDuplicates()
-    labels, edges = min_label_components(half, max_iterations)
+    labels, edges = min_label_components(
+        _edge_list(df, src, dst).dropDuplicates(), max_iterations
+    )
     out = labels.select(F.col("__id").alias("NODE"), F.col("__lab").alias("COMPONENT"))
     return release_with(out, edges)
+
 
 CC_RENDER_MAX_ITER = 24
 
@@ -406,8 +478,6 @@ def _r_connected_components(source, src, dst, max_iterations=20) -> str:
     endpoint never matches its own self-loop join, so without it the
     rendered output would drop the (NULL, NULL) row the executed groupBy
     keeps."""
-    from ..errors import TransformRenderingException
-
     check_max_iterations(max_iterations)
     if max_iterations > CC_RENDER_MAX_ITER:
         raise TransformRenderingException(
@@ -558,32 +628,19 @@ def label_propagation(
 
     Scale: per round one edges-by-src join + one (node,label) count + one
     per-node top-1 min-struct aggregation (both aggregations combine
-    map-side) — the same slim-id shuffle profile as pagerank;
-    ``localCheckpoint`` every 3 rounds bounds lineage.
+    map-side) — the same slim-id shuffle profile as pagerank.
     """
     if iterations < 1:
         raise ParameterException("iterations must be >= 1")
-    s, d = resolve_col(df, src), resolve_col(df, dst)
-    half = (
-        df.filter(F.col(s).isNotNull() & F.col(d).isNotNull() & (F.col(s) != F.col(d)))
-        .select(F.col(s).alias("__src"), F.col(d).alias("__dst"))
-    )
-    edges = scoped_persist(
-        half.union(
-            half.select(F.col("__dst").alias("__src"), F.col("__src").alias("__dst"))
-        ).dropDuplicates()
-    )
+    edges = _undirected(_edge_list(df, src, dst), distinct=True)
     labels = edges.select(F.col("__src").alias("__node")).dropDuplicates().withColumn(
         "__lab", F.col("__node")
     )
-    # No per-level persists (round 14): each label level feeds exactly ONE
-    # consumer (the next round's join; the last feeds the output), so the
-    # whole fixed-iteration computation is one lazy plan — the old per-level
-    # scoped_persist only added a cache write+read per round. Lineage depth
-    # stays bounded by the localCheckpoint every 3 rounds (lazy checkpoint
-    # truncates the Catalyst plan immediately; the final action
-    # materializes it).
-    for it in range(iterations):
+
+    # No per-level caches (round 14): each label level feeds exactly ONE
+    # reader (the next round's join; the last feeds the output), so the
+    # rounds between truncations are one lazy plan.
+    def lpa_round(labels):
         counts = (
             edges.join(labels, edges["__src"] == labels["__node"])
             .groupBy(F.col("__dst").alias("__n2"), F.col("__lab"))
@@ -598,15 +655,15 @@ def label_propagation(
         # the (node, label, count) table inside its exchange; the
         # aggregation pre-reduces map-side to one row per node per
         # partition before shuffling, and sorts nothing.
-        labels = (
+        return (
             counts.groupBy(F.col("__n2").alias("__node"))
             .agg(F.min(F.struct(
                 (-F.col("__cnt")).alias("__nc"), F.col("__lab").alias("__l")
             )).alias("__m"))
             .select("__node", F.col("__m.__l").alias("__lab"))
         )
-        if (it + 1) % 3 == 0:
-            labels = labels.localCheckpoint(eager=False)
+
+    labels, _ = _iterate(labels, lpa_round, iterations, 3)
     out = labels.select(F.col("__node").alias("NODE"), F.col("__lab").alias("LABEL"))
     return release_with(out, edges)
 
@@ -617,8 +674,6 @@ def _r_label_propagation(source, src, dst, iterations=2) -> str:
     predecessor ONCE (counts -> window top-1), so plan depth is linear —
     the same single-reference invariant as _r_connected_components. Capped
     at ``LP_RENDER_MAX_ITER`` levels."""
-    from ..errors import TransformRenderingException
-
     if iterations < 1:
         raise ParameterException("iterations must be >= 1")
     if iterations > LP_RENDER_MAX_ITER:
@@ -626,10 +681,7 @@ def _r_label_propagation(source, src, dst, iterations=2) -> str:
             "label_propagation renders unrolled rounds; iterations > "
             f"{LP_RENDER_MAX_ITER} produces an impractically deep plan"
         )
-    parts = [
-        f"__lp_h AS (SELECT DISTINCT {src} AS src, {dst} AS dst FROM {source} "
-        f"WHERE {src} IS NOT NULL AND {dst} IS NOT NULL AND {src} <> {dst})",
-        "__lp_e AS (SELECT src, dst FROM __lp_h UNION SELECT dst, src FROM __lp_h)",
+    parts = _undirected_sql(source, src, dst, "__lp_h", "__lp_e") + [
         "__lp_l0 AS (SELECT DISTINCT src AS node, src AS lab FROM __lp_e)",
     ]
     for i in range(int(iterations)):
@@ -677,70 +729,51 @@ def kcore(
 
     Scale: each round is one degree aggregate + two semi-joins on slim id
     columns; early-exits when the edge count stabilizes (≤ peel-depth
-    rounds); ``localCheckpoint`` every 3 rounds bounds lineage — the
-    connected_components cost model.
+    rounds).
     """
     if k < 1:
         raise ParameterException("k must be >= 1")
-    if max_iterations < 1:
-        raise ParameterException("max_iterations must be >= 1")
-    s, d = resolve_col(df, src), resolve_col(df, dst)
-    half = (
-        df.filter(F.col(s).isNotNull() & F.col(d).isNotNull() & (F.col(s) != F.col(d)))
-        .select(F.col(s).alias("__src"), F.col(d).alias("__dst"))
-    )
-    edges = scoped_persist(
-        half.union(
-            half.select(F.col("__dst").alias("__src"), F.col("__src").alias("__dst"))
-        ).dropDuplicates()
-    )
-    n_edges = edges.count()
-    caches = [edges]
-    for it in range(max_iterations):
-        if n_edges == 0:
-            break
+    check_max_iterations(max_iterations)
+    edges = _undirected(_edge_list(df, src, dst), distinct=True)
+    sizes = [edges.count()]
+
+    def peel(edges):
         deg = edges.groupBy("__src").agg(F.count(F.lit(1)).alias("__deg"))
         keep = deg.filter(F.col("__deg") >= k).select("__src")
         # dst-side semi first, src-side LAST (round 14): the surviving edge
         # set then leaves the round hash-partitioned by __src — the key the
         # NEXT round's degree aggregation and src-side semi-join need — so
-        # checkpointed rounds hand their partitioning straight to the next
+        # truncated rounds hand their partitioning straight to the next
         # round. The two semi-joins are filters; order cannot change the
         # result.
-        new_edges = (
+        return (
             edges.join(keep.withColumnRenamed("__src", "__dst"), on="__dst",
                        how="left_semi")
             .join(keep, on="__src", how="left_semi")
         )
-        if (it + 1) % 3 == 0:
-            # lazy: the early-exit count below materializes the checkpoint,
-            # so the round pays one pass, not a checkpoint pass + a count
-            new_edges = new_edges.localCheckpoint(eager=False)
-        else:
-            new_edges = scoped_persist(new_edges)
-            caches.append(new_edges)
-        n_new = new_edges.count()
-        stable = n_new == n_edges
-        edges, n_edges = new_edges, n_new
-        if stable:
-            break
-    else:
-        if n_edges > 0:
-            import warnings
 
-            warnings.warn(
-                f"kcore: peel did not stabilize within max_iterations="
-                f"{max_iterations}; the result is a partially-peeled graph "
-                "— raise max_iterations for the exact k-core",
-                RuntimeWarning,
-                stacklevel=2,
-            )
+    def stable(edges):
+        sizes.append(edges.count())
+        return sizes[-1] in (0, sizes[-2])
+
+    edges, held = _iterate(
+        edges, peel, max_iterations if sizes[0] else 0, 3, act=stable, cache=True
+    )
+    # every round ran and the last one still peeled
+    if len(sizes) > max_iterations and sizes[-1] not in (0, sizes[-2]):
+        warnings.warn(
+            f"kcore: peel did not stabilize within max_iterations="
+            f"{max_iterations}; the result is a partially-peeled graph "
+            "— raise max_iterations for the exact k-core",
+            RuntimeWarning,
+            stacklevel=2,
+        )
     out = (
         edges.groupBy("__src")
         .agg(F.count(F.lit(1)).cast("bigint").alias("DEGREE"))
         .select(F.col("__src").alias("NODE"), "DEGREE")
     )
-    return release_with(out, *caches)
+    return release_with(out, *held)
 
 
 @renderer("kcore")
@@ -751,25 +784,17 @@ def _r_kcore(source, src, dst, k, max_iterations=20) -> str:
     provided the executed loop converged within the same count. Each level
     references its predecessor three times (degree + two keeps), so the
     render caps at ``KCORE_RENDER_MAX_ITER`` levels; the DataFrame path
-    has no cap (it persists per round instead)."""
-    from ..errors import TransformRenderingException
-
+    has no cap (it truncates its plan every 3rd round, module docstring)."""
     if k < 1:
         raise ParameterException("k must be >= 1")
-    if max_iterations < 1:
-        raise ParameterException("max_iterations must be >= 1")
+    check_max_iterations(max_iterations)
     if max_iterations > KCORE_RENDER_MAX_ITER:
         raise TransformRenderingException(
             "kcore renders unrolled peel rounds; max_iterations > "
             f"{KCORE_RENDER_MAX_ITER} produces an impractically large plan "
             "(each level references the previous three times)"
         )
-    parts = [
-        f"__kc_h AS (SELECT DISTINCT {src} AS src, {dst} AS dst FROM {source} "
-        f"WHERE {src} IS NOT NULL AND {dst} IS NOT NULL AND {src} <> {dst})",
-        "__kc_e0 AS (SELECT src, dst FROM __kc_h "
-        "UNION SELECT dst, src FROM __kc_h)",
-    ]
+    parts = _undirected_sql(source, src, dst, "__kc_h", "__kc_e0")
     for i in range(int(max_iterations)):
         p, q = f"__kc_e{i}", f"__kc_e{i + 1}"
         parts.append(

@@ -11,9 +11,11 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry  # noqa: E402
 import rasgoql_spark as rql  # noqa: E402
@@ -345,7 +347,7 @@ def main() -> int:
         if scans:
             out += ["", scans]
         out += ["```", ""]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
     return 0

@@ -10,6 +10,7 @@ Usage: python tools/oracle_check.py [name ...] [--sf DIR]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
@@ -17,7 +18,10 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Python UDF workers import the package too: hand them this tree first
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, (ROOT, os.environ.get("PYTHONPATH"))))
 
 import __spark_entry__ as entry  # noqa: E402
 

@@ -8,10 +8,14 @@ Usage: python tools/scaling_check.py
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Python UDF workers import the package too: hand them this tree first
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, (ROOT, os.environ.get("PYTHONPATH"))))
 
 import __spark_entry__ as entry  # noqa: E402
 import rasgoql_spark as rql  # noqa: E402
@@ -62,13 +66,13 @@ def main() -> int:
     # preserve the hand-written stress-check sections below the main table
     tail = ""
     try:
-        old = open("/root/repo/SCALING.md").read()
+        old = open(os.path.join(ROOT, "SCALING.md")).read()
         idx = old.find("\n## ")
         if idx != -1:
             tail = old[idx:]
     except FileNotFoundError:
         pass
-    with open("/root/repo/SCALING.md", "w") as f:
+    with open(os.path.join(ROOT, "SCALING.md"), "w") as f:
         f.write("\n".join(out) + "\n" + tail)
     print("wrote SCALING.md")
     return 0
