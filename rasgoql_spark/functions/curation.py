@@ -25,7 +25,13 @@ from pyspark.sql import functions as F
 
 from ..errors import ParameterException
 from ..naming import cleanse_name
-from ..operators._util import as_list, resolve_col, spread, with_columns_sql
+from ..operators._util import (
+    as_list,
+    null_safe_join,
+    resolve_col,
+    spread,
+    with_columns_sql,
+)
 from ..registry import renderer, spark_transform
 from ._filter import check_mode, drop_sql, finish, reread_input
 from ._hash import shingles_expr, shingles_spark_sql, tokens_expr
@@ -1260,19 +1266,13 @@ def l_diversity(
     if action not in ("filter", "flag"):
         raise ParameterException("action must be 'filter' or 'flag'")
     # countDistinct skips NULL; add an indicator so NULL counts as a value
-    stats = df.groupBy(*[F.col(c).alias(f"__q_{c}") for c in cols]).agg(
+    stats = df.groupBy(*cols).agg(
         (
             F.count_distinct(F.col(sens))
             + F.max(F.when(F.col(sens).isNull(), 1).otherwise(0))
         ).cast("bigint").alias("__ls")
     )
-    cond = None
-    for c in cols:
-        e = F.col(c).eqNullSafe(F.col(f"__q_{c}"))
-        cond = e if cond is None else (cond & e)
-    joined = df.join(stats, on=cond, how="left").drop(
-        *[f"__q_{c}" for c in cols]
-    )
+    joined = null_safe_join(df, stats, cols)
     if action == "filter":
         return joined.filter(F.col("__ls") >= l).drop("__ls")
     return joined.withColumnRenamed("__ls", "DISTINCT_SENSITIVE").withColumn(
@@ -1343,30 +1343,24 @@ def t_closeness(
         raise ParameterException("t must be in (0, 1]")
     if action not in ("filter", "flag"):
         raise ParameterException("action must be 'filter' or 'flag'")
-    qcols = [F.col(c).alias(f"__q_{c}") for c in cols]
-    cells = df.groupBy(*qcols, F.col(sens).alias("__s")).agg(
+    cells = df.groupBy(*cols, F.col(sens).alias("__s")).agg(
         F.count(F.lit(1)).alias("__n_gc")
     )
-    gkeys = [f"__q_{c}" for c in cols]
-    n_g = F.sum("__n_gc").over(Window.partitionBy(*gkeys))
+    n_g = F.sum("__n_gc").over(Window.partitionBy(*cols))
     n_c = F.sum("__n_gc").over(Window.partitionBy("__s"))
     n_tot = F.sum("__n_gc").over(Window.partitionBy())
     q_gc = F.col("__n_gc") / n_g
     p_c = n_c / n_tot
     scored = cells.select(
-        *gkeys,
+        *cols,
         F.abs(q_gc - p_c).alias("__ad"),
         p_c.alias("__p"),
     )
     dist = F.round(
         0.5 * (F.sum("__ad") + (F.lit(1.0) - F.sum("__p"))), 6
     ).alias("__td")
-    stats = scored.groupBy(*gkeys).agg(dist)
-    cond = None
-    for c in cols:
-        e = F.col(c).eqNullSafe(F.col(f"__q_{c}"))
-        cond = e if cond is None else (cond & e)
-    joined = df.join(stats, on=cond, how="left").drop(*gkeys)
+    stats = scored.groupBy(*cols).agg(dist)
+    joined = null_safe_join(df, stats, cols)
     if action == "filter":
         return joined.filter(F.col("__td") <= float(t)).drop("__td")
     return joined.withColumnRenamed("__td", "T_DISTANCE").withColumn(

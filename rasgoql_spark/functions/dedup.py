@@ -1304,22 +1304,6 @@ def _r_dedup_embedding(
     return pairs if mode == "pairs" else drop_sql(source, id_col, pairs)
 
 
-def _bands_long(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    """Slim ``(__id, __band)`` table from a minhash signature table: md5 over
-    each band's signature slice, exploded one row per band — the only thing
-    that flows through an LSH candidate-join shuffle."""
-    rpb = num_hashes // bands
-    band_cols = [
-        F.md5(
-            F.concat_ws(
-                ",", F.lit(b), *[F.col("__mh")[b * rpb + r] for r in range(rpb)]
-            )
-        )
-        for b in range(bands)
-    ]
-    return sig.select("__id", F.explode(F.array(*band_cols)).alias("__band"))
-
-
 @spark_transform("dedup_against", category="dedup", streaming_ok=False)
 def dedup_against(
     df: DataFrame,

@@ -290,10 +290,12 @@ def _r_pagerank(
     ]
     for i in range(int(iterations)):
         p, q = f"__pr_r{i}", f"__pr_r{i + 1}"
+        # dangling = no out-degree row; null-safe, so a NULL node with
+        # out-edges is not dangling, as on the executed path
         parts.append(
             f"__pr_d{i} AS (SELECT COALESCE(SUM({p}.r), CAST(0.0 AS DOUBLE)) AS dm "
-            f"FROM {p} LEFT JOIN __pr_outdeg o ON {p}.node = o.src "
-            "WHERE o.src IS NULL)"
+            f"FROM {p} LEFT JOIN __pr_outdeg o ON {p}.node <=> o.src "
+            "WHERE o.deg IS NULL)"
         )
         parts.append(
             f"__pr_c{i} AS (SELECT e.dst AS node, SUM({p}.r / o.deg) AS s "
@@ -337,7 +339,8 @@ def pagerank_oracle_sql(
         parts.append(
             f"{q} AS (SELECT nodes.node, ROUND((1 - {d}) / (SELECT c FROM nn) + {d} * ("
             f"COALESCE(c.s, 0) + (SELECT COALESCE(SUM({p}.r), 0) FROM {p} "
-            f"LEFT JOIN outdeg ON {p}.node = outdeg.src WHERE outdeg.src IS NULL)"
+            f"LEFT JOIN outdeg ON {p}.node IS NOT DISTINCT FROM outdeg.src "
+            "WHERE outdeg.deg IS NULL)"
             f" / (SELECT c FROM nn)), {round_to}) r FROM nodes LEFT JOIN "
             f"(SELECT e.dst, SUM({p}.r / outdeg.deg) s FROM e "
             f"JOIN {p} ON e.src = {p}.node JOIN outdeg ON e.src = outdeg.src "

@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..errors import ParameterException
-from ..operators._util import as_list, resolve_col
+from ..operators._util import as_list, null_safe_on, resolve_col
 from ..registry import renderer, spark_transform
 
 def _row_hash(cols: list[str]) -> Column:
@@ -70,11 +70,9 @@ def diff_datasets(
         *[F.col(k).alias(f"__k_{k}") for k in keys],
         _row_hash(compare_cols).alias("__h_old"),
     )
-    cond = None
-    for k in keys:
-        c = F.col(k).eqNullSafe(F.col(f"__k_{k}"))
-        cond = c if cond is None else (cond & c)
-    joined = new.join(old, on=cond, how="full_outer")
+    joined = new.join(
+        old, on=null_safe_on(keys, [f"__k_{k}" for k in keys]), how="full_outer"
+    )
     status = (
         F.when(F.col("__h_old").isNull(), F.lit("ADDED"))
         .when(F.col("__h_new").isNull(), F.lit("REMOVED"))
@@ -603,11 +601,9 @@ def scd2_merge(
         *[F.col(c).alias(f"__v_{c}") for c in compare_cols],
         _row_hash(compare_cols).alias("__nh"),
     )
-    cond = None
-    for k in keys:
-        e = F.col(k).eqNullSafe(F.col(f"__k_{k}"))
-        cond = e if cond is None else (cond & e)
-    j = cur.join(new, on=cond, how="full_outer")
+    j = cur.join(
+        new, on=null_safe_on(keys, [f"__k_{k}" for k in keys]), how="full_outer"
+    )
     matched = F.col("__h").isNotNull() & F.col("__nh").isNotNull()
     changed = matched & (F.col("__h") != F.col("__nh"))
     # surviving current rows: untouched keys + unchanged matches

@@ -23,26 +23,24 @@ existing contract.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, WindowSpec
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..errors import ParameterException
 from ..naming import cleanse_name
-from ..operators._util import as_list, order_spec, order_sql, resolve_col, resolve_cols
+from ..operators._util import (
+    as_list,
+    null_safe_join,
+    order_spec,
+    order_sql,
+    over_sql,
+    resolve_col,
+    resolve_cols,
+    window_spec,
+)
 from ..registry import renderer, spark_transform
 
 EWMA_MAX_SPAN = 64
-
-
-def _window(df, partition, order_by) -> WindowSpec:
-    keys = resolve_cols(df, as_list(partition))
-    w = Window.partitionBy(*keys) if keys else Window.partitionBy()
-    return w.orderBy(*order_spec(df, order_by))
-
-
-def _over_sql(partition, order_by) -> str:
-    part = f"PARTITION BY {', '.join(as_list(partition))} " if as_list(partition) else ""
-    return f"{part}ORDER BY {order_sql(order_by)}"
 
 
 # --------------------------------------------------------------------------
@@ -80,7 +78,7 @@ def ewma(
     if not 1 <= span <= EWMA_MAX_SPAN:
         raise ParameterException(f"span must be in [1, {EWMA_MAX_SPAN}]")
     v = resolve_col(df, value_col)
-    w = _window(df, partition, order_by)
+    w = window_spec(df, partition, order_by)
     num: Column = F.lit(0.0)
     den: Column = F.lit(0.0)
     for i in range(span):
@@ -95,7 +93,7 @@ def ewma(
 @renderer("ewma")
 def _r_ewma(source, value_col, order_by, alpha, partition=None, span=16,
             round_to=6) -> str:
-    over = _over_sql(partition, order_by)
+    over = over_sql(partition, order_by)
     num_terms, den_terms = [], []
     for i in range(span):
         wt = repr((1.0 - alpha) ** i)
@@ -145,7 +143,7 @@ def anomaly_zscore(
     if threshold <= 0:
         raise ParameterException("threshold must be > 0")
     v = resolve_col(df, value_col)
-    frame = _window(df, partition, order_by).rowsBetween(-(window - 1), Window.currentRow)
+    frame = window_spec(df, partition, order_by).rowsBetween(-(window - 1), Window.currentRow)
     x = F.col(v).cast("double")
     mean = F.avg(v).over(frame)
     sd = F.stddev_samp(v).over(frame)
@@ -163,7 +161,7 @@ def anomaly_zscore(
 @renderer("anomaly_zscore")
 def _r_anomaly_zscore(source, value_col, order_by, window=20, partition=None,
                       threshold=3.0, min_periods=5, round_to=6) -> str:
-    over = f"{_over_sql(partition, order_by)} ROWS BETWEEN {window - 1} PRECEDING AND CURRENT ROW"
+    over = f"{over_sql(partition, order_by)} ROWS BETWEEN {window - 1} PRECEDING AND CURRENT ROW"
     z = (
         f"CASE WHEN COUNT({value_col}) OVER ({over}) >= {min_periods} "
         f"AND STDDEV_SAMP({value_col}) OVER ({over}) > 0 "
@@ -211,7 +209,7 @@ def changepoint_detect(
     # stage the group mean first: SUM(x - AVG(x) OVER ...) OVER ... would be
     # an (illegal) nested window expression in both engines
     staged = df.withColumn("__gmean", F.avg(v).over(wg))
-    wcum = _window(staged, keys, order_by).rowsBetween(
+    wcum = window_spec(staged, keys, order_by).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
     cum = F.round(
@@ -287,7 +285,7 @@ def seasonal_decompose(
         raise ParameterException("period must be >= 2")
     v = resolve_col(df, value_col)
     keys = resolve_cols(df, as_list(partition))
-    w = _window(df, partition, order_by)
+    w = window_spec(df, partition, order_by)
     lo, hi = -((period - 1) // 2), period // 2
     frame = w.rowsBetween(lo, hi)
     x = F.col(v).cast("double")
@@ -326,7 +324,7 @@ def seasonal_decompose(
 def _r_seasonal_decompose(source, value_col, order_by, period, partition=None,
                           round_to=6) -> str:
     keys = as_list(partition)
-    over = _over_sql(partition, order_by)
+    over = over_sql(partition, order_by)
     lo, hi = (period - 1) // 2, period // 2
     frame = f"{over} ROWS BETWEEN {lo} PRECEDING AND {hi} FOLLOWING"
     part_pos = "PARTITION BY " + ", ".join([*keys, "__pos"])
@@ -372,70 +370,23 @@ ZQ_SAFE_MAX = 3.0e6
 
 def zscore_stats(df: DataFrame, column: str, group_by=None) -> dict:
     """The FROZEN side of z-score monitoring: ``{group_key_tuple: (mean,
-    std)}`` from the accepted baseline — a bounded collect of one row per
-    group (compute once per release, reuse across micro-batches, the same
-    amortized regime as ``snapshot.psi_bin_stats``).
+    std)}`` from the accepted baseline — one bounded collect of
+    :func:`zscore_stats_frame`, one row per group (compute once per
+    release, reuse across micro-batches, the same amortized regime as
+    ``snapshot.psi_bin_stats``).
 
     Moments derive from EXACT integer sums of 6-dp-quantized values
     (Σ round(x·10⁶), Σ round(x²·10⁶) as BIGINTs), so the frozen numbers are
     independent of float summation order and replay identically in any
     engine. The integer-moment contract supports |x| ≤ 3·10⁶ (beyond that
     round(x²·10⁶) overflows BIGINT — Spark would saturate silently, DuckDB
-    would error); values outside the bound raise ``ParameterException``.
-    All-null groups are skipped; a single-value group freezes std = 0.0.
+    would error); values outside the bound, and NaN, raise
+    ``ParameterException``. All-null groups are skipped; a single-value
+    group freezes std = 0.0.
     """
     keys = resolve_cols(df, as_list(group_by))
-    v = resolve_col(df, column)
-    x = F.col(v).cast("double")
-    rows = (
-        df.groupBy(*keys)
-        .agg(
-            F.count(v).alias("__n"),
-            # per-value quantization stays in BIGINT range (enforced below);
-            # the ACCUMULATOR is DECIMAL(38,0) so the exact sum can't
-            # overflow (ANSI Spark would error, non-ANSI would saturate)
-            F.sum(F.round(x * ZQ_SCALE, 0).cast("decimal(38,0)")).alias("__s1"),
-            F.sum(F.round(x * x * ZQ_SCALE, 0).cast("decimal(38,0)")).alias("__s2"),
-            F.max(F.abs(x)).alias("__mx"),
-        )
-        .collect()
-    )
-    import math
-
-    mxs = [r["__mx"] for r in rows if r["__mx"] is not None]
-    if any(math.isnan(m) for m in mxs):
-        # NaN > bound is False, so it would slip past the magnitude check —
-        # and the quantized sums silently DROP NaN rows while __n counts
-        # them, corrupting the frozen moments
-        raise ParameterException(
-            f"zscore_stats: {column} contains NaN — clean the column "
-            "before freezing a baseline"
-        )
-    bad = max(mxs, default=0.0)
-    if bad > ZQ_SAFE_MAX:
-        raise ParameterException(
-            f"zscore_stats: |{column}| reaches {bad:g}, beyond the "
-            f"quantization-safe bound {ZQ_SAFE_MAX:g} — round(x²·1e6) breaks "
-            "the BIGINT per-value quantization contract the SQL replay "
-            "mirrors. Rescale the column before freezing a baseline."
-        )
-    out = {}
-    for r in rows:
-        n = r["__n"]
-        if not n:
-            continue
-        # double-FIRST like the SQL replay (CAST(s1 AS DOUBLE) / n / 1e6),
-        # not exact-rational int division — bit-identical cross-engine
-        mean = float(r["__s1"]) / n / ZQ_SCALE
-        if n > 1:
-            var = max(0.0, (float(r["__s2"]) / ZQ_SCALE - n * mean * mean) / (n - 1))
-        else:
-            var = 0.0
-        key = tuple(r[k] for k in keys) if keys else ()
-        out[key] = (mean, var ** 0.5)
-    if not out:
-        raise ParameterException("baseline is empty")
-    return out
+    return _collect_stats(zscore_stats_frame(df, column, keys), keys,
+                          ("BASELINE_MEAN", "BASELINE_STD"))
 
 
 def zscore_against_stats(
@@ -544,7 +495,7 @@ def pct_change(
     if periods < 1:
         raise ParameterException("periods must be >= 1")
     v = resolve_col(df, value_col)
-    w = _window(df, partition, order_by)
+    w = window_spec(df, partition, order_by)
     scale = float(10 ** round_to)
     prev = F.lag(v, periods).over(w).cast("double")
     ratio = F.col(v).cast("double") / prev - 1.0
@@ -558,7 +509,7 @@ def pct_change(
 @renderer("pct_change")
 def _r_pct_change(source, value_col, order_by, periods=1, partition=None,
                   round_to=6) -> str:
-    over = _over_sql(partition, order_by)
+    over = over_sql(partition, order_by)
     prev = f"CAST(LAG({value_col}, {periods}) OVER ({over}) AS DOUBLE)"
     name = f"PCT_CHANGE_{cleanse_name(value_col)}"
     scale = float(10 ** round_to)
@@ -609,7 +560,7 @@ def autocorrelation(
         raise ParameterException(f"lags must be ints in [1, {ACF_MAX_LAG}]")
     v = resolve_col(df, value_col)
     keys = resolve_cols(df, as_list(group_by))
-    w = _window(df, keys, order_by)
+    w = window_spec(df, keys, order_by)
     x = F.col(v).cast("double")
     xq = F.round(x * ZQ_SCALE, 0).cast("bigint")
     staged = df.withColumn("__xq", xq)
@@ -654,7 +605,7 @@ def _r_autocorrelation(source, value_col, order_by, lags=(1, 2, 3),
     if not lag_list or any(k < 1 or k > ACF_MAX_LAG for k in lag_list):
         raise ParameterException(f"lags must be ints in [1, {ACF_MAX_LAG}]")
     keys = as_list(group_by)
-    over = _over_sql(keys if keys else None, order_by)
+    over = over_sql(keys if keys else None, order_by)
     xq = f"CAST(ROUND(CAST({value_col} AS DOUBLE) * {ZQ_SCALE}, 0) AS BIGINT)"
     lag_cols = ", ".join(
         f"LAG(__xq, {k}) OVER ({over}) AS __lq_{k}" for k in lag_list
@@ -726,7 +677,7 @@ def cross_correlation(
         raise ParameterException(f"lags must be ints in [-{ACF_MAX_LAG}, {ACF_MAX_LAG}]")
     xc, yc = resolve_col(df, x_col), resolve_col(df, y_col)
     keys = resolve_cols(df, as_list(group_by))
-    w = _window(df, keys, order_by)
+    w = window_spec(df, keys, order_by)
     xq = F.round(F.col(xc).cast("double") * ZQ_SCALE, 0).cast("bigint")
     yq = F.round(F.col(yc).cast("double") * ZQ_SCALE, 0).cast("bigint")
     staged = df.withColumns({"__xq": xq, "__yq0": yq})
@@ -778,7 +729,7 @@ def _r_cross_correlation(source, x_col, y_col, order_by, lags=(0, 1, 2),
     if not lag_list or any(abs(k) > ACF_MAX_LAG for k in lag_list):
         raise ParameterException(f"lags must be ints in [-{ACF_MAX_LAG}, {ACF_MAX_LAG}]")
     keys = as_list(group_by)
-    over = _over_sql(keys if keys else None, order_by)
+    over = over_sql(keys if keys else None, order_by)
     xq = f"CAST(ROUND(CAST({x_col} AS DOUBLE) * {ZQ_SCALE}, 0) AS BIGINT)"
     yq = f"CAST(ROUND(CAST({y_col} AS DOUBLE) * {ZQ_SCALE}, 0) AS BIGINT)"
     shift_cols = []
@@ -854,42 +805,21 @@ def anomaly_mad(
     percentile buffers one group's values per aggregate — fine to
     millions of rows per group, same envelope as ``quantiles``.
     """
-    from ..naming import cleanse_name
-    from ..operators._util import resolve_cols
-
     if threshold <= 0:
         raise ParameterException("threshold must be > 0")
     v = resolve_col(df, value_col)
     keys = resolve_cols(df, as_list(group_by))
     nm = cleanse_name(v)
     x = F.col(v).cast("double")
-    def _nsjoin(left, right, suffix):
-        # null-safe equi-join on the group keys (a NULL group is a real
-        # group — matches the renderer's <=> convention), with the right
-        # side's keys staged under aliases and dropped after
-        if not keys:
-            return left.crossJoin(F.broadcast(right))
-        staged_r = right.select(
-            *[F.col(k).alias(f"__k{suffix}_{i}") for i, k in enumerate(keys)],
-            *[c for c in right.columns if c not in keys],
-        )
-        cond = None
-        for i, k in enumerate(keys):
-            e = F.col(k).eqNullSafe(F.col(f"__k{suffix}_{i}"))
-            cond = e if cond is None else (cond & e)
-        return left.join(staged_r, on=cond, how="left").drop(
-            *[f"__k{suffix}_{i}" for i in range(len(keys))]
-        )
-
     med_f = df.groupBy(*keys).agg(
         F.percentile(x, F.lit(0.5)).alias(f"{nm}_MEDIAN")
     )
-    staged = _nsjoin(df, med_f, "a")
+    staged = null_safe_join(df, med_f, keys)
     dev = F.abs(x - F.col(f"{nm}_MEDIAN"))
     mad_f = staged.groupBy(*keys).agg(
         F.percentile(dev, F.lit(0.5)).alias(f"{nm}_MAD")
     )
-    full = _nsjoin(staged, mad_f, "b")
+    full = null_safe_join(staged, mad_f, keys)
     med, mad = F.col(f"{nm}_MEDIAN"), F.col(f"{nm}_MAD")
     z = F.round(F.lit(0.6745) * (x - med) / mad, round_to)
     return full.withColumn(
@@ -905,8 +835,6 @@ def anomaly_mad(
 @renderer("anomaly_mad")
 def _r_anomaly_mad(source, value_col, group_by=None, threshold=3.5,
                    round_to=6, _input_columns=()) -> str:
-    from ..naming import cleanse_name
-
     if threshold <= 0:
         raise ParameterException("threshold must be > 0")
     keys = as_list(group_by)
@@ -952,72 +880,35 @@ def mad_stats(df: DataFrame, column: str, group_by=None) -> dict:
     (median, mad)}`` from the accepted baseline — the :func:`zscore_stats`
     analog with a 50% breakdown point (outliers in the baseline itself
     cannot distort the frozen center/spread). Exact ``percentile`` medians
-    (bit-equal to DuckDB ``quantile_cont``), one bounded one-row-per-group
-    collect per pass; compute once per release.
+    (bit-equal to DuckDB ``quantile_cont``); one bounded one-row-per-group
+    collect of :func:`mad_stats_frame`; compute once per release. NaN
+    raises ``ParameterException``.
     """
-    from ..operators._util import resolve_cols
-
     import math
 
     keys = resolve_cols(df, as_list(group_by))
-    v = resolve_col(df, column)
-    x = F.col(v).cast("double")
-    med_rows = (
-        df.filter(x.isNotNull())
-        .groupBy(*keys)
-        .agg(
-            F.percentile(x, F.lit(0.5)).alias("__med"),
-            F.sum(F.isnan(x).cast("int")).alias("__nans"),
-        )
-        .collect()
-    )
-    if any(r["__nans"] for r in med_rows):
-        # same contract as zscore_stats: NaN sorts greatest in percentile
-        # and then poisons every |z| comparison downstream (never alerts)
-        raise ParameterException(
-            f"mad_stats: {column} contains NaN — clean the column before "
-            "freezing a baseline"
-        )
-    meds = {tuple(r[k] for k in keys) if keys else (): r["__med"]
-            for r in med_rows}
-    if not meds:
-        raise ParameterException("baseline is empty")
-    if any(m is not None and math.isnan(m) for m in meds.values()):
+    out = _collect_stats(mad_stats_frame(df, column, keys), keys,
+                         ("BASELINE_MEDIAN", "BASELINE_MAD"))
+    if any(math.isnan(m) for m, _ in out.values()):
         raise ParameterException("mad_stats: frozen median is NaN")
-    spark = df.sparkSession
-    if keys:
-        key_fields = df.select(*keys).schema
-        from pyspark.sql.types import DoubleType, StructField, StructType
+    return out
 
-        schema = StructType(list(key_fields) + [StructField("__med", DoubleType())])
-        mf = spark.createDataFrame(
-            [(*k, float(m)) for k, m in _none_safe_sorted(meds.items())],
-            schema,
-        ).select(
-            *[F.col(k).alias(f"__bk_{i}") for i, k in enumerate(keys)], "__med"
-        )
-        cond = None
-        for i, k in enumerate(keys):
-            e = F.col(k).eqNullSafe(F.col(f"__bk_{i}"))
-            cond = e if cond is None else (cond & e)
-        # null-safe equi-join: a NULL group key is a real baseline group,
-        # not a miss (matches the renderers' <=> convention)
-        staged = df.join(F.broadcast(mf), on=cond, how="inner").drop(
-            *[f"__bk_{i}" for i in range(len(keys))]
-        )
-    else:
-        (m,) = meds.values()
-        staged = df.withColumn("__med", F.lit(float(m)))
-    mad_rows = (
-        staged.filter(x.isNotNull())
-        .groupBy(*keys)
-        .agg(F.percentile(F.abs(x - F.col("__med")), F.lit(0.5)).alias("__mad"))
-        .collect()
-    )
-    out = {}
-    for r in mad_rows:
-        key = tuple(r[k] for k in keys) if keys else ()
-        out[key] = (float(meds[key]), float(r["__mad"]))
+
+def _collect_stats(frame: DataFrame, keys, cols) -> dict:
+    """The dict form of a ``*_stats_frame`` baseline: ``{key_tuple:
+    (cols...)}`` from one collect. The frame's executor-side guards (NaN,
+    magnitude) surface as ``ParameterException`` with their own text."""
+    from pyspark.errors import SparkRuntimeException
+
+    try:
+        rows = frame.collect()
+    except SparkRuntimeException as e:
+        if e.getCondition() != "USER_RAISED_EXCEPTION":
+            raise
+        raise ParameterException(e.getMessageParameters()["errorMessage"]) from None
+    out = {tuple(r[k] for k in keys): tuple(r[c] for c in cols) for r in rows}
+    if not out:
+        raise ParameterException("baseline is empty")
     return out
 
 
@@ -1032,9 +923,10 @@ def _stage_baseline(df, keys, stats, cols, frame_cols):
     count fits a driver collect — or a DataFrame from a
     ``*_stats_frame`` producer carrying ``frame_cols`` (the
     millions-of-groups path: nothing ever collects, NO broadcast hint is
-    forced, and AQE picks broadcast vs shuffle join by actual size).
+    forced, and AQE picks broadcast vs shuffle join by actual size). With
+    no group keys either form is one global row, cross-joined as a
+    broadcast.
     """
-    spark = df.sparkSession
     if isinstance(stats, DataFrame):
         missing = [c for c in frame_cols if c not in stats.columns]
         if missing:
@@ -1043,43 +935,24 @@ def _stage_baseline(df, keys, stats, cols, frame_cols):
                 "matching *_stats_frame output"
             )
         exp = stats.select(
-            *[F.col(k).alias(f"__bk_{i}") for i, k in enumerate(keys)],
+            *keys,
             *[F.col(fc).cast("double").alias(c)
               for fc, c in zip(frame_cols, cols)],
         )
-        if not keys:
-            return df.crossJoin(exp)
     else:
         if not stats:
             raise ParameterException("frozen stats are empty")
-        if not keys:
-            vals, = stats.values()
-            exp = spark.createDataFrame(
-                [tuple(float(x) for x in vals)],
-                ", ".join(f"{c} double" for c in cols),
-            )
-            return df.crossJoin(F.broadcast(exp))
         from pyspark.sql.types import DoubleType, StructField, StructType
 
-        key_fields = df.select(*keys).schema
         schema = StructType(
-            list(key_fields) + [StructField(c, DoubleType()) for c in cols]
+            [df.schema[k] for k in keys] + [StructField(c, DoubleType()) for c in cols]
         )
-        exp = F.broadcast(spark.createDataFrame(
+        exp = F.broadcast(df.sparkSession.createDataFrame(
             [(*k, *(float(x) for x in vals))
              for k, vals in _none_safe_sorted(stats.items())],
             schema,
-        ).select(
-            *[F.col(k).alias(f"__bk_{i}") for i, k in enumerate(keys)],
-            *cols,
         ))
-    cond = None
-    for i, k in enumerate(keys):
-        e = F.col(k).eqNullSafe(F.col(f"__bk_{i}"))
-        cond = e if cond is None else (cond & e)
-    return df.join(exp, on=cond, how="left").drop(
-        *[f"__bk_{i}" for i in range(len(keys))]
-    )
+    return null_safe_join(df, exp, keys)
 
 
 def mad_stats_frame(df: DataFrame, column: str, group_by=None) -> DataFrame:
@@ -1096,8 +969,6 @@ def mad_stats_frame(df: DataFrame, column: str, group_by=None) -> DataFrame:
     medians); the NaN guard is a per-row executor-side raise at action
     time instead of the eager driver check.
     """
-    from ..operators._util import resolve_cols
-
     keys = resolve_cols(df, as_list(group_by))
     v = resolve_col(df, column)
     x = F.col(v).cast("double")
@@ -1132,8 +1003,6 @@ def zscore_stats_frame(df: DataFrame, column: str, group_by=None) -> DataFrame:
     per-row executor-side raises at action time. All-null groups are
     dropped; single-value groups freeze std = 0.0 — dict-producer parity.
     """
-    from ..operators._util import resolve_cols
-
     keys = resolve_cols(df, as_list(group_by))
     v = resolve_col(df, column)
     x = F.col(v).cast("double")
@@ -1148,24 +1017,18 @@ def zscore_stats_frame(df: DataFrame, column: str, group_by=None) -> DataFrame:
         )).cast("double"))
         .otherwise(x)
     )
-    src = df.filter(x.isNotNull()).select(*keys, guarded.alias("__x"))
-    xx = F.col("__x")
-    agg = src.groupBy(*keys).agg(
-        F.count("__x").alias("__n"),
-        F.sum(F.round(xx * ZQ_SCALE, 0).cast("decimal(38,0)")).alias("__s1"),
-        F.sum(F.round(xx * xx * ZQ_SCALE, 0).cast("decimal(38,0)")).alias("__s2"),
-    )
-    mean = F.col("__s1").cast("double") / F.col("__n") / ZQ_SCALE
+    # the filter that drops NULL rows is the guard: it raises on a bad row
+    # before the row reaches the sums, and every group it passes has n >= 1
+    n = F.count(x)
+    s1 = F.sum(F.round(x * ZQ_SCALE, 0).cast("decimal(38,0)"))
+    s2 = F.sum(F.round(x * x * ZQ_SCALE, 0).cast("decimal(38,0)"))
+    mean = s1.cast("double") / n / ZQ_SCALE
     var = F.greatest(
-        F.lit(0.0),
-        (F.col("__s2").cast("double") / ZQ_SCALE - F.col("__n") * mean * mean)
-        / (F.col("__n") - 1),
+        F.lit(0.0), (s2.cast("double") / ZQ_SCALE - n * mean * mean) / (n - 1)
     )
-    return agg.filter(F.col("__n") > 0).select(
-        *keys,
+    return df.filter(guarded.isNotNull()).groupBy(*keys).agg(
         mean.alias("BASELINE_MEAN"),
-        F.when(F.col("__n") > 1, F.sqrt(var)).otherwise(F.lit(0.0))
-        .alias("BASELINE_STD"),
+        F.when(n > 1, F.sqrt(var)).otherwise(F.lit(0.0)).alias("BASELINE_STD"),
     )
 
 
@@ -1196,8 +1059,6 @@ def mad_against_stats(
     buffers one group's batch values — the micro-batch envelope).
     Exact-percentile arithmetic replays bit-for-bit as SQL.
     """
-    from ..operators._util import resolve_cols
-
     if threshold <= 0:
         raise ParameterException("threshold must be > 0")
     keys = resolve_cols(df, as_list(group_by))

@@ -2,12 +2,14 @@
 
 from __future__ import annotations
 
-from typing import Iterable, Sequence
+from functools import reduce
+from typing import Iterable
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from ..errors import ParameterException
+from ..naming import agg_name
 
 # Bounded-action cap for data-dependent transforms (pivot/encoder value
 # discovery). Mirrors the reference's RUN_QUERY_LIMIT precedent
@@ -64,6 +66,21 @@ def order_sql(order_by) -> str:
     return ", ".join(order_by)
 
 
+def window_spec(df: DataFrame, partition, order_by) -> WindowSpec:
+    """The ordered window of the window and time-series families: partitioned
+    by ``partition`` (one global partition when empty), ordered by
+    ``order_by``."""
+    keys = resolve_cols(df, as_list(partition))
+    w = Window.partitionBy(*keys) if keys else Window.partitionBy()
+    return w.orderBy(*order_spec(df, order_by))
+
+
+def over_sql(partition, order_by) -> str:
+    """SQL text of :func:`window_spec`'s ``OVER (...)`` body."""
+    part = f"PARTITION BY {', '.join(as_list(partition))} " if as_list(partition) else ""
+    return f"{part}ORDER BY {order_sql(order_by)}"
+
+
 # Aggregate name → column-expression builder. COUNT DISTINCT follows the
 # reference's space-separated spelling (SURVEY §2.2 aggregate row).
 _AGGS = {
@@ -102,6 +119,51 @@ def agg_sql(agg: str, col: str) -> str:
     if a == "VARIANCE":
         return f"VAR_SAMP({col})"
     return f"{a}({col})"
+
+
+def agg_columns(df: DataFrame, aggregations: dict) -> list:
+    """``{col: [aggs]}`` → aggregate columns named ``{COL}_{AGG}``."""
+    out = []
+    for col, aggs in aggregations.items():
+        col = resolve_col(df, col)
+        for agg in as_list(aggs):
+            out.append(agg_expr(agg, col).alias(agg_name(col, agg)))
+    return out
+
+
+def agg_sql_cols(aggregations: dict) -> str:
+    """SQL text of :func:`agg_columns`."""
+    return ", ".join(
+        f"{agg_sql(agg, col)} AS {agg_name(col, agg)}"
+        for col, aggs in aggregations.items()
+        for agg in as_list(aggs)
+    )
+
+
+def null_safe_on(keys, right_keys) -> Column:
+    """``k1 <=> r1 AND k2 <=> r2 ...``: a NULL key matches a NULL key, so a
+    NULL group is a real group (the renderers' ``<=>`` convention)."""
+    return reduce(
+        lambda a, b: a & b,
+        [F.col(k).eqNullSafe(F.col(r)) for k, r in zip(keys, right_keys)],
+    )
+
+
+def null_safe_join(left: DataFrame, right: DataFrame, keys) -> DataFrame:
+    """Left-join ``right``'s per-group columns onto ``left``, null-safely on
+    the ``keys`` both sides carry. The right side's keys are staged under
+    aliases and dropped after the join, so the output holds ``left``'s
+    columns and ``right``'s non-key columns once. With no keys it is a
+    cross join against a broadcast ``right`` (one row: a global aggregate).
+    A hint on ``right`` (``F.broadcast``) carries through."""
+    if not keys:
+        return left.crossJoin(F.broadcast(right))
+    staged = [f"__nsk_{i}" for i in range(len(keys))]
+    right = right.select(
+        *[F.col(k).alias(s) for k, s in zip(keys, staged)],
+        *[c for c in right.columns if c not in keys],
+    )
+    return left.join(right, null_safe_on(keys, staged), "left").drop(*staged)
 
 
 _NUMERIC_PREFIXES = ("tinyint", "smallint", "int", "bigint", "float", "double", "decimal")

@@ -20,26 +20,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..errors import ParameterException
-from ..naming import agg_name, cleanse_name, datetrunc_name
+from ..naming import cleanse_name, datetrunc_name
 from ..registry import renderer, spark_transform
-from ._util import agg_expr, agg_sql, as_list, resolve_col, resolve_cols
-
-
-def _agg_columns(df: DataFrame, aggregations: dict) -> list:
-    out = []
-    for col, aggs in aggregations.items():
-        col = resolve_col(df, col)
-        for agg in as_list(aggs):
-            out.append(agg_expr(agg, col).alias(agg_name(col, agg)))
-    return out
-
-
-def _agg_sql_cols(aggregations: dict) -> str:
-    return ", ".join(
-        f"{agg_sql(agg, col)} AS {agg_name(col, agg)}"
-        for col, aggs in aggregations.items()
-        for agg in as_list(aggs)
-    )
+from ._util import agg_columns, agg_sql_cols, as_list, resolve_col, resolve_cols
 
 
 @spark_transform("aggregate", category="aggregate", streaming_ok=False)
@@ -47,7 +30,7 @@ def aggregate(df: DataFrame, group_by, aggregations: dict) -> DataFrame:
     """Hash aggregation, multiple aggs per column, output ``{COL}_{AGG}``
     (reference README.md:109-112; naming tutorial.ipynb:3822)."""
     keys = resolve_cols(df, as_list(group_by))
-    cols = _agg_columns(df, aggregations)
+    cols = agg_columns(df, aggregations)
     if not cols:
         raise ParameterException("aggregations must be a non-empty {col: [aggs]} dict")
     if keys:
@@ -58,7 +41,7 @@ def aggregate(df: DataFrame, group_by, aggregations: dict) -> DataFrame:
 @renderer("aggregate")
 def _r_aggregate(source, group_by, aggregations: dict) -> str:
     keys = ", ".join(as_list(group_by))
-    cols = _agg_sql_cols(aggregations)
+    cols = agg_sql_cols(aggregations)
     if keys:
         return f"SELECT {keys}, {cols} FROM {source} GROUP BY {keys}"
     return f"SELECT {cols} FROM {source}"
@@ -74,7 +57,7 @@ def timeseries_agg(df: DataFrame, date: str, grain: str, aggregations: dict, gro
     return (
         df.withColumn(tname, F.date_trunc(grain.lower(), F.col(col)))
         .groupBy(*keys)
-        .agg(*_agg_columns(df, aggregations))
+        .agg(*agg_columns(df, aggregations))
     )
 
 
@@ -85,7 +68,7 @@ def _r_timeseries_agg(source, date, grain, aggregations, group_by=None) -> str:
     return (
         f"SELECT DATE_TRUNC('{grain.lower()}', {date}) AS {tname}"
         + ("," + ", ".join(as_list(group_by)) if group_by else "")
-        + f", {_agg_sql_cols(aggregations)} FROM {source} GROUP BY "
+        + f", {agg_sql_cols(aggregations)} FROM {source} GROUP BY "
         + (", ".join([f"DATE_TRUNC('{grain.lower()}', {date})"] + as_list(group_by)))
     )
 
@@ -269,7 +252,7 @@ def rollup_agg(df: DataFrame, group_by, aggregations: dict, mode: str = "rollup"
     """ROLLUP / CUBE aggregation with a ``GROUPING_ID`` bitmask column —
     a free Spark capability gain over the reference (SURVEY §2.3)."""
     keys = resolve_cols(df, as_list(group_by))
-    cols = _agg_columns(df, aggregations)
+    cols = agg_columns(df, aggregations)
     grouped = df.rollup(*keys) if mode.lower() == "rollup" else df.cube(*keys)
     return grouped.agg(F.grouping_id().alias("GROUPING_ID"), *cols)
 
@@ -279,7 +262,7 @@ def _r_rollup_agg(source, group_by, aggregations, mode="rollup") -> str:
     keys = ", ".join(as_list(group_by))
     kw = "ROLLUP" if mode.lower() == "rollup" else "CUBE"
     return (
-        f"SELECT {keys}, GROUPING_ID({keys}) AS GROUPING_ID, {_agg_sql_cols(aggregations)} "
+        f"SELECT {keys}, GROUPING_ID({keys}) AS GROUPING_ID, {agg_sql_cols(aggregations)} "
         f"FROM {source} GROUP BY {kw}({keys})"
     )
 
@@ -300,7 +283,7 @@ def grouping_sets_agg(df: DataFrame, sets, aggregations: dict) -> DataFrame:
     grouped = df.groupingSets(
         [[F.col(c) for c in s] for s in sets], *[F.col(k) for k in all_keys]
     )
-    return grouped.agg(F.grouping_id().alias("GROUPING_ID"), *_agg_columns(df, aggregations))
+    return grouped.agg(F.grouping_id().alias("GROUPING_ID"), *agg_columns(df, aggregations))
 
 
 @renderer("grouping_sets")
@@ -313,7 +296,7 @@ def _r_grouping_sets(source, sets, aggregations) -> str:
     keys = ", ".join(all_keys)
     rendered_sets = ", ".join("(" + ", ".join(as_list(s)) + ")" for s in sets)
     return (
-        f"SELECT {keys}, GROUPING_ID({keys}) AS GROUPING_ID, {_agg_sql_cols(aggregations)} "
+        f"SELECT {keys}, GROUPING_ID({keys}) AS GROUPING_ID, {agg_sql_cols(aggregations)} "
         f"FROM {source} GROUP BY GROUPING SETS ({rendered_sets})"
     )
 

@@ -14,7 +14,7 @@ each docstring; callers at scale should pass partition keys.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, WindowSpec
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..errors import ParameterException
@@ -28,20 +28,11 @@ from ._util import (
     ntile_from_rownumber,
     order_spec,
     order_sql,
+    over_sql,
     resolve_col,
     resolve_cols,
+    window_spec,
 )
-
-
-def _window(df, partition, order_by) -> WindowSpec:
-    keys = resolve_cols(df, as_list(partition))
-    w = Window.partitionBy(*keys) if keys else Window.partitionBy()
-    return w.orderBy(*order_spec(df, order_by))
-
-
-def _over_sql(partition, order_by) -> str:
-    part = f"PARTITION BY {', '.join(as_list(partition))} " if as_list(partition) else ""
-    return f"{part}ORDER BY {order_sql(order_by)}"
 
 
 @spark_transform("lag", category="window", streaming_ok=False)
@@ -49,7 +40,7 @@ def lag(df: DataFrame, columns, amounts, order_by, partition=None) -> DataFrame:
     """LAG/LEAD columns, one per (column, amount); negative amounts are leads
     (reference tutorial.ipynb:4235; amounts=[-1] used as a forecasting target
     at tutorial.ipynb:4754). Names ``LAG_{COL}_{N}`` / ``LEAD_{COL}_{N}``."""
-    w = _window(df, partition, order_by)
+    w = window_spec(df, partition, order_by)
     out = {}
     for col in resolve_cols(df, as_list(columns)):
         for n in as_list(amounts):
@@ -60,7 +51,7 @@ def lag(df: DataFrame, columns, amounts, order_by, partition=None) -> DataFrame:
 
 @renderer("lag")
 def _r_lag(source, columns, amounts, order_by, partition=None) -> str:
-    over = _over_sql(partition, order_by)
+    over = over_sql(partition, order_by)
     cols = ", ".join(
         (
             f"LAG({c}, {n}) OVER ({over}) AS {lag_name(c, n)}"
@@ -77,7 +68,7 @@ def _r_lag(source, columns, amounts, order_by, partition=None) -> str:
 def moving_avg(df: DataFrame, input_columns, window_sizes, order_by, partition=None) -> DataFrame:
     """Trailing mean over W rows, named ``MEAN_{COL}_{W}`` (reference
     tutorial.ipynb:4630). Frame = ROWS BETWEEN W-1 PRECEDING AND CURRENT."""
-    w = _window(df, partition, order_by)
+    w = window_spec(df, partition, order_by)
     out = {}
     for col in resolve_cols(df, as_list(input_columns)):
         for size in as_list(window_sizes):
@@ -88,7 +79,7 @@ def moving_avg(df: DataFrame, input_columns, window_sizes, order_by, partition=N
 
 @renderer("moving_avg")
 def _r_moving_avg(source, input_columns, window_sizes, order_by, partition=None) -> str:
-    over = _over_sql(partition, order_by)
+    over = over_sql(partition, order_by)
     cols = ", ".join(
         f"AVG({c}) OVER ({over} ROWS BETWEEN {s - 1} PRECEDING AND CURRENT ROW) "
         f"AS {moving_avg_name(c, s)}"
@@ -123,7 +114,7 @@ def rolling_agg(
     if len(offsets) != 2:
         raise ParameterException("offsets must be [lower, upper]")
     lo, hi = int(offsets[0]), int(offsets[1])
-    w = _window(df, group_by, order_by)
+    w = window_spec(df, group_by, order_by)
     if frame == "rows":
         w = w.rowsBetween(lo, hi)
     elif frame == "range":
@@ -144,7 +135,7 @@ def rolling_agg(
 def _r_rolling_agg(source, aggregations, order_by, offsets, group_by=None,
                    frame: str = "rows") -> str:
     lo, hi = int(offsets[0]), int(offsets[1])
-    over = _over_sql(group_by, order_by)
+    over = over_sql(group_by, order_by)
     kind = "ROWS" if frame == "rows" else "RANGE"
     frame_sql = f"{kind} BETWEEN {_bound_sql(lo)} AND {_bound_sql(hi)}"
     cols = ", ".join(
@@ -159,7 +150,7 @@ def _r_rolling_agg(source, aggregations, order_by, offsets, group_by=None,
 def cumulative_agg(df: DataFrame, aggregations: dict, order_by, group_by=None) -> DataFrame:
     """Running aggregates (SURVEY §2.2 [B]): frame = UNBOUNDED PRECEDING →
     CURRENT ROW. Output ``{COL}_CUMULATIVE_{AGG}``."""
-    w = _window(df, group_by, order_by).rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    w = window_spec(df, group_by, order_by).rowsBetween(Window.unboundedPreceding, Window.currentRow)
     out = {}
     for col, aggs in aggregations.items():
         col = resolve_col(df, col)
@@ -170,7 +161,7 @@ def cumulative_agg(df: DataFrame, aggregations: dict, order_by, group_by=None) -
 
 @renderer("cumulative_agg")
 def _r_cumulative_agg(source, aggregations, order_by, group_by=None) -> str:
-    over = _over_sql(group_by, order_by)
+    over = over_sql(group_by, order_by)
     frame = "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
     cols = ", ".join(
         f"{agg_sql(a, c)} OVER ({over} {frame}) AS {cleanse_name(f'{c}_CUMULATIVE_{a}')}"
@@ -248,7 +239,7 @@ def rank(
         out = _global_rank_variant(df, order_by, m, name)
         if out is not None:
             return out
-    w = _window(df, partition, order_by)
+    w = window_spec(df, partition, order_by)
     if m.startswith("ntile"):
         n = int(m.split("_")[-1]) if "_" in m else 4
         return df.withColumn(name, F.ntile(n).over(w))
@@ -259,7 +250,7 @@ def rank(
 def _r_rank(source, order_by, partition=None, method="rank", name=None) -> str:
     m = method.lower()
     name = name or cleanse_name(m)
-    over = _over_sql(partition, order_by)
+    over = over_sql(partition, order_by)
     if m.startswith("ntile"):
         n = int(m.split("_")[-1]) if "_" in m else 4
         fn = f"NTILE({n})"
@@ -274,7 +265,7 @@ def rsi(df: DataFrame, column: str, order_by, periods: int = 14, partition=None)
     (SURVEY §2.2 [B]; SMA variant, not Wilder smoothing — documented).
     Output ``RSI_{COL}_{N}``."""
     col = resolve_col(df, column)
-    w = _window(df, partition, order_by)
+    w = window_spec(df, partition, order_by)
     frame = w.rowsBetween(-(periods - 1), Window.currentRow)
     delta = F.col(col) - F.lag(col, 1).over(w)
     name = cleanse_name(f"RSI_{col}_{periods}")
@@ -292,7 +283,7 @@ def rsi(df: DataFrame, column: str, order_by, periods: int = 14, partition=None)
 @renderer("rsi")
 def _r_rsi(source, column, order_by, periods=14, partition=None) -> str:
     name = cleanse_name(f"RSI_{column}_{periods}")
-    over = _over_sql(partition, order_by)
+    over = over_sql(partition, order_by)
     frame = f"{over} ROWS BETWEEN {periods - 1} PRECEDING AND CURRENT ROW"
     delta = f"({column} - LAG({column}, 1) OVER ({over}))"
     ag, al = f"AVG(__gain) OVER ({frame})", f"AVG(__loss) OVER ({frame})"
@@ -312,7 +303,7 @@ def sliding_slope(
     [B]): ``(n·Σxy − Σx·Σy) / (n·Σx² − (Σx)²)`` from windowed sums — pure
     JVM arithmetic, no UDF. Output ``SLOPE_{Y}_{W}``."""
     xc, yc = resolve_col(df, x), resolve_col(df, y)
-    frame = _window(df, partition, order_by).rowsBetween(-(window_size - 1), Window.currentRow)
+    frame = window_spec(df, partition, order_by).rowsBetween(-(window_size - 1), Window.currentRow)
     xd = F.col(xc).cast("double")
     yd = F.col(yc).cast("double")
     n = F.count(F.lit(1)).over(frame).cast("double")
@@ -329,7 +320,7 @@ def sliding_slope(
 def _r_sliding_slope(source, x, y, window_size, order_by, partition=None) -> str:
     name = cleanse_name(f"SLOPE_{y}_{window_size}")
     frame = (
-        f"{_over_sql(partition, order_by)} "
+        f"{over_sql(partition, order_by)} "
         f"ROWS BETWEEN {window_size - 1} PRECEDING AND CURRENT ROW"
     )
     xd, yd = f"CAST({x} AS DOUBLE)", f"CAST({y} AS DOUBLE)"

@@ -15,26 +15,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..errors import ParameterException
-from ..naming import agg_name
-from ..operators._util import agg_expr, agg_sql, as_list, resolve_col, resolve_cols
+from ..operators._util import (
+    agg_columns,
+    agg_sql_cols,
+    as_list,
+    null_safe_join,
+    resolve_col,
+    resolve_cols,
+)
 from ..registry import renderer, spark_transform
-
-
-def _agg_cols(df: DataFrame, aggregations: dict) -> list:
-    out = []
-    for col, aggs in aggregations.items():
-        col = resolve_col(df, col)
-        for agg in as_list(aggs):
-            out.append(agg_expr(agg, col).alias(agg_name(col, agg)))
-    return out
-
-
-def _agg_sql_cols(aggregations: dict) -> str:
-    return ", ".join(
-        f"{agg_sql(agg, col)} AS {agg_name(col, agg)}"
-        for col, aggs in aggregations.items()
-        for agg in as_list(aggs)
-    )
 
 
 def _window_agg_sql(source, fn_call, struct_name, start_alias, end_alias,
@@ -44,8 +33,21 @@ def _window_agg_sql(source, fn_call, struct_name, start_alias, end_alias,
     kgrp = (", " + ", ".join(keys)) if keys else ""
     return (
         f"SELECT {struct_name}.start AS {start_alias}, {struct_name}.end AS {end_alias}, "
-        f"{ksel}{_agg_sql_cols(aggregations)} FROM {source} "
+        f"{ksel}{agg_sql_cols(aggregations)} FROM {source} "
         f"GROUP BY {fn_call}{kgrp}"
+    )
+
+
+def _start(df: DataFrame, fn, checkpoint: str):
+    """Start ``df`` as a stream that hands each micro-batch to
+    ``fn(batch_df, batch_id)``, checkpointed at ``checkpoint``, with the
+    ``availableNow`` trigger (drains what is there, then stops; a restart
+    resumes from the checkpoint)."""
+    return (
+        df.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
     )
 
 
@@ -89,7 +91,7 @@ def tumbling_window(
     out = (
         _maybe_watermark(df, t, watermark)
         .groupBy(F.window(F.col(t), duration).alias("__w"), *keys)
-        .agg(*_agg_cols(df, aggregations))
+        .agg(*agg_columns(df, aggregations))
     )
     return out.select(
         F.col("__w.start").alias("WINDOW_START"),
@@ -123,7 +125,7 @@ def sliding_window(
     out = (
         _maybe_watermark(df, t, watermark)
         .groupBy(F.window(F.col(t), duration, slide).alias("__w"), *keys)
-        .agg(*_agg_cols(df, aggregations))
+        .agg(*agg_columns(df, aggregations))
     )
     return out.select(
         F.col("__w.start").alias("WINDOW_START"),
@@ -157,7 +159,7 @@ def session_window_agg(
     out = (
         _maybe_watermark(df, t, watermark)
         .groupBy(F.session_window(F.col(t), gap).alias("__w"), *keys)
-        .agg(*_agg_cols(df, aggregations))
+        .agg(*agg_columns(df, aggregations))
     )
     return out.select(
         F.col("__w.start").alias("SESSION_START"),
@@ -654,14 +656,8 @@ def stream_dedup_against(
     # foreachBatch hands the closure a CLONED session; catalog refreshes on
     # it don't invalidate the caller's cached file listings, so keep the
     # user's session for the post-overwrite refresh
-    return (
-        df.writeStream
-        .foreachBatch(_exactly_once_sink(clean, sink_path, sink_table,
-                                         df.sparkSession))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    sink = _exactly_once_sink(clean, sink_path, sink_table, df.sparkSession)
+    return _start(df, sink, checkpoint)
 
 
 def _exactly_once_sink(clean, sink_path, sink_table, user_spark):
@@ -824,14 +820,8 @@ def stream_embedding_join(
     def clean(b: DataFrame) -> DataFrame:
         return join(b, vec_col, id_col, k=k, right_prefix=right_prefix,
                     index=index, **probe)
-    return (
-        df.writeStream
-        .foreachBatch(_exactly_once_sink(clean, sink_path, sink_table,
-                                         df.sparkSession))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    sink = _exactly_once_sink(clean, sink_path, sink_table, df.sparkSession)
+    return _start(df, sink, checkpoint)
 
 
 def write_stream_to_table(df: DataFrame, table: str, checkpoint: str, mode: str = "append"):
@@ -841,12 +831,7 @@ def write_stream_to_table(df: DataFrame, table: str, checkpoint: str, mode: str 
     def _sink(batch_df: DataFrame, batch_id: int):
         batch_df.write.mode(mode).saveAsTable(table)
 
-    return (
-        df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(df, _sink, checkpoint)
 
 
 def write_stream_shards(
@@ -881,12 +866,7 @@ def write_stream_shards(
             writer = writer.option("maxRecordsPerFile", int(rows_per_shard))
         writer.save(f"{path}/batch={batch_id}")
 
-    return (
-        df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(df, _sink, checkpoint)
 
 
 def stream_psi(
@@ -944,14 +924,8 @@ def stream_psi(
     def score(b: DataFrame) -> DataFrame:
         return psi_against_stats(b, column, bps, stats, epsilon=epsilon)
 
-    return (
-        df.writeStream
-        .foreachBatch(_exactly_once_sink(score, sink_path, sink_table,
-                                         df.sparkSession))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    sink = _exactly_once_sink(score, sink_path, sink_table, df.sparkSession)
+    return _start(df, sink, checkpoint)
 
 
 def stream_anomaly(
@@ -1023,14 +997,8 @@ def stream_anomaly(
     def score(b: DataFrame) -> DataFrame:
         return against(b, column, stats, group_by, threshold)
 
-    return (
-        df.writeStream
-        .foreachBatch(_exactly_once_sink(score, sink_path, sink_table,
-                                         df.sparkSession))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    sink = _exactly_once_sink(score, sink_path, sink_table, df.sparkSession)
+    return _start(df, sink, checkpoint)
 
 
 def stream_cms(
@@ -1081,14 +1049,8 @@ def stream_cms(
     def sketch(b: DataFrame) -> DataFrame:
         return cms_sketch(b, column, group_by=keys, depth=depth, width=width)
 
-    return (
-        df.writeStream
-        .foreachBatch(_exactly_once_sink(sketch, sink_path, sink_table,
-                                         df.sparkSession))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    sink = _exactly_once_sink(sketch, sink_path, sink_table, df.sparkSession)
+    return _start(df, sink, checkpoint)
 
 
 def quota_admit(batch_df: DataFrame, spent, keys, quota: int, order,
@@ -1108,22 +1070,10 @@ def quota_admit(batch_df: DataFrame, spent, keys, quota: int, order,
     w = Window.partitionBy(*keys).orderBy(*order)
     ranked = batch_df.withColumn("__rn", F.row_number().over(w))
     if spent is not None:
-        # same staging pattern as timeseries._nsjoin
-        staged = spent.select(
-            *[F.col(k).alias(f"__qk_{i}") for i, k in enumerate(keys)],
-            "__spent",
-        )
-        cond = None
-        for i, k in enumerate(keys):
-            e = F.col(k).eqNullSafe(F.col(f"__qk_{i}"))
-            cond = e if cond is None else cond & e
-        ranked = (
-            ranked.join(F.broadcast(staged), cond, "left")
-            .drop(*[f"__qk_{i}" for i in range(len(keys))])
-            .withColumn(
-                "__spent",
-                F.coalesce(F.col("__spent"), F.lit(0)).cast("bigint"),
-            )
+        ranked = null_safe_join(
+            ranked, F.broadcast(spent.select(*keys, "__spent")), keys
+        ).withColumn(
+            "__spent", F.coalesce(F.col("__spent"), F.lit(0)).cast("bigint")
         )
     else:
         ranked = ranked.withColumn("__spent", F.lit(0).cast("bigint"))
@@ -1299,10 +1249,4 @@ def stream_quota(
     key_fields = [_field(k) for k in keys]
     _sink = _quota_batch_sink(keys, quota, order, cols, sink_path, key_fields)
 
-    return (
-        df.writeStream
-        .foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(df, _sink, checkpoint)

@@ -260,3 +260,25 @@ def test_loops_are_partition_invariant(spark, frames):
                 spark.conf.set(k, v)
         for n, rows in enumerate(base):
             assert got[n] == rows, (conf, n)
+
+
+def test_pagerank_renderers_match_execution_on_null_endpoints(spark, frames):
+    """The rendered pagerank and its DuckDB oracle treat a NULL node with
+    out-edges as the executed loop does: not dangling, so its rank mass is
+    not redistributed. Without the NULL-endpoint edges they always agreed."""
+    import duckdb
+
+    from rasgoql_spark.functions.graph import _r_pagerank, pagerank_oracle_sql
+
+    edges, _ = frames
+    via_df = _rows(pagerank(edges, "src", "dst", iterations=3))
+    edges.createOrReplaceTempView("__pr_null_edges")
+    via_sql = _rows(spark.sql(_r_pagerank("__pr_null_edges", "src", "dst", iterations=3)))
+    assert via_sql == via_df
+    con = duckdb.connect()
+    con.execute("CREATE TABLE pr_edges (src BIGINT, dst BIGINT)")
+    con.executemany("INSERT INTO pr_edges VALUES (?, ?)", EDGES)
+    oracle = sorted(con.execute(
+        pagerank_oracle_sql("SELECT src, dst FROM pr_edges", iterations=3)).fetchall(), key=repr)
+    assert [r[0] for r in oracle] == [r[0] for r in via_df]
+    assert all(abs(a[1] - b[1]) < 1e-9 for a, b in zip(oracle, via_df))

@@ -563,41 +563,6 @@ def test_stream_anomaly_method_validation(spark, tmp_path_factory):
                        method="mean", sink_path=str(tmp / "o"))
 
 
-def test_mad_family_null_group_keys(spark):
-    """A NULL group key is a real group: mad_stats freezes it, the batch
-    scorer matches it (null-safe join), anomaly_mad flags inside it — and
-    the anomaly_mad renderer agrees with execution on the null group."""
-    from rasgoql_spark.functions.timeseries import (
-        _r_anomaly_mad,
-        anomaly_mad,
-        mad_against_stats,
-        mad_stats,
-    )
-
-    rows = ([(None, float(v % 5)) for v in range(40)]
-            + [("a", float(v % 5)) for v in range(40)] + [(None, 50.0)])
-    df = spark.createDataFrame(rows, "g string, v double")
-    stats = mad_stats(df, "v", ["g"])
-    assert (None,) in stats and ("a",) in stats
-    rep = {r["g"]: r for r in mad_against_stats(df, "v", stats, ["g"]).collect()}
-    assert rep[None]["BASELINE_MEDIAN"] is not None
-    assert rep[None]["N_OUTLIERS"] == 1          # the 50.0 in the null group
-    out = anomaly_mad(df, "v", ["g"]).collect()
-    nulls = [r for r in out if r["g"] is None]
-    assert all(r["V_MEDIAN"] is not None for r in nulls)
-    assert sum(r["IS_OUTLIER_MAD"] for r in nulls) == 1
-    df.createOrReplaceTempView("__mad_null")
-    sql = _r_anomaly_mad("__mad_null", "v", ["g"], _input_columns=("g", "v"))
-
-    def canon(rows):
-        return sorted(
-            ((r["g"], r["v"], r["MOD_Z_V"], r["IS_OUTLIER_MAD"]) for r in rows),
-            key=lambda t: tuple((x is None, str(x)) for x in t),
-        )
-
-    assert canon(spark.sql(sql).collect()) == canon(out)
-
-
 def test_mad_stats_rejects_nan(spark):
     import pytest as _pytest
 
@@ -665,28 +630,6 @@ def test_against_stats_accepts_frames(spark):
         via_frame = sorted(map(tuple, against(
             batch, "v", frame_fn(base, "v", ["g"]), group_by=["g"]).collect()))
         assert via_dict == via_frame
-
-
-def test_zscore_against_stats_null_group_key(spark):
-    """A NULL group key present in the frozen baseline scores normally —
-    the mad-twin convention (pre-round-12 the dict path both missed NULL
-    in the join and crashed sorting mixed-type keys)."""
-    from rasgoql_spark.functions.timeseries import (
-        zscore_against_stats, zscore_stats, zscore_stats_frame,
-    )
-
-    base = spark.createDataFrame(
-        [(None, 1.0), (None, 2.0), (None, 3.0), ("g", 10.0), ("g", 20.0)],
-        "g STRING, v DOUBLE")
-    batch = spark.createDataFrame(
-        [(None, 2.0), (None, 100.0), ("g", 15.0)], "g STRING, v DOUBLE")
-    for stats in (zscore_stats(base, "v", ["g"]),
-                  zscore_stats_frame(base, "v", ["g"])):
-        rows = {r["g"]: r for r in zscore_against_stats(
-            batch, "v", stats, group_by=["g"], threshold=3.0).collect()}
-        assert rows[None]["BASELINE_MEAN"] is not None   # matched, not unknown
-        assert rows[None]["N_ANOMALIES"] == 1            # the 100.0 outlier
-        assert rows["g"]["N_ANOMALIES"] == 0
 
 
 def test_stats_frame_nan_guard_raises_at_action(spark):
