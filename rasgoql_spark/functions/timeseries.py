@@ -897,7 +897,9 @@ def mad_stats(df: DataFrame, column: str, group_by=None) -> dict:
 def _collect_stats(frame: DataFrame, keys, cols) -> dict:
     """The dict form of a ``*_stats_frame`` baseline: ``{key_tuple:
     (cols...)}`` from one collect. The frame's executor-side guards (NaN,
-    magnitude) surface as ``ParameterException`` with their own text."""
+    magnitude) surface as ``ParameterException`` with their own text. A
+    row whose statistics are all NULL is a global aggregate over no rows,
+    not a group."""
     from pyspark.errors import SparkRuntimeException
 
     try:
@@ -906,7 +908,8 @@ def _collect_stats(frame: DataFrame, keys, cols) -> dict:
         if e.getCondition() != "USER_RAISED_EXCEPTION":
             raise
         raise ParameterException(e.getMessageParameters()["errorMessage"]) from None
-    out = {tuple(r[k] for k in keys): tuple(r[c] for c in cols) for r in rows}
+    out = {tuple(r[k] for k in keys): tuple(r[c] for c in cols) for r in rows
+           if any(r[c] is not None for c in cols)}
     if not out:
         raise ParameterException("baseline is empty")
     return out
@@ -1005,31 +1008,37 @@ def zscore_stats_frame(df: DataFrame, column: str, group_by=None) -> DataFrame:
     """
     keys = resolve_cols(df, as_list(group_by))
     v = resolve_col(df, column)
-    x = F.col(v).cast("double")
-    guarded = (
-        F.when(F.isnan(x), F.raise_error(F.lit(
-            f"zscore_stats_frame: {column} contains NaN — clean the "
-            "column before freezing a baseline"
-        )).cast("double"))
-        .when(F.abs(x) > ZQ_SAFE_MAX, F.raise_error(F.lit(
-            f"zscore_stats_frame: |{column}| exceeds the quantization-safe "
-            f"bound {ZQ_SAFE_MAX:g} — rescale before freezing a baseline"
-        )).cast("double"))
-        .otherwise(x)
-    )
+    # SQL text: one parse per expression instead of one py4j round trip
+    # per operator, a driver-side cost every dict-path call pays
+    x = "CAST(`%s` AS DOUBLE)" % v.replace("`", "``")
+
+    def fail(msg):
+        lit = msg.replace("\\", "\\\\").replace("'", "\\'")
+        return f"CAST(raise_error('{lit}') AS DOUBLE)"
+
     # the filter that drops NULL rows is the guard: it raises on a bad row
-    # before the row reaches the sums, and every group it passes has n >= 1
-    n = F.count(x)
-    s1 = F.sum(F.round(x * ZQ_SCALE, 0).cast("decimal(38,0)"))
-    s2 = F.sum(F.round(x * x * ZQ_SCALE, 0).cast("decimal(38,0)"))
-    mean = s1.cast("double") / n / ZQ_SCALE
-    var = F.greatest(
-        F.lit(0.0), (s2.cast("double") / ZQ_SCALE - n * mean * mean) / (n - 1)
+    # before the row reaches the sums
+    guarded = (
+        f"CASE WHEN isnan({x}) THEN " + fail(
+            f"zscore_stats_frame: {column} contains NaN — clean the "
+            "column before freezing a baseline")
+        + f" WHEN abs({x}) > {ZQ_SAFE_MAX!r}D THEN " + fail(
+            f"zscore_stats_frame: |{column}| exceeds the quantization-safe "
+            f"bound {ZQ_SAFE_MAX:g} — rescale before freezing a baseline")
+        + f" ELSE {x} END IS NOT NULL"
     )
-    return df.filter(guarded.isNotNull()).groupBy(*keys).agg(
-        mean.alias("BASELINE_MEAN"),
-        F.when(n > 1, F.sqrt(var)).otherwise(F.lit(0.0)).alias("BASELINE_STD"),
+    n = f"count({x})"
+    s1 = f"CAST(sum(CAST(round({x} * {ZQ_SCALE}, 0) AS DECIMAL(38,0))) AS DOUBLE)"
+    s2 = f"CAST(sum(CAST(round({x} * {x} * {ZQ_SCALE}, 0) AS DECIMAL(38,0))) AS DOUBLE)"
+    mean = f"({s1} / {n} / {ZQ_SCALE})"
+    var = f"greatest(0.0D, ({s2} / {ZQ_SCALE} - {n} * {mean} * {mean}) / ({n} - 1))"
+    out = df.filter(guarded).groupBy(*keys).agg(
+        F.expr(f"{mean} AS BASELINE_MEAN"),
+        F.expr(f"CASE WHEN {n} > 1 THEN sqrt({var}) ELSE 0.0D END AS BASELINE_STD"),
     )
+    # every group the guard passes has n >= 1, but a global aggregate
+    # yields one row even over no rows: that row is no group
+    return out if keys else out.filter("BASELINE_MEAN IS NOT NULL")
 
 
 def mad_against_stats(

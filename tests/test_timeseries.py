@@ -576,6 +576,24 @@ def test_mad_stats_rejects_nan(spark):
         mad_stats(df, "v", ["g"])
 
 
+@pytest.mark.parametrize("values", [[], [None, None]], ids=["empty", "all_null"])
+def test_keyless_baseline_without_data_is_empty(spark, values):
+    # a global aggregate yields one row even over no rows; that row is not
+    # a group: the dict producers reject the baseline and the z-score frame
+    # holds no row
+    from rasgoql_spark.functions.timeseries import (
+        mad_stats,
+        zscore_stats,
+        zscore_stats_frame,
+    )
+
+    df = spark.createDataFrame([(v,) for v in values], "v double")
+    for producer in (zscore_stats, mad_stats):
+        with pytest.raises(ParameterException, match="baseline is empty"):
+            producer(df, "v")
+    assert zscore_stats_frame(df, "v").collect() == []
+
+
 # --- round-12 frame-based baselines (the millions-of-groups path) ---------
 
 def test_mad_stats_frame_matches_dict(spark):
